@@ -536,88 +536,6 @@ def _render(frame, qt):
     return w, h, len(comps), rows
 
 
-def _decode_scan(buf, data_off, frame, scan, qt, huff_dc, huff_ac, dri):
-    w, h, comps = frame["w"], frame["h"], frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
-        raise JpegFormatError("bad sampling factors")
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    planes = []
-    for c in comps:
-        planes.append(
-            np.zeros((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8), dtype=np.int32)
-        )
-        if c["tq"] not in qt:
-            raise JpegFormatError("missing quant table")
-    reader = _BitReader(buf, data_off)
-    preds = [0] * len(comps)
-    m = _DCT_M
-    rst = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            mcu_idx = my * mcus_x + mx
-            if dri and mcu_idx and mcu_idx % dri == 0:
-                reader.restart(rst)
-                rst = (rst + 1) & 7
-                preds = [0] * len(comps)
-            for ci, (comp, td, ta) in enumerate(scan):
-                if td not in huff_dc or ta not in huff_ac:
-                    raise JpegFormatError("missing huffman table")
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        coef = np.zeros(64)
-                        t = reader.decode_symbol(huff_dc[td])
-                        preds[ci] += _extend(reader.receive(t), t)
-                        coef[0] = preds[ci]
-                        k = 1
-                        while k < 64:
-                            rs = reader.decode_symbol(huff_ac[ta])
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise JpegFormatError("AC index overflow")
-                            coef[ZIGZAG_NATURAL[k]] = _extend(
-                                reader.receive(s), s
-                            )
-                            k += 1
-                        block = coef.reshape(8, 8) * qt[comp["tq"]]
-                        px = m.T @ block @ m + 128.0
-                        px = np.clip(np.rint(px), 0, 255).astype(np.int32)
-                        y0 = (my * comp["v"] + by) * 8
-                        x0 = (mx * comp["h"] + bx) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = px
-    # upsample to full resolution and crop
-    full = []
-    for ci, c in enumerate(comps):
-        p = planes[ci]
-        if c["h"] != hmax:
-            p = np.repeat(p, hmax // c["h"], axis=1)
-        if c["v"] != vmax:
-            p = np.repeat(p, vmax // c["v"], axis=0)
-        full.append(p[:h, :w])
-    if len(comps) == 1:
-        out = full[0][:, :, None]
-    elif len(comps) == 3:
-        y, cb, cr = (f.astype(np.float64) for f in full)
-        r = y + 1.402 * (cr - 128.0)
-        g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-        b = y + 1.772 * (cb - 128.0)
-        out = np.stack(
-            [np.clip(np.rint(ch), 0, 255) for ch in (r, g, b)], axis=2
-        ).astype(np.int32)
-    else:
-        raise JpegFormatError(f"{len(comps)}-component color unsupported")
-    rows = [bytes(out[r].reshape(-1).astype(np.uint8)) for r in range(h)]
-    return w, h, len(comps), rows
-
-
 # ---------------------------------------------------------------------------
 # baseline encoder (fixture writer): grayscale / 4:4:4 / 4:2:0, flat huffman
 # ---------------------------------------------------------------------------

@@ -15,9 +15,6 @@ more than two refs with first == last, and ANY tag is a polygon feature.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 RULES: dict[str, tuple[str, frozenset[str]]] = {
     "building": ("all", frozenset()),
     "highway": ("whitelist", frozenset({"services", "rest_area", "escape", "elevator"})),
@@ -68,24 +65,3 @@ def tags_have_polygon_feature(tags: dict[str, str] | None) -> bool:
     if not tags:
         return False
     return any(test_polygon_feature(k, v) for k, v in tags.items())
-
-
-def is_area_expr(tags: Column, refs: Column) -> Column:
-    """Native Spark Column: True if a way with these tags/refs is an area.
-
-    Generated as a CASE over the (small, fixed) rule table so it runs inside
-    whole-stage codegen — no UDF, no broadcast needed.
-    """
-    any_polygon_tag = F.lit(False)
-    for key, (kind, values) in RULES.items():
-        v = tags.getItem(key)
-        if kind == "all":
-            m = v.isNotNull()
-        elif kind == "whitelist":
-            m = v.isin(*sorted(values))
-        else:
-            m = v.isNotNull() & ~v.isin(*sorted(values))
-        any_polygon_tag = any_polygon_tag | F.coalesce(m, F.lit(False))
-    closed = (F.size(refs) > 2) & (F.element_at(refs, 1) == F.element_at(refs, -1))
-    not_area_no = F.coalesce(F.lower(tags.getItem("area")) != "no", F.lit(True))
-    return not_area_no & closed & any_polygon_tag

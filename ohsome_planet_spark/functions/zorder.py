@@ -54,14 +54,6 @@ def quantize_expr(c: Column, lo: float, hi: float, bits: int = 16) -> Column:
     return F.greatest(F.lit(0), F.least(F.lit(cells), q))
 
 
-def quantize_sql(c: str, lo: float, hi: float, bits: int = 16) -> str:
-    cells = (1 << bits) - 1
-    return (
-        f"greatest(0, least({cells}, "
-        f"CAST(floor(({c} - {lo!r}) / {hi - lo!r} * {cells}) AS BIGINT)))"
-    )
-
-
 def hilbert_key_expr(x: Column, y: Column, bits: int = 16) -> Column:
     """Hilbert-curve distance of a 2-D point (the clustering key Iceberg
     prefers over Morton for 2-D: no quadrant seam jumps, so range scans

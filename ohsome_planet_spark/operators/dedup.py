@@ -104,11 +104,12 @@ def ngram_jaccard_pairs(
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
     if shingle_df is not None:
-        assert set(shingle_df.columns) == {"doc", "shingle_hash"}, (
-            "shingle_df must be the exact shingles(df, id_col, text_col, n) "
-            "frame — columns (doc, shingle_hash) built with the SAME n/"
-            f"text_col/tokenization; got columns {shingle_df.columns}"
-        )
+        if set(shingle_df.columns) != {"doc", "shingle_hash"}:
+            raise ValueError(
+                "shingle_df must be the exact shingles(df, id_col, text_col, n) "
+                "frame — columns (doc, shingle_hash) built with the SAME n/"
+                f"text_col/tokenization; got columns {shingle_df.columns}"
+            )
         sh = shingle_df
     else:
         sh = shingles(df, id_col, text_col, n)

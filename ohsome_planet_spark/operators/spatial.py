@@ -178,32 +178,6 @@ def _polygon_rings_of(geom: dict) -> list["np.ndarray"]:
     return []
 
 
-def geometry_intersects_feature(
-    coords_xy: "np.ndarray", feat: Feature, geom: dict | None = None
-) -> bool:
-    """JTS-intersects approximation for an arbitrary geometry: any geometry
-    vertex inside/on the feature, any proper/touching edge crossing, or —
-    for polygonal geometries — any feature vertex inside the geometry
-    (covers geometry-contains-feature)."""
-    px, py = coords_xy[:, 0], coords_xy[:, 1]
-    if points_in_feature(px, py, feat).any():
-        return True
-    for part in feat.parts:
-        for ring in part[:1]:  # exterior ring crossing suffices
-            if _segments_cross_ring(px, py, ring):
-                return True
-    if geom is not None:
-        for gring in _polygon_rings_of(geom):
-            for part in feat.parts:
-                if not part:
-                    continue
-                fx, fy = part[0][:, 0], part[0][:, 1]
-                inside, on_edge = _ring_test(fx, fy, gring)
-                if (inside | on_edge).any():
-                    return True
-    return False
-
-
 def _part_polylines(geom: dict) -> list["np.ndarray"]:
     """Per-part vertex chains: each polygon ring (exterior AND holes), each
     linestring, each point becomes its own (N,2) array. Edges never span

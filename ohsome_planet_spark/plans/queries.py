@@ -1,34 +1,20 @@
-"""Query/oracle registry for the driver contract — now a thin composer
-over six mechanical line-range slices (_q01.._q06, chained namespaces
-over plans/_qshared.py which owns QUERIES/ORACLES/_register). The public
-surface is unchanged: every name importable from this module before the
-split (including underscore helpers used by tests) still is.
+"""Query/oracle registry for the driver contract.
 
-The slices star-import their predecessor, which propagates names
-FORWARD; the original single file also allowed BACKWARD references at
-call time (a function body resolving a helper defined later in the
-file, e.g. _q01 rows calling _derived_way_inputs from _q02). To
-reproduce those semantics exactly, the composer backfills every slice
-module's globals with the union namespace — ADD-MISSING-ONLY, so each
-slice's own definitions keep their positional (import-time) bindings.
-The only top-level name defined in two slices, `_semantic_dedup_oracle`
-(_q02 and _q04), is consumed exclusively at decorator time immediately
-after each definition, so add-missing-only is exact there too (the
-duplicate-name audit lives in tests/test_plans_split.py).
-"""
+Importing the family modules registers their rows with
+:mod:`._registry`; this module re-exports the registry surface that
+``__spark_entry__``, the bench and the tools use."""
 
-from . import _q01, _q02, _q03, _q04, _q05, _q06, _q07, _qshared
-
-_SLICES = (_qshared, _q01, _q02, _q03, _q04, _q05, _q06, _q07)
-_union: dict = {}
-for _m in _SLICES:
-    for _k, _v in vars(_m).items():
-        if not _k.startswith("__"):
-            _union[_k] = _v
-for _m in _SLICES:
-    _vars = vars(_m)
-    for _k, _v in _union.items():
-        if _k not in _vars:
-            setattr(_m, _k, _v)
-globals().update(_union)
-del _m, _k, _v, _vars
+from . import (  # noqa: F401 — imported to register their rows
+    ann,
+    audio,
+    dedup,
+    media,
+    ohsome_api,
+    osm_contrib,
+    relational,
+    streaming,
+    text,
+    web,
+)
+from ._registry import QUERIES, all_oracles, all_queries  # noqa: F401
+from .osm_contrib import contrib_nodes  # noqa: F401

@@ -1,0 +1,781 @@
+"""Structured-streaming rows (``availableNow`` over the events table) and
+the replication/changeset upsert rows. This module owns the streaming
+checkpoint state."""
+
+from __future__ import annotations
+
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import functions as F
+
+from ._registry import _register, _t, staged_sort
+
+
+@_register(
+    "event_time_windows",
+    """
+    SELECT CAST(to_timestamp(floor(epoch(ts) / 600) * 600) AS TIMESTAMP) AS window_start,
+           event_type,
+           CAST(count(*) AS BIGINT) AS n_events,
+           round(sum(value), 2) AS total_value
+    FROM events
+    GROUP BY 1, 2 ORDER BY 1, 2
+    """,
+)
+def event_time_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling event-time windows (the Structured-Streaming operator run
+    through the unified batch API — streaming/windows.py)."""
+    from ..streaming.windows import windowed_event_counts
+
+    ev = _t(spark, sf_dir, "events")
+    return (
+        windowed_event_counts(ev)
+        .drop("window_end")
+        .orderBy("window_start", "event_type")
+    )
+
+
+# ===========================================================================
+# replication surface (R5 upsert-merge + J6/J7/R3/R4 batch application)
+# ===========================================================================
+
+_CHANGESET_UPSERT_ORACLE = """
+WITH state AS (
+  SELECT CAST(c_custkey AS BIGINT)                                  AS id,
+         TIMESTAMP '2020-01-01' + INTERVAL 1 MINUTE * c_custkey     AS created_at,
+         (c_custkey % 3 = 0)                                        AS open,
+         c_mktsegment                                               AS user_name
+  FROM customer
+), batch AS (
+  SELECT CAST(o_custkey + CASE WHEN o_orderkey % 10 = 0 THEN 2000 ELSE 0 END
+              AS BIGINT)                                            AS id,
+         o_orderkey                                                 AS pos,
+         TIMESTAMP '2021-01-01' + INTERVAL 1 MINUTE * o_orderkey    AS created_at,
+         (o_orderstatus <> 'F')                                     AS open,
+         o_orderpriority                                            AS user_name
+  FROM orders
+), winner AS (
+  -- sequential ON CONFLICT application: first closing row freezes the id,
+  -- otherwise the last row wins
+  SELECT id, created_at, open, user_name FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY id
+      ORDER BY open, CASE WHEN open THEN -pos ELSE pos END
+    ) AS rn FROM batch
+  ) WHERE rn = 1
+)
+SELECT coalesce(s.id, w.id) AS id,
+       CASE WHEN s.id IS NOT NULL AND NOT s.open THEN s.created_at
+            WHEN w.id IS NOT NULL THEN w.created_at
+            ELSE s.created_at END                                   AS created_at,
+       CASE WHEN s.id IS NOT NULL AND NOT s.open THEN s.open
+            WHEN w.id IS NOT NULL THEN w.open
+            ELSE s.open END                                         AS open,
+       CASE WHEN s.id IS NOT NULL AND NOT s.open THEN s.user_name
+            WHEN w.id IS NOT NULL THEN w.user_name
+            ELSE s.user_name END                                    AS user_name
+FROM state s FULL OUTER JOIN winner w ON s.id = w.id
+ORDER BY id
+"""
+
+
+@_register("changeset_upsert", _CHANGESET_UPSERT_ORACLE)
+def changeset_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """R5: the ``ON CONFLICT (id) DO UPDATE … WHERE changesets.open`` merge
+    (``ChangesetDB.java:131-160``) on derived tables — customers are the
+    stored changesets (every third one still open), orders are a
+    replication batch with ~10 rows per id (so the within-batch
+    first-close-wins path is exercised) and 10 % brand-new ids (the insert
+    path). Checked against a window+full-outer-join DuckDB replay."""
+    from ..streaming.changesets import upsert_changesets
+
+    customer = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders")
+    state = customer.select(
+        F.col("c_custkey").cast("bigint").alias("id"),
+        F.expr(
+            "timestamp'2020-01-01' + make_interval(0,0,0,0,0, c_custkey, 0)"
+        ).alias("created_at"),
+        (F.col("c_custkey") % 3 == 0).alias("open"),
+        F.col("c_mktsegment").alias("user_name"),
+    )
+    batch = orders.select(
+        (
+            F.col("o_custkey")
+            + F.when(F.col("o_orderkey") % 10 == 0, 2000).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("id"),
+        F.col("o_orderkey").alias("_pos"),
+        F.expr(
+            "timestamp'2021-01-01' + make_interval(0,0,0,0,0, o_orderkey, 0)"
+        ).alias("created_at"),
+        (F.col("o_orderstatus") != "F").alias("open"),
+        F.col("o_orderpriority").alias("user_name"),
+    )
+    return staged_sort(
+        upsert_changesets(state, batch),
+        "id",
+    )
+
+
+_REPLICATION_BATCH_ORACLE = """
+WITH hist AS (
+  SELECT CAST(event_id % 500 AS BIGINT) AS osm_id,
+         CAST(row_number() OVER (PARTITION BY event_id % 500
+                                 ORDER BY ts, event_id) AS INT) AS version,
+         ts,
+         (event_type <> 'error') AS visible
+  FROM events
+), state AS (
+  SELECT osm_id, version, ts, visible FROM (
+    SELECT *, row_number() OVER (PARTITION BY osm_id
+                                 ORDER BY version DESC, ts DESC) AS rn
+    FROM hist WHERE version <= 2
+  ) WHERE rn = 1
+), diff AS (
+  SELECT osm_id, version, ts, visible FROM hist WHERE version BETWEEN 2 AND 4
+  UNION ALL
+  SELECT osm_id + 1000, 1, ts, visible FROM hist WHERE version = 1
+), kept AS (
+  -- J6: replays (version <= stored) and deletes without before-state drop
+  SELECT d.osm_id, d.version, d.ts, d.visible
+  FROM diff d LEFT JOIN state s ON d.osm_id = s.osm_id
+  WHERE (s.osm_id IS NULL AND d.visible)
+     OR (s.osm_id IS NOT NULL AND d.version > s.version)
+), merged AS (
+  -- R4: newest version per id wins
+  SELECT osm_id, version, visible FROM (
+    SELECT *, row_number() OVER (PARTITION BY osm_id
+                                 ORDER BY version DESC, ts DESC) AS rn
+    FROM (SELECT * FROM state UNION ALL SELECT * FROM kept)
+  ) WHERE rn = 1
+), ways AS (
+  SELECT CAST(o_orderkey % 300 AS BIGINT) AS way_id,
+         CAST(o_custkey % 500 AS BIGINT) AS r1,
+         CAST((o_custkey + 7) % 500 AS BIGINT) AS r2
+  FROM orders
+), changed AS (
+  SELECT DISTINCT osm_id FROM kept
+), dirty_ways AS (
+  -- J7: changed node ids propagate to referencing ways
+  SELECT DISTINCT way_id FROM ways
+  WHERE r1 IN (SELECT osm_id FROM changed)
+     OR r2 IN (SELECT osm_id FROM changed)
+)
+SELECT 'node' AS kind, osm_id AS id, version, visible FROM merged
+UNION ALL
+SELECT 'way', way_id, CAST(NULL AS INT), CAST(NULL AS BOOLEAN) FROM dirty_ways
+ORDER BY kind, id
+"""
+
+
+@_register("replication_batch", _REPLICATION_BATCH_ORACLE)
+def replication_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One replication micro-batch end-to-end (J6 diff filter → R4 state
+    merge → J7 dirty propagation) on derived histories: the diff carries
+    replayed versions, genuine new versions, tombstone deletes, creates of
+    unknown ids, and deletes of unknown ids — every branch of
+    ``filter_diff_against_state``. Ways derived from orders pick up dirt
+    from the changed node ids (``streaming/replication.py:44-123``)."""
+    from ..streaming.replication import (
+        dirty_parents,
+        filter_diff_against_state,
+        latest_state,
+        merge_latest_state,
+    )
+
+    ev = _t(spark, sf_dir, "events")
+    orders = _t(spark, sf_dir, "orders")
+    base = ev.select(
+        (F.col("event_id") % 500).cast("bigint").alias("osm_id"),
+        "ts",
+        "event_id",
+        (F.col("event_type") != "error").alias("visible"),
+    )
+    w = W.partitionBy("osm_id").orderBy("ts", "event_id")
+    hist = base.select(
+        "osm_id",
+        F.row_number().over(w).cast("int").alias("version"),
+        "ts",
+        "visible",
+    ).withColumn("osm_type", F.lit("node"))
+    # hist feeds three branches (state / extra / diff), state and kept two
+    # consumers each — persist so the events window computes once
+    from pyspark.storagelevel import StorageLevel
+
+    from ..session import register_cached
+
+    hist = register_cached(hist.persist(StorageLevel.MEMORY_AND_DISK))
+
+    state = latest_state(hist.filter(F.col("version") <= 2))
+    state = register_cached(state.persist(StorageLevel.MEMORY_AND_DISK))
+    extra = hist.filter(F.col("version") == 1).select(
+        (F.col("osm_id") + 1000).alias("osm_id"),
+        F.lit(1).cast("int").alias("version"),
+        "ts",
+        "visible",
+        "osm_type",
+    )
+    diff = hist.filter(F.col("version").between(2, 4)).unionByName(extra)
+    kept = register_cached(
+        filter_diff_against_state(diff, state).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    merged = merge_latest_state(state, kept)
+
+    ways = orders.select(
+        (F.col("o_orderkey") % 300).cast("bigint").alias("osm_id"),
+        F.lit(True).alias("visible"),
+        F.array(
+            (F.col("o_custkey") % 500).cast("bigint"),
+            ((F.col("o_custkey") + 7) % 500).cast("bigint"),
+        ).alias("refs"),
+    )
+    changed = kept.select("osm_id").distinct()
+    no_changed_ways = spark.createDataFrame([], "osm_id bigint")
+    no_relations = spark.createDataFrame(
+        [],
+        "osm_id bigint, visible boolean,"
+        " members array<struct<type:string,id:bigint,role:string>>",
+    )
+    dirty_ways, _ = dirty_parents(changed, no_changed_ways, ways, no_relations)
+
+    nodes_out = merged.select(
+        F.lit("node").alias("kind"),
+        F.col("osm_id").alias("id"),
+        "version",
+        "visible",
+    )
+    ways_out = dirty_ways.select(
+        F.lit("way").alias("kind"),
+        F.col("osm_id").alias("id"),
+        F.lit(None).cast("int").alias("version"),
+        F.lit(None).cast("boolean").alias("visible"),
+    )
+    return staged_sort(
+        nodes_out.unionByName(ways_out),
+        "kind",
+        "id",
+    )
+
+
+_STREAM_SEQ = iter(range(1, 1 << 30))
+_STREAM_DIRS: dict[str, str] = {}
+
+
+@_register(
+    "streaming_window_counts",
+    """
+    SELECT CAST(to_timestamp(floor(epoch(ts) / 600) * 600) AS TIMESTAMP)
+             AS window_start,
+           CAST(to_timestamp(floor(epoch(ts) / 600) * 600 + 600) AS TIMESTAMP)
+             AS window_end,
+           event_type,
+           CAST(count(*) AS BIGINT) AS n_events,
+           round(sum(value), 2) AS total_value
+    FROM events
+    GROUP BY 1, 2, 3 ORDER BY 1, 3
+    """,
+)
+def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.8 through the ACTUAL streaming engine, oracle-verified: the
+    events parquet becomes a file-source stream, the shared
+    ``windowed_event_counts`` transformation (watermarked tumbling
+    windows) runs under an ``availableNow`` trigger into a memory sink,
+    and the materialized sink table is returned. Bounded replay makes the
+    streaming run bit-identical to the batch/SQL twin — the unified-API
+    guarantee the module's docstring claims, here certified by the DuckDB
+    oracle instead of a unit test. At scale the same query tails a
+    landing directory continuously; availableNow is the catch-up mode."""
+    from ..streaming.windows import windowed_event_counts
+
+    # same session normalization as the batch loader
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    raw = _events_stream(spark, sf_dir)
+    out = windowed_event_counts(raw)
+    return (
+        _drain(spark, sf_dir, out, "stream_win", "complete")
+        .orderBy("window_start", "event_type")
+    )
+
+
+def _events_stream(spark: SparkSession, sf_dir: str):
+    """File-source stream over the events parquet (landing-dir staging
+    shared with streaming_window_counts)."""
+    import os
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    land = _STREAM_DIRS.get(sf_dir)
+    if land is None or not os.path.isdir(land):
+        import tempfile
+
+        land = tempfile.mkdtemp(prefix="opc_stream_events_")
+        os.symlink(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(land, "events.parquet"),
+        )
+        _STREAM_DIRS[sf_dir] = land
+    return spark.readStream.schema(
+        "event_id bigint, ts timestamp, user_id bigint,"
+        " event_type string, value double, props string"
+    ).parquet(land)
+
+
+def _path_bytes(path: str) -> int:
+    import os
+
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    total = 0
+    for root, _dirs, files in os.walk(path, followlinks=True):
+        for fn in files:
+            try:
+                total += os.path.getsize(os.path.join(root, fn))
+            except OSError:
+                pass
+    return total
+
+
+@contextmanager
+def _stream_conf(
+    spark: SparkSession,
+    sf_dir: str,
+    no_data_batch: bool = True,
+    wide: bool = False,
+):
+    """Scope streaming-only session conf around one availableNow run.
+
+    **State partitions track state volume, not the batch-shuffle width.**
+    Every stateful-operator partition pays a fixed commit cost per
+    micro-batch — one delta file + checksum + rename per state-store
+    instance, and a stream-stream join holds FOUR stores per partition —
+    so at small state the per-store overhead dwarfs the work (measured on
+    the louter attribution join at sf0.1: 32 partitions → 19.8 s with
+    323 s of summed commitTimeMs over ~40k state rows; 8 partitions →
+    4.8 s, identical output). Derive the count from the input size (one
+    partition per 64 MB, clamped to [8, session shuffle partitions]):
+    locally that is 8; at 100 TB the clamp returns the cluster-sized
+    session setting, so nothing here is tuned to local[32].
+
+    ``no_data_batch=False`` skips the trailing no-data micro-batch for
+    queries whose OUTPUT provably cannot depend on it: operators that emit
+    on arrival (inner interval joins, dropDuplicates*, no-timeout
+    applyInPandasWithState) use the no-data batch only to advance the
+    watermark and evict state, which at query end is torn down anyway.
+    Queries whose emission rule depends on that final watermark advance —
+    the LEFT OUTER join's unmatched-row flush, timeout-based stateful
+    ops, complete-mode re-emission — must keep it on (and
+    ``streaming_louter_attribution`` pins it on explicitly, since its
+    oracle reproduces exactly that rule).
+
+    ``wide=True`` keeps the session shuffle width instead: for
+    Python-stateful operators (``applyInPandasWithState``) the cost is
+    per-row Python compute over the whole input, so partitions should
+    track compute width (cores), not state volume — measured on
+    streaming_dedup_keys at sf0.1: 8 partitions 5.4 s vs 32 partitions
+    3.5 s, identical output.
+
+    **Checkpoint scratch goes to fast local storage.** Every state-store
+    commit is a delta file + CRC + rename against the checkpoint
+    directory, once per store instance per micro-batch — pure filesystem
+    metadata traffic. These gate queries are bounded ``availableNow``
+    replays into a memory sink, so their checkpoint is scratch by
+    construction (Spark itself would put it in a temp dir); pointing it
+    at tmpfs (``/dev/shm``) removes the ext4 journal from the commit path
+    (interleaved A/B at sf0.1: louter 0.87, dedup_keys 0.89,
+    latest_state 0.90, attribution 0.99 — guide §6, I/O layout). The
+    directory is created fresh per query and deleted on exit, so nothing
+    persists across runs. ``SPARK_GRAFT_STREAM_CKPT`` overrides the base
+    (a cluster deployment running RECOVERABLE streams sets it to durable
+    shared storage — or uses ``streaming/manager.py``, which manages its
+    own checkpoint dirs and never passes through here).
+
+    Both settings restore on exit so batch queries in the same session
+    see the session defaults.
+    """
+    import os
+    import shutil
+    import tempfile
+
+    sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    old_nodata = spark.conf.get(
+        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    )
+    if wide:
+        parts = int(sess_parts)
+    else:
+        nbytes = _path_bytes(os.path.join(sf_dir, "events.parquet"))
+        if nbytes <= 0:
+            # Input not statable from the driver's local filesystem (an
+            # object-store/HDFS URI at cluster scale): the size heuristic
+            # has no signal, so keep the session shuffle width — NEVER the
+            # 8-partition floor, which would run a 100 TB stream's state
+            # on 8 partitions (r13 verdict, wrong #1).
+            parts = int(sess_parts)
+        else:
+            parts = max(8, min(int(sess_parts), (nbytes + (64 << 20) - 1) >> 26))
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    spark.conf.set(
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "true" if no_data_batch else "false",
+    )
+    # tmpfs scratch is only safe single-process: on a multi-executor
+    # deployment the checkpoint base must be visible to every executor,
+    # and /dev/shm is node-local — a state-store partition rescheduled
+    # onto another executor between micro-batches would lose its deltas
+    # (ADVICE r13). Gate on a local master; otherwise fall back to
+    # Spark's default temp-checkpoint handling unless the deployment
+    # points SPARK_GRAFT_STREAM_CKPT at shared storage.
+    is_local_master = spark.sparkContext.master.startswith("local")
+    ckpt_base = os.environ.get("SPARK_GRAFT_STREAM_CKPT") or (
+        "/dev/shm"
+        if is_local_master and os.access("/dev/shm", os.W_OK)
+        else None
+    )
+    ckpt_dir = None
+    old_ckpt = None
+    if ckpt_base:
+        try:
+            old_ckpt = spark.conf.get("spark.sql.streaming.checkpointLocation")
+        except Exception:
+            old_ckpt = None
+        ckpt_dir = tempfile.mkdtemp(prefix="opc_ckpt_", dir=ckpt_base)
+        spark.conf.set("spark.sql.streaming.checkpointLocation", ckpt_dir)
+    try:
+        yield parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
+        spark.conf.set(
+            "spark.sql.streaming.noDataMicroBatches.enabled", old_nodata
+        )
+        if ckpt_dir:
+            # An exception/interrupt inside the block (e.g. KeyboardInterrupt
+            # during awaitTermination) can leave the streaming query active;
+            # rmtree'ing its checkpoint under it produces confusing secondary
+            # failures and orphans the query on the session (ADVICE r13).
+            # Stop any still-active query checkpointed under this dir first.
+            try:
+                for q in spark.streams.active:
+                    try:
+                        root = (
+                            q._jsq.streamingQuery().resolvedCheckpointRoot()
+                        )
+                        if ckpt_dir in str(root):
+                            q.stop()
+                    except Exception:
+                        pass
+            except Exception:
+                pass
+            if old_ckpt is not None:
+                spark.conf.set(
+                    "spark.sql.streaming.checkpointLocation", old_ckpt
+                )
+            else:
+                try:
+                    spark.conf.unset("spark.sql.streaming.checkpointLocation")
+                except Exception:
+                    pass
+            shutil.rmtree(ckpt_dir, ignore_errors=True)
+
+
+def _drain(
+    spark: SparkSession, sf_dir: str, out: DataFrame, prefix: str,
+    mode: str, **conf,
+) -> DataFrame:
+    """Run the streaming frame ``out`` to completion under an
+    ``availableNow`` trigger into a uniquely named memory sink (inside
+    :func:`_stream_conf` with ``conf``) and return the sink table."""
+    name = f"{prefix}_{next(_STREAM_SEQ)}"
+    with _stream_conf(spark, sf_dir, **conf):
+        (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.table(name)
+
+
+@_register(
+    "streaming_latest_state",
+    """
+    SELECT user_id, event_id, ts, event_type, round(value, 6) AS value
+    FROM (SELECT *, row_number() OVER (
+            PARTITION BY user_id ORDER BY event_id DESC) AS rn
+          FROM events)
+    WHERE rn = 1 ORDER BY user_id
+    """,
+)
+def streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """R4's latest-state upsert as a REAL stateful streaming run,
+    oracle-verified: ``applyInPandasWithState`` keeps one fixed-width
+    state row per key (`streaming/stateful.py::latest_state_stream`) and
+    emits only version advances; bounded ``availableNow`` replay over the
+    events stream (version = event_id per user) must land exactly on the
+    SQL last-version-per-key answer. State is sharded by the grouping
+    key — the same O(live keys)/executor budget a 1000-node cluster
+    relies on."""
+    from ..streaming.stateful import latest_state_stream
+
+    raw = _events_stream(spark, sf_dir).select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    out = latest_state_stream(raw, ["user_id"], "event_id")
+    # NoTimeout stateful op emits on arrival only — the no-data batch is
+    # pure state-eviction overhead for a query that then terminates
+    return (
+        _drain(spark, sf_dir, out, "stream_latest", "append",
+               no_data_batch=False)
+        .select(
+            "user_id",
+            "event_id",
+            "ts",
+            "event_type",
+            F.round("value", 6).alias("value"),
+        )
+        .orderBy("user_id")
+    )
+
+
+@_register(
+    "streaming_session_windows",
+    """
+    WITH m AS (
+      SELECT user_id, ts,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
+                  THEN 1 ELSE 0 END AS new_s
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), g AS (
+      SELECT *, sum(new_s) OVER (
+        PARTITION BY user_id ORDER BY ts, new_s
+        ROWS UNBOUNDED PRECEDING) AS sid
+      FROM m
+    )
+    SELECT user_id,
+           min(ts)                       AS session_start,
+           max(ts) + INTERVAL 30 MINUTE  AS session_end,
+           CAST(count(*) AS BIGINT)      AS n_events
+    FROM g GROUP BY user_id, sid
+    ORDER BY user_id, session_start
+    """,
+)
+def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Native session windows (``F.session_window``, 30-min gap) through
+    the ACTUAL streaming engine — the streaming twin of the batch
+    ``user_sessions`` gap-sessionization, oracle-checked against the
+    classic gap-and-island SQL. Boundary semantics pinned by probe: an
+    exactly-gap-sized step MERGES (inclusive), so the oracle's new-session
+    test is strictly ``>``; a session's end is last event + gap. State per
+    key is the open session only — the watermark closes and evicts
+    sessions in continuous mode."""
+    from ..streaming.windows import session_windows
+
+    raw = _events_stream(spark, sf_dir)
+    out = session_windows(raw, gap="30 minutes", key="user_id")
+    return (
+        _drain(spark, sf_dir, out, "stream_sess", "complete")
+        .select("user_id", "session_start", "session_end", "n_events")
+        .orderBy("user_id", "session_start")
+    )
+
+
+@_register(
+    "streaming_dedup_keys",
+    """
+    SELECT DISTINCT user_id, event_type FROM events
+    ORDER BY user_id, event_type
+    """,
+)
+def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-seen-wins cross-batch dedup through the ACTUAL streaming
+    engine (``streaming/stateful.py::dedup_stream``,
+    ``applyInPandasWithState``). Which physical row wins depends on
+    partition arrival order, so the certified deterministic contract is
+    the emitted KEY SET — exactly one row per (user_id, event_type),
+    equal to batch DISTINCT. State per key is one boolean row."""
+    from ..streaming.stateful import dedup_stream
+
+    raw = _events_stream(spark, sf_dir)
+    out = dedup_stream(raw, ["user_id", "event_type"], state_ttl=None).select(
+        "user_id", "event_type"
+    )
+    # NoTimeout first-seen dedup emits on arrival; no-data batch skipped.
+    # wide: the op is per-row Python compute (applyInPandasWithState) —
+    # keep the session shuffle width for core parallelism
+    return (
+        _drain(spark, sf_dir, out, "stream_dedup", "append",
+               no_data_batch=False, wide=True)
+        .orderBy("user_id", "event_type")
+    )
+
+
+@_register(
+    "streaming_dedup_within_watermark",
+    """
+    SELECT DISTINCT user_id, event_type,
+           date_trunc('hour', ts) AS ts_hour
+    FROM events
+    ORDER BY user_id, event_type, ts_hour
+    """,
+)
+def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Built-in bounded-state streaming dedup:
+    ``dropDuplicatesWithinWatermark`` keeps one state row per key and —
+    unlike plain streaming ``dropDuplicates``, whose state grows with the
+    number of distinct keys FOREVER — evicts a key once the watermark
+    passes its event time + delay, so state is O(keys per watermark
+    window), the only shape that survives an unbounded stream. Dedup key
+    is (user_id, event_type, hour-truncated ts); emitting the key columns
+    only keeps the output independent of which physical row won (partition
+    arrival order), the same certification contract as
+    ``streaming_dedup_keys``. Single-source replay means batch 1 runs at
+    watermark 0 (nothing evicted mid-batch), so the emitted key set equals
+    batch DISTINCT exactly — value-oracled, not just row-counted."""
+    raw = _events_stream(spark, sf_dir)
+    out = (
+        raw.select(
+            "user_id",
+            "event_type",
+            F.date_trunc("hour", F.col("ts")).alias("ts_hour"),
+            F.col("ts"),
+        )
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type", "ts_hour"])
+        .select("user_id", "event_type", "ts_hour")
+    )
+    # dropDuplicatesWithinWatermark emits first-seen rows on arrival; the
+    # no-data batch only evicts state (and the docstring's emission
+    # argument already relies on nothing being evicted mid-batch)
+    return (
+        _drain(spark, sf_dir, out, "stream_dedup_wm", "append",
+               no_data_batch=False)
+        .orderBy("user_id", "event_type", "ts_hour")
+    )
+
+
+def _click_purchase_join(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """Watermarked click and purchase streams joined on user within the
+    2-hour attribution window: (click_id, purchase_id, user_id)."""
+    clicks = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "4 hours")
+    )
+    purchases = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "4 hours")
+    )
+    return clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") > F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 2 HOURS")),
+        how,
+    ).select("click_id", "purchase_id", "user_id")
+
+
+@_register(
+    "streaming_attribution_join",
+    """
+    SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id
+    FROM events c JOIN events p
+      ON c.user_id = p.user_id
+     AND c.event_type = 'click' AND p.event_type = 'purchase'
+     AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 2 HOUR
+    ORDER BY click_id, purchase_id
+    """,
+)
+def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join through the ACTUAL streaming engine:
+    click→purchase attribution within a 2-hour window. Both sides are
+    watermarked streams; the range condition bounds each side's state so
+    the engine evicts rows older than watermark − window (Spark's
+    canonical stream-stream join shape — state is O(window), not
+    O(stream)). Inner interval joins emit every matching pair exactly
+    once, so the full pair set is deterministic and value-oracled."""
+    joined = _click_purchase_join(spark, sf_dir, "inner")
+    # inner interval joins emit every pair during the data batch that
+    # completes it; the no-data batch only evicts state → skipped
+    return (
+        _drain(spark, sf_dir, joined, "stream_attr", "append",
+               no_data_batch=False)
+        .orderBy("click_id", "purchase_id")
+    )
+
+
+@_register(
+    "streaming_louter_attribution",
+    """
+    WITH c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
+               FROM events WHERE event_type = 'click'),
+    p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
+          FROM events WHERE event_type = 'purchase'),
+    wm AS (SELECT least(date_trunc('milliseconds', (SELECT max(click_ts) FROM c)),
+                        date_trunc('milliseconds', (SELECT max(purchase_ts) FROM p)))
+                  - INTERVAL 4 HOUR AS w),
+    matched AS (
+      SELECT c.click_id, p.purchase_id, c.user_id FROM c JOIN p
+        ON c.user_id = p.user_id
+       AND p.purchase_ts > c.click_ts
+       AND p.purchase_ts <= c.click_ts + INTERVAL 2 HOUR
+    ),
+    unmatched AS (
+      SELECT c.click_id, CAST(NULL AS BIGINT) AS purchase_id, c.user_id
+      FROM c, wm
+      WHERE c.click_ts + INTERVAL 2 HOUR < wm.w
+        AND NOT EXISTS (SELECT 1 FROM matched m WHERE m.click_id = c.click_id)
+    )
+    SELECT click_id, purchase_id, user_id FROM matched
+    UNION ALL SELECT click_id, purchase_id, user_id FROM unmatched
+    ORDER BY click_id, purchase_id
+    """,
+)
+def streaming_louter_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT OUTER stream-stream interval join through the actual streaming
+    engine: every click emits either its attributed purchases (within 2 h)
+    or, once the watermark proves no match can arrive, a single null-padded
+    row. State stays O(join window) — the range condition lets the engine
+    evict both sides past watermark − window, and unmatched left rows are
+    emitted at eviction (Spark's canonical outer stream-stream join).
+
+    The oracle reproduces the engine's emission rule exactly, empirically
+    pinned at sf0.001/sf0.01 (set-equal outputs): the final no-data batch
+    (spark.sql.streaming.noDataMicroBatches, default on) advances the
+    global watermark to min over BOTH watermarked inputs of
+    floor_ms(max event ts) − 4 h delay — the per-input maxima differ
+    because each side is filtered to its event_type BEFORE withWatermark —
+    and a click is emitted unmatched iff click_ts + 2 h < that watermark;
+    later unmatched clicks are discarded with the state at query end.
+    Reference has no streaming outer join; this extends its replication
+    update loop (ReplicationUpdater.java) the way Spark users would."""
+    # the oracle's emission rule requires the final no-data batch (default
+    # on; pinned against environment config drift)
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    joined = _click_purchase_join(spark, sf_dir, "left_outer")
+    # no_data_batch stays ON: the unmatched-click flush IS the no-data
+    # batch's watermark advance (the emission rule the oracle reproduces)
+    return (
+        _drain(spark, sf_dir, joined, "stream_louter", "append",
+               no_data_batch=True)
+        .orderBy("click_id", "purchase_id")
+    )

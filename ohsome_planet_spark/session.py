@@ -182,6 +182,19 @@ def ship_package(spark: SparkSession) -> None:
     _PACKAGE_SHIPPED.add(key)
 
 
+def _default_driver_memory() -> str:
+    """About half of the host's ``MemTotal``, capped at 16g. In local mode
+    the executors share the driver JVM, and the Python workers need the
+    rest of the memory; a fixed 16g took the whole of a 16 GB host.
+    Hosts without ``/proc/meminfo`` set ``SPARK_GRAFT_DRIVER_MEM``."""
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                half_mb = int(line.split()[1]) // 2048
+                return f"{max(1024, min(16 * 1024, half_mb))}m"
+    raise ValueError("MemTotal missing from /proc/meminfo")
+
+
 def get_spark(
     app_name: str = "ohsome_planet_spark",
     master: str | None = None,
@@ -218,7 +231,10 @@ def get_spark(
         # threshold generous so dimension tables (changesets slice,
         # countries, polygon-feature rules) always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Catalyst constraint propagation is quadratic in the constraint
         # set over deep union/self-join trees; on this engine's staged

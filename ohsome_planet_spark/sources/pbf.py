@@ -101,11 +101,6 @@ def packed_sint_delta(buf: memoryview) -> np.ndarray:
     return np.cumsum(dec)
 
 
-def packed_sint(buf: memoryview) -> np.ndarray:
-    raw = packed_varints(buf).astype(np.uint64)
-    return (raw >> np.uint64(1)).astype(np.int64) ^ -(raw & np.uint64(1)).astype(np.int64)
-
-
 # --- blob framing (S1/S2/S7) -------------------------------------------------
 
 

@@ -63,7 +63,7 @@ def _dsir_python_replay(rows):
 
 
 def test_dsir_importance_matches_python_replay(spark):
-    from ohsome_planet_spark.plans.queries import dsir_importance_weights
+    from ohsome_planet_spark.plans.text import dsir_importance_weights
     from ohsome_planet_spark.sources.testdata import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -90,7 +90,7 @@ def test_dsir_importance_matches_python_replay(spark):
 def test_dsir_scores_separate_target_domain(spark):
     """Behavioral sanity on top of the bit-replay: English docs must score
     higher on average than non-English ones (that is DSIR's entire job)."""
-    from ohsome_planet_spark.plans.queries import dsir_importance_weights
+    from ohsome_planet_spark.plans.text import dsir_importance_weights
     from ohsome_planet_spark.sources.testdata import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "lang")

@@ -4,6 +4,9 @@ scan, scans pruned to the referenced columns, broadcasts on dimension
 joins. A refactor that silently breaks one of these passes value checks
 but loses an order of magnitude at scale."""
 
+import ast
+import os
+
 from pyspark.sql import functions as F
 
 from ohsome_planet_spark.plans.queries import all_queries
@@ -107,7 +110,8 @@ def test_registry_wide_plan_hygiene(spark):
     # batch builders. Run them sequentially after the pool.
     batch = [it for it in items if not it[0].startswith("streaming_")]
     streaming = [it for it in items if it[0].startswith("streaming_")]
-    with ThreadPoolExecutor(max_workers=8) as ex:
+    workers = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    with ThreadPoolExecutor(max_workers=workers) as ex:
         results = list(ex.map(build, batch))
     results += [build(it) for it in streaming]
 
@@ -123,3 +127,70 @@ def test_registry_wide_plan_hygiene(spark):
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
         assert not nested, f"{name}: non-scalar output columns {nested}"
+
+
+PLANS = os.path.join(
+    os.path.dirname(__file__), "..", "ohsome_planet_spark", "plans"
+)
+
+
+def test_registry_surface():
+    from ohsome_planet_spark.plans.queries import (  # noqa: F401
+        QUERIES,
+        all_oracles,
+        contrib_nodes,
+    )
+    from ohsome_planet_spark.plans.osm_derive import _CONTRIB_ORACLE  # noqa: F401
+
+    assert len(all_queries()) == len(all_oracles()) >= 209
+    assert set(all_queries()) == set(all_oracles())
+
+
+def test_register_refuses_duplicate_names():
+    import pytest
+
+    from ohsome_planet_spark.plans._registry import QUERIES, _register
+
+    before = QUERIES["pricing_summary"]
+    with pytest.raises(ValueError, match="pricing_summary"):
+        _register("pricing_summary", "SELECT 1")(lambda spark, sf_dir: None)
+    assert QUERIES["pricing_summary"] is before
+
+
+def test_plans_modules_explicit_acyclic_and_bounded():
+    """Family modules import each other explicitly (no ``import *``, no
+    writes into another module's namespace), their import graph is
+    acyclic, and none exceeds 3,000 lines."""
+    graph = {}
+    for fn in sorted(os.listdir(PLANS)):
+        if not fn.endswith(".py"):
+            continue
+        mod = fn[:-3]
+        src = open(os.path.join(PLANS, fn)).read()
+        n = len(src.split("\n"))
+        assert n <= 3000, f"{fn}: {n} lines"
+        assert "globals()" not in src and "setattr(" not in src, fn
+        deps = set()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ImportFrom) and node.level == 1:
+                assert all(a.name != "*" for a in node.names), fn
+                if node.module:
+                    deps.add(node.module)
+                else:
+                    deps |= {a.name for a in node.names}
+        graph[mod] = deps
+
+    done, visiting = set(), []
+
+    def visit(mod):
+        assert mod not in visiting, f"import cycle: {visiting + [mod]}"
+        if mod in done:
+            return
+        visiting.append(mod)
+        for dep in graph.get(mod, ()):
+            visit(dep)
+        visiting.pop()
+        done.add(mod)
+
+    for mod in graph:
+        visit(mod)

@@ -18,7 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ohsome_planet_spark.plans._q04 import _path_bytes, _stream_conf
+from ohsome_planet_spark.plans.streaming import _path_bytes, _stream_conf
 
 
 class _StubConf:
@@ -161,5 +161,5 @@ def test_ngram_jaccard_pairs_rejects_wrong_shingle_frame(spark):
         [(1, "a b c d"), (2, "b c d e")], "doc_id bigint, text string"
     )
     bad = docs.select(F.col("doc_id").alias("doc"), "text")
-    with pytest.raises(AssertionError, match="shingle"):
+    with pytest.raises(ValueError, match="shingle"):
         ngram_jaccard_pairs(docs, "doc_id", "text", shingle_df=bad)

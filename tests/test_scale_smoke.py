@@ -146,7 +146,7 @@ def _record(entry: dict):
 
 
 def test_contrib_ways_scales_subquadratically(spark, tmp_path):
-    from ohsome_planet_spark.plans.queries import _derived_way_inputs
+    from ohsome_planet_spark.plans.osm_derive import _derived_way_inputs
     from ohsome_planet_spark.session import release_cached
 
     ways, nodes = _derived_way_inputs(spark, SF_DIR)
@@ -168,7 +168,7 @@ def test_contrib_ways_scales_subquadratically(spark, tmp_path):
 
 
 def test_contrib_relations_scales_subquadratically(spark, tmp_path):
-    from ohsome_planet_spark.plans.queries import (
+    from ohsome_planet_spark.plans.osm_derive import (
         _derived_relations,
         _derived_way_inputs,
     )
@@ -558,7 +558,7 @@ def test_streaming_dedup_scales(spark, scaled_dirs):
 
 
 def _collect_polygon_corpus(spark):
-    from ohsome_planet_spark.plans.queries import (
+    from ohsome_planet_spark.plans.osm_derive import (
         _derived_polygon_relations,
         _derived_polygon_ways,
     )

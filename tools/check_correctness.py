@@ -117,6 +117,7 @@ def main() -> int:
         on, oc, oh = frame_hash(odf)
         status = "ok" if (sn, sc, sh) == (on, oc, oh) else "MISMATCH"
         results[name] = {"status": status, "rows": sn,
+                         "spark_hash": sh, "duck_hash": oh,
                          "secs": round(time.time() - t0, 1)}
         if status != "ok":
             n_fail += 1
