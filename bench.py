@@ -3,8 +3,9 @@
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line.
 
-Execution is forced through the noop sink so the full plan runs (count()
-alone would let Catalyst prune most of the work).
+Each query runs through ``plans/run.py``: build + noop-sink write timed,
+cached intermediates released outside the timed span (count() alone would
+let Catalyst prune most of the work).
 
 Hardening (round-6):
 - per-query error isolation: a failing query records an ``errors`` entry
@@ -37,14 +38,15 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
-import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ohsome_planet_spark.plans.queries import all_queries  # noqa: E402
-from ohsome_planet_spark.session import get_spark, release_cached  # noqa: E402
+from ohsome_planet_spark.plans.run import run_passes  # noqa: E402
+from ohsome_planet_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_N", "5")))
@@ -94,33 +96,11 @@ def run_bench(spark, queries, sf_dir: str, n_runs: int) -> dict:
     """
     runs: dict[str, list[float]] = {name: [] for name in queries}
     errors: dict[str, str] = {}
-    for _ in range(n_runs):
-        for name in sorted(queries):
-            if name in errors:
-                continue  # a query that errored once will error every run
-            t0 = time.time()
-            try:
-                df = queries[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs[name].append(time.time() - t0)
-            except Exception:
-                errors[name] = traceback.format_exc(limit=8)
-            finally:
-                # release operator-persisted intermediates so a long
-                # session's storage memory stays flat
-                try:
-                    release_cached()
-                except Exception:
-                    pass
-        # localCheckpoint blocks are only reclaimed when the JVM's
-        # ContextCleaner sees their RDDs collected; over ~90 queries the
-        # block manager otherwise accumulates dead checkpoint blocks and
-        # later heavy queries pay eviction/GC stalls. One GC hint per
-        # full pass keeps the session flat (measured, not speculative).
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass
+    for rec in run_passes(spark, queries, sf_dir, n_runs):
+        if rec.ok:
+            runs[rec.name].append(rec.wall_s)
+        else:
+            errors[rec.name] = rec.error
 
     timings = {
         name: round(statistics.median(ts), 3) for name, ts in runs.items() if ts
@@ -181,27 +161,6 @@ def compact_summary(out: dict) -> dict:
 
 def main() -> None:
     spark = get_spark(app_name="ohsome_planet_spark_bench")
-    queries = all_queries()
-
-    # measurement hook (optimization rounds): comma-separated allowlist to
-    # A/B a subset with the bench's exact interleaved-pass methodology.
-    # Unset (the driver's invocation) the bench is unchanged.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = {n.strip() for n in only.split(",") if n.strip()}
-        queries = {n: f for n, f in queries.items() if n in keep}
-        # subset runs are scratch measurements: keep them out of the
-        # append-only BENCH_HISTORY so round-over-round comparisons only
-        # ever see full-suite entries
-        os.environ["SPARK_GRAFT_BENCH_NO_HISTORY"] = "1"
-
-    # test hook: deliberately break one query so the isolation path itself
-    # is testable end-to-end (tests/test_bench_harness.py)
-    broken = os.environ.get("SPARK_GRAFT_BENCH_BREAK")
-    if broken:
-        def _boom(spark, sf_dir):
-            raise RuntimeError(f"deliberately broken for test: {broken}")
-        queries[broken] = _boom
 
     # warm up the JVM/session so per-query numbers measure the queries
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -209,20 +168,9 @@ def main() -> None:
     if not idle["stable"]:
         print(f"[bench] WARNING: machine not idle ({idle})", file=sys.stderr)
 
-    out = run_bench(spark, queries, SF_DIR, N_RUNS)
+    out = run_bench(spark, all_queries(), SF_DIR, N_RUNS)
     out["idle_check"] = idle
 
-    # Subset (A/B) runs are scratch measurements: print and exit WITHOUT
-    # touching BENCH_DETAIL.json or BENCH_HISTORY.jsonl, so the committed
-    # full-suite artifacts are never clobbered by a measurement loop.
-    if os.environ.get("SPARK_GRAFT_BENCH_NO_HISTORY"):
-        print(json.dumps(out), file=sys.stderr)
-        print(json.dumps(compact_summary(out)))
-        try:
-            spark.stop()
-        except Exception:
-            pass
-        return
     # Full detail (with the per-query map) goes to a sidecar + stderr; the
     # FINAL stdout line is the compact driver-contract summary, kept well
     # under the driver's 2,000-char stdout tail capture.
@@ -237,8 +185,6 @@ def main() -> None:
     # append-only per-round history: BENCH_DETAIL.json is overwritten every
     # run, so round-over-round per-query tables need their own artifact
     try:
-        import subprocess
-
         head = subprocess.run(
             ["git", "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True,
@@ -255,10 +201,7 @@ def main() -> None:
     print(json.dumps(out), file=sys.stderr)
 
     print(json.dumps(compact_summary(out)))
-    try:
-        spark.stop()
-    except Exception:
-        pass
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -66,19 +66,9 @@ def staged_sort(df: DataFrame, *cols) -> DataFrame:
 
     The staged blocks are registered with the session's cache registry,
     so the bench / correctness harness frees them after each consuming
-    action (the same lifecycle every other seam uses).
-
-    ``SPARK_GRAFT_PLAIN_SORT=1`` (measurement hook) turns the staging off
-    and returns the plain ``orderBy`` — the two variants of every
-    converted query can then be built in ONE session for an interleaved
-    A/B, the only measurement shape that survives this sandbox's 3-5x
-    box-state noise. Results are identical either way."""
-    import os
-
+    action (the same lifecycle every other seam uses)."""
     from ..session import truncate_lineage
 
-    if os.environ.get("SPARK_GRAFT_PLAIN_SORT"):
-        return df.orderBy(*cols)
     return truncate_lineage(df).orderBy(*cols)
 
 

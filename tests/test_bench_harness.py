@@ -1,15 +1,23 @@
 """Bench-harness isolation tests (round-5 judge finding: one broken query
 zeroed the whole BENCH artifact because the loop had no per-query
-try/except)."""
+try/except), plus the shared run loop (``plans/run.py``) every timing
+tool goes through and ``tools/qtime.py``'s input validation."""
 
 import os
 import sys
+import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
 from bench import compact_summary, run_bench
+from ohsome_planet_spark import session
+from ohsome_planet_spark.plans.run import run_one, run_passes
+from tools.qtime import check_conf, parse_args
 
 
 def _ok_query(spark, sf_dir):
@@ -22,8 +30,12 @@ def _broken_query(spark, sf_dir):
 
 def _broken_at_action(spark, sf_dir):
     # breaks only when the plan executes (the round-5 failure mode: an
-    # AnalysisException surfaced at the noop write, not at plan build)
-    return spark.range(10).select(F.col("id").cast("timestamp_ntz").cast("double"))
+    # error surfaced at the noop write, not at plan build); a bad cast
+    # would already fail at build, where analysis is eager
+    return spark.range(10).select(
+        F.when(F.col("id") > 5, F.raise_error(F.lit("broken at action")))
+        .otherwise(F.col("id")).alias("x")
+    )
 
 
 def test_broken_query_does_not_zero_the_artifact(spark):
@@ -85,3 +97,162 @@ def test_compact_summary_green_case():
     parsed = json.loads(json.dumps(compact_summary(out)))
     assert "errors" not in parsed and "n_errors" not in parsed
     assert parsed["n_queries"] == 1 and parsed["value"] == 99.9
+
+
+def _staging_query(spark, sf_dir):
+    # registers one cached frame and one lineage seam, like real builders
+    base = session.register_cached(spark.range(50).persist())
+    return session.truncate_lineage(base.select((F.col("id") * 2).alias("x")))
+
+
+def _registries_empty():
+    return not (
+        session._CACHED_INTERMEDIATES
+        or session._CHECKPOINTED_JRDDS
+        or session._SEAM_FRAMES
+    )
+
+
+@pytest.mark.parametrize(
+    "builder, fails_at",
+    [(_ok_query, None), (_staging_query, None),
+     (_broken_query, "build"), (_broken_at_action, "action")],
+)
+def test_run_one_records_times_errors_and_releases(spark, builder, fails_at):
+    """A build-time failure, an action-time failure and green runs: times
+    recorded, errors captured, and the session's registries left empty."""
+    rec = run_one(spark, "q", builder, None)
+    assert _registries_empty()
+    if fails_at is None:
+        assert rec.ok and rec.build_s > 0 and rec.action_s > 0
+        assert rec.wall_s == rec.build_s + rec.action_s
+        return
+    assert not rec.ok and "Traceback" in rec.error
+    if fails_at == "build":
+        assert "deliberately broken" in rec.error and rec.action_s == 0
+    else:
+        assert "broken at action" in rec.error and rec.build_s > 0
+
+
+def test_run_one_captures_returned_and_seam_plans(spark):
+    rec = run_one(spark, "q", _staging_query, None, action=lambda df: df.count(),
+                  plans=True)
+    assert rec.ok and rec.result == 50
+    assert len(rec.plans) == 2  # the returned frame, then its one seam
+    assert _registries_empty()
+
+
+def test_run_passes_order_skips_failures_and_abba(spark):
+    seen = []
+    variants = {v: (lambda v=v: seen.append(v)) for v in ("a", "b")}
+    recs = run_passes(
+        spark, {"z": _ok_query, "bad": _broken_query}, None, 3, variants
+    )
+    # passes outer, queries sorted, variants ABBA; "bad" runs once only
+    assert [(r.name, r.variant) for r in recs] == [
+        ("bad", "a"), ("z", "a"), ("z", "b"),
+        ("z", "b"), ("z", "a"),
+        ("z", "a"), ("z", "b"),
+    ]
+    assert seen == [r.variant for r in recs]
+    assert _registries_empty()
+
+
+def test_concurrent_runs_never_release_each_others_blocks(spark):
+    """Runs on a thread pool (as the plan-hygiene test builds): a release
+    while another run is between build and action would unpersist its
+    staged blocks and fail its noop write."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def staged(spark, sf_dir):
+        # blocks staged at build time; the pause lets other runs finish
+        df = session.truncate_lineage(
+            session.register_cached(spark.range(2000).persist()).selectExpr("id * 3 AS x"),
+            eager=True,
+        )
+        time.sleep(0.2)
+        return df.orderBy("x")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=2 * (os.cpu_count() or 4)) as ex:
+            futures = [ex.submit(run_one, spark, f"q{i}", staged, None) for i in range(24)]
+            recs = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert [r.error for r in recs if not r.ok] == []
+    assert _registries_empty()
+
+
+KNOWN = {"q1": None, "q2": None}
+
+
+@pytest.mark.parametrize(
+    "argv, message",
+    [
+        (["--a", "spark.x", "q1"], "key=value"),
+        (["--a", "=1", "q1"], "key=value"),
+        (["--a", "k1=1", "--b", "k2=2", "q1"], "different confs"),
+        (["--b", "k=2", "q1"], "--b needs --a"),
+        (["--n", "0", "q1"], "at least 1"),
+        (["q1", "nope"], "unknown queries: nope"),
+    ],
+)
+def test_qtime_rejects_bad_input(argv, message, capsys):
+    with pytest.raises(SystemExit):
+        parse_args(argv, KNOWN)
+    assert message in capsys.readouterr().err
+
+
+def test_qtime_parses_ab_and_all():
+    args = parse_args(["--a", "k=x=1", "--b", "k=2", "--n", "4", "ALL"], KNOWN)
+    assert args.a == ("k", "x=1") and args.b == ("k", "2") and args.n == 4
+    assert args.queries == ["q1", "q2"]
+
+
+def test_qtime_refuses_a_conf_that_did_not_take():
+    class Conf:
+        def get(self, key, default=None):
+            return "lz4"
+
+    class Spark:
+        conf = Conf()
+
+    check_conf(Spark(), "spark.io.compression.codec", "lz4")
+    with pytest.raises(SystemExit, match="did not take"):
+        check_conf(Spark(), "spark.io.compression.codec", "zstd")
+
+
+def test_only_the_run_module_drives_the_loop():
+    """One run loop: bench.py and the tools time and release queries only
+    through ``plans/run.py``."""
+    tools = os.path.join(REPO, "tools")
+    paths = [os.path.join(REPO, "bench.py")] + [
+        os.path.join(tools, f) for f in sorted(os.listdir(tools)) if f.endswith(".py")
+    ]
+    for path in paths:
+        src = open(path).read()
+        assert "release_cached" not in src, path
+        assert 'format("noop")' not in src, path
+    assert 'format("noop")' in open(
+        os.path.join(REPO, "ohsome_planet_spark", "plans", "run.py")
+    ).read()
+
+
+def test_dead_jvm_stops_the_run():
+    from conftest import check_jvm_alive
+
+    class Sc:
+        def isStopped(self):
+            raise ConnectionRefusedError(111, "Connection refused")
+
+    class Jsc:
+        def sc(self):
+            return Sc()
+
+    class Spark:
+        _jsc = Jsc()
+
+    with pytest.raises(pytest.exit.Exception, match="Spark JVM died"):
+        check_jvm_alive(Spark())

@@ -10,6 +10,7 @@ import os
 from pyspark.sql import functions as F
 
 from ohsome_planet_spark.plans.queries import all_queries
+from ohsome_planet_spark.plans.run import plan_counts, run_one
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,13 +47,20 @@ def test_snapshot_reads_staged_table_with_pushdown(spark):
     assert "geometry" not in staged[0] and "tags" not in staged[0]
 
 
-def test_topk_uses_broadcast_for_dimension_join(spark, monkeypatch):
+def test_topk_uses_broadcast_for_dimension_join(spark):
     # staged_sort cuts lineage before the final orderBy, so the executed
-    # plan of the staged form is just Sort over the staged blocks; inspect
-    # the plain-sort variant, whose plan contains the full pipeline.
-    monkeypatch.setenv("SPARK_GRAFT_PLAIN_SORT", "1")
-    plan = _executed(all_queries()["region_nation_revenue"](spark, SF))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    # plan of the returned frame is just Sort over the staged blocks; the
+    # join lives in the drained pre-checkpoint seam plan.
+    rec = run_one(
+        spark, "region_nation_revenue", all_queries()["region_nation_revenue"],
+        SF, plans=True,
+    )
+    assert rec.ok, rec.error
+    seams = rec.plans[1:]
+    assert seams, "staged_sort must register its pre-checkpoint frame"
+    assert any(
+        "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p for p in seams
+    )
 
 
 def test_dataset_split_is_map_side_only(spark):
@@ -67,41 +75,22 @@ def test_registry_wide_plan_hygiene(spark):
     (BatchEvalPython — Arrow-batched ArrowEvalPython is the only allowed
     Python seam) and without CartesianProduct (broadcast nested-loop over
     a dimension side is fine; an unbroadcast cartesian is a scale-killer).
-    Planning-only: no jobs run except queries that stage intermediates."""
-    import threading
+    Planning-only: no jobs run except queries that stage intermediates.
+    The plans audited are the returned frame's plus every lineage seam
+    (incl. staged_sort) registered during the build, the same set
+    tools/plan_audit.py counts."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from ohsome_planet_spark.session import drain_seam_frames
-
-    drain_seam_frames()  # discard seams left over from fixtures
-
     # Catalyst planning is JVM-side and py4j releases the GIL, so building
     # the 209 plans on a thread pool overlaps the planning + seam
-    # materialization that dominated this test's 143 s wall. The seam
-    # registry is global: each worker drains it under a lock right after
-    # building its frame, so every seam plan is audited exactly once —
-    # a drained seam can only mis-attribute the query NAME in a failure
-    # message (the assertion set over the union of plans is unchanged).
-    lock = threading.Lock()
-
+    # materialization that dominated this test's 143 s wall (run_one
+    # serializes the shared seam registry and defers releases until no
+    # build is in flight).
     def build(item):
         name, fn = item
-        df = fn(spark, SF)
-        # lineage-truncation seams (incl. staged_sort) hide their upstream
-        # segment from the returned frame's plan — audit those too, the
-        # same way tools/plan_audit.py does
-        with lock:
-            plans = [df._jdf.queryExecution().executedPlan().toString()]
-            for seam in drain_seam_frames():
-                try:
-                    plans.append(
-                        seam._jdf.queryExecution().executedPlan().toString()
-                    )
-                except Exception:
-                    pass  # seam frame already released by the query body
-        return name, df.schema, "\n".join(plans)
+        return run_one(spark, name, fn, SF, action=lambda df: df.schema, plans=True)
 
     items = sorted(all_queries().items())
     # streaming_* builders scope session confs (shuffle width, checkpoint
@@ -112,21 +101,23 @@ def test_registry_wide_plan_hygiene(spark):
     streaming = [it for it in items if it[0].startswith("streaming_")]
     workers = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     with ThreadPoolExecutor(max_workers=workers) as ex:
-        results = list(ex.map(build, batch))
-    results += [build(it) for it in streaming]
+        records = list(ex.map(build, batch))
+    records += [build(it) for it in streaming]
 
-    for name, schema, plan in results:
-        assert "BatchEvalPython" not in plan, f"{name}: row-wise Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+    for rec in records:
+        assert rec.ok, f"{rec.name}: {rec.error}"
+        counts = plan_counts(rec.plans)
+        assert not counts["row_python_udf"], f"{rec.name}: row-wise Python UDF"
+        assert not counts["cartesian"], f"{rec.name}: cartesian product"
         # the driver's canonicalizer sort_values-es every output column and
         # cannot hash array/map/struct cells (round-1 lesson: two red rows
         # hidden by a stringifying hash) — registry outputs must be scalar
         nested = [
             f.name
-            for f in schema.fields
+            for f in rec.result.fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
-        assert not nested, f"{name}: non-scalar output columns {nested}"
+        assert not nested, f"{rec.name}: non-scalar output columns {nested}"
 
 
 PLANS = os.path.join(

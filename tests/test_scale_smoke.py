@@ -20,7 +20,6 @@ the curve is tracked round-over-round.
 
 import json
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -92,19 +91,18 @@ def _median(xs):
     return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2.0
 
 
-def _run_median(mk_df):
+def _run_median(spark, mk_df):
     """Median wall over N_RUNS full rebuild+execute cycles. The builder
     callable runs INSIDE the timer (streaming queries and driver-looped
     iterations execute during the call, not at the sink) and a fresh
     frame is built per run so checkpoint staging can't warm later runs."""
-    from ohsome_planet_spark.session import release_cached
+    from ohsome_planet_spark.plans.run import run_one
 
     runs = []
     for _ in range(N_RUNS):
-        t0 = time.time()
-        mk_df().write.format("noop").mode("overwrite").save()
-        runs.append(round(time.time() - t0, 2))
-        release_cached()
+        rec = run_one(spark, "scale_smoke", lambda spark, sf_dir: mk_df(), None)
+        assert rec.ok, rec.error
+        runs.append(round(rec.wall_s, 2))
     return _median(runs), runs
 
 
@@ -147,7 +145,6 @@ def _record(entry: dict):
 
 def test_contrib_ways_scales_subquadratically(spark, tmp_path):
     from ohsome_planet_spark.plans.osm_derive import _derived_way_inputs
-    from ohsome_planet_spark.session import release_cached
 
     ways, nodes = _derived_way_inputs(spark, SF_DIR)
     ways = _stage(ways, str(tmp_path / "w1"))
@@ -158,8 +155,8 @@ def test_contrib_ways_scales_subquadratically(spark, tmp_path):
     build = lambda w, n: synthesize_contributions(way_contribution_events(w, n))
     _assert_plan_scale_invariant(spark, build, (ways, nodes), (w10, n10))
 
-    t1, runs1 = _run_median(lambda: build(ways, nodes))
-    t10, runs10 = _run_median(lambda: build(w10, n10))
+    t1, runs1 = _run_median(spark, lambda: build(ways, nodes))
+    t10, runs10 = _run_median(spark, lambda: build(w10, n10))
     ratio = t10 / max(t1, 0.05)
     _record({"name": "contrib_ways", "wall_1x": round(t1, 2),
              "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
@@ -172,7 +169,6 @@ def test_contrib_relations_scales_subquadratically(spark, tmp_path):
         _derived_relations,
         _derived_way_inputs,
     )
-    from ohsome_planet_spark.session import release_cached
 
     ways, nodes = _derived_way_inputs(spark, SF_DIR)
     rels = _derived_relations(spark, SF_DIR)
@@ -188,8 +184,8 @@ def test_contrib_relations_scales_subquadratically(spark, tmp_path):
     )
     _assert_plan_scale_invariant(spark, build, (rels, ways, nodes), (r10, w10, n10))
 
-    t1, runs1 = _run_median(lambda: build(rels, ways, nodes))
-    t10, runs10 = _run_median(lambda: build(r10, w10, n10))
+    t1, runs1 = _run_median(spark, lambda: build(rels, ways, nodes))
+    t10, runs10 = _run_median(spark, lambda: build(r10, w10, n10))
     ratio = t10 / max(t1, 0.05)
     _record({"name": "contrib_relations", "wall_1x": round(t1, 2),
              "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
@@ -275,15 +271,14 @@ def scaled_dirs(spark, tmp_path_factory):
 
 def _smoke_query(spark, name: str, scaled_dirs, check_exchanges: bool):
     from ohsome_planet_spark.plans.queries import QUERIES
-    from ohsome_planet_spark.session import release_cached
 
     fn = QUERIES[name]
     if check_exchanges:
         _assert_plan_scale_invariant(
             spark, fn, (spark, scaled_dirs[1]), (spark, scaled_dirs[10])
         )
-    t1, runs1 = _run_median(lambda: fn(spark, scaled_dirs[1]))
-    t10, runs10 = _run_median(lambda: fn(spark, scaled_dirs[10]))
+    t1, runs1 = _run_median(spark, lambda: fn(spark, scaled_dirs[1]))
+    t10, runs10 = _run_median(spark, lambda: fn(spark, scaled_dirs[10]))
     ratio = t10 / max(t1, 0.05)
     _record({"name": name, "wall_1x": round(t1, 2),
              "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
@@ -319,8 +314,8 @@ def test_knn_self_join_lsh_scales(spark, scaled_dirs):
         spark, lambda s, d: run(d), (spark, scaled_dirs[1]),
         (spark, scaled_dirs[10]),
     )
-    t1, runs1 = _run_median(lambda: run(scaled_dirs[1]))
-    t10, runs10 = _run_median(lambda: run(scaled_dirs[10]))
+    t1, runs1 = _run_median(spark, lambda: run(scaled_dirs[1]))
+    t10, runs10 = _run_median(spark, lambda: run(scaled_dirs[10]))
     ratio = t10 / max(t1, 0.05)
     _record({"name": "knn_self_join_lsh", "wall_1x": round(t1, 2),
              "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
@@ -520,8 +515,8 @@ def test_ccnet_line_dedup_blank_heavy(spark, scaled_dirs, tmp_path):
         inp = spark.read.parquet(paths[k])
         return line_dedup(inp, "doc_id", "text")
 
-    t1, runs1 = _run_median(lambda: mk(1))
-    t10, runs10 = _run_median(lambda: mk(10))
+    t1, runs1 = _run_median(spark, lambda: mk(1))
+    t10, runs10 = _run_median(spark, lambda: mk(10))
     ratio = t10 / max(t1, 0.05)
     # structural assertion: blank lines bypass the dedup frame entirely
     inp = spark.read.parquet(paths[1])
@@ -607,7 +602,6 @@ def _replicate_pbf(node_rows, way_rows, rel_rows, k):
 def test_contrib_multipolygons_pbf_seam_scales(spark, tmp_path):
     from ohsome_planet_spark.sources.pbf import read_pbf
     from ohsome_planet_spark.sources.pbf_encoder import write_history_pbf
-    from ohsome_planet_spark.session import release_cached
 
     corpus = _collect_polygon_corpus(spark)
     p1 = str(tmp_path / "seam_x1.osh.pbf")
@@ -632,8 +626,8 @@ def test_contrib_multipolygons_pbf_seam_scales(spark, tmp_path):
             relation_contribution_events(rels, ways, nodes))
 
     _assert_plan_scale_invariant(spark, build, (p1,), (p10,))
-    t1, runs1 = _run_median(lambda: build(p1))
-    t10, runs10 = _run_median(lambda: build(p10))
+    t1, runs1 = _run_median(spark, lambda: build(p1))
+    t10, runs10 = _run_median(spark, lambda: build(p10))
     ratio = t10 / max(t1, 0.05)
     _record({"name": "contrib_multipolygons_from_pbf", "wall_1x": round(t1, 2),
              "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,

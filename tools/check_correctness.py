@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import argparse
 import hashlib
+import json
 import math
 import os
+import subprocess
 import sys
 import time
 
@@ -65,6 +67,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+    from ohsome_planet_spark.plans.run import run_one
     from ohsome_planet_spark.session import get_spark
 
     queries = entry_mod.queries()
@@ -86,25 +89,22 @@ def main() -> int:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    from ohsome_planet_spark.session import release_cached
-
     n_fail = 0
     results: dict[str, dict] = {}
     for name in names:
-        t0 = time.time()
-        try:
-            sdf = queries[name](spark, args.sf).toPandas()
-        except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
-            results[name] = {"status": "spark_error", "error": str(e)[:300]}
+        t0 = time.perf_counter()
+        rec = run_one(spark, name, queries[name], args.sf, action=lambda df: df.toPandas())
+        if not rec.ok:
+            err = rec.error.strip().splitlines()[-1]
+            print(f"FAIL  {name}: spark error: {err}")
+            results[name] = {"status": "spark_error", "error": err[:300]}
             n_fail += 1
             continue
-        finally:
-            release_cached()
+        sdf = rec.result
         if name not in oracles:
-            print(f"OK*   {name}: rows={len(sdf)} (no oracle — rows-only) [{time.time()-t0:.1f}s]")
-            results[name] = {"status": "rows_only", "rows": len(sdf),
-                             "secs": round(time.time() - t0, 1)}
+            secs = round(time.perf_counter() - t0, 1)
+            print(f"OK*   {name}: rows={len(sdf)} (no oracle — rows-only) [{secs}s]")
+            results[name] = {"status": "rows_only", "rows": len(sdf), "secs": secs}
             continue
         try:
             odf = con.sql(oracles[name]).df()
@@ -115,42 +115,34 @@ def main() -> int:
             continue
         sn, sc, sh = frame_hash(sdf)
         on, oc, oh = frame_hash(odf)
+        secs = round(time.perf_counter() - t0, 1)
         status = "ok" if (sn, sc, sh) == (on, oc, oh) else "MISMATCH"
         results[name] = {"status": status, "rows": sn,
-                         "spark_hash": sh, "duck_hash": oh,
-                         "secs": round(time.time() - t0, 1)}
-        if status != "ok":
-            n_fail += 1
-            print(f"FAIL  {name}: spark=({sn} rows, {sc}) duck=({on} rows, {oc}) "
-                  f"hash {'=' if sh == oh else '!='} [{time.time()-t0:.1f}s]")
-            # show a diff sample
-            key = [c for c in sorted(sdf.columns)]
-            s_rows = {"\x1f".join(normalize_cell(v) for v in r) for r in sdf[key].itertuples(index=False)}
-            o_rows = {"\x1f".join(normalize_cell(v) for v in r) for r in odf[sorted(odf.columns)].itertuples(index=False)} if set(sdf.columns) == set(odf.columns) else set()
-            only_s = list(s_rows - o_rows)[:3]
-            only_o = list(o_rows - s_rows)[:3]
-            for r in only_s:
-                print(f"      spark-only: {r[:220]}")
-            for r in only_o:
-                print(f"      duck-only : {r[:220]}")
-        else:
-            print(f"ok    {name}: rows={sn} [{time.time()-t0:.1f}s]")
+                         "spark_hash": sh, "duck_hash": oh, "secs": secs}
+        if status == "ok":
+            print(f"ok    {name}: rows={sn} [{secs}s]")
+            continue
+        n_fail += 1
+        print(f"FAIL  {name}: spark=({sn} rows, {sc}) duck=({on} rows, {oc}) "
+              f"hash {'=' if sh == oh else '!='} [{secs}s]")
+        # show a diff sample
+        s_rows = {"\x1f".join(normalize_cell(v) for v in r) for r in sdf[sorted(sdf.columns)].itertuples(index=False)}
+        o_rows = {"\x1f".join(normalize_cell(v) for v in r) for r in odf[sorted(odf.columns)].itertuples(index=False)} if set(sdf.columns) == set(odf.columns) else set()
+        for r in list(s_rows - o_rows)[:3]:
+            print(f"      spark-only: {r[:220]}")
+        for r in list(o_rows - s_rows)[:3]:
+            print(f"      duck-only : {r[:220]}")
     print(f"\n{len(names) - n_fail}/{len(names)} passed")
     if args.json:
-        import json as _json
-        import subprocess
-        try:
-            head = subprocess.run(
-                ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-                cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ).stdout.strip()
-        except Exception:
-            head = None
+        head = subprocess.run(
+            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ).stdout.strip()
         with open(args.json, "w") as fh:
-            _json.dump(
+            json.dump(
                 {
                     "sf": args.sf,
-                    "git_head": head,
+                    "git_head": head or None,
                     "n_pass": len(names) - n_fail,
                     "n_total": len(names),
                     "entry_rows": n_entry,

@@ -30,7 +30,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -39,54 +38,24 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 def main() -> int:
     from ohsome_planet_spark.plans.queries import QUERIES
-    from ohsome_planet_spark.session import get_spark, release_cached
+    from ohsome_planet_spark.plans.run import plan_counts, run_one
+    from ohsome_planet_spark.session import get_spark
 
     spark = get_spark(app_name="plan_audit")
     out: dict[str, dict] = {}
     flagged: list[str] = []
-    names = sorted(QUERIES)
-    if len(sys.argv) > 1:
-        names = sys.argv[1:]
-    from ohsome_planet_spark.session import drain_seam_frames
-
+    names = sys.argv[1:] or sorted(QUERIES)
     for name in names:
-        try:
-            drain_seam_frames()  # discard seams left over from fixtures
-            df = QUERIES[name](spark, SF_DIR)
-            seams = drain_seam_frames()
-            plans = [df._jdf.queryExecution().executedPlan().toString()]
-            for seam in seams:
-                try:
-                    plans.append(
-                        seam._jdf.queryExecution().executedPlan().toString()
-                    )
-                except Exception:
-                    pass  # seam frame already released by the query body
-            entry = {
-                "cartesian": sum(p.count("CartesianProduct") for p in plans),
-                "row_python_udf": sum(p.count("BatchEvalPython") for p in plans),
-                "arrow_python": sum(
-                    p.count("ArrowEvalPython")
-                    + p.count("MapInPandas")
-                    + p.count("FlatMapGroupsInPandas")
-                    for p in plans
-                ),
-                "exchanges": sum(p.count("Exchange") for p in plans),
-                "codegen_spans": sum(p.count("WholeStageCodegen") for p in plans),
-                "seams": len(plans) - 1,
-            }
-            if entry["cartesian"] or entry["row_python_udf"]:
-                flagged.append(name)
-                entry["flagged"] = True
-            out[name] = entry
-        except Exception:
-            out[name] = {"error": traceback.format_exc(limit=3).strip().splitlines()[-1]}
+        rec = run_one(spark, name, QUERIES[name], SF_DIR, action=None, plans=True)
+        if not rec.ok:
+            out[name] = {"error": rec.error.strip().splitlines()[-1]}
             flagged.append(name)
-        finally:
-            try:
-                release_cached()
-            except Exception:
-                pass
+            continue
+        entry = plan_counts(rec.plans)
+        if entry["cartesian"] or entry["row_python_udf"]:
+            flagged.append(name)
+            entry["flagged"] = True
+        out[name] = entry
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "PLAN_AUDIT.json",
