@@ -91,8 +91,8 @@ def run_one(
         if not _in_flight:
             drain_seam_frames()  # seams left by frames built outside a run
         _in_flight += 1
-    spark.sparkContext.setJobDescription(name if variant is None else f"{name}:{variant}")
     try:
+        spark.sparkContext.setJobDescription(name if variant is None else f"{name}:{variant}")
         t0 = time.perf_counter()
         df = builder(spark, sf_dir)
         t1 = time.perf_counter()
@@ -127,9 +127,9 @@ def run_passes(
     sf_dir: str,
     n_passes: int,
     variants: dict[str, Callable[[], object]] | None = None,
-    action: Callable | None = noop_write,
 ) -> list[RunRecord]:
-    """Run every query ``n_passes`` times; return the records in run order.
+    """Run every query ``n_passes`` times through the noop sink; return the
+    records in run order.
 
     Passes are the outer loop, so box-state drift over a long run hits
     every query alike; queries run in sorted order. ``variants`` maps a
@@ -148,9 +148,7 @@ def run_passes(
                     break
                 if variant is not None:
                     variants[variant]()
-                rec = run_one(
-                    spark, name, queries[name], sf_dir, action, variant=variant
-                )
+                rec = run_one(spark, name, queries[name], sf_dir, variant=variant)
                 records.append(rec)
                 if not rec.ok:
                     failed.add(name)

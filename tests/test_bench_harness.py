@@ -142,6 +142,24 @@ def test_run_one_captures_returned_and_seam_plans(spark):
     assert _registries_empty()
 
 
+def test_run_one_balances_in_flight_when_setup_fails():
+    """A failure before the build (here the job-description call) is
+    recorded, and the in-flight count still drops back, so later runs
+    keep releasing."""
+    from ohsome_planet_spark.plans import run
+
+    class Sc:
+        def setJobDescription(self, desc):
+            raise ConnectionError("py4j gateway gone")
+
+    class Spark:
+        sparkContext = Sc()
+
+    rec = run_one(Spark(), "q", _ok_query, None)
+    assert not rec.ok and "py4j gateway gone" in rec.error
+    assert run._in_flight == 0
+
+
 def test_run_passes_order_skips_failures_and_abba(spark):
     seen = []
     variants = {v: (lambda v=v: seen.append(v)) for v in ("a", "b")}
