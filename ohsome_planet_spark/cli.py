@@ -788,11 +788,12 @@ def cmd_dedup_embeddings(args) -> int:
     emb = spark.read.parquet(args.input)
     # row count from parquet FOOTERS (no Spark scan job — ADVICE r11);
     # falls back to a count() job only for stores pyarrow can't reach
-    try:
-        import pyarrow.dataset as _ds
+    import pyarrow
+    import pyarrow.dataset as _ds
 
+    try:
         n = _ds.dataset(args.input, format="parquet").count_rows()
-    except Exception:
+    except (OSError, pyarrow.ArrowException):
         n = emb.count()
     nbits = args.nbits if args.nbits is not None else lsh_nbits_for(n)
     pairs = semantic_dup_pairs(

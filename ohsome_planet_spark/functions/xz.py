@@ -91,15 +91,11 @@ _LEVEL_EXPR_CACHE: dict[tuple, Column] = {}
 
 def xz_level_expr(xmin: Column, ymin: Column, xmax: Column, ymax: Column, g: int = G_DEFAULT) -> Column:
     """Native Spark expression for the XZ level (no UDF)."""
-    try:
-        key = (str(xmin), str(ymin), str(xmax), str(ymax), g)
-    except Exception:
-        key = None
-    if key is not None and key in _LEVEL_EXPR_CACHE:
+    key = (str(xmin), str(ymin), str(xmax), str(ymax), g)
+    if key in _LEVEL_EXPR_CACHE:
         return _LEVEL_EXPR_CACHE[key]
     out = _xz_level_expr_build(xmin, ymin, xmax, ymax, g)
-    if key is not None:
-        _LEVEL_EXPR_CACHE[key] = out
+    _LEVEL_EXPR_CACHE[key] = out
     return out
 
 
@@ -148,15 +144,11 @@ def xz_code_expr(
     term is independent — the expression stays linear in ``g`` and inside
     whole-stage codegen (a naive unroll of the walk nests exponentially).
     """
-    try:
-        key = (str(xmin), str(ymin), str(xmax), str(ymax), g)
-    except Exception:
-        key = None
-    if key is not None and key in _CODE_EXPR_CACHE:
+    key = (str(xmin), str(ymin), str(xmax), str(ymax), g)
+    if key in _CODE_EXPR_CACHE:
         return _CODE_EXPR_CACHE[key]
     out = _xz_code_expr_build(xmin, ymin, xmax, ymax, g)
-    if key is not None:
-        _CODE_EXPR_CACHE[key] = out
+    _CODE_EXPR_CACHE[key] = out
     return out
 
 

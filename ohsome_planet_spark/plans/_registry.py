@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import hash60_expr, hash60_sql
-from ..session import fan_out
+from ..session import fan_out, scratch
 from ..sources.testdata import load_table
 
 
@@ -90,23 +90,14 @@ def all_oracles() -> dict[str, str]:
 # re-run the planet build per query. The first downstream query in a
 # session materializes the stream to parquet; the rest scan it with
 # column pruning + predicate pushdown, exactly like a real deployment.
-_MATERIALIZED: dict[tuple[str, str], str] = {}
 
 
 def _produce_then_query(
     spark: SparkSession, sf_dir: str, kind: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    import os
-    import tempfile
-
-    path = _MATERIALIZED.get((kind, sf_dir))
-    if path is None or not os.path.isdir(path):
-        path = os.path.join(
-            tempfile.mkdtemp(prefix=f"opc_stage_{kind}_"), "contribs"
-        )
-        build().write.mode("overwrite").parquet(path)
-        _MATERIALIZED[(kind, sf_dir)] = path
-    return spark.read.parquet(path)
+    return spark.read.parquet(
+        scratch(f"stage_{kind}", sf_dir, lambda p: build().write.parquet(p))
+    )
 
 
 def media_fixture(

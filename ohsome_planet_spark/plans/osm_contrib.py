@@ -5,8 +5,6 @@ product schema."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -19,6 +17,7 @@ from ..operators.contributions import (
     synthesize_contributions, way_contribution_events,
 )
 from ..operators.spatial import join_countries, rect_feature
+from ..session import scratch
 
 from ._registry import _produce_then_query, _register, _t, staged_sort
 from .osm_derive import (
@@ -77,24 +76,6 @@ def contrib_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PBF_FIXTURES: dict[str, str] = {}
-
-
-def _cached_fixture(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
-    """Path of PBF fixture ``name`` for ``sf_dir``, written by
-    ``write(path)`` on its first use in the process."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = f"{name}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-    path = os.path.join(tempfile.gettempdir(), f"opc_fixture_{key}.osh.pbf")
-    if _PBF_FIXTURES.get(key) != path or not os.path.exists(path):
-        write(path)
-        _PBF_FIXTURES[key] = path
-    return path
-
-
 def _pbf_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Build the deterministic ``.osh.pbf`` fixture for contrib_from_pbf:
     derive a bounded node history from events (25% of users), collect it,
@@ -128,7 +109,7 @@ def _pbf_fixture(spark: SparkSession, sf_dir: str) -> str:
         ]
         write_node_history_pbf(path, nodes)
 
-    return _cached_fixture(sf_dir, "nodes", write)
+    return scratch("nodes.osh.pbf", sf_dir, write)
 
 
 def _pbf_node_contribs(spark: SparkSession, path: str) -> DataFrame:
@@ -269,7 +250,7 @@ def _pbf_offset_fixture(spark: SparkSession, sf_dir: str) -> str:
         write_pbf(tmp, blocks)
         os.replace(tmp, path)
 
-    return _cached_fixture(sf_dir, "offset_grid", write)
+    return scratch("offset_grid.osh.pbf", sf_dir, write)
 
 
 @_register("contrib_from_pbf_offset_grid", _CONTRIB_PBF_OFFSET_ORACLE)
@@ -873,7 +854,7 @@ def _pbf_polygon_fixture(spark: SparkSession, sf_dir: str) -> str:
         ]
         write_history_pbf(path, node_rows, ways=way_rows, relations=rel_rows)
 
-    return _cached_fixture(sf_dir, "poly2", write)
+    return scratch("poly2.osh.pbf", sf_dir, write)
 
 
 def _contrib_polygons_from_pbf_oracle() -> str:
@@ -1220,7 +1201,7 @@ def _pbf_fullrow_fixture(spark: SparkSession, sf_dir: str) -> str:
         ]
         write_history_pbf(path, node_rows, ways=way_rows, relations=rel_rows)
 
-    return _cached_fixture(sf_dir, "fullrow1", write)
+    return scratch("fullrow1.osh.pbf", sf_dir, write)
 
 
 def _fullrow_changesets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1934,9 +1915,7 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # N+1 advances while wave N's rebuilds plan on a worker thread
     # (round-10 verdict, Next #3). Histories stay O(1) deep because
     # advance_batch truncates them in place per wave.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..session import truncate_lineage_many
+    from ..session import scope_pool, truncate_lineage_many
 
     def _seamed_rebuilds(snapshot, affected):
         # seam each rebuilt frame ON the worker thread, in parallel: the
@@ -1949,7 +1928,7 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             list(updater.build_rebuilds(snapshot, affected))
         )
 
-    with ThreadPoolExecutor(len(waves)) as pool:
+    with scope_pool(len(waves)) as pool:
         staged_waves = []
         for wave in waves:
             batch = _osc_roundtrip_batch(spark, wave)

@@ -12,31 +12,18 @@ interleaved timing), so they all time the same span the same way:
 - ``action_s`` is the action on the returned frame (the noop sink by
   default, which forces the full plan; ``count()`` would let Catalyst
   prune most of it).
-- ``release_cached()`` runs after the timed span, so a long session's
+- the run's scope is released after the timed span, so a long session's
   storage memory stays flat and the next query starts clean.
 """
 
 from __future__ import annotations
 
-import threading
 import time
 import traceback
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from py4j.protocol import Py4JJavaError
-from pyspark.errors.exceptions.captured import CapturedException
-
-from ..session import drain_seam_frames, release_cached
-
-# The seam registry in ``session`` is global, so concurrent runs (the
-# plan-hygiene test builds on a thread pool) serialize their seam drains
-# under this lock; a drained seam can then only be attributed to the wrong
-# query name, never skipped. For the same reason ``release_cached()`` waits
-# until no run is in flight: releasing mid-build would unpersist another
-# run's staged blocks. Sequential callers release after every run.
-_LOCK = threading.Lock()
-_in_flight = 0
+from ..session import run_scope
 
 
 def noop_write(df) -> None:
@@ -52,7 +39,7 @@ class RunRecord:
     action_s: float = 0.0
     result: object = None
     # executed-plan texts: the returned frame, then each pre-checkpoint
-    # seam frame drained from the session's registry (only when asked)
+    # seam frame the run's scope registered (only when asked)
     plans: list[str] = field(default_factory=list)
     error: str | None = None
 
@@ -79,45 +66,30 @@ def run_one(
     variant: str | None = None,
 ) -> RunRecord:
     """Build ``builder(spark, sf_dir)``, run ``action`` on the frame (none:
-    build only), and release the session's cached intermediates.
+    build only), and release what the run staged.
 
-    Never raises for a failing query: the traceback lands in
-    ``record.error``. With ``plans`` the record carries the executed-plan
-    texts of the returned frame and of the seams its build registered,
-    captured after the action."""
-    global _in_flight
+    The run gets its own scope (``session.run_scope``), released after the
+    timed span, so concurrent runs neither release nor audit each other's
+    intermediates. Never raises for a failing query: the traceback lands
+    in ``record.error``. With ``plans`` the record carries the
+    executed-plan texts of the returned frame and of the seams its build
+    registered, captured after the action."""
     rec = RunRecord(name, variant)
-    with _LOCK:
-        if not _in_flight:
-            drain_seam_frames()  # seams left by frames built outside a run
-        _in_flight += 1
     try:
-        spark.sparkContext.setJobDescription(name if variant is None else f"{name}:{variant}")
-        t0 = time.perf_counter()
-        df = builder(spark, sf_dir)
-        t1 = time.perf_counter()
-        rec.build_s = t1 - t0
-        if action is not None:
-            rec.result = action(df)
-            rec.action_s = time.perf_counter() - t1
-        if plans:
-            with _LOCK:
-                rec.plans = [_plan_text(df)]
-                for seam in drain_seam_frames():
-                    try:
-                        rec.plans.append(_plan_text(seam))
-                    except (Py4JJavaError, CapturedException):
-                        pass  # seam frame already released by the query body
+        with run_scope() as scope:
+            spark.sparkContext.setJobDescription(name if variant is None else f"{name}:{variant}")
+            t0 = time.perf_counter()
+            df = builder(spark, sf_dir)
+            t1 = time.perf_counter()
+            rec.build_s = t1 - t0
+            if action is not None:
+                rec.result = action(df)
+                rec.action_s = time.perf_counter() - t1
+            if plans:
+                rec.plans = [_plan_text(f) for f in [df, *scope.seams]]
     except Exception:
+        # a failed release chains onto the run's own error, if any
         rec.error = traceback.format_exc()
-    finally:
-        with _LOCK:
-            _in_flight -= 1
-            if not _in_flight:
-                try:
-                    release_cached()
-                except Exception:
-                    rec.error = rec.error or traceback.format_exc()
     return rec
 
 

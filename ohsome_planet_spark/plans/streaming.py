@@ -6,9 +6,12 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..session import scratch
 from ._registry import _register, _t, staged_sort
 
 
@@ -261,7 +264,6 @@ def replication_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _STREAM_SEQ = iter(range(1, 1 << 30))
-_STREAM_DIRS: dict[str, str] = {}
 
 
 @_register(
@@ -308,16 +310,15 @@ def _events_stream(spark: SparkSession, sf_dir: str):
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    land = _STREAM_DIRS.get(sf_dir)
-    if land is None or not os.path.isdir(land):
-        import tempfile
 
-        land = tempfile.mkdtemp(prefix="opc_stream_events_")
+    def write(land: str) -> None:
+        os.mkdir(land)
         os.symlink(
             os.path.join(sf_dir, "events.parquet"),
             os.path.join(land, "events.parquet"),
         )
-        _STREAM_DIRS[sf_dir] = land
+
+    land = scratch("stream_events", sf_dir, write)
     return spark.readStream.schema(
         "event_id bigint, ts timestamp, user_id bigint,"
         " event_type string, value double, props string"
@@ -435,15 +436,12 @@ def _stream_conf(
         if is_local_master and os.access("/dev/shm", os.W_OK)
         else None
     )
+    ckpt_key = "spark.sql.streaming.checkpointLocation"
     ckpt_dir = None
-    old_ckpt = None
     if ckpt_base:
-        try:
-            old_ckpt = spark.conf.get("spark.sql.streaming.checkpointLocation")
-        except Exception:
-            old_ckpt = None
+        old_ckpt = spark.conf.get(ckpt_key, None)
         ckpt_dir = tempfile.mkdtemp(prefix="opc_ckpt_", dir=ckpt_base)
-        spark.conf.set("spark.sql.streaming.checkpointLocation", ckpt_dir)
+        spark.conf.set(ckpt_key, ckpt_dir)
     try:
         yield parts
     finally:
@@ -457,27 +455,17 @@ def _stream_conf(
             # rmtree'ing its checkpoint under it produces confusing secondary
             # failures and orphans the query on the session (ADVICE r13).
             # Stop any still-active query checkpointed under this dir first.
-            try:
-                for q in spark.streams.active:
+            for q in spark.streams.active:
+                root = str(q._jsq.streamingQuery().resolvedCheckpointRoot())
+                if ckpt_dir in root:
                     try:
-                        root = (
-                            q._jsq.streamingQuery().resolvedCheckpointRoot()
-                        )
-                        if ckpt_dir in str(root):
-                            q.stop()
-                    except Exception:
-                        pass
-            except Exception:
-                pass
+                        q.stop()
+                    except (Py4JJavaError, CapturedException):
+                        pass  # the query failed on its own; the block raised that
             if old_ckpt is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.checkpointLocation", old_ckpt
-                )
+                spark.conf.set(ckpt_key, old_ckpt)
             else:
-                try:
-                    spark.conf.unset("spark.sql.streaming.checkpointLocation")
-                except Exception:
-                    pass
+                spark.conf.unset(ckpt_key)
             shutil.rmtree(ckpt_dir, ignore_errors=True)
 
 

@@ -13,8 +13,17 @@ multi-executor cluster at ~100 TB scale:
 
 from __future__ import annotations
 
+import atexit
+import functools
+import hashlib
 import os
+import shutil
+import tempfile
 import zipfile
+from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import SparkSession
 
@@ -22,69 +31,73 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _PACKAGE_SHIPPED: set[int] = set()
 
-# ---------------------------------------------------------------------------
-# cached-intermediate lifecycle
-# ---------------------------------------------------------------------------
-# Operators persist multi-consumer intermediates (temporal merge branches,
-# banded self-join sides). A lazily-returned DataFrame can't unpersist its
-# own inputs — the caller's action hasn't run yet — so operators register
-# what they persist here and the driving loop (bench, the correctness
-# harness, the CLI) releases everything after each consuming action.
-# Without this, a long-lived session's storage memory only ever grows
-# (round-1 verdict, "What's wrong" #5).
+# --- run scope: what one run staged --------------------------------------
 
-_CACHED_INTERMEDIATES: list = []
 
-# localCheckpoint stores partitions in executor block storage OUTSIDE the
-# DataFrame-persist lifecycle: blocks are only freed when the driver GCs the
-# DataFrame and ContextCleaner runs, so a long-lived bench/CLI session's
-# storage memory would only ever grow (the round-1 failure mode the cache
-# registry fixed for persist). truncate_lineage therefore registers the
-# checkpointed JVM RDD here and release_cached() unpersists it explicitly.
-_CHECKPOINTED_JRDDS: list = []
+class Scope:
+    """The intermediates one run staged, released after its consuming
+    action. A lazily-returned DataFrame can't unpersist its own inputs —
+    the caller's action hasn't run yet — so operators register them here;
+    without a release a long-lived session's storage memory only grows
+    (round-1 verdict, "What's wrong" #5).
 
-# Every truncate_lineage seam also registers the PRE-checkpoint frame: its
-# executedPlan is the segment that actually runs to materialize the staged
-# data, which the printed plan of downstream frames no longer shows. The
-# plan auditor drains this so "zero BatchEvalPython/Cartesian" covers the
-# whole DAG, not just the post-seam segment (round-9 verdict, wrong #1).
-_SEAM_FRAMES: list = []
+    ``cached`` holds anything with ``unpersist(blocking)``: persisted
+    frames, and the checkpointed JVM RDDs of ``truncate_lineage``, whose
+    blocks are otherwise only freed once the driver GCs the frame and
+    ContextCleaner runs. ``seams`` holds the pre-checkpoint frames: their
+    executed plans are the segments that materialize the staged data,
+    which downstream plans no longer show, so the plan audit walks them
+    too (round-9 verdict, wrong #1)."""
+
+    def __init__(self) -> None:
+        self.cached: list = []
+        self.seams: list = []
+
+    def release(self, blocking: bool = False) -> int:
+        n = len(self.cached)
+        while self.cached:
+            self.cached.pop().unpersist(blocking)
+        self.seams.clear()
+        return n
+
+
+# The default is the process-wide root scope, used outside a run (the CLI,
+# tests); ``run_scope`` gives each run its own, so concurrent runs never
+# release or audit each other's intermediates.
+_SCOPE: ContextVar[Scope] = ContextVar("opc_scope", default=Scope())
+
+
+@contextmanager
+def run_scope() -> Iterator[Scope]:
+    """Make a fresh scope current for the block; release it on exit."""
+    scope = Scope()
+    token = _SCOPE.set(scope)
+    try:
+        yield scope
+    finally:
+        _SCOPE.reset(token)
+        scope.release()
+
+
+def scope_pool(max_workers: int) -> ThreadPoolExecutor:
+    """A thread pool whose workers register into the caller's scope. New
+    threads start in an empty context, so without this a worker's seams
+    and cached frames would land in the root scope."""
+    return ThreadPoolExecutor(
+        max_workers, initializer=_SCOPE.set, initargs=(_SCOPE.get(),)
+    )
 
 
 def register_cached(df):
     """Record a persisted DataFrame for later release_cached()."""
-    _CACHED_INTERMEDIATES.append(df)
+    _SCOPE.get().cached.append(df)
     return df
 
 
-def drain_seam_frames() -> list:
-    """Return and clear the pre-checkpoint frames registered by
-    truncate_lineage since the last drain (plan-audit hook)."""
-    out = list(_SEAM_FRAMES)
-    _SEAM_FRAMES.clear()
-    return out
-
-
 def release_cached(blocking: bool = False) -> int:
-    """Unpersist every registered intermediate — persisted DataFrames and
-    localCheckpoint block sets alike; returns how many were released."""
-    n = 0
-    while _CACHED_INTERMEDIATES:
-        df = _CACHED_INTERMEDIATES.pop()
-        try:
-            df.unpersist(blocking)
-            n += 1
-        except Exception:
-            pass  # session already stopped
-    while _CHECKPOINTED_JRDDS:
-        jrdd = _CHECKPOINTED_JRDDS.pop()
-        try:
-            jrdd.unpersist(blocking)
-            n += 1
-        except Exception:
-            pass
-    _SEAM_FRAMES.clear()
-    return n
+    """Unpersist everything the current scope registered; returns how
+    many were released."""
+    return _SCOPE.get().release(blocking)
 
 
 def truncate_lineage(df, eager: bool = False):
@@ -101,21 +114,17 @@ def truncate_lineage(df, eager: bool = False):
     intermediate table and re-read it — is what the replication manager
     does for its history tables.)
     """
-    sc = df.sparkSession.sparkContext
-    _SEAM_FRAMES.append(df)
-    if sc.getCheckpointDir() is not None:
+    scope = _SCOPE.get()
+    scope.seams.append(df)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     out = df.localCheckpoint(eager=eager)
-    try:
-        # Dataset.localCheckpoint returns a LogicalRDD wrapping the
-        # checkpointed internal RDD; register that RDD so release_cached()
-        # can free its blocks deterministically instead of waiting for
-        # driver GC + ContextCleaner. (Unpersisting invalidates the staged
-        # data — callers release only after the consuming action, the same
-        # contract register_cached has always had.)
-        _CHECKPOINTED_JRDDS.append(out._jdf.queryExecution().analyzed().rdd())
-    except Exception:
-        pass  # plan shape changed across Spark versions: fall back to GC
+    # Dataset.localCheckpoint returns a LogicalRDD wrapping the
+    # checkpointed internal RDD; register that RDD so release_cached() can
+    # free its blocks deterministically. (Unpersisting invalidates the
+    # staged data — callers release only after the consuming action, the
+    # same contract register_cached has always had.)
+    scope.cached.append(out._jdf.queryExecution().analyzed().rdd())
     return out
 
 
@@ -127,14 +136,39 @@ def truncate_lineage_many(dfs: list, eager: bool = False) -> list:
     driver JVM; sequential calls serialize that planning. Independent
     frames plan in parallel on JVM threads — measured ~3x on the
     equivalence gate's per-wave history truncation (round-10 verdict,
-    Next #3). The registry appends (seam frames, checkpointed RDDs) are
-    GIL-atomic list ops, safe from worker threads."""
+    Next #3). The scope appends are GIL-atomic list ops, safe from
+    worker threads."""
     if len(dfs) <= 1:
         return [truncate_lineage(d, eager) for d in dfs]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(len(dfs)) as ex:
+    with scope_pool(len(dfs)) as ex:
         return list(ex.map(lambda d: truncate_lineage(d, eager), dfs))
+
+
+# --- scratch files ----------------------------------------------------------
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="opc_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def scratch(kind: str, key: str, write: Callable[[str], None]) -> str:
+    """Path of scratch entry ``kind`` for ``key``, written by ``write(path)``
+    on its first use in the process, under one root removed at interpreter
+    exit. ``write`` fills a private directory that is then renamed into
+    place, so concurrent first uses never see a half-written entry."""
+    root = _scratch_root()
+    entry = os.path.join(root, f"{kind}-{hashlib.md5(key.encode()).hexdigest()[:12]}")
+    if not os.path.isdir(entry):
+        tmp = tempfile.mkdtemp(dir=root)
+        write(os.path.join(tmp, kind))
+        try:
+            os.rename(tmp, entry)
+        except OSError:  # another thread's first use got there first
+            shutil.rmtree(tmp)
+    return os.path.join(entry, kind)
 
 
 def fan_out(df, min_parallelism: int | None = None):
@@ -166,19 +200,16 @@ def ship_package(spark: SparkSession) -> None:
     if key in _PACKAGE_SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join("/tmp", f"ohsome_planet_spark_{os.getpid()}.zip")
-    if not os.path.exists(zip_path):
+
+    def write(zip_path: str) -> None:
         with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in files:
-                    if not fn.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fn)
-                    rel = os.path.join(
-                        "ohsome_planet_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    sc.addPyFile(zip_path)
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        zf.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+
+    sc.addPyFile(scratch("ohsome_planet_spark.zip", pkg_dir, write))
     _PACKAGE_SHIPPED.add(key)
 
 
@@ -245,11 +276,8 @@ def get_spark(
         # are redundant here — every operator joins on keys that are
         # non-null by construction and pre-filters explicitly. Deployments
         # joining nullable keys over 100 TB, where a pruned shuffle
-        # outweighs planning time, re-enable via SPARK_GRAFT_CONSTRAINT_PROP=true.
-        .config(
-            "spark.sql.constraintPropagation.enabled",
-            os.environ.get("SPARK_GRAFT_CONSTRAINT_PROP", "false"),
-        )
+        # outweighs planning time, re-enable it through ``extra_conf``.
+        .config("spark.sql.constraintPropagation.enabled", "false")
         # PySpark 4's DataFrame-context error enrichment wraps EVERY
         # DataFrame API call with a conf-get py4j round trip, a Python
         # stack inspection, and set/clear round trips on the JVM
@@ -259,12 +287,9 @@ def get_spark(
         # builders are the "user code" the call sites would point at, so
         # the enrichment buys nothing here; disabling it is pure
         # driver-time win on every query build (guide §7.3 — planning
-        # time is driver time). SPARK_GRAFT_DF_DEBUGGING=true restores
-        # the default for interactive debugging sessions.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        # time is driver time). Interactive debugging sessions restore
+        # the default through ``extra_conf``.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

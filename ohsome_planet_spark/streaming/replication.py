@@ -397,12 +397,12 @@ class IncrementalUpdater:
         concurrent driver threads; the whole method is also safe to run
         from a worker thread while later batches advance (wave-pipelined
         planning — round-10 verdict, Next #3)."""
-        from concurrent.futures import ThreadPoolExecutor
+        from ..session import scope_pool
 
         node_history, way_history, rel_history = snapshot
         if len(affected) == 2:
             changed_node_ids, affected_ways = affected
-            with ThreadPoolExecutor(2) as ex:
+            with scope_pool(2) as ex:
                 fut_nodes = ex.submit(
                     rebuild_affected_nodes, node_history, changed_node_ids
                 )
@@ -434,7 +434,7 @@ class IncrementalUpdater:
         # (measured: the member-event seam's planning dominates batch cost)
         from ..session import truncate_lineage
 
-        with ThreadPoolExecutor(3) as ex:
+        with scope_pool(3) as ex:
             # node rebuild has no dependency on the bundled table: its
             # construction overlaps the bundled build + way/rel rebuilds
             fut_nodes = ex.submit(

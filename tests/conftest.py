@@ -8,6 +8,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ohsome_planet_spark.session import get_spark  # noqa: E402
 
+# where test_scale_smoke recorded its curve this run (printed at the end)
+SCALE_SMOKE_RECORD = pytest.StashKey[object]()
+
 
 def check_jvm_alive(spark) -> None:
     """Stop the whole run when the Spark JVM is gone (e.g. OOM-killed):
@@ -31,3 +34,9 @@ def _jvm_alive(request):
     """Checked before every test that uses the shared session."""
     if "spark" in request.fixturenames:
         check_jvm_alive(request.getfixturevalue("spark"))
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    path = config.stash.get(SCALE_SMOKE_RECORD, None)
+    if path is not None and path.exists():
+        terminalreporter.write_line(f"scale-smoke curve recorded in {path}")

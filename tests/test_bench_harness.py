@@ -4,7 +4,10 @@ try/except), plus the shared run loop (``plans/run.py``) every timing
 tool goes through and ``tools/qtime.py``'s input validation."""
 
 import os
+import re
+import subprocess
 import sys
+import textwrap
 import time
 
 import pytest
@@ -105,11 +108,23 @@ def _staging_query(spark, sf_dir):
     return session.truncate_lineage(base.select((F.col("id") * 2).alias("x")))
 
 
-def _registries_empty():
-    return not (
-        session._CACHED_INTERMEDIATES
-        or session._CHECKPOINTED_JRDDS
-        or session._SEAM_FRAMES
+def _scoped(builder, scopes):
+    """``builder``, recording the scope each of its runs registered into."""
+
+    def build(spark, sf_dir):
+        scopes.append(session._SCOPE.get())
+        return builder(spark, sf_dir)
+
+    return build
+
+
+def _released(scopes, root):
+    """Every run had a scope of its own, released when the run ended, and
+    the caller's scope is current again."""
+    return (
+        scopes
+        and all(s is not root and not s.cached and not s.seams for s in scopes)
+        and session._SCOPE.get() is root
     )
 
 
@@ -120,9 +135,10 @@ def _registries_empty():
 )
 def test_run_one_records_times_errors_and_releases(spark, builder, fails_at):
     """A build-time failure, an action-time failure and green runs: times
-    recorded, errors captured, and the session's registries left empty."""
-    rec = run_one(spark, "q", builder, None)
-    assert _registries_empty()
+    recorded, errors captured, and the run's scope released."""
+    root, scopes = session._SCOPE.get(), []
+    rec = run_one(spark, "q", _scoped(builder, scopes), None)
+    assert _released(scopes, root)
     if fails_at is None:
         assert rec.ok and rec.build_s > 0 and rec.action_s > 0
         assert rec.wall_s == rec.build_s + rec.action_s
@@ -135,18 +151,17 @@ def test_run_one_records_times_errors_and_releases(spark, builder, fails_at):
 
 
 def test_run_one_captures_returned_and_seam_plans(spark):
-    rec = run_one(spark, "q", _staging_query, None, action=lambda df: df.count(),
-                  plans=True)
+    root, scopes = session._SCOPE.get(), []
+    rec = run_one(spark, "q", _scoped(_staging_query, scopes), None,
+                  action=lambda df: df.count(), plans=True)
     assert rec.ok and rec.result == 50
     assert len(rec.plans) == 2  # the returned frame, then its one seam
-    assert _registries_empty()
+    assert _released(scopes, root)
 
 
-def test_run_one_balances_in_flight_when_setup_fails():
+def test_run_one_restores_the_scope_when_setup_fails():
     """A failure before the build (here the job-description call) is
-    recorded, and the in-flight count still drops back, so later runs
-    keep releasing."""
-    from ohsome_planet_spark.plans import run
+    recorded, and the caller's scope is current again."""
 
     class Sc:
         def setJobDescription(self, desc):
@@ -155,16 +170,20 @@ def test_run_one_balances_in_flight_when_setup_fails():
     class Spark:
         sparkContext = Sc()
 
+    root = session._SCOPE.get()
     rec = run_one(Spark(), "q", _ok_query, None)
     assert not rec.ok and "py4j gateway gone" in rec.error
-    assert run._in_flight == 0
+    assert session._SCOPE.get() is root
 
 
 def test_run_passes_order_skips_failures_and_abba(spark):
     seen = []
     variants = {v: (lambda v=v: seen.append(v)) for v in ("a", "b")}
+    root, scopes = session._SCOPE.get(), []
     recs = run_passes(
-        spark, {"z": _ok_query, "bad": _broken_query}, None, 3, variants
+        spark,
+        {"z": _scoped(_ok_query, scopes), "bad": _scoped(_broken_query, scopes)},
+        None, 3, variants,
     )
     # passes outer, queries sorted, variants ABBA; "bad" runs once only
     assert [(r.name, r.variant) for r in recs] == [
@@ -173,7 +192,7 @@ def test_run_passes_order_skips_failures_and_abba(spark):
         ("z", "a"), ("z", "b"),
     ]
     assert seen == [r.variant for r in recs]
-    assert _registries_empty()
+    assert len(scopes) == len(recs) and _released(scopes, root)
 
 
 def test_concurrent_runs_never_release_each_others_blocks(spark):
@@ -191,16 +210,83 @@ def test_concurrent_runs_never_release_each_others_blocks(spark):
         time.sleep(0.2)
         return df.orderBy("x")
 
+    scopes = []
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
         with ThreadPoolExecutor(max_workers=2 * (os.cpu_count() or 4)) as ex:
-            futures = [ex.submit(run_one, spark, f"q{i}", staged, None) for i in range(24)]
+            futures = [
+                ex.submit(run_one, spark, f"q{i}", _scoped(staged, scopes), None)
+                for i in range(24)
+            ]
             recs = [f.result(timeout=300) for f in futures]
     finally:
         sys.setswitchinterval(interval)
     assert [r.error for r in recs if not r.ok] == []
-    assert _registries_empty()
+    assert len(set(map(id, scopes))) == 24
+    assert all(not s.cached and not s.seams for s in scopes)
+
+
+def test_concurrent_runs_capture_only_their_own_seams(spark):
+    """Each of 32 concurrent runs stages one seam; each record carries
+    exactly its own seam's plan. With one seam list shared by every run,
+    one run's capture could take another run's seam and leave that run
+    with none."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def builder(i):
+        def build(spark, sf_dir):
+            return session.truncate_lineage(spark.range(3).selectExpr(f"id AS own_{i}"))
+
+        return build
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=32) as ex:
+            futures = [
+                ex.submit(run_one, spark, f"q{i}", builder(i), None, plans=True)
+                for i in range(32)
+            ]
+            recs = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    for i, rec in enumerate(recs):
+        assert rec.ok, rec.error
+        assert len(rec.plans) == 2, f"q{i}: {len(rec.plans) - 1} seam plans"
+        assert set(re.findall(r"own_\d+", rec.plans[1])) == {f"own_{i}"}
+
+
+def test_scratch_writes_once_and_removes_its_root_at_exit(tmp_path):
+    """No Spark: a process asks for the same scratch entry twice, ``write``
+    runs once, and the scratch root is gone once the process exits."""
+    code = textwrap.dedent(
+        """
+        import sys
+        sys.path.insert(0, sys.argv[1])
+        from ohsome_planet_spark.session import scratch
+
+        calls = []
+
+        def write(path):
+            calls.append(path)
+            with open(path, "w") as fh:
+                fh.write("x")
+
+        a = scratch("f.txt", "k", write)
+        b = scratch("f.txt", "k", write)
+        assert a == b and len(calls) == 1 and open(a).read() == "x"
+        print(a)
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, REPO], capture_output=True, text=True,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    assert out.returncode == 0, out.stderr
+    path = out.stdout.strip()
+    assert path.startswith(str(tmp_path)) and os.path.basename(path) == "f.txt"
+    assert os.listdir(tmp_path) == []
 
 
 KNOWN = {"q1": None, "q2": None}

@@ -85,9 +85,9 @@ def test_registry_wide_plan_hygiene(spark):
 
     # Catalyst planning is JVM-side and py4j releases the GIL, so building
     # the 209 plans on a thread pool overlaps the planning + seam
-    # materialization that dominated this test's 143 s wall (run_one
-    # serializes the shared seam registry and defers releases until no
-    # build is in flight).
+    # materialization that dominated this test's 143 s wall (each run_one
+    # has its own scope, so concurrent runs neither release nor audit each
+    # other's seams).
     def build(item):
         name, fn = item
         return run_one(spark, name, fn, SF, action=lambda df: df.schema, plans=True)

@@ -706,16 +706,14 @@ class TestCheckpointLifecycle:
         assert release_cached() >= 1
         assert not (stored_ids() & new), "checkpoint blocks survived release"
 
-    def test_seam_frames_drain(self, spark):
-        from ohsome_planet_spark.session import (
-            drain_seam_frames,
-            release_cached,
-            truncate_lineage,
-        )
+    def test_seams_land_in_the_run_scope(self, spark):
+        from ohsome_planet_spark.session import _SCOPE, run_scope, truncate_lineage
 
-        drain_seam_frames()
-        truncate_lineage(spark.range(10))
-        seams = drain_seam_frames()
-        assert len(seams) == 1
-        assert drain_seam_frames() == []
-        release_cached()
+        root = _SCOPE.get()
+        n_root = len(root.seams)
+        with run_scope() as scope:
+            truncate_lineage(spark.range(10))
+            assert len(scope.seams) == 1 and len(scope.cached) == 1
+        # released on exit, and the root scope is current again, untouched
+        assert not scope.seams and not scope.cached
+        assert _SCOPE.get() is root and len(root.seams) == n_root

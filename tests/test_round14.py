@@ -21,16 +21,21 @@ from pyspark.sql import functions as F
 from ohsome_planet_spark.plans.streaming import _path_bytes, _stream_conf
 
 
+_NO_DEFAULT = object()
+
+
 class _StubConf:
+    # RuntimeConfig.get: a missing key raises unless a default (None
+    # included) is given
     def __init__(self, init):
         self.d = dict(init)
 
-    def get(self, k, default=None):
+    def get(self, k, default=_NO_DEFAULT):
         if k in self.d:
             return self.d[k]
-        if default is not None:
-            return default
-        raise KeyError(k)
+        if default is _NO_DEFAULT:
+            raise KeyError(k)
+        return default
 
     def set(self, k, v):
         self.d[k] = v
@@ -113,9 +118,9 @@ def test_stream_conf_tmpfs_only_under_local_master(tmp_path, monkeypatch):
         )
 
 
-def test_constraint_prop_env_override_and_nullable_key_join(spark, monkeypatch):
-    """The session default is off (planning cost, r13 §7); the env override
-    must restore the stock behavior, and results on a NULLABLE-key join —
+def test_constraint_prop_conf_override_and_nullable_key_join(spark):
+    """The session default is off (planning cost, r13 §7); the
+    ``extra_conf`` override must restore the stock behavior, and results on a NULLABLE-key join —
     the exact case the default-off could someday hurt — must be identical
     under both states (constraint propagation only adds inferred
     predicates; an inner join already drops null keys either way)."""
@@ -143,12 +148,11 @@ def test_constraint_prop_env_override_and_nullable_key_join(spark, monkeypatch):
         spark.conf.set(key, "false")
     assert off == on == [(1, "a", 10.0), (2, "c", 20.0)]
 
-    # the env override reaches a (re)built session's runtime conf
+    # the extra_conf override reaches a (re)built session's runtime conf
     from ohsome_planet_spark.session import get_spark
 
-    monkeypatch.setenv("SPARK_GRAFT_CONSTRAINT_PROP", "true")
     try:
-        s2 = get_spark(app_name="constraint_prop_guard")
+        s2 = get_spark(app_name="constraint_prop_guard", extra_conf={key: "true"})
         assert s2.conf.get(key) == "true"
     finally:
         spark.conf.set(key, "false")

@@ -14,8 +14,9 @@ arithmetic, not data), and the full pipelines run at 1× and 10×. Two assertion
   more broadcasts from input statistics), i.e. the plan shape is
   scale-invariant and only task counts change.
 
-The measured points are recorded in SCALE_SMOKE.json at the repo root so
-the curve is tracked round-over-round.
+The measured points are recorded in SCALE_SMOKE.json under pytest's
+basetemp (the run prints its path); copying it over the repo-root
+SCALE_SMOKE.json refreshes the committed curve.
 """
 
 import json
@@ -29,6 +30,8 @@ from ohsome_planet_spark.operators.contributions import (
     synthesize_contributions,
     way_contribution_events,
 )
+
+from conftest import SCALE_SMOKE_RECORD
 
 SF_DIR = "/root/testdata/sf0.1"
 K = 10
@@ -130,20 +133,24 @@ def _assert_plan_scale_invariant(spark, build, args1, args10):
     assert n10 <= n1, f"new exchange appeared at scale ({n1} -> {n10})"
 
 
-def _record(entry: dict):
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "SCALE_SMOKE.json")
-    data = {}
-    if os.path.exists(path):
-        try:
-            data = json.load(open(path))
-        except Exception:
-            data = {}
-    data[entry.pop("name")] = entry
-    json.dump(data, open(path, "w"), indent=1, sort_keys=True)
+@pytest.fixture(scope="session")
+def record(tmp_path_factory, pytestconfig):
+    """Record one measured point per flagship in SCALE_SMOKE.json under
+    pytest's basetemp; the terminal summary prints its path. The committed
+    SCALE_SMOKE.json at the repo root changes only by a deliberate copy of
+    that file, never as a side effect of a test run."""
+    path = tmp_path_factory.getbasetemp() / "SCALE_SMOKE.json"
+    pytestconfig.stash[SCALE_SMOKE_RECORD] = path
+
+    def write(entry: dict) -> None:
+        data = json.loads(path.read_text()) if path.exists() else {}
+        data[entry.pop("name")] = entry
+        path.write_text(json.dumps(data, indent=1, sort_keys=True))
+
+    return write
 
 
-def test_contrib_ways_scales_subquadratically(spark, tmp_path):
+def test_contrib_ways_scales_subquadratically(spark, tmp_path, record):
     from ohsome_planet_spark.plans.osm_derive import _derived_way_inputs
 
     ways, nodes = _derived_way_inputs(spark, SF_DIR)
@@ -158,13 +165,13 @@ def test_contrib_ways_scales_subquadratically(spark, tmp_path):
     t1, runs1 = _run_median(spark, lambda: build(ways, nodes))
     t10, runs10 = _run_median(spark, lambda: build(w10, n10))
     ratio = t10 / max(t1, 0.05)
-    _record({"name": "contrib_ways", "wall_1x": round(t1, 2),
-             "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
-             "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
+    record({"name": "contrib_ways", "wall_1x": round(t1, 2),
+            "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
+            "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
     assert ratio < 30.0, f"10x input cost {ratio:.1f}x wall — super-linear blowup"
 
 
-def test_contrib_relations_scales_subquadratically(spark, tmp_path):
+def test_contrib_relations_scales_subquadratically(spark, tmp_path, record):
     from ohsome_planet_spark.plans.osm_derive import (
         _derived_relations,
         _derived_way_inputs,
@@ -187,9 +194,9 @@ def test_contrib_relations_scales_subquadratically(spark, tmp_path):
     t1, runs1 = _run_median(spark, lambda: build(rels, ways, nodes))
     t10, runs10 = _run_median(spark, lambda: build(r10, w10, n10))
     ratio = t10 / max(t1, 0.05)
-    _record({"name": "contrib_relations", "wall_1x": round(t1, 2),
-             "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
-             "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
+    record({"name": "contrib_relations", "wall_1x": round(t1, 2),
+            "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
+            "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
     assert ratio < 30.0, f"10x input cost {ratio:.1f}x wall — super-linear blowup"
 
 
@@ -269,7 +276,7 @@ def scaled_dirs(spark, tmp_path_factory):
     return _SCALED_DIRS
 
 
-def _smoke_query(spark, name: str, scaled_dirs, check_exchanges: bool):
+def _smoke_query(record, spark, name: str, scaled_dirs, check_exchanges: bool):
     from ohsome_planet_spark.plans.queries import QUERIES
 
     fn = QUERIES[name]
@@ -280,17 +287,17 @@ def _smoke_query(spark, name: str, scaled_dirs, check_exchanges: bool):
     t1, runs1 = _run_median(spark, lambda: fn(spark, scaled_dirs[1]))
     t10, runs10 = _run_median(spark, lambda: fn(spark, scaled_dirs[10]))
     ratio = t10 / max(t1, 0.05)
-    _record({"name": name, "wall_1x": round(t1, 2),
-             "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
-             "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
+    record({"name": name, "wall_1x": round(t1, 2),
+            "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
+            "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
     assert ratio < 30.0, f"10x input cost {ratio:.1f}x wall — super-linear blowup"
 
 
-def test_knn_self_join_scales(spark, scaled_dirs):
-    _smoke_query(spark, "knn_self_join", scaled_dirs, check_exchanges=True)
+def test_knn_self_join_scales(spark, scaled_dirs, record):
+    _smoke_query(record, spark, "knn_self_join", scaled_dirs, check_exchanges=True)
 
 
-def test_knn_self_join_lsh_scales(spark, scaled_dirs):
+def test_knn_self_join_lsh_scales(spark, scaled_dirs, record):
     # the linear-scale path (multi-table sign-LSH) in its SCALE
     # configuration: occupancy-constant signature width (lsh_nbits_for),
     # the knob that bounds within-bucket pair work as N grows. At fixed
@@ -317,13 +324,13 @@ def test_knn_self_join_lsh_scales(spark, scaled_dirs):
     t1, runs1 = _run_median(spark, lambda: run(scaled_dirs[1]))
     t10, runs10 = _run_median(spark, lambda: run(scaled_dirs[10]))
     ratio = t10 / max(t1, 0.05)
-    _record({"name": "knn_self_join_lsh", "wall_1x": round(t1, 2),
-             "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
-             "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
+    record({"name": "knn_self_join_lsh", "wall_1x": round(t1, 2),
+            "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
+            "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
     assert ratio < 30.0, f"10x input cost {ratio:.1f}x wall — super-linear blowup"
 
 
-def test_knn_self_join_lsh_pair_counts_linear(spark, scaled_dirs, tmp_path):
+def test_knn_self_join_lsh_pair_counts_linear(spark, scaled_dirs, tmp_path, record):
     """The round-10 verdict's structural fix: the ~linear claim for the
     multi-table LSH self-join is stated from EXACT candidate-pair counts
     (noise-free integers) at 1x/10x/30x, not wall-clock. Under the
@@ -384,16 +391,16 @@ def test_knn_self_join_lsh_pair_counts_linear(spark, scaled_dirs, tmp_path):
         }
     p1, p10, p30c = (points[s]["pairs"] for s in ("1x", "10x", "30x"))
     n1, n10, n30 = (points[s]["n"] for s in ("1x", "10x", "30x"))
-    _record({"name": "knn_self_join_lsh_pair_counts", "k": K,
-             "bucket_cap": CAP, "points": points,
-             "pairs_per_vec": {
-                 s: round(points[s]["pairs"] / points[s]["n"], 3)
-                 for s in points
-             },
-             "pairs_per_vec_uncapped": {
-                 s: round(points[s]["pairs_uncapped"] / points[s]["n"], 3)
-                 for s in points
-             }})
+    record({"name": "knn_self_join_lsh_pair_counts", "k": K,
+            "bucket_cap": CAP, "points": points,
+            "pairs_per_vec": {
+                s: round(points[s]["pairs"] / points[s]["n"], 3)
+                for s in points
+            },
+            "pairs_per_vec_uncapped": {
+                s: round(points[s]["pairs_uncapped"] / points[s]["n"], 3)
+                for s in points
+            }})
     # STRUCTURAL bound, not a trend: the sub-bucket split caps pair work
     # at ~N·cap per table regardless of data clustering, so per-vector
     # density is bounded by an N-INDEPENDENT ceiling (~ntables·2·cap —
@@ -412,80 +419,80 @@ def test_knn_self_join_lsh_pair_counts_linear(spark, scaled_dirs, tmp_path):
     assert p30c <= 0.25 * (n30 / n1) ** 2 * max(p1, 1), points
 
 
-def test_bloom_decontamination_scales(spark, scaled_dirs):
-    _smoke_query(spark, "bloom_decontamination", scaled_dirs, check_exchanges=True)
+def test_bloom_decontamination_scales(spark, scaled_dirs, record):
+    _smoke_query(record, spark, "bloom_decontamination", scaled_dirs, check_exchanges=True)
 
 
-def test_dedup_clusters_scales(spark, scaled_dirs):
+def test_dedup_clusters_scales(spark, scaled_dirs, record):
     # the fn runs driver-looped CC rounds internally — wall only
-    _smoke_query(spark, "dedup_clusters", scaled_dirs, check_exchanges=False)
+    _smoke_query(record, spark, "dedup_clusters", scaled_dirs, check_exchanges=False)
 
 
-def test_exact_substr_dedup_scales(spark, scaled_dirs):
+def test_exact_substr_dedup_scales(spark, scaled_dirs, record):
     # ExactSubstr removal: (doc, pos, span_hash) frame is linear in
     # corpus tokens; replicas are letter-rotated so cross-replica spans
     # differ and duplicated-span density stays 1x-like
-    _smoke_query(spark, "exact_substr_dedup", scaled_dirs, check_exchanges=True)
+    _smoke_query(record, spark, "exact_substr_dedup", scaled_dirs, check_exchanges=True)
 
 
-def test_warc_html_extract_scales(spark, scaled_dirs):
+def test_warc_html_extract_scales(spark, scaled_dirs, record):
     # WARC walk + HTML extraction: pure narrow mapInPandas chain
-    _smoke_query(spark, "warc_html_extract", scaled_dirs, check_exchanges=True)
+    _smoke_query(record, spark, "warc_html_extract", scaled_dirs, check_exchanges=True)
 
 
-def test_semantic_dedup_canonical_scales(spark, scaled_dirs):
+def test_semantic_dedup_canonical_scales(spark, scaled_dirs, record):
     # capped LSH -> exact cosine -> driver-looped CC rounds (lineage
     # truncation changes plan shape round-to-round) — wall only
     _smoke_query(
-        spark, "semantic_dedup_canonical", scaled_dirs,
+        record, spark, "semantic_dedup_canonical", scaled_dirs,
         check_exchanges=False,
     )
 
 
-def test_exact_substr_rewrite_scales(spark, scaled_dirs):
+def test_exact_substr_rewrite_scales(spark, scaled_dirs, record):
     # heavier than the dedup it wraps: the segment frame explodes ~2x
     # (word segments + separators), then gaps-and-islands reassembly
     _smoke_query(
-        spark, "exact_substr_rewrite", scaled_dirs, check_exchanges=True
+        record, spark, "exact_substr_rewrite", scaled_dirs, check_exchanges=True
     )
 
 
-def test_cc_ingest_envelope_invariance_scales(spark, scaled_dirs):
+def test_cc_ingest_envelope_invariance_scales(spark, scaled_dirs, record):
     # two full WARC ingests (plain + enveloped) joined for the hash
     # equality — the narrow mapInPandas chains dominate
     _smoke_query(
-        spark, "cc_ingest_envelope_invariance", scaled_dirs,
+        record, spark, "cc_ingest_envelope_invariance", scaled_dirs,
         check_exchanges=True,
     )
 
 
-def test_ccnet_line_dedup_scales(spark, scaled_dirs):
+def test_ccnet_line_dedup_scales(spark, scaled_dirs, record):
     _smoke_query(
-        spark, "ccnet_line_dedup", scaled_dirs, check_exchanges=True
+        record, spark, "ccnet_line_dedup", scaled_dirs, check_exchanges=True
     )
 
 
-def test_ccnet_pipeline_scales(spark, scaled_dirs):
+def test_ccnet_pipeline_scales(spark, scaled_dirs, record):
     # the full composition: line dedup -> per-language LM -> ntile; the
     # corpus-sized stages are all map-side-combinable aggs + equi-joins
     _smoke_query(
-        spark, "ccnet_pipeline", scaled_dirs, check_exchanges=True
+        record, spark, "ccnet_pipeline", scaled_dirs, check_exchanges=True
     )
 
 
-def test_ccnet_lm_filter_scales(spark, scaled_dirs):
+def test_ccnet_lm_filter_scales(spark, scaled_dirs, record):
     # per-language bigram LM + ntile bucketing; count tables are
     # map-side-combined aggs, the ntile window sorts one row per doc
     _smoke_query(
-        spark, "ccnet_lm_filter", scaled_dirs, check_exchanges=True
+        record, spark, "ccnet_lm_filter", scaled_dirs, check_exchanges=True
     )
 
 
-def test_url_dedup_scales(spark, scaled_dirs):
-    _smoke_query(spark, "url_dedup", scaled_dirs, check_exchanges=True)
+def test_url_dedup_scales(spark, scaled_dirs, record):
+    _smoke_query(record, spark, "url_dedup", scaled_dirs, check_exchanges=True)
 
 
-def test_ccnet_line_dedup_blank_heavy(spark, scaled_dirs, tmp_path):
+def test_ccnet_line_dedup_blank_heavy(spark, scaled_dirs, tmp_path, record):
     """The blank-line bypass is the 100-TB skew story: every blank line
     normalizes to '' and would land in ONE shuffle partition. On a
     corpus where half of all lines are blank, the bypass keeps the 10x
@@ -527,18 +534,18 @@ def test_ccnet_line_dedup_blank_heavy(spark, scaled_dirs, tmp_path):
     ).first()
     # blanks (half the corpus lines) are always kept — never deduped
     assert row.nk >= row.nl / 2
-    _record({"name": "ccnet_line_dedup_blank_heavy",
-             "wall_1x": round(t1, 2), "wall_10x": round(t10, 2),
-             "runs_1x": runs1, "runs_10x": runs10, "n_runs": N_RUNS,
-             "ratio": round(ratio, 2), "k": K})
+    record({"name": "ccnet_line_dedup_blank_heavy",
+            "wall_1x": round(t1, 2), "wall_10x": round(t10, 2),
+            "runs_1x": runs1, "runs_10x": runs10, "n_runs": N_RUNS,
+            "ratio": round(ratio, 2), "k": K})
     assert ratio < 30.0, f"blank-heavy 10x cost {ratio:.1f}x"
 
 
-def test_streaming_dedup_scales(spark, scaled_dirs):
+def test_streaming_dedup_scales(spark, scaled_dirs, record):
     # returned frame is a memory-sink table — plan comparison is
     # meaningless; the bound covers the micro-batch execution itself
     _smoke_query(
-        spark, "streaming_dedup_within_watermark", scaled_dirs,
+        record, spark, "streaming_dedup_within_watermark", scaled_dirs,
         check_exchanges=False,
     )
 
@@ -599,7 +606,7 @@ def _replicate_pbf(node_rows, way_rows, rel_rows, k):
     return nodes, ways, rels
 
 
-def test_contrib_multipolygons_pbf_seam_scales(spark, tmp_path):
+def test_contrib_multipolygons_pbf_seam_scales(spark, tmp_path, record):
     from ohsome_planet_spark.sources.pbf import read_pbf
     from ohsome_planet_spark.sources.pbf_encoder import write_history_pbf
 
@@ -629,81 +636,81 @@ def test_contrib_multipolygons_pbf_seam_scales(spark, tmp_path):
     t1, runs1 = _run_median(spark, lambda: build(p1))
     t10, runs10 = _run_median(spark, lambda: build(p10))
     ratio = t10 / max(t1, 0.05)
-    _record({"name": "contrib_multipolygons_from_pbf", "wall_1x": round(t1, 2),
-             "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
-             "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
+    record({"name": "contrib_multipolygons_from_pbf", "wall_1x": round(t1, 2),
+            "wall_10x": round(t10, 2), "runs_1x": runs1, "runs_10x": runs10,
+            "n_runs": N_RUNS, "ratio": round(ratio, 2), "k": K})
     assert ratio < 30.0, f"10x input cost {ratio:.1f}x wall — super-linear blowup"
 
 
-def test_multimodal_h264_probe_scales(spark, scaled_dirs):
+def test_multimodal_h264_probe_scales(spark, scaled_dirs, record):
     # pure narrow encode->parse mapInPandas chain; no shuffle until the
     # final orderBy
     _smoke_query(
-        spark, "multimodal_h264_probe", scaled_dirs, check_exchanges=True
+        record, spark, "multimodal_h264_probe", scaled_dirs, check_exchanges=True
     )
 
 
-def test_multimodal_adts_probe_scales(spark, scaled_dirs):
+def test_multimodal_adts_probe_scales(spark, scaled_dirs, record):
     _smoke_query(
-        spark, "multimodal_adts_probe", scaled_dirs, check_exchanges=True
+        record, spark, "multimodal_adts_probe", scaled_dirs, check_exchanges=True
     )
 
 
-def test_pdf_text_extract_scales(spark, scaled_dirs):
+def test_pdf_text_extract_scales(spark, scaled_dirs, record):
     # typeset -> xref walk -> Flate -> text machine, all inside one
     # Arrow-batched map pass; bytes never shuffle
-    _smoke_query(spark, "pdf_text_extract", scaled_dirs, check_exchanges=True)
+    _smoke_query(record, spark, "pdf_text_extract", scaled_dirs, check_exchanges=True)
 
 
-def test_cc_pdf_ingest_scales(spark, scaled_dirs):
+def test_cc_pdf_ingest_scales(spark, scaled_dirs, record):
     # WARC walk + dual-branch extraction re-joined on doc_id: the join
     # is the only exchange and its shape must not change with scale
-    _smoke_query(spark, "cc_pdf_ingest", scaled_dirs, check_exchanges=True)
+    _smoke_query(record, spark, "cc_pdf_ingest", scaled_dirs, check_exchanges=True)
 
 
-def test_robots_url_filter_scales(spark, scaled_dirs):
+def test_robots_url_filter_scales(spark, scaled_dirs, record):
     # broadcast rule dim + regexp pass + map-side-combinable max(struct);
     # the only wide exchange is the groupBy on the URL key
-    _smoke_query(spark, "robots_url_filter", scaled_dirs, check_exchanges=True)
+    _smoke_query(record, spark, "robots_url_filter", scaled_dirs, check_exchanges=True)
 
 
-def test_multimodal_ogg_probe_scales(spark, scaled_dirs):
+def test_multimodal_ogg_probe_scales(spark, scaled_dirs, record):
     _smoke_query(
-        spark, "multimodal_ogg_probe", scaled_dirs, check_exchanges=True
+        record, spark, "multimodal_ogg_probe", scaled_dirs, check_exchanges=True
     )
 
 
-def test_multimodal_webm_probe_scales(spark, scaled_dirs):
+def test_multimodal_webm_probe_scales(spark, scaled_dirs, record):
     _smoke_query(
-        spark, "multimodal_webm_probe", scaled_dirs, check_exchanges=True
+        record, spark, "multimodal_webm_probe", scaled_dirs, check_exchanges=True
     )
 
 
-def test_webdataset_ingest_scales(spark, scaled_dirs):
+def test_webdataset_ingest_scales(spark, scaled_dirs, record):
     # shard walk + per-shard in-stream sample grouping: zero shuffles
     # between shard bytes and samples
-    _smoke_query(spark, "webdataset_ingest", scaled_dirs, check_exchanges=True)
+    _smoke_query(record, spark, "webdataset_ingest", scaled_dirs, check_exchanges=True)
 
 
-def test_subtitle_extract_scales(spark, scaled_dirs):
-    _smoke_query(spark, "subtitle_extract", scaled_dirs, check_exchanges=True)
+def test_subtitle_extract_scales(spark, scaled_dirs, record):
+    _smoke_query(record, spark, "subtitle_extract", scaled_dirs, check_exchanges=True)
 
 
-def test_id3_tags_scales(spark, scaled_dirs):
-    _smoke_query(spark, "id3_tags", scaled_dirs, check_exchanges=True)
+def test_id3_tags_scales(spark, scaled_dirs, record):
+    _smoke_query(record, spark, "id3_tags", scaled_dirs, check_exchanges=True)
 
 
-def test_zip_ingest_scales(spark, scaled_dirs):
-    _smoke_query(spark, "zip_ingest", scaled_dirs, check_exchanges=True)
+def test_zip_ingest_scales(spark, scaled_dirs, record):
+    _smoke_query(record, spark, "zip_ingest", scaled_dirs, check_exchanges=True)
 
 
-def test_crawl_frontier_scales(spark, scaled_dirs):
+def test_crawl_frontier_scales(spark, scaled_dirs, record):
     # sitemap explode + broadcast robots admission: the URL-key groupBy
     # and the entry join are the only exchanges
-    _smoke_query(spark, "crawl_frontier", scaled_dirs, check_exchanges=True)
+    _smoke_query(record, spark, "crawl_frontier", scaled_dirs, check_exchanges=True)
 
 
-def test_multimodal_ts_probe_scales(spark, scaled_dirs):
+def test_multimodal_ts_probe_scales(spark, scaled_dirs, record):
     _smoke_query(
-        spark, "multimodal_ts_probe", scaled_dirs, check_exchanges=True
+        record, spark, "multimodal_ts_probe", scaled_dirs, check_exchanges=True
     )

@@ -19,9 +19,8 @@ frame they return.
 
 Lineage-truncation seams (localCheckpoint staging) hide their upstream
 segment from the returned frame's printed plan, so the audit ALSO walks
-every pre-checkpoint frame registered by ``truncate_lineage`` while the
-query was built (``session.drain_seam_frames``) — the round-9 verdict's
-blind spot. Per-query counts are the sum over the returned plan plus all
+every pre-checkpoint frame ``truncate_lineage`` registered in the query's
+run scope (``session.Scope.seams``) — the round-9 verdict's blind spot. Per-query counts are the sum over the returned plan plus all
 seam-segment plans; ``seams`` records how many segments were audited.
 """
 
