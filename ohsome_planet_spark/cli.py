@@ -27,9 +27,15 @@ import sys
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .session import run_scope
 
+
+# Each command that stages frames runs in its own run scope, so a run that
+# raises still releases its persisted frames and checkpoint blocks.
+@run_scope()
 def cmd_contributions(args) -> int:
     from .operators.contributions import (
+        bundled_way_instants,
         filter_relation_tag_keys,
         filter_tagged_histories,
         node_contribution_events,
@@ -38,7 +44,7 @@ def cmd_contributions(args) -> int:
         way_contribution_events,
         with_changesets,
     )
-    from .session import get_spark
+    from .session import get_spark, truncate_lineage
     from .sources.geoparquet import write_contributions
     from .sources.pbf import read_pbf
 
@@ -48,21 +54,33 @@ def cmd_contributions(args) -> int:
     from .sources.output import resolve_output_location
 
     args.out = resolve_output_location(spark, args.out)
-    entities = read_pbf(spark, args.pbf)
+    # Stage the decode and the way merge once each: every entity stream,
+    # the enrichment and the replication seeding read the one decode, and
+    # the way and relation streams share the one way merge. At small data
+    # the stage count is the fixed cost, and each unstaged consumer reruns
+    # the whole stage chain; at planet scale the decode is the big stage.
+    # truncate_lineage turns into a reliable checkpoint when a checkpoint
+    # dir is set.
+    entities = truncate_lineage(read_pbf(spark, args.pbf))
     nodes = entities.filter("osm_type = 'node'").drop("refs", "members", "osm_type")
     ways = entities.filter("osm_type = 'way'").drop("lon", "lat", "members", "osm_type")
     rels = entities.filter("osm_type = 'relation'").drop("lon", "lat", "refs", "osm_type")
     if args.filter_relation_tag_keys:
         rels = filter_relation_tag_keys(rels, args.filter_relation_tag_keys.split(","))
+    bundled = truncate_lineage(bundled_way_instants(ways, nodes))
 
     streams = [
         synthesize_contributions(node_contribution_events(filter_tagged_histories(nodes))),
+        # F1 over the instants equals F1 over the histories: every major
+        # version is an instant carrying that version's tags
         synthesize_contributions(
-            way_contribution_events(filter_tagged_histories(ways), nodes)
+            way_contribution_events(ways, nodes, bundled=filter_tagged_histories(bundled))
         ),
+        # ways no relation references drop out at the member-stream join
         synthesize_contributions(
             relation_contribution_events(
-                rels, ways, nodes, member_limit=args.multipolygon_member_limit
+                rels, ways, nodes, member_limit=args.multipolygon_member_limit,
+                bundled_ways=bundled,
             )
         ),
     ]
@@ -122,10 +140,6 @@ def cmd_contributions(args) -> int:
         rc = _init_replication(spark, entities, args)
         if rc != 0:
             return rc
-
-    from .session import release_cached
-
-    release_cached()
     return 0
 
 
@@ -254,6 +268,7 @@ def cmd_changesets(args) -> int:
     return 0
 
 
+@run_scope()
 def cmd_replications(args) -> int:
     """End-to-end replication catch-up (``cmd/Replications.java:27-130``,
     ``ReplicationManager.java:33-137``): keep a contributions dataset and a
@@ -385,9 +400,6 @@ def cmd_replications(args) -> int:
             }
         )
     )
-    from .session import release_cached
-
-    release_cached()
     return 0
 
 

@@ -137,7 +137,10 @@ def bundled_way_instants(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     ``Contribution.java:26-28``). Callers composing both pipelines should
     stage this (``truncate_lineage``) and pass it to
     :func:`way_contribution_events` / :func:`relation_contribution_events`
-    so the way merge runs once, not twice."""
+    so the way merge runs once, not twice. Three callers do: the bulk
+    ``contributions`` CLI (``cli.cmd_contributions``), the registry's
+    full-row build (``plans.osm_contrib._fullrow_build``) and the
+    replication rebuild (``IncrementalUpdater.build_rebuilds``)."""
     from ..functions.geometry import way_geom_bundle
     from .temporal_merge import way_contribution_instants
 

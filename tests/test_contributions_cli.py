@@ -139,3 +139,143 @@ def test_contributions_cli_with_ohsome_filter(spark, pbf, tmp_path):
     # node 1 v1 (amenity=cafe) passes; v2 (amenity=bar) is excluded by the
     # not-clause; the untagged way has no amenity at all
     assert rows == [("node", 1, 1)]
+
+
+# Shared-bundle fixture: the CLI stages one way merge and feeds it to both
+# the way and the relation stream. Each history below takes a path where
+# sharing could differ from building each stream on its own.
+SHARED_NODES = [
+    # ring of the multipolygon's untagged outer way 200; node 2 moves later
+    dict(osm_id=1, version=1, ts_ms=1_000_000, changeset=10, uid=7, user="alice",
+         visible=True, tags={}, lon=0.0, lat=0.0),
+    dict(osm_id=2, version=1, ts_ms=1_000_000, changeset=10, uid=7, user="alice",
+         visible=True, tags={}, lon=1.0, lat=0.0),
+    dict(osm_id=2, version=2, ts_ms=6_000_000, changeset=16, uid=8, user="bob",
+         visible=True, tags={}, lon=1.2, lat=0.1),
+    dict(osm_id=3, version=1, ts_ms=1_000_000, changeset=10, uid=7, user="alice",
+         visible=True, tags={}, lon=1.0, lat=1.0),
+    dict(osm_id=4, version=1, ts_ms=1_000_000, changeset=10, uid=7, user="alice",
+         visible=True, tags={}, lon=0.0, lat=1.0),
+    # vertices of the tagged ways 100 and 101; node 6 moves under way 100
+    dict(osm_id=5, version=1, ts_ms=1_000_000, changeset=10, uid=7, user="alice",
+         visible=True, tags={"amenity": "bench"}, lon=2.0, lat=2.0),
+    dict(osm_id=6, version=1, ts_ms=1_000_000, changeset=10, uid=7, user="alice",
+         visible=True, tags={}, lon=2.5, lat=2.0),
+    dict(osm_id=6, version=2, ts_ms=4_000_000, changeset=13, uid=8, user="bob",
+         visible=True, tags={}, lon=2.5, lat=2.5),
+    dict(osm_id=7, version=1, ts_ms=1_000_000, changeset=10, uid=7, user="alice",
+         visible=True, tags={}, lon=3.0, lat=2.0),
+]
+SHARED_WAYS = [
+    # tagged; node 6's move gives it a minor version
+    dict(osm_id=100, version=1, ts_ms=2_000_000, changeset=11, uid=7, user="alice",
+         visible=True, tags={"highway": "residential"}, refs=[5, 6]),
+    # tagged in v1, loses its tags in v2
+    dict(osm_id=101, version=1, ts_ms=2_000_000, changeset=11, uid=7, user="alice",
+         visible=True, tags={"highway": "service"}, refs=[5, 7]),
+    dict(osm_id=101, version=2, ts_ms=5_000_000, changeset=14, uid=7, user="alice",
+         visible=True, tags={}, refs=[5, 7]),
+    # never tagged: only the multipolygon's outer member
+    dict(osm_id=200, version=1, ts_ms=2_000_000, changeset=11, uid=7, user="alice",
+         visible=True, tags={}, refs=[1, 2, 3, 4, 1]),
+]
+SHARED_RELS = [
+    dict(osm_id=300, version=1, ts_ms=3_000_000, changeset=12, uid=7, user="alice",
+         visible=True, tags={"type": "multipolygon", "building": "yes"},
+         members=[{"type": "way", "id": 200, "role": "outer"}]),
+]
+
+
+def _canonical_rows(spark, path):
+    rows = spark.read.parquet(path).collect()
+    return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True, default=repr)
+                  for r in rows)
+
+
+def test_contributions_cli_shared_bundle_matches_unshared_streams(spark, tmp_path):
+    """The CLI's one staged way merge gives, column for column, the rows
+    of the way and relation streams each built from the raw histories."""
+    from pyspark.sql import functions as F
+
+    from ohsome_planet_spark.cli import _changeset_ddl
+    from ohsome_planet_spark.operators.contributions import (
+        filter_tagged_histories,
+        node_contribution_events,
+        relation_contribution_events,
+        synthesize_contributions,
+        way_contribution_events,
+        with_changesets,
+    )
+    from ohsome_planet_spark.sources.geoparquet import write_contributions
+    from ohsome_planet_spark.sources.pbf import read_pbf
+    from tests.pbf_encoder import encode_block, write_pbf
+
+    pbf = str(tmp_path / "shared.osh.pbf")
+    write_pbf(pbf, [encode_block(dense_nodes=SHARED_NODES),
+                    encode_block(ways=SHARED_WAYS, relations=SHARED_RELS)])
+    out = str(tmp_path / "cli")
+    assert main(["contributions", "--pbf", pbf, "--out", out]) == 0
+
+    entities = read_pbf(spark, pbf)
+    nodes = entities.filter("osm_type = 'node'").drop("refs", "members", "osm_type")
+    ways = entities.filter("osm_type = 'way'").drop("lon", "lat", "members", "osm_type")
+    rels = entities.filter("osm_type = 'relation'").drop("lon", "lat", "refs", "osm_type")
+    unshared = (
+        synthesize_contributions(node_contribution_events(filter_tagged_histories(nodes)))
+        .unionByName(synthesize_contributions(
+            way_contribution_events(filter_tagged_histories(ways), nodes)))
+        .unionByName(synthesize_contributions(
+            relation_contribution_events(rels, ways, nodes)))
+    )
+    unshared = with_changesets(unshared, spark.createDataFrame([], _changeset_ddl()))
+    want = str(tmp_path / "unshared")
+    write_contributions(
+        unshared.withColumn("countries", F.array().cast("array<string>"))
+        .sortWithinPartitions("osm_id", "valid_from"),
+        want,
+        bloom_filter_columns=("osm_id",),
+    )
+
+    got = _canonical_rows(spark, out)
+    assert got == _canonical_rows(spark, want)
+    # the fixture reaches every case it is built for
+    keys = {(r.osm_type, r.osm_id, r.osm_version, r.osm_minor_version)
+            for r in spark.read.parquet(out).collect()}
+    assert ("way", 100, 1, 1) in keys  # node 6 moved under way 100
+    assert {k for k in keys if k[:2] == ("way", 101)} == {
+        ("way", 101, 1, 0), ("way", 101, 2, 0)}
+    assert not any(k[:2] == ("way", 200) for k in keys)
+    assert ("relation", 300, 1, 0) in keys and ("relation", 300, 1, 1) in keys
+
+
+def test_failed_contributions_run_releases_what_it_staged(spark, pbf, tmp_path, monkeypatch):
+    """A run whose write raises leaves nothing staged in the root scope."""
+    from ohsome_planet_spark import session
+    from ohsome_planet_spark.sources import geoparquet
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(geoparquet, "write_contributions", fail)
+    root = session._SCOPE.get()
+    n_cached = len(root.cached)
+    with pytest.raises(RuntimeError, match="write failed"):
+        main(["contributions", "--pbf", pbf, "--out", str(tmp_path / "contribs")])
+    assert session._SCOPE.get() is root
+    assert len(root.cached) == n_cached
+
+
+def test_contributions_runs_the_way_merge_once(spark, pbf, tmp_path, monkeypatch):
+    """The way and relation streams share one way merge per run."""
+    from ohsome_planet_spark.operators import temporal_merge
+
+    calls = []
+    merge = temporal_merge.way_contribution_instants
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return merge(*args, **kwargs)
+
+    monkeypatch.setattr(temporal_merge, "way_contribution_instants", counted)
+    assert main(["contributions", "--pbf", pbf, "--out", str(tmp_path / "contribs")]) == 0
+    assert len(calls) == 1
