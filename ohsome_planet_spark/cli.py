@@ -22,6 +22,7 @@ import argparse
 import csv
 import json
 import os
+import shutil
 import sys
 
 from pyspark.sql import Window as W
@@ -268,6 +269,34 @@ def cmd_changesets(args) -> int:
     return 0
 
 
+def _commit_changeset_store(state, store: str) -> None:
+    """Write the pass's changeset store once, beside the live one, and
+    swap it in by two renames. The write reads the live store, so it
+    cannot target it directly; until the swap the live store stays whole,
+    and ``_recover_changeset_store`` repairs a crash between the renames."""
+    tmp, old = store + ".tmp", store + ".old"
+    state.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(store):
+        os.rename(store, old)
+    os.rename(tmp, store)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+
+
+def _recover_changeset_store(store: str) -> None:
+    """Finish or undo a commit a crashed pass left behind: a missing store
+    with a ``.old`` beside it died between the renames, and that ``.old``
+    is the store ``changeset_state.txt`` (written after the swap) matches.
+    Any ``.tmp`` is an unswapped write, and a ``.old`` next to a live
+    store was already replaced; both are dropped."""
+    old = store + ".old"
+    if not os.path.isdir(store) and os.path.isdir(old):
+        os.rename(old, store)
+    for leftover in (store + ".tmp", old):
+        if os.path.isdir(leftover):
+            shutil.rmtree(leftover)
+
+
 @run_scope()
 def cmd_replications(args) -> int:
     """End-to-end replication catch-up (``cmd/Replications.java:27-130``,
@@ -337,6 +366,7 @@ def cmd_replications(args) -> int:
                 args.changeset_start_sequence, ""
             )
         cs_store = os.path.join(args.data, "changesets")
+        _recover_changeset_store(cs_store)
         if os.path.isdir(cs_store):
             changeset_state = spark.read.parquet(cs_store)
         else:
@@ -357,10 +387,7 @@ def cmd_replications(args) -> int:
             # the PostgreSQL store's local-mode analog: rewrite the parquet
             # store and its state row after each pass (S16 JDBC sink is the
             # drop-in for a real database)
-            cs_store = os.path.join(args.data, "changesets")
-            changeset_state.write.mode("overwrite").parquet(cs_store + ".tmp")
-            changeset_state = spark.read.parquet(cs_store + ".tmp")
-            changeset_state.write.mode("overwrite").parquet(cs_store)
+            _commit_changeset_store(changeset_state, cs_store)
             changeset_state = spark.read.parquet(cs_store)
             with open(os.path.join(args.data, "changeset_state.txt"), "w") as f:
                 f.write(changeset_manager.local_state.format())

@@ -256,7 +256,7 @@ def get_spark(
         # min/max stats or predicate pushdown (a scan over 100 TB of
         # contributions couldn't prune on valid_from/valid_to), and
         # pyarrow reads it back as nanos, breaking Spark round-trips
-        # through the geo-metadata footer rewrite.
+        # through pyarrow.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # contributions rows carry WKB blobs + tag maps; keep broadcast
         # threshold generous so dimension tables (changesets slice,
@@ -290,6 +290,13 @@ def get_spark(
         # time is driver time). Interactive debugging sessions restore
         # the default through ``extra_conf``.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # One replication pass generates about 310 distinct classes; the
+        # default cache of 100 made every pass in a long-lived JVM
+        # recompile all of them (Janino, then the JIT again). Measured on
+        # the replication_minutely bench (4 cores, 10 alternating pairs
+        # with and without it): op CPU 35.8 -> 28.5 s, op wall 13.0 ->
+        # 9.9 s (medians). A static conf, so it lives in the builder.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

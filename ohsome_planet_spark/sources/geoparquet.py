@@ -6,22 +6,24 @@ Writes the contributions dataset the way the reference does
 
 - zstd compression, dictionary encoding disabled for ``osm_id``;
 - optional bloom filters (update files use refs/user.id/changeset.id —
-  ``ContributionStateManager.java:159-174``);
-- GeoParquet 1.1.0 ``geo`` file metadata with the dataset bbox accumulated
-  from the rows (computed here with one agg over the bbox struct instead of
-  per-row accumulation);
+  ``ContributionStateManager.java:159-174``), each sized by parquet-mr to
+  the distinct values of the column chunk it indexes, capped at the fixed
+  1 MiB filter parquet-mr writes by default;
+- GeoParquet 1.1.0 ``geo`` file metadata with each file's own bbox and
+  geometry types, accumulated from that file's rows;
 - ``latest/`` vs ``history/`` layout split on whether the row is currently
   valid (valid_to at the open-ended sentinel).
 
-The ``geo`` footer metadata is attached in a pyarrow post-pass per file; on
-a real cluster the same rewrite runs as a distributed ``mapInPandas`` over
-file paths (it only rewrites footers + re-encodes row groups it read).
+Spark writes every data page, index and bloom filter; the ``geo`` key is
+then added by a post-pass that rewrites only each file's footer in place
+(O(footer) per file), so nothing Spark wrote is re-encoded or dropped.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import struct
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
@@ -30,6 +32,16 @@ from pyspark.sql import functions as F
 from ..schemas import VALID_TO_SENTINEL
 
 GEO_VERSION = "1.1.0"
+
+# Bloom filters are adaptive: parquet-mr builds BLOOM_CANDIDATES bitsets,
+# halving from BLOOM_MAX_BYTES, and keeps the smallest whose expected NDV
+# at the default 1% fpp covers the chunk's distinct values, so a minutely
+# update file carries a filter of kilobytes, not a fixed megabyte. The cap
+# is parquet-mr's default size (1 MiB, about 870k distinct ids at 1%), so
+# planet-size chunks keep that filter and its false-positive rate;
+# 11 candidates reach down to 1 KiB.
+BLOOM_MAX_BYTES = 1024 * 1024
+BLOOM_CANDIDATES = 11
 
 
 def geo_metadata(
@@ -57,18 +69,6 @@ def geo_metadata(
     }
 
 
-def dataset_bbox(contribs: DataFrame) -> tuple[float, float, float, float] | None:
-    row = contribs.agg(
-        F.min("bbox.xmin").alias("xmin"),
-        F.min("bbox.ymin").alias("ymin"),
-        F.max("bbox.xmax").alias("xmax"),
-        F.max("bbox.ymax").alias("ymax"),
-    ).first()
-    if row is None or row.xmin is None:
-        return None
-    return (row.xmin, row.ymin, row.xmax, row.ymax)
-
-
 def write_contributions(
     contribs: DataFrame,
     path: str,
@@ -87,19 +87,13 @@ def write_contributions(
     per-row ``covering`` + clustering is the GeoParquet 1.1 spec path.
     Sorting is within partitions only (no extra exchange).
 
-    ``row_group_size`` caps rows per row group in the footer post-pass —
+    ``row_group_size`` caps rows per row group in the Spark writer —
     smaller groups = finer pruning granularity at slightly more footer
     overhead (the classic row-group-size tradeoff; parquet default ~1M).
     """
     df = contribs
     if sort_spatially:
         df = df.sortWithinPartitions(F.col("xzcode.code"))
-    writer = df.write.mode("overwrite").option("compression", "zstd").option(
-        "parquet.enable.dictionary", "true"
-    ).option("parquet.enable.dictionary#osm_id", "false")
-    for col in bloom_filter_columns:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-
     if split_latest:
         df = df.withColumn(
             "layer",
@@ -107,20 +101,29 @@ def write_contributions(
                 F.lit("history")
             ),
         )
-        writer = df.write.mode("overwrite").option("compression", "zstd").option(
-            "parquet.enable.dictionary#osm_id", "false"
+    writer = df.write.mode("overwrite").option("compression", "zstd").option(
+        "parquet.enable.dictionary#osm_id", "false"
+    )
+    if bloom_filter_columns:
+        # parquet-mr 1.16 reads these two keys globally only (a ``#col``
+        # form is silently ignored); the candidate count is per column
+        writer = writer.option("parquet.bloom.filter.adaptive.enabled", "true").option(
+            "parquet.bloom.filter.max.bytes", str(BLOOM_MAX_BYTES)
         )
-        for col in bloom_filter_columns:
-            writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
+    for col in bloom_filter_columns:
+        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true").option(
+            f"parquet.bloom.filter.candidates.number#{col}", str(BLOOM_CANDIDATES)
+        )
+    if row_group_size is not None:
+        writer = writer.option("parquet.block.row.count.limit", str(row_group_size))
+    if split_latest:
         writer = writer.partitionBy("layer", "osm_type")
     writer.parquet(path)
 
-    _attach_geo_metadata(
-        path, row_group_size=row_group_size, spark=contribs.sparkSession
-    )
+    _attach_geo_metadata(contribs.sparkSession, path)
 
 
-def _file_geo_metadata(table, covering: bool | None = None) -> dict:
+def _file_geo_metadata(table) -> dict:
     """Per-file ``geo`` metadata — bbox and geometry_types accumulated from
     this file's own rows, exactly like the reference's per-writer Envelope
     (``AvroGeoParquetWriter.java:122-133``: ``columnBBox`` lives on the
@@ -128,8 +131,8 @@ def _file_geo_metadata(table, covering: bool | None = None) -> dict:
     import pyarrow.compute as pc
 
     bbox = None
-    has_bbox_col = "bbox" in table.column_names
-    if has_bbox_col and len(table):
+    covering = "bbox" in table.column_names
+    if covering and len(table):
         b = table.column("bbox").combine_chunks()
         vals = [
             pc.min(b.field("xmin")).as_py(),
@@ -146,53 +149,17 @@ def _file_geo_metadata(table, covering: bool | None = None) -> dict:
             for v in pc.unique(table.column("geometry_type")).to_pylist()
             if v
         )
-    return geo_metadata(
-        bbox, gtypes, covering=has_bbox_col if covering is None else covering
-    )
-
-
-def _rewrite_parquet_file(full: str, row_group_size: int | None) -> None:
-    table = pq.read_table(full)
-    existing = table.schema.metadata or {}
-    merged = dict(existing)
-    merged[b"geo"] = json.dumps(_file_geo_metadata(table)).encode()
-    kwargs = {}
-    if row_group_size is not None:
-        kwargs["row_group_size"] = row_group_size
-    pq.write_table(
-        table.replace_schema_metadata(merged),
-        full,
-        compression="zstd",
-        # keep timestamps Spark-readable: a ns (or INT96-read-as-ns)
-        # column written back as TIMESTAMP(NANOS) cannot be read by
-        # Spark without a legacy flag
-        coerce_timestamps="us",
-        allow_truncated_timestamps=True,
-        **kwargs,
-    )
-
-
-def _thin_geo_table(full: str):
-    """Read only the columns the geo metadata needs (bbox struct +
-    geometry_type) — metadata-sized I/O instead of decoding WKB blobs."""
-    schema = pq.read_schema(full)
-    cols = [c for c in ("bbox", "geometry_type") if c in schema.names]
-    table = pq.read_table(full, columns=cols) if cols else pq.read_table(full)
-    # covering flag keys off the FULL schema, not the thin projection
-    return table, ("bbox" in schema.names)
+    return geo_metadata(bbox, gtypes, covering=covering)
 
 
 def _footer_append_geo(spark, full: str, geo: dict) -> None:
     """Metadata-only footer surgery: re-serialize the existing parquet
     footer with the ``geo`` key-value appended, leaving every data page,
-    column/offset index and BLOOM FILTER byte untouched (the pyarrow
-    rewrite used to re-encode the whole file and silently dropped the
-    bloom filters Spark wrote — the round-10 bloom-parity test caught
-    it). O(footer) per file instead of O(data): at planet scale the
-    post-pass is now metadata-sized, like the reference's in-writer
-    footer (``AvroGeoParquetWriter.java:122-133``)."""
-    import struct as _struct
-
+    column/offset index and bloom filter byte untouched. The file is
+    patched in place — read the 8-byte tail, overwrite from the old
+    footer's start, truncate — so the I/O is O(footer) per file, like the
+    reference's in-writer footer (``AvroGeoParquetWriter.java:122-133``),
+    and a crash can only lose the footer, never the row groups."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path("file://" + os.path.abspath(full))
@@ -216,61 +183,49 @@ def _footer_append_geo(spark, full: str, geo: dict) -> None:
     baos = jvm.java.io.ByteArrayOutputStream()
     jvm.org.apache.parquet.format.Util.writeFileMetaData(fmd, baos)
     new_footer = bytes(baos.toByteArray())
-    with open(full, "rb") as fh:
-        data = fh.read()
-    if data[-4:] != b"PAR1":
-        raise ValueError(f"{full}: not a parquet file")
-    old_len = _struct.unpack("<I", data[-8:-4])[0]
-    start = len(data) - 8 - old_len
-    with open(full, "wb") as fh:
-        fh.write(data[:start])
+    with open(full, "r+b") as fh:
+        end = fh.seek(-8, os.SEEK_END)
+        tail = fh.read(8)
+        if tail[4:] != b"PAR1":
+            raise ValueError(f"{full}: not a parquet file")
+        (old_len,) = struct.unpack("<I", tail[:4])
+        fh.seek(end - old_len)
         fh.write(new_footer)
-        fh.write(_struct.pack("<I", len(new_footer)))
+        fh.write(struct.pack("<I", len(new_footer)))
         fh.write(b"PAR1")
+        fh.truncate()
 
 
-def _attach_geo_local_file(full: str, row_group_size: int | None, spark) -> None:
-    """One file's geo post-pass: footer surgery when possible (preserves
-    bloom filters, O(footer)); the full pyarrow rewrite only when the
-    caller asked for re-chunking (``row_group_size``) or no JVM is
-    available."""
-    if row_group_size is None and spark is not None:
-        table, covering = _thin_geo_table(full)
-        geo = _file_geo_metadata(table, covering=covering)
-        _footer_append_geo(spark, full, geo)
-    else:
-        _rewrite_parquet_file(full, row_group_size)
+def _attach_geo_file(spark, full: str) -> None:
+    # only the columns the geo metadata needs (bbox struct +
+    # geometry_type): metadata-sized I/O instead of decoding WKB blobs
+    names = pq.read_schema(full).names
+    table = pq.read_table(
+        full, columns=[c for c in ("bbox", "geometry_type") if c in names]
+    )
+    _footer_append_geo(spark, full, _file_geo_metadata(table))
 
 
-def _attach_geo_metadata(
-    path: str, row_group_size: int | None = None, spark=None
-) -> None:
+def _attach_geo_metadata(spark, path: str) -> None:
     from .output import is_local_path
 
     if not is_local_path(path):
-        if spark is None:
-            raise ValueError(
-                "attaching geo metadata to a non-local output requires the "
-                "SparkSession (Hadoop FileSystem access)"
-            )
-        _attach_geo_metadata_hadoop(spark, path, row_group_size)
+        _attach_geo_metadata_hadoop(spark, path)
         return
     for root, _dirs, files in os.walk(path):
         for fn in files:
             if not fn.endswith(".parquet"):
                 continue
-            full = os.path.join(root, fn)
-            _attach_geo_local_file(full, row_group_size, spark)
-            # the rewrite invalidates only THIS file's Hadoop .crc sidecar;
-            # leave checksums of files we never touch (_SUCCESS, ...) intact
+            _attach_geo_file(spark, os.path.join(root, fn))
+            # the footer patch invalidates only THIS file's Hadoop .crc
+            # sidecar; leave checksums of files we never touch (_SUCCESS,
+            # ...) intact
             sidecar = os.path.join(root, f".{fn}.crc")
             if os.path.exists(sidecar):
                 os.remove(sidecar)
 
 
-def _attach_geo_metadata_hadoop(
-    spark, path: str, row_group_size: int | None
-) -> None:
+def _attach_geo_metadata_hadoop(spark, path: str) -> None:
     """The footer post-pass for object-store / non-local outputs (S15):
     walk the dataset through the Hadoop FileSystem API (any scheme Spark
     can write — s3a, viewfs, hdfs), pull each file down, rewrite the
@@ -296,7 +251,7 @@ def _attach_geo_metadata_hadoop(
             lpath = jvm.org.apache.hadoop.fs.Path("file:" + local)
             # useRawLocalFileSystem=True: no .crc sidecar for the temp copy
             fs.copyToLocalFile(False, p, lpath, True)
-            _attach_geo_local_file(local, row_group_size, spark)
+            _attach_geo_file(spark, local)
             fs.copyFromLocalFile(False, True, lpath, p)
             # drop only the rewritten file's now-stale checksum sidecar;
             # unrelated sidecars (_SUCCESS, ...) keep their integrity metadata

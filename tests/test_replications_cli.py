@@ -273,6 +273,85 @@ def test_replications_cli_dual_stream(spark, tmp_path, capsys):
     assert "6737400" in state_text
 
 
+def _publish_changesets(root, seq, ids):
+    """One minute on a ``file://`` changeset stream: the ``.osm.gz`` for
+    state ``seq`` (file N carries state N-1), its state, then ``state.yaml``."""
+    from ohsome_planet_spark.streaming.replication import sequence_path
+
+    rel = sequence_path(seq + 1)
+    os.makedirs(os.path.dirname(os.path.join(root, rel)), exist_ok=True)
+    xml = "".join(
+        f'<changeset id="{i}" created_at="2025-10-22T09:00:00Z" '
+        f'closed_at="2025-10-22T09:01:00Z" open="false" uid="1" user="One" '
+        f'min_lon="1.0" min_lat="1.0" max_lon="2.0" max_lat="2.0"/>'
+        for i in ids
+    )
+    body = f"<?xml version='1.0' encoding='UTF-8'?><osm version=\"0.6\">{xml}</osm>"
+    with open(os.path.join(root, f"{rel}.osm.gz"), "wb") as f:
+        f.write(gzip.compress(body.encode()))
+    state = f"---\nlast_run: 2025-10-22 09:0{seq % 10}:00.000000000 +00:00\nsequence: {seq}\n"
+    for name in (f"{rel}.state.txt", "state.yaml"):
+        with open(os.path.join(root, name), "w") as f:
+            f.write(state)
+
+
+def _changeset_pass(data, root):
+    argv = [
+        "replications", "--data", data, "--jcs",
+        "--replication-changesets", f"file://{root}",
+        "--changeset-start-sequence", "100",
+    ]
+    assert main(argv) == 0
+
+
+def test_changeset_store_commits_once_by_rename(spark, tmp_path, monkeypatch):
+    """Each pass writes the store once, beside the live one, and swaps it
+    in by rename: no second write, and no ``.tmp``/``.old`` left behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    root, data = str(tmp_path / "changesets"), str(tmp_path / "data")
+    store = os.path.join(data, "changesets")
+    writes = []
+    real_parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *args, **kwargs):
+        if path.startswith(store):
+            writes.append(path)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    _publish_changesets(root, 100, [])
+    for seq, ids in ((101, [1, 2]), (102, [3])):
+        _publish_changesets(root, seq, ids)
+        writes.clear()
+        _changeset_pass(data, root)
+        assert len(writes) == 1, writes
+        assert sorted(n for n in os.listdir(data) if n.startswith("changesets")) == [
+            "changesets"
+        ]
+    ids = {r.id for r in spark.read.parquet(store).select("id").collect()}
+    assert ids == {1, 2, 3}
+
+
+def test_changeset_store_recovers_from_interrupted_swap(spark, tmp_path):
+    """A pass that died between the two renames leaves only
+    ``changesets.old``; the next start resumes from it instead of an
+    empty store."""
+    root, data = str(tmp_path / "changesets"), str(tmp_path / "data")
+    store = os.path.join(data, "changesets")
+    _publish_changesets(root, 100, [])
+    _publish_changesets(root, 101, [1, 2])
+    _changeset_pass(data, root)
+    os.rename(store, store + ".old")
+    os.makedirs(store + ".tmp", exist_ok=True)
+
+    _changeset_pass(data, root)  # caught up: the pass only recommits
+    ids = {r.id for r in spark.read.parquet(store).select("id").collect()}
+    assert ids == {1, 2}
+    assert not os.path.exists(store + ".old")
+    assert not os.path.exists(store + ".tmp")
+
+
 def test_replication_store_peek(spark, mirror, tmp_path, capsys):
     """`replication-store` shows latest stored entity + derived
     back-references (UpdateStoreRocksDb.query:36-57, docs/CLI.md)."""

@@ -174,3 +174,188 @@ def test_bbox_covering_prunes_row_groups(spark, tmp_path):
         i for i in range(120) if -170.0 + i * 2.8 >= qxmin - 1e-9 and -170.0 + i * 2.8 <= qxmax + 1e-9
     )
     assert got == expect
+
+
+# ids at or above 2**32 reach parquet-mr as Java longs through py4j;
+# smaller ones arrive as Integer and hash differently from the stored longs
+BIG_ID = 2**32
+
+
+def _parquet_files(out):
+    import glob
+
+    return sorted(glob.glob(out + "/**/*.parquet", recursive=True))
+
+
+def _osm_id_blocks(spark, f, read_options=None):
+    """(block, osm_id column chunk, reader) per row group parquet-mr keeps
+    for ``f`` under ``read_options`` (all of them when None)."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    path = jvm.org.apache.hadoop.fs.Path("file://" + f)
+    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
+    if read_options is None:
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+    else:
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            infile, read_options
+        )
+    blocks = []
+    for block in reader.getRowGroups():
+        for col in block.getColumns():
+            if col.getPath().toDotString() == "osm_id":
+                blocks.append((block, col))
+    return blocks, reader
+
+
+def _bloom_bitset_sizes(spark, out):
+    sizes = []
+    for f in _parquet_files(out):
+        blocks, reader = _osm_id_blocks(spark, f)
+        try:
+            for block, col in blocks:
+                bloom = reader.getBloomFilterDataReader(block).readBloomFilter(col)
+                assert bloom is not None, f"no osm_id bloom filter in {f}"
+                sizes.append(bloom.getBitsetSize())
+        finally:
+            reader.close()
+    assert sizes
+    return sizes
+
+
+def test_bloom_filter_follows_rows(spark, tmp_path):
+    """The osm_id filter is sized to the chunk's distinct ids: a small
+    write gets a small bitset instead of parquet-mr's fixed 1 MiB, and a
+    chunk too large for the 512 KiB candidate keeps the 1 MiB cap."""
+    small = str(tmp_path / "small")
+    write_contributions(
+        spark.range(BIG_ID, BIG_ID + 300).withColumnRenamed("id", "osm_id"),
+        small,
+        bloom_filter_columns=("osm_id",),
+        split_latest=False,
+    )
+    assert max(_bloom_bitset_sizes(spark, small)) <= 4 * 1024
+
+    large = str(tmp_path / "large")
+    write_contributions(
+        spark.range(BIG_ID, BIG_ID + 600_000, numPartitions=1).withColumnRenamed(
+            "id", "osm_id"
+        ),
+        large,
+        bloom_filter_columns=("osm_id",),
+        split_latest=False,
+    )
+    assert _bloom_bitset_sizes(spark, large) == [1024 * 1024]
+
+
+def _spanning_groups(spark, out):
+    """Four 10-row groups whose osm_id min/max all span BIG_ID+3 ..
+    BIG_ID+1000, so statistics cannot prune a probe in between; BIG_ID+123
+    sits in group 2 only."""
+    ids = []
+    for g in range(4):
+        ids += [BIG_ID + g, BIG_ID + 1000 + g]
+        ids += [BIG_ID + 100 + g * 10 + j for j in range(8)]
+    df = spark.createDataFrame([(i,) for i in ids], "osm_id bigint").coalesce(1)
+    write_contributions(
+        df, out, bloom_filter_columns=("osm_id",), split_latest=False,
+        row_group_size=10,
+    )
+
+
+def test_row_group_size_keeps_bloom_filters(spark, tmp_path):
+    out = str(tmp_path / "groups")
+    _spanning_groups(spark, out)
+    (f,) = _parquet_files(out)
+    blocks, reader = _osm_id_blocks(spark, f)
+    reader.close()
+    assert len(blocks) == 4  # the Spark writer capped the row groups
+    assert all(col.getBloomFilterOffset() >= 0 for _block, col in blocks)
+    assert read_geo_metadata(f)["version"] == "1.1.0"
+
+
+def test_absent_id_lookup_prunes_through_bloom_filter(spark, tmp_path):
+    out = str(tmp_path / "groups")
+    _spanning_groups(spark, out)
+    (f,) = _parquet_files(out)
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    filters = jvm.org.apache.parquet.filter2.predicate.FilterApi
+    compat = jvm.org.apache.parquet.filter2.compat.FilterCompat
+
+    def kept(osm_id, use_bloom=True):
+        pred = filters.eq(filters.longColumn("osm_id"), osm_id)
+        opts = (
+            jvm.org.apache.parquet.HadoopReadOptions.builder(conf)
+            .withRecordFilter(compat.get(pred))
+            .useBloomFilter(use_bloom)
+            .build()
+        )
+        blocks, reader = _osm_id_blocks(spark, f, opts)
+        reader.close()
+        return len(blocks)
+
+    assert kept(BIG_ID + 500) == 0
+    assert kept(BIG_ID + 123) == 1
+    assert kept(BIG_ID + 500, use_bloom=False) == 4
+
+
+def test_footer_append_geo_is_o_footer(spark, tmp_path, monkeypatch):
+    """The geo post-pass patches the footer in place: the bytes before the
+    old footer are untouched and only the file's tail is read."""
+    import builtins
+    import os
+    import struct
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ohsome_planet_spark.sources import geoparquet
+
+    f = str(tmp_path / "big.parquet")
+    n = 2000
+    blobs = [os.urandom(700) for _ in range(n)]
+    # no ARROW:schema key, like the files Spark writes (pyarrow would
+    # otherwise rebuild the schema metadata from that key alone)
+    pq.write_table(
+        pa.table({"osm_id": list(range(n)), "blob": blobs}), f,
+        compression="none", store_schema=False,
+    )
+    data = open(f, "rb").read()
+    assert len(data) >= 1_000_000
+    footer_start = len(data) - 8 - struct.unpack("<I", data[-8:-4])[0]
+
+    read_bytes = []
+
+    class CountingFile:
+        def __init__(self, fh):
+            self._fh = fh
+
+        def read(self, *args):
+            chunk = self._fh.read(*args)
+            read_bytes.append(len(chunk))
+            return chunk
+
+        def __getattr__(self, name):
+            return getattr(self._fh, name)
+
+        def __enter__(self):
+            self._fh.__enter__()
+            return self
+
+        def __exit__(self, *exc):
+            return self._fh.__exit__(*exc)
+
+    monkeypatch.setattr(
+        geoparquet, "open",
+        lambda *a, **k: CountingFile(builtins.open(*a, **k)), raising=False,
+    )
+    geo = geoparquet.geo_metadata((1.0, 2.0, 3.0, 4.0), ("Point",))
+    geoparquet._footer_append_geo(spark, f, geo)
+    monkeypatch.undo()
+
+    assert read_bytes and sum(read_bytes) < 64 * 1024
+    after = open(f, "rb").read()
+    assert after[:footer_start] == data[:footer_start]
+    assert read_geo_metadata(f) == geo
+    assert pq.read_table(f).column("blob").to_pylist() == blobs
