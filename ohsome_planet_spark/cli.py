@@ -22,7 +22,6 @@ import argparse
 import csv
 import json
 import os
-import shutil
 import sys
 
 from pyspark.sql import Window as W
@@ -37,13 +36,13 @@ from .session import run_scope
 def cmd_contributions(args) -> int:
     from .operators.contributions import (
         bundled_way_instants,
+        enrich_contributions,
         filter_relation_tag_keys,
         filter_tagged_histories,
         node_contribution_events,
         relation_contribution_events,
         synthesize_contributions,
         way_contribution_events,
-        with_changesets,
     )
     from .session import get_spark, truncate_lineage
     from .sources.geoparquet import write_contributions
@@ -89,25 +88,11 @@ def cmd_contributions(args) -> int:
     for s in streams[1:]:
         contribs = contribs.unionByName(s)
 
-    if args.changesets:
-        changesets = spark.read.parquet(args.changesets)
-        contribs = with_changesets(contribs, changesets)
-    else:
-        contribs = with_changesets(
-            contribs, spark.createDataFrame([], _changeset_ddl())
-        )
-
-    if args.country_file:
-        from .operators.spatial import geometry_countries_udf
-
-        feats = _load_country_csv(args.country_file)
-        # full-geometry intersects like the reference (a way crossing a
-        # border belongs to both countries even with no vertex inside)
-        contribs = contribs.withColumn(
-            "countries", geometry_countries_udf(feats)(F.col("geometry"))
-        )
-    else:
-        contribs = contribs.withColumn("countries", F.array().cast("array<string>"))
+    contribs = enrich_contributions(
+        contribs,
+        spark.read.parquet(args.changesets) if args.changesets else None,
+        _load_country_csv(args.country_file) if args.country_file else None,
+    )
 
     if getattr(args, "filter", None):
         # ohsome filter DSL (docs.ohsome.org filter parameter) compiled to
@@ -150,7 +135,8 @@ def _init_replication(spark, entities, args) -> int:
     132-201``, ``Server.findStartStateByTimestamp``)."""
     from datetime import timezone
 
-    from .streaming.server import entity_server, file_fetch
+    from .streaming.manager import NODE_HISTORY_SCHEMA, WAY_HISTORY_SCHEMA
+    from .streaming.server import entity_server, server_for
 
     if not args.data:
         print("--replication-endpoint requires --data", file=sys.stderr)
@@ -163,13 +149,7 @@ def _init_replication(spark, entities, args) -> int:
             print("replication directory is not empty!", file=sys.stderr)
             return 1
 
-    endpoint = args.replication_endpoint
-    if endpoint.startswith("file://"):
-        server = entity_server(
-            "local://mirror/", fetch=file_fetch(endpoint[len("file://"):])
-        )
-    else:
-        server = entity_server(endpoint)
+    server = server_for(args.replication_endpoint, entity_server)
 
     # Resolve the start state BEFORE writing the history tables: an empty
     # extract (max_ts None) or an unreachable endpoint must not leave a
@@ -186,27 +166,20 @@ def _init_replication(spark, entities, args) -> int:
     )
     state_text = start.format()
 
-    node_cols = ["osm_type", "osm_id", "version", "ts", "changeset",
-                 "user_id", "user_name", "visible", "tags", "lon", "lat"]
-    way_cols = node_cols[:-2] + ["refs"]
-    entities.filter("osm_type = 'node'").select(*node_cols).write.parquet(
-        os.path.join(args.data, "nodes")
-    )
-    entities.filter("osm_type = 'way'").select(*way_cols).write.parquet(
-        os.path.join(args.data, "ways")
-    )
+    for kind, sub, schema in (
+        ("node", "nodes", NODE_HISTORY_SCHEMA),
+        ("way", "ways", WAY_HISTORY_SCHEMA),
+    ):
+        cols = spark.createDataFrame([], schema).columns
+        entities.filter(f"osm_type = '{kind}'").select(*cols).write.parquet(
+            os.path.join(args.data, sub)
+        )
     with open(os.path.join(args.data, "state.txt"), "w") as f:
         f.write(state_text)
     with open(os.path.join(args.out, "state.txt"), "w") as f:
         f.write(state_text)
     print(f"replication initialized at sequence {start.sequence}")
     return 0
-
-
-def _changeset_ddl() -> str:
-    from .schemas import CHANGESET_SCHEMA
-
-    return CHANGESET_SCHEMA.simpleString()[7:-1].replace(":", " ")
 
 
 def _load_country_csv(path: str):
@@ -269,34 +242,6 @@ def cmd_changesets(args) -> int:
     return 0
 
 
-def _commit_changeset_store(state, store: str) -> None:
-    """Write the pass's changeset store once, beside the live one, and
-    swap it in by two renames. The write reads the live store, so it
-    cannot target it directly; until the swap the live store stays whole,
-    and ``_recover_changeset_store`` repairs a crash between the renames."""
-    tmp, old = store + ".tmp", store + ".old"
-    state.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(store):
-        os.rename(store, old)
-    os.rename(tmp, store)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-
-
-def _recover_changeset_store(store: str) -> None:
-    """Finish or undo a commit a crashed pass left behind: a missing store
-    with a ``.old`` beside it died between the renames, and that ``.old``
-    is the store ``changeset_state.txt`` (written after the swap) matches.
-    Any ``.tmp`` is an unswapped write, and a ``.old`` next to a live
-    store was already replaced; both are dropped."""
-    old = store + ".old"
-    if not os.path.isdir(store) and os.path.isdir(old):
-        os.rename(old, store)
-    for leftover in (store + ".tmp", old):
-        if os.path.isdir(leftover):
-            shutil.rmtree(leftover)
-
-
 @run_scope()
 def cmd_replications(args) -> int:
     """End-to-end replication catch-up (``cmd/Replications.java:27-130``,
@@ -310,18 +255,13 @@ def cmd_replications(args) -> int:
     from datetime import datetime, timezone
 
     from .session import get_spark
-    from .streaming.changesets import CHANGESET_STORE_SCHEMA, ChangesetStateManager
+    from .streaming.changesets import ChangesetStateManager
     from .streaming.manager import (
         ContributionReplicationManager,
         run_replication_update,
     )
     from .streaming.replication import ReplicationState
-    from .streaming.server import changeset_server, entity_server, file_fetch
-
-    def make_server(endpoint: str, factory):
-        if endpoint.startswith("file://"):
-            return factory("local://mirror/", fetch=file_fetch(endpoint[len("file://"):]))
-        return factory(endpoint)
+    from .streaming.server import changeset_server, entity_server, server_for
 
     if args.just_changesets and args.just_contributions:
         # Replications.java:143-145
@@ -339,7 +279,7 @@ def cmd_replications(args) -> int:
             with open(state_path, "w") as f:
                 f.write(ReplicationState(args.start_sequence, "").format())
         contribution_manager = ContributionReplicationManager(
-            server=make_server(args.endpoint, entity_server),
+            server=server_for(args.endpoint, entity_server),
             spark=spark,
             data_dir=args.data,
             out_dir=args.parquet_data or os.path.join(args.data, "updates"),
@@ -351,46 +291,22 @@ def cmd_replications(args) -> int:
         contribution_manager.initialize_local_state()
 
     changeset_manager = None
-    changeset_state = None
     if not args.just_contributions:
         changeset_manager = ChangesetStateManager(
-            server=make_server(args.replication_changesets, changeset_server),
+            server=server_for(args.replication_changesets, changeset_server),
             spark=spark,
+            data_dir=args.data,
         )
-        cs_state_path = os.path.join(args.data, "changeset_state.txt")
-        if os.path.exists(cs_state_path):
-            with open(cs_state_path) as f:
-                changeset_manager.local_state = ReplicationState.parse(f.read())
-        elif args.changeset_start_sequence is not None:
-            changeset_manager.local_state = ReplicationState(
-                args.changeset_start_sequence, ""
-            )
-        cs_store = os.path.join(args.data, "changesets")
-        _recover_changeset_store(cs_store)
-        if os.path.isdir(cs_store):
-            changeset_state = spark.read.parquet(cs_store)
-        else:
-            changeset_state = spark.createDataFrame([], CHANGESET_STORE_SCHEMA)
+        changeset_manager.load(args.changeset_start_sequence)
 
     from .streaming.waiter import Waiter
 
     waiter = Waiter()
     last_applied = 0
     while True:
-        changeset_state = run_replication_update(
-            contribution_manager,
-            changeset_manager,
-            changeset_state,
-            now=datetime.now(timezone.utc),
+        run_replication_update(
+            contribution_manager, changeset_manager, now=datetime.now(timezone.utc)
         )
-        if changeset_manager is not None:
-            # the PostgreSQL store's local-mode analog: rewrite the parquet
-            # store and its state row after each pass (S16 JDBC sink is the
-            # drop-in for a real database)
-            _commit_changeset_store(changeset_state, cs_store)
-            changeset_state = spark.read.parquet(cs_store)
-            with open(os.path.join(args.data, "changeset_state.txt"), "w") as f:
-                f.write(changeset_manager.local_state.format())
         if not args.continuous:
             break
         # reference cadence (Waiter.java): exponential 5->60s backoff while

@@ -659,3 +659,28 @@ def with_changesets(
     return joined.withColumn("changeset", changeset_struct).drop(
         "_cs_id", "_cs_created_at", "_cs_closed_at", "_cs_tags", "_cs_hashtags", "changeset_id"
     )
+
+
+def enrich_contributions(
+    contribs: DataFrame,
+    changesets: DataFrame | None = None,
+    country_features: list | None = None,
+) -> DataFrame:
+    """The output's two enrichments, one schema for the bulk and the
+    replication writers: the J4 changeset join (no ``changesets`` joins an
+    empty store, so every row gets the default record) and the country
+    lookup (no ``country_features`` writes an empty ``countries`` array)."""
+    if changesets is None:
+        from ..schemas import CHANGESET_SCHEMA
+
+        changesets = contribs.sparkSession.createDataFrame([], CHANGESET_SCHEMA)
+    contribs = with_changesets(contribs, changesets)
+    if country_features is None:
+        return contribs.withColumn("countries", F.array().cast("array<string>"))
+    from .spatial import geometry_countries_udf
+
+    # full-geometry intersects like the reference (a way crossing a
+    # border belongs to both countries even with no vertex inside)
+    return contribs.withColumn(
+        "countries", geometry_countries_udf(country_features)(F.col("geometry"))
+    )

@@ -5,7 +5,6 @@ product schema."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -1823,21 +1822,13 @@ def _osc_roundtrip_batch(spark: SparkSession, wave: DataFrame) -> DataFrame:
     it back, and return the entity batch frame — the .osc wire seam the
     production replication loop consumes (``apply_sequences`` does the
     identical parse from a server)."""
-    from ..sources.osmxml import encode_osc, parse_osc_bytes
-    from ..sources.pbf import ENTITY_ROW_SCHEMA
+    from ..sources.osmxml import encode_osc, osc_batch
 
     rows = [
         r.asDict(recursive=True)
         for r in wave.orderBy("osm_type", "osm_id", "version").collect()
     ]
-    parsed = parse_osc_bytes(encode_osc(rows))
-    cols = [
-        "osm_type", "osm_id", "version", "ts", "changeset", "user_id",
-        "user_name", "visible", "tags", "lon", "lat", "refs", "members",
-    ]
-    return spark.createDataFrame(
-        pd.DataFrame(parsed, columns=cols), ENTITY_ROW_SCHEMA
-    )
+    return osc_batch(spark, encode_osc(rows))
 
 
 @_register("contrib_full_row_incremental", _fullrow_oracle())

@@ -172,10 +172,14 @@ def _footer_append_geo(spark, full: str, geo: dict) -> None:
     conv = jvm.org.apache.parquet.format.converter.ParquetMetadataConverter()
     fmd = conv.toParquetMetadata(1, footer)
     kvs = fmd.getKey_value_metadata()
-    if kvs is not None:  # idempotent: replace a pre-existing geo entry
+    if kvs is not None:
+        # idempotent: replace a pre-existing geo entry. A pyarrow-written
+        # input also carries ARROW:schema, whose embedded metadata pyarrow
+        # readers take instead of this list, so they would not see geo:
+        # drop it too (readers then derive the schema from parquet types).
         it = kvs.iterator()
         while it.hasNext():
-            if it.next().getKey() == "geo":
+            if it.next().getKey() in ("geo", "ARROW:schema"):
                 it.remove()
     kv = jvm.org.apache.parquet.format.KeyValue("geo")
     kv.setValue(json.dumps(geo))

@@ -1,5 +1,5 @@
-"""OSM XML sources (SURVEY.md S9-S11): full `.osm` documents, osmChange
-(`.osc` / `.osc.gz`) diffs, and changeset dump parsing.
+"""OSM XML sources (SURVEY.md S9/S10): osmChange (`.osc` / `.osc.gz`)
+diffs and changeset dump parsing.
 
 The reference uses StAX parsers (``osm-xml/.../OscParser.java:27-317``,
 ``OSMXmlEntityReader.java``, ``ChangesetXmlReader.java``); here the parse is
@@ -115,16 +115,6 @@ def encode_osc(rows: list[dict]) -> bytes:
     return ET.tostring(root, encoding="utf-8", xml_declaration=True)
 
 
-def parse_osm_bytes(data: bytes) -> list[dict]:
-    """Full .osm document → entity dicts."""
-    root = ET.fromstring(data)
-    return [
-        _entity_from_elem(elem, True)
-        for elem in root
-        if elem.tag in ("node", "way", "relation")
-    ]
-
-
 _COLUMNS = [
     "osm_type",
     "osm_id",
@@ -140,6 +130,15 @@ _COLUMNS = [
     "refs",
     "members",
 ]
+
+
+def osc_batch(spark: SparkSession, data: bytes) -> DataFrame:
+    """One osmChange document → entity batch frame: the driver-side parse
+    every replication consumer applies (the minute files are
+    kilobyte-scale, like the reference's own fetch loop)."""
+    return spark.createDataFrame(
+        pd.DataFrame(parse_osc_bytes(data), columns=_COLUMNS), ENTITY_ROW_SCHEMA
+    )
 
 
 def read_osc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
@@ -158,26 +157,6 @@ def read_osc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
             yield pd.DataFrame(rows, columns=_COLUMNS)
 
     return index.repartition(max(1, len(paths))).mapInPandas(parse, ENTITY_ROW_SCHEMA)
-
-
-def read_osm_xml(spark: SparkSession, path: str) -> DataFrame:
-    """Full .osm XML document → entity DataFrame (S11, test harness)."""
-    from ..session import ship_package
-
-    ship_package(spark)
-    rows = parse_osm_bytes(_read_maybe_compressed(path))
-    pdf = pd.DataFrame(rows, columns=_COLUMNS)
-    return spark.createDataFrame(pdf).selectExpr(
-        *[f"cast({c} as {t}) as {c}" for c, t in _schema_pairs()]
-    )
-
-
-def _schema_pairs():
-    pairs = []
-    for part in ENTITY_ROW_SCHEMA.split(","):
-        name, typ = part.strip().split(" ", 1)
-        pairs.append((name, typ))
-    return pairs
 
 
 # --- changeset dumps (S9) ----------------------------------------------------

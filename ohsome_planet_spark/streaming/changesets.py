@@ -28,10 +28,18 @@ Scale shape: the store is a DataFrame/table keyed by ``id``; each batch
 touches |batch| + |matching ids| rows. The full-outer merge shuffles the
 *batch* (small) and the state once — on a bucketed/Delta table the state
 side is co-located and the merge is shuffle-free on the big side.
+
+On disk the store is ``<data>/changesets`` (parquet) plus its state row
+``<data>/changeset_state.txt``, both owned by :class:`ChangesetStateManager`:
+a pass that advanced the stream commits the store before the contribution
+stream reads it, like the reference's ``ReplicationManager`` commits the
+changeset database first (``ReplicationManager.java:57-75``).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 from typing import Callable, Iterable, Sequence
@@ -209,13 +217,17 @@ def _rows_to_df(
 @dataclass
 class ChangesetStateManager:
     """Driver-side orchestration of the changeset stream
-    (``ChangesetStateManager.java``). The store itself is a DataFrame the
-    caller owns (load → update → write back, or checkpoint per batch);
-    the manager only sequences fetch/parse/upsert and tracks the
-    replication state row."""
+    (``ChangesetStateManager.java``) and the one owner of its store.
+
+    ``update_to_remote_state`` / ``update_unclosed_changesets`` are pure
+    DataFrame-in/out steps over a store frame. With a working ``data_dir``
+    the manager also owns the store on disk: :meth:`load` recovers and
+    reads it, and :meth:`catch_up` runs both steps and commits the result
+    (store, then ``changeset_state.txt``) only when the stream advanced."""
 
     server: Server
     spark: SparkSession
+    data_dir: str | None = None
     local_state: ReplicationState | None = None
     batch_size: int = 500
     api_batch_size: int = 100
@@ -223,6 +235,75 @@ class ChangesetStateManager:
     # optional S16 drop-in: every upserted batch is mirrored into
     # PostgreSQL (sources.jdbc.ChangesetJdbcSink or compatible)
     jdbc_sink: object | None = None
+    # the committed store (set by load and _commit)
+    store: DataFrame | None = None
+
+    # -- the store on disk --------------------------------------------------
+
+    @property
+    def _store_path(self) -> str:
+        return os.path.join(self.data_dir, "changesets")
+
+    @property
+    def _state_path(self) -> str:
+        return os.path.join(self.data_dir, "changeset_state.txt")
+
+    def load(self, start_sequence: int | None = None) -> None:
+        """Repair a crashed commit, then read the state row
+        (``changeset_state.txt``, else ``start_sequence``) and the
+        committed store (an empty one before the first commit)."""
+        self._recover()
+        if os.path.exists(self._state_path):
+            with open(self._state_path) as f:
+                self.local_state = ReplicationState.parse(f.read())
+        elif start_sequence is not None:
+            self.local_state = ReplicationState(start_sequence, "")
+        if os.path.isdir(self._store_path):
+            self.store = self.spark.read.parquet(self._store_path)
+        else:
+            self.store = self.spark.createDataFrame([], CHANGESET_STORE_SCHEMA)
+
+    def catch_up(self, remote: ReplicationState, now: datetime) -> None:
+        """One pass of the stream: apply (local, remote], reconcile stale
+        open changesets and commit. A stream already at ``remote`` writes
+        nothing."""
+        if self.local_state is not None and remote.sequence == self.local_state.sequence:
+            return
+        store = self.update_to_remote_state(self.store, remote)
+        self._commit(self.update_unclosed_changesets(store, now))
+
+    def _commit(self, store: DataFrame) -> None:
+        """Write the store once, beside the live one (the write reads the
+        live store, so it cannot target it directly), swap it in by two
+        renames, then advance the state row. Until the swap the live store
+        stays whole, and :meth:`_recover` repairs a crash between the
+        renames. This is the local-mode analog of the reference's
+        PostgreSQL commit (the S16 JDBC sink is the drop-in for one)."""
+        path = self._store_path
+        tmp, old = path + ".tmp", path + ".old"
+        store.write.mode("overwrite").parquet(tmp)
+        if os.path.isdir(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        self.store = self.spark.read.parquet(path)
+        with open(self._state_path, "w") as f:
+            f.write(self.local_state.format())
+
+    def _recover(self) -> None:
+        """Finish or undo a commit a crashed pass left behind: a missing
+        store with a ``.old`` beside it died between the renames, and that
+        ``.old`` is the store ``changeset_state.txt`` (written after the
+        swap) matches. Any ``.tmp`` is an unswapped write, and a ``.old``
+        next to a live store was already replaced; both are dropped."""
+        path = self._store_path
+        old = path + ".old"
+        if not os.path.isdir(path) and os.path.isdir(old):
+            os.rename(old, path)
+        for leftover in (path + ".tmp", old):
+            if os.path.isdir(leftover):
+                shutil.rmtree(leftover)
 
     # -- state bootstrap (ChangesetStateManager.java:44-57) ----------------
 

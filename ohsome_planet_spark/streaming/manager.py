@@ -17,12 +17,19 @@ Reference behavior (re-expressed, not ported):
   at the last advanced sequence.
 
 Spark shape: the RocksDB latest-state store becomes two append-only
-history tables (``<data>/nodes``, ``<data>/ways``). Each sequence appends
-only its J6-surviving rows (O(|diff|) I/O), then the manager re-reads the
-table root — a *reliable* staged intermediate, so lineage is truncated by
-storage, not ``localCheckpoint`` (executor loss mid-catch-up replays from
-parquet, unlike block-storage checkpoints). The J6 replay filter makes a
-crash between append and state-advance idempotent.
+history tables (``<data>/nodes``, ``<data>/ways``). Each sequence reads
+the table roots, appends only its J6-surviving rows (O(|diff|) I/O), and
+the next sequence re-reads the roots — a *reliable* staged intermediate,
+so lineage is truncated by storage, not ``localCheckpoint`` (executor loss
+mid-catch-up replays from parquet, unlike block-storage checkpoints). The
+J6 replay filter makes a crash between append and state-advance
+idempotent. Each sequence runs in its own run scope, so what it staged is
+released once its files are written, however long a ``--continue`` run
+goes on.
+
+A pass (:func:`run_replication_update`) catches the changeset stream up
+and commits its store first (``ChangesetStateManager`` owns the store and
+its state row); the contribution stream then joins the committed store.
 """
 
 from __future__ import annotations
@@ -33,17 +40,17 @@ import os
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import run_scope
 from .replication import (
-    ACCEPTABLE_CHANGESET_LAG_S,
     IncrementalUpdater,
     ReplicationState,
+    process_until,
     sequence_path,
 )
-from .server import Server
+from .server import Server, parse_iso
 
 __all__ = ["ContributionReplicationManager", "run_replication_update"]
 
@@ -73,7 +80,9 @@ class ContributionReplicationManager:
 
     ``data_dir`` is the working directory (local state + history tables);
     ``out_dir`` is where per-sequence contribution parquet + published
-    state files land (``--parquet-data``).
+    state files land (``--parquet-data``). ``changeset_store`` is the
+    committed changeset store the output is enriched from (None: every
+    row gets the default changeset record).
     """
 
     server: Server
@@ -130,46 +139,38 @@ class ContributionReplicationManager:
         if process_until is not None:
             while (
                 self.local_state.sequence < target.sequence
-                and _iso(target.timestamp) > process_until
+                and parse_iso(target.timestamp) > process_until
             ):
                 target = self.server.get_remote_state(target.sequence - 1)
 
         seqs = list(range(self.local_state.sequence + 1, target.sequence + 1))
         if self.max_size > 0:
             seqs = seqs[: self.max_size]
-        if not seqs:
-            return 0
-
-        node_hist = _history_or_empty(
-            self.spark, os.path.join(self.data_dir, "nodes"), NODE_HISTORY_SCHEMA
-        )
-        way_hist = _history_or_empty(
-            self.spark, os.path.join(self.data_dir, "ways"), WAY_HISTORY_SCHEMA
-        )
-        updater = IncrementalUpdater(self.spark, node_hist, way_hist)
         for seq in seqs:
-            state = self.server.get_remote_state(seq)
-            self._process(updater, state)
+            # what a sequence stages (its deltas, the enrichment input, the
+            # history checkpoints) is released once its files are written
+            with run_scope():
+                self._process(self.server.get_remote_state(seq))
         return len(seqs)
 
-    def _process(self, updater: IncrementalUpdater, state: ReplicationState) -> None:
+    def _process(self, state: ReplicationState) -> None:
         """One sequence: fetch → parse → J6/J7 apply → R3 rebuild → write
         parquet + state files → advance (``ContributionStateManager
         .java:177-245``)."""
-        from ..sources.osmxml import parse_osc_bytes
-        from ..sources.pbf import ENTITY_ROW_SCHEMA
+        from ..operators.contributions import enrich_contributions
+        from ..sources.geoparquet import write_contributions
+        from ..sources.osmxml import osc_batch
 
         seq = state.sequence
-        rows = parse_osc_bytes(self.server.get_replication_file(seq))
-        cols = [
-            "osm_type", "osm_id", "version", "ts", "changeset", "user_id",
-            "user_name", "visible", "tags", "lon", "lat", "refs", "members",
-        ]
-        batch = self.spark.createDataFrame(
-            pd.DataFrame(rows, columns=cols), ENTITY_ROW_SCHEMA
+        nodes, ways = (os.path.join(self.data_dir, sub) for sub in ("nodes", "ways"))
+        updater = IncrementalUpdater(
+            self.spark,
+            _history_or_empty(self.spark, nodes, NODE_HISTORY_SCHEMA),
+            _history_or_empty(self.spark, ways, WAY_HISTORY_SCHEMA),
         )
-
-        node_contribs, way_contribs = updater.apply_batch(batch)
+        node_contribs, way_contribs = updater.apply_batch(
+            osc_batch(self.spark, self.server.get_replication_file(seq))
+        )
         # only the J6-surviving delta is appended to storage — O(|diff|)
         new_nodes, new_ways = updater.last_applied
 
@@ -180,12 +181,11 @@ class ContributionReplicationManager:
             (F.size(F.coalesce("tags", F.create_map())) > 0)
             | (F.size(F.coalesce("tags_before", F.create_map())) > 0)
         )
-        contribs = self._enrich(contribs)
+        contribs = enrich_contributions(
+            contribs, self.changeset_store, self.country_features
+        )
 
-        out_rel = sequence_path(seq)
-        out_path = os.path.join(self.out_dir, f"{out_rel}.opc.parquet")
-        from ..sources.geoparquet import write_contributions
-
+        out_path = os.path.join(self.out_dir, f"{sequence_path(seq)}.opc.parquet")
         write_contributions(
             contribs.sortWithinPartitions("osm_id", "valid_from"),
             out_path,
@@ -194,34 +194,14 @@ class ContributionReplicationManager:
         )
 
         # durable history append (the RocksDB-commit analog,
-        # ``updater.updateStore()``) — O(|diff|) rows, then re-read the
-        # table root so the next batch plans against storage, not lineage
-        for df, sub in ((new_nodes, "nodes"), (new_ways, "ways")):
-            df.write.mode("append").parquet(os.path.join(self.data_dir, sub))
-        updater.node_history = self.spark.read.schema(NODE_HISTORY_SCHEMA).parquet(
-            os.path.join(self.data_dir, "nodes")
-        )
-        updater.way_history = self.spark.read.schema(WAY_HISTORY_SCHEMA).parquet(
-            os.path.join(self.data_dir, "ways")
-        )
+        # ``updater.updateStore()``) — O(|diff|) rows; the next sequence
+        # plans against the re-read table roots, not this lineage
+        new_nodes.write.mode("append").parquet(nodes)
+        new_ways.write.mode("append").parquet(ways)
 
         self._publish_state(state, out_path)
         self._advance_local_state(state)
         self.applied.append(seq)
-
-    def _enrich(self, contribs: DataFrame) -> DataFrame:
-        from ..operators.contributions import with_changesets
-
-        if self.changeset_store is not None:
-            contribs = with_changesets(contribs, self.changeset_store)
-        if self.country_features:
-            from ..operators.spatial import geometry_countries_udf
-
-            contribs = contribs.withColumn(
-                "countries",
-                geometry_countries_udf(self.country_features)(F.col("geometry")),
-            )
-        return contribs
 
     def _publish_state(self, state: ReplicationState, parquet_path: str) -> None:
         """Published artifacts next to the parquet: per-sequence
@@ -243,50 +223,28 @@ class ContributionReplicationManager:
             f.write(buf.getvalue())
 
 
-def _iso(ts: str) -> datetime:
-    d = datetime.fromisoformat(ts.replace("Z", "+00:00"))
-    return d if d.tzinfo else d.replace(tzinfo=timezone.utc)
-
-
 def run_replication_update(
     contribution_manager: ContributionReplicationManager | None,
     changeset_manager=None,
-    changeset_state: DataFrame | None = None,
     now: datetime | None = None,
-) -> DataFrame | None:
+) -> None:
     """One pass of the dual-stream loop (``ReplicationManager.update``,
-    non-continuous): changesets catch up first, then contributions advance
-    with the R2 holdback — held to the changeset stream's remote timestamp
-    only when that stream is keeping up (< ``ACCEPTABLE_DELAY`` behind),
-    else allowed to run ahead (``ReplicationManager.java:57-75``).
-
-    Returns the updated changeset store DataFrame (or None when running
-    contributions-only). ``--continue`` wraps this in a sleep/retry loop.
+    non-continuous): the changeset stream catches up and commits its store
+    first, then contributions advance against the committed store, held
+    back by the R2 rule (:func:`.replication.process_until`) to the
+    changeset stream's remote timestamp unless that stream lags by more
+    than ``ACCEPTABLE_DELAY`` (``ReplicationManager.java:57-75``).
+    ``--continue`` wraps this in a sleep/retry loop.
     """
     remote_cs = None
     if changeset_manager is not None:
         remote_cs = changeset_manager.server.get_latest_remote_state()
-        if (
-            changeset_manager.local_state is None
-            or remote_cs.sequence != changeset_manager.local_state.sequence
-        ):
-            changeset_state = changeset_manager.update_to_remote_state(
-                changeset_state, remote_cs
-            )
-            changeset_state = changeset_manager.update_unclosed_changesets(
-                changeset_state, now or datetime.now(timezone.utc)
-            )
-
-    if contribution_manager is not None:
-        if changeset_state is not None:
-            contribution_manager.changeset_store = changeset_state
-        remote_c = contribution_manager.fetch_remote_state()
-        if remote_cs is not None:
-            lag = (
-                _iso(remote_c.timestamp) - _iso(remote_cs.timestamp)
-            ).total_seconds()
-            until = _iso(remote_cs.timestamp) if lag < ACCEPTABLE_CHANGESET_LAG_S else None
-            contribution_manager.update_to_remote_state(remote_c, process_until=until)
-        else:
-            contribution_manager.update_to_remote_state(remote_c)
-    return changeset_state
+        changeset_manager.catch_up(remote_cs, now or datetime.now(timezone.utc))
+    if contribution_manager is None:
+        return
+    remote_c = contribution_manager.fetch_remote_state()
+    until = None
+    if remote_cs is not None:
+        contribution_manager.changeset_store = changeset_manager.store
+        until = process_until(parse_iso(remote_c.timestamp), parse_iso(remote_cs.timestamp))
+    contribution_manager.update_to_remote_state(remote_c, process_until=until)

@@ -21,7 +21,6 @@ plans in :mod:`.replication`.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,8 +30,7 @@ __all__ = ["stream_osc_directory"]
 
 
 def _apply_micro_batch(batch_df: DataFrame, updater: IncrementalUpdater) -> None:
-    from ..sources.osmxml import parse_osc_bytes
-    from ..sources.pbf import ENTITY_ROW_SCHEMA
+    from ..sources.osmxml import osc_batch
 
     # one row per file; minute files are km-scale so collecting the XML to
     # the driver matches the reference's own fetch loop. Apply in filename
@@ -42,15 +40,8 @@ def _apply_micro_batch(batch_df: DataFrame, updater: IncrementalUpdater) -> None
             F.input_file_name().alias("file"), "value"
         ).collect()
     )
-    spark = batch_df.sparkSession
-    cols = [
-        "osm_type", "osm_id", "version", "ts", "changeset", "user_id",
-        "user_name", "visible", "tags", "lon", "lat", "refs", "members",
-    ]
     for _, xml in files:
-        rows = parse_osc_bytes(xml.encode())
-        batch = spark.createDataFrame(pd.DataFrame(rows, columns=cols), ENTITY_ROW_SCHEMA)
-        updater.apply_batch(batch)
+        updater.apply_batch(osc_batch(batch_df.sparkSession, xml.encode()))
 
 
 def stream_osc_directory(

@@ -225,45 +225,23 @@ ACCEPTABLE_CHANGESET_LAG_S = 180.0
 
 def process_until(
     contribution_remote_ts,
-    changeset_local_ts,
+    changeset_ts,
     acceptable_lag_s: float = ACCEPTABLE_CHANGESET_LAG_S,
 ):
     """R2 — changeset-lag holdback ("watermark" across the two replication
     streams): contributions may only be processed up to the changeset
-    stream's local timestamp, unless the changeset stream lags by more than
-    the acceptable delay (``ReplicationManager.java:24,57-75``,
+    stream's timestamp, unless the changeset stream lags by more than the
+    acceptable delay (``ReplicationManager.java:24,57-75``,
     ``ContributionStateManager.java:121-131``).
 
     Returns the timestamp up to which contribution sequences may be
-    applied. Timestamps are comparable datetimes.
+    applied; the contribution manager walks its target state back until
+    it respects that cutoff. Timestamps are comparable datetimes.
     """
-    lag = (contribution_remote_ts - changeset_local_ts).total_seconds()
-    if lag <= acceptable_lag_s:
+    lag = (contribution_remote_ts - changeset_ts).total_seconds()
+    if lag > acceptable_lag_s:
         return contribution_remote_ts
-    return changeset_local_ts
-
-
-def select_target_state(states, until_ts):
-    """Walk candidate remote states backwards to the newest one whose
-    timestamp respects the holdback (``updateToRemoteState``): returns the
-    latest ReplicationState with ts <= until_ts, or None."""
-    eligible = [s for s in states if s[1] <= until_ts]
-    if not eligible:
-        return None
-    return max(eligible, key=lambda s: s[0])
-
-
-def bisect_sequence(get_timestamp, lo: int, hi: int, target) -> int:
-    """Timestamp → sequence bisection (the pyosmium algorithm the reference
-    ports in ``Server.java:111-275``): greatest sequence whose timestamp is
-    ≤ target. ``get_timestamp(seq)`` is injected (network-free testing)."""
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        if get_timestamp(mid) <= target:
-            lo = mid
-        else:
-            hi = mid - 1
-    return lo
+    return changeset_ts
 
 
 # --- incremental update loop (S12 end-to-end; ContributionUpdater.java) ------
@@ -470,24 +448,14 @@ class IncrementalUpdater:
     def apply_sequences(self, server, sequences) -> list[tuple[DataFrame, DataFrame]]:
         """Fetch + parse + apply each replication sequence in order via an
         (injectable-transport) :class:`.server.Server`."""
-        import pandas as pd
+        from ..sources.osmxml import osc_batch
 
-        from ..sources.osmxml import parse_osc_bytes
-        from ..sources.pbf import ENTITY_ROW_SCHEMA
-
-        out = []
-        for seq in sequences:
-            rows = parse_osc_bytes(server.get_replication_file(seq))
-            cols = [
-                "osm_type", "osm_id", "version", "ts", "changeset", "user_id",
-                "user_name", "visible", "tags", "lon", "lat", "refs", "members",
-            ]
-            pdf = pd.DataFrame(rows, columns=cols)
-            batch = self.spark.createDataFrame(pdf, ENTITY_ROW_SCHEMA)
-            # advance_batch truncates the histories in place, so the
-            # per-batch plan stays O(1) deep — the production loop
-            # (ContributionReplicationManager) gets this for free by
-            # appending the delta to a durable history table and
-            # re-reading it between batches
-            out.append(self.apply_batch(batch))
-        return out
+        # advance_batch truncates the histories in place, so the per-batch
+        # plan stays O(1) deep — the production loop
+        # (ContributionReplicationManager) gets this for free by appending
+        # the delta to a durable history table and re-reading it between
+        # batches
+        return [
+            self.apply_batch(osc_batch(self.spark, server.get_replication_file(seq)))
+            for seq in sequences
+        ]

@@ -38,6 +38,8 @@ __all__ = [
     "changeset_server",
     "urllib_fetch",
     "file_fetch",
+    "parse_iso",
+    "server_for",
 ]
 
 
@@ -73,9 +75,11 @@ def file_fetch(base_dir: str):
     return fetch
 
 
-def _parse_iso(ts: str) -> datetime:
-    """Entity-server timestamps: ``2025-10-22T09:04:45Z``."""
-    return datetime.fromisoformat(ts.replace("Z", "+00:00"))
+def parse_iso(ts: str) -> datetime:
+    """ISO-8601 timestamps of the entity server (``2025-10-22T09:04:45Z``)
+    and of ``ReplicationState.timestamp``; a naive value is UTC."""
+    d = datetime.fromisoformat(ts.replace("Z", "+00:00"))
+    return d if d.tzinfo else d.replace(tzinfo=timezone.utc)
 
 
 def _parse_changeset_ts(ts: str) -> datetime:
@@ -166,7 +170,7 @@ class Server:
     # --- timestamp -> sequence discovery (Server.java:190-275) ------------
 
     def _state_ts(self, state: ReplicationState) -> datetime:
-        return datetime.fromisoformat(state.timestamp)
+        return parse_iso(state.timestamp)
 
     def find_start_state_by_timestamp(
         self, target: datetime, remote_state: ReplicationState
@@ -174,6 +178,8 @@ class Server:
         """Greatest published state whose timestamp is ≤ ``target``."""
         if target.tzinfo is None:
             target = target.replace(tzinfo=timezone.utc)
+        if self._state_ts(remote_state) <= target:
+            return remote_state
         lower, upper = self._states_around(remote_state, target)
         if self._state_ts(lower) == target:
             return lower
@@ -240,7 +246,7 @@ def entity_server(
         endpoint += "/"
     return Server(
         endpoint, "state.txt", "sequenceNumber", "timestamp", ".osc.gz", 0,
-        _parse_iso, fetch, sleep, max_attempts,
+        parse_iso, fetch, sleep, max_attempts,
     )
 
 
@@ -258,3 +264,13 @@ def changeset_server(
         endpoint, "state.yaml", "sequence", "last_run", ".osm.gz", 1,
         _parse_changeset_ts, fetch, sleep, max_attempts,
     )
+
+
+def server_for(endpoint: str, factory: Callable[..., Server]) -> Server:
+    """``factory`` (:func:`entity_server` / :func:`changeset_server`) over
+    ``endpoint``: ``file://DIR`` reads a local mirror through
+    :func:`file_fetch` (offline mirrors, tests); anything else uses urllib
+    with the reference's retry/backoff."""
+    if endpoint.startswith("file://"):
+        return factory("local://mirror/", fetch=file_fetch(endpoint[len("file://"):]))
+    return factory(endpoint)

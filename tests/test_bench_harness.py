@@ -360,3 +360,23 @@ def test_dead_jvm_stops_the_run():
 
     with pytest.raises(pytest.exit.Exception, match="Spark JVM died"):
         check_jvm_alive(Spark())
+
+
+def test_perfbench_trace_targets_resolve_and_restore(monkeypatch):
+    """Every function the product bench's ``--trace 1`` wraps still exists
+    under its name and owner, and ``restore`` puts each original back; a
+    rename in the package fails here instead of in a traced bench run."""
+    monkeypatch.syspath_prepend(os.path.join(REPO, "perfbench"))
+    import probes
+    import workloads
+
+    for workload in workloads.WORKLOADS.values():
+        tracer = probes.Tracer()
+        workload().trace_targets(tracer)
+        patched = list(tracer._patched)
+        assert patched, workload.name
+        assert all(getattr(owner, attr) is not original
+                   for owner, attr, original in patched)
+        tracer.restore()
+        for owner, attr, original in patched:
+            assert getattr(owner, attr) is original, f"{workload.name}: {attr}"

@@ -195,16 +195,13 @@ def _canonical_rows(spark, path):
 def test_contributions_cli_shared_bundle_matches_unshared_streams(spark, tmp_path):
     """The CLI's one staged way merge gives, column for column, the rows
     of the way and relation streams each built from the raw histories."""
-    from pyspark.sql import functions as F
-
-    from ohsome_planet_spark.cli import _changeset_ddl
     from ohsome_planet_spark.operators.contributions import (
+        enrich_contributions,
         filter_tagged_histories,
         node_contribution_events,
         relation_contribution_events,
         synthesize_contributions,
         way_contribution_events,
-        with_changesets,
     )
     from ohsome_planet_spark.sources.geoparquet import write_contributions
     from ohsome_planet_spark.sources.pbf import read_pbf
@@ -227,11 +224,9 @@ def test_contributions_cli_shared_bundle_matches_unshared_streams(spark, tmp_pat
         .unionByName(synthesize_contributions(
             relation_contribution_events(rels, ways, nodes)))
     )
-    unshared = with_changesets(unshared, spark.createDataFrame([], _changeset_ddl()))
     want = str(tmp_path / "unshared")
     write_contributions(
-        unshared.withColumn("countries", F.array().cast("array<string>"))
-        .sortWithinPartitions("osm_id", "valid_from"),
+        enrich_contributions(unshared).sortWithinPartitions("osm_id", "valid_from"),
         want,
         bloom_filter_columns=("osm_id",),
     )

@@ -14,7 +14,6 @@ from ohsome_planet_spark.sources.osmxml import (
 )
 from ohsome_planet_spark.streaming.replication import (
     ReplicationState,
-    bisect_sequence,
     dirty_parents,
     filter_diff_against_state,
     latest_state,
@@ -193,30 +192,71 @@ def test_sequence_path():
     assert sequence_path(42) == "000/000/042"
 
 
+def _ten_second_server(latest: int):
+    """An entity server whose state ``seq`` carries timestamp ``seq * 10``
+    seconds, published up to ``latest``."""
+    from ohsome_planet_spark.streaming.server import entity_server
+
+    def state(seq):
+        stamp = ts(seq * 10).strftime("%Y-%m-%dT%H\\:%M\\:%SZ")
+        return f"sequenceNumber={seq}\ntimestamp={stamp}\n".encode()
+
+    def fetch(url):
+        rel = url[len("local://mirror/"):]
+        if rel == "state.txt":
+            return state(latest)
+        seq = int(rel[: -len(".state.txt")].replace("/", ""))
+        if not 0 <= seq <= latest:
+            raise FileNotFoundError(url)
+        return state(seq)
+
+    return entity_server("local://mirror/", fetch=fetch)
+
+
 def test_bisection():
     # timestamps = seq * 10; find greatest seq with ts <= target
-    get = lambda s: s * 10
-    assert bisect_sequence(get, 0, 100, 555) == 55
-    assert bisect_sequence(get, 0, 100, 9999) == 100
-    assert bisect_sequence(get, 0, 100, 0) == 0
+    server = _ten_second_server(100)
+    latest = server.get_latest_remote_state()
+
+    def find(target):
+        return server.find_start_state_by_timestamp(ts(target), latest).sequence
+
+    assert find(555) == 55
+    assert find(9999) == 100
+    assert find(0) == 0
 
 
-def test_changeset_lag_holdback():
-    """R2: contributions gated by the changeset stream unless lag > 180 s."""
-    from ohsome_planet_spark.streaming.replication import (
-        process_until,
-        select_target_state,
-    )
+def test_changeset_lag_holdback(tmp_path):
+    """R2: contributions held back to the changeset stream's timestamp
+    unless that stream lags by more than 180 s."""
+    from ohsome_planet_spark.streaming.manager import ContributionReplicationManager
+    from ohsome_planet_spark.streaming.replication import process_until
 
     contrib_ts = ts(10_000)
-    # changeset stream close behind (lag 60 s) -> process to contrib ts
-    assert process_until(contrib_ts, ts(9_940)) == contrib_ts
-    # changeset stream far behind (lag 300 s) -> hold back to changeset ts
-    assert process_until(contrib_ts, ts(9_700)) == ts(9_700)
+    # changeset stream close behind (lag 60 s) -> hold back to its ts
+    assert process_until(contrib_ts, ts(9_940)) == ts(9_940)
+    # exactly the acceptable delay still holds back; one second more does not
+    assert process_until(contrib_ts, ts(9_820)) == ts(9_820)
+    assert process_until(contrib_ts, ts(9_819)) == contrib_ts
+    # changeset stream far behind (lag 300 s) -> contributions run free
+    assert process_until(contrib_ts, ts(9_700)) == contrib_ts
 
-    states = [(100, ts(9_000)), (101, ts(9_600)), (102, ts(10_000))]
-    assert select_target_state(states, ts(9_700)) == (101, ts(9_600))
-    assert select_target_state(states, ts(8_000)) is None
+    # the manager walks its target back to the newest state at or before
+    # the cutoff: with states every 10 s, 970 s -> 97; 8 s -> none applied
+    def applied(until):
+        server = _ten_second_server(100)
+        manager = ContributionReplicationManager(
+            server=server, spark=None, data_dir=str(tmp_path), out_dir=str(tmp_path),
+            local_state=ReplicationState(90, ""),
+        )
+        done = []
+        manager._process = lambda state: done.append(state.sequence)
+        cutoff = ts(until).replace(tzinfo=dt.timezone.utc)
+        assert manager.update_to_remote_state(process_until=cutoff) == len(done)
+        return done
+
+    assert applied(970) == list(range(91, 98))
+    assert applied(8) == []
 
 
 # --- Waiter (reference utils/Waiter.java, pinned by WaiterTest.java) --------

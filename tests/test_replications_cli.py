@@ -200,14 +200,16 @@ def test_replications_cli_noop_when_caught_up(spark, mirror, tmp_path, capsys):
 
 def test_holdback_logic_dual_stream():
     """R2 holdback wiring (``ReplicationManager.java:57-75``): when the
-    changeset stream is keeping up (lag < 180 s) contributions are held to
-    its timestamp; when it lags badly, contributions run free."""
+    changeset stream is keeping up (lag <= 180 s) contributions are held to
+    its timestamp; when it lags badly, contributions run up to their own
+    remote state. The changeset stream catches up first."""
     calls = {}
 
     class FakeContribs:
         changeset_store = None
 
         def fetch_remote_state(self):
+            calls["order"].append("contributions")
             return ReplicationState(10, "2025-10-22T09:10:00+00:00")
 
         def update_to_remote_state(self, remote, process_until=None):
@@ -215,26 +217,27 @@ def test_holdback_logic_dual_stream():
             return 0
 
     class FakeChangesets:
-        local_state = ReplicationState(5, "2025-10-22T09:09:00+00:00")
+        store = "committed store"
 
         def __init__(self, ts):
             self.server = SimpleNamespace(
                 get_latest_remote_state=lambda: ReplicationState(5, ts)
             )
 
-        def update_to_remote_state(self, state, remote):
-            return state
-
-        def update_unclosed_changesets(self, state, now):
-            return state
+        def catch_up(self, remote, now):
+            calls["order"].append("changesets")
 
     # changeset stream 60 s behind -> holdback to its timestamp
-    run_replication_update(FakeContribs(), FakeChangesets("2025-10-22T09:09:00+00:00"))
+    calls["order"] = []
+    contribs = FakeContribs()
+    run_replication_update(contribs, FakeChangesets("2025-10-22T09:09:00+00:00"))
     assert calls["until"] == datetime(2025, 10, 22, 9, 9, tzinfo=timezone.utc)
+    assert calls["order"] == ["changesets", "contributions"]
+    assert contribs.changeset_store == "committed store"
 
     # changeset stream 10 min behind -> no holdback
     run_replication_update(FakeContribs(), FakeChangesets("2025-10-22T09:00:00+00:00"))
-    assert calls["until"] is None
+    assert calls["until"] == datetime(2025, 10, 22, 9, 10, tzinfo=timezone.utc)
 
 
 REF_FIXTURES = "/root/reference/ohsome-replication-update/src/test/resources/replication"
@@ -345,7 +348,7 @@ def test_changeset_store_recovers_from_interrupted_swap(spark, tmp_path):
     os.rename(store, store + ".old")
     os.makedirs(store + ".tmp", exist_ok=True)
 
-    _changeset_pass(data, root)  # caught up: the pass only recommits
+    _changeset_pass(data, root)  # caught up: the pass only recovers
     ids = {r.id for r in spark.read.parquet(store).select("id").collect()}
     assert ids == {1, 2}
     assert not os.path.exists(store + ".old")
@@ -406,13 +409,9 @@ def handoff_mirror(tmp_path):
     return str(root)
 
 
-def test_bulk_to_incremental_handoff(spark, handoff_mirror, tmp_path, capsys):
-    """`contributions --replication-endpoint` seeds the replication stores
-    and start state from the PBF; a later `replications` run continues
-    seamlessly (docs/CLI.md "Initialize for Replication",
-    Contributions2Parquet.java:109-201)."""
-    from datetime import datetime, timezone
-
+def _write_seed_pbf(tmp_path) -> str:
+    """Nodes 5 (tagged) and 6 and way 20 over them, just before sequence
+    100 of the handoff mirror."""
     from tests.pbf_encoder import encode_block, write_pbf
 
     def ms(iso):
@@ -433,6 +432,15 @@ def test_bulk_to_incremental_handoff(spark, handoff_mirror, tmp_path, capsys):
     ]
     pbf = str(tmp_path / "seed.osh.pbf")
     write_pbf(pbf, [encode_block(dense_nodes=nodes), encode_block(ways=ways)])
+    return pbf
+
+
+def test_bulk_to_incremental_handoff(spark, handoff_mirror, tmp_path, capsys):
+    """`contributions --replication-endpoint` seeds the replication stores
+    and start state from the PBF; a later `replications` run continues
+    seamlessly (docs/CLI.md "Initialize for Replication",
+    Contributions2Parquet.java:109-201)."""
+    pbf = _write_seed_pbf(tmp_path)
 
     out = str(tmp_path / "contribs")
     data = str(tmp_path / "data")
@@ -473,3 +481,118 @@ def test_bulk_to_incremental_handoff(spark, handoff_mirror, tmp_path, capsys):
     peek = json.loads(capsys.readouterr().out)
     assert peek["n/5"]["entity"]["version"] == 2
     assert peek["n/5"]["ways"] == [20]
+
+
+def _column_types(spark, path):
+    # the bulk layout's partition column is not a contribution column
+    return {
+        f.name: f.dataType.simpleString()
+        for f in spark.read.parquet(path).schema.fields
+        if f.name != "layer"
+    }
+
+
+def test_contributions_only_pass_writes_the_bulk_schema(spark, mirror, tmp_path):
+    """Without a changeset stream or a country file, a replication pass
+    still writes the ``changeset`` struct (default records) and an empty
+    ``countries`` array: the same columns and types as ``contributions``."""
+    bulk = str(tmp_path / "bulk")
+    assert main(["contributions", "--pbf", _write_seed_pbf(tmp_path), "--out", bulk]) == 0
+    updates = str(tmp_path / "updates")
+    assert main([
+        "replications", "--data", str(tmp_path / "data"), "--parquet-data", updates,
+        "--endpoint", f"file://{mirror}", "--jcb", "--start-sequence", "100",
+    ]) == 0
+    written = _column_types(spark, os.path.join(updates, "000/000/101.opc.parquet"))
+    assert written == _column_types(spark, bulk)
+    assert "changeset_id" not in written
+
+
+def test_contributions_read_the_committed_changeset_store(
+    spark, mirror, tmp_path, monkeypatch
+):
+    """A dual-stream pass commits the changeset store and its state row
+    before the contribution stream writes anything."""
+    from ohsome_planet_spark.sources import geoparquet
+
+    root, data = str(tmp_path / "changesets"), str(tmp_path / "data")
+    store = os.path.join(data, "changesets")
+    for seq, ids in ((100, []), (101, [11]), (102, [12]), (103, [13]), (104, [])):
+        _publish_changesets(root, seq, ids)
+
+    seen = []
+    real_write = geoparquet.write_contributions
+
+    def spying_write(contribs, path, **kwargs):
+        ids = (
+            {r.id for r in spark.read.parquet(store).select("id").collect()}
+            if os.path.isdir(store) else set()
+        )
+        state_file = os.path.join(data, "changeset_state.txt")
+        state = (
+            ReplicationState.parse(open(state_file).read()).sequence
+            if os.path.exists(state_file) else None
+        )
+        seen.append((ids, state))
+        return real_write(contribs, path, **kwargs)
+
+    monkeypatch.setattr(geoparquet, "write_contributions", spying_write)
+    assert main([
+        "replications", "--data", data, "--parquet-data", str(tmp_path / "out"),
+        "--endpoint", f"file://{mirror}", "--start-sequence", "100",
+        "--replication-changesets", f"file://{root}",
+        "--changeset-start-sequence", "100",
+    ]) == 0
+    # changesets at 09:04 are ahead of contributions at 09:03:30: no holdback
+    assert len(seen) == 3
+    assert all(ids == {11, 12, 13} and state == 104 for ids, state in seen), seen
+
+
+def test_caught_up_changeset_pass_writes_nothing(spark, tmp_path, monkeypatch):
+    """A pass whose changeset stream has not advanced leaves the store and
+    its state row as they are: no parquet write into the store."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    root, data = str(tmp_path / "changesets"), str(tmp_path / "data")
+    store = os.path.join(data, "changesets")
+    _publish_changesets(root, 100, [])
+    _publish_changesets(root, 101, [1, 2])
+    _changeset_pass(data, root)
+    state_before = open(os.path.join(data, "changeset_state.txt")).read()
+
+    writes = []
+    real_parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *args, **kwargs):
+        if path.startswith(store):
+            writes.append(path)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    _changeset_pass(data, root)
+    assert writes == []
+    assert open(os.path.join(data, "changeset_state.txt")).read() == state_before
+    ids = {r.id for r in spark.read.parquet(store).select("id").collect()}
+    assert ids == {1, 2}
+
+
+def test_catch_up_releases_what_each_sequence_staged(spark, mirror, tmp_path):
+    """Each sequence runs in its own run scope, so a catch-up leaves
+    nothing registered in the caller's scope however many it applies."""
+    from ohsome_planet_spark.session import run_scope
+    from ohsome_planet_spark.streaming.manager import ContributionReplicationManager
+
+    data = str(tmp_path / "data")
+    os.makedirs(data)
+    with open(os.path.join(data, "state.txt"), "w") as f:
+        f.write(ReplicationState(100, "").format())
+    manager = ContributionReplicationManager(
+        server=entity_server("local://mirror/", fetch=file_fetch(mirror)),
+        spark=spark,
+        data_dir=data,
+        out_dir=str(tmp_path / "out"),
+    )
+    with run_scope() as scope:
+        assert manager.update_to_remote_state() == 3
+        assert scope.cached == []
+    assert manager.applied == [101, 102, 103]

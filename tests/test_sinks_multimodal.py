@@ -359,3 +359,30 @@ def test_footer_append_geo_is_o_footer(spark, tmp_path, monkeypatch):
     assert after[:footer_start] == data[:footer_start]
     assert read_geo_metadata(f) == geo
     assert pq.read_table(f).column("blob").to_pylist() == blobs
+
+
+def test_geo_post_pass_is_visible_to_pyarrow_readers(spark, tmp_path):
+    """A pyarrow-written input carries an ``ARROW:schema`` key; the post-pass
+    drops it with the footer patch, so pyarrow readers see ``geo``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ohsome_planet_spark.sources import geoparquet
+
+    f = str(tmp_path / "arrow.parquet")
+    bbox = pa.array(
+        [{"xmin": 1.0, "ymin": 2.0, "xmax": 3.0, "ymax": 4.0}],
+        pa.struct([(k, pa.float64()) for k in ("xmin", "ymin", "xmax", "ymax")]),
+    )
+    pq.write_table(
+        pa.table({"osm_id": [1], "bbox": bbox, "geometry_type": ["Point"]}), f
+    )
+    assert b"ARROW:schema" in pq.ParquetFile(f).metadata.metadata
+
+    geoparquet._attach_geo_file(spark, f)
+
+    geo = read_geo_metadata(f)
+    assert geo is not None
+    assert geo["columns"]["geometry"]["bbox"] == [1.0, 2.0, 3.0, 4.0]
+    assert geo["columns"]["geometry"]["geometry_types"] == ["Point"]
+    assert pq.read_table(f).column("osm_id").to_pylist() == [1]
