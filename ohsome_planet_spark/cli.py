@@ -24,7 +24,6 @@ import json
 import os
 import sys
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .session import run_scope
@@ -48,6 +47,9 @@ def cmd_contributions(args) -> int:
     from .sources.geoparquet import write_contributions
     from .sources.pbf import read_pbf
 
+    if args.replication_endpoint and not args.data:
+        print("--replication-endpoint requires --data", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="contributions")
     # S15: normalize s3:// -> s3a:// and map the reference's S3_* env
     # contract onto fs.s3a.* before any write (S3OutputLocationProvider)
@@ -119,66 +121,23 @@ def cmd_contributions(args) -> int:
 
     if args.replication_endpoint:
         # bulk -> incremental handoff ("Initialize for Replication",
-        # docs/CLI.md:74-127, Contributions2Parquet.java:109-201): seed the
-        # replication history tables from the PBF entity streams and
-        # resolve the start sequence from the endpoint by the extract's
-        # max entity timestamp.
-        rc = _init_replication(spark, entities, args)
-        if rc != 0:
-            return rc
-    return 0
+        # docs/CLI.md:74-127): the manager seeds its store from the one
+        # decode and starts it at the extract's newest entity
+        from .streaming.manager import ContributionReplicationManager
+        from .streaming.server import entity_server, server_for
 
-
-def _init_replication(spark, entities, args) -> int:
-    """Seed ``<data>/nodes``+``<data>/ways`` (the RocksDB-store analog) and
-    write the starting ``state.txt`` (``Contributions2Parquet.java:
-    132-201``, ``Server.findStartStateByTimestamp``)."""
-    from datetime import timezone
-
-    from .streaming.manager import NODE_HISTORY_SCHEMA, WAY_HISTORY_SCHEMA
-    from .streaming.server import entity_server, server_for
-
-    if not args.data:
-        print("--replication-endpoint requires --data", file=sys.stderr)
-        return 2
-    os.makedirs(args.data, exist_ok=True)
-    for sub in ("nodes", "ways"):
-        p = os.path.join(args.data, sub)
-        if os.path.isdir(p) and os.listdir(p):
-            # Contributions2Parquet.java:137-141
-            print("replication directory is not empty!", file=sys.stderr)
-            return 1
-
-    server = server_for(args.replication_endpoint, entity_server)
-
-    # Resolve the start state BEFORE writing the history tables: an empty
-    # extract (max_ts None) or an unreachable endpoint must not leave a
-    # half-seeded <data>/nodes that makes every rerun abort with
-    # "replication directory is not empty!" (round-6 ADVICE, low).
-    max_ts = entities.agg(F.max("ts")).first()[0]
-    if max_ts is None:
-        print("extract contains no entities; cannot initialize replication",
-              file=sys.stderr)
-        return 1
-    latest = server.get_latest_remote_state()
-    start = server.find_start_state_by_timestamp(
-        max_ts.replace(tzinfo=timezone.utc), latest
-    )
-    state_text = start.format()
-
-    for kind, sub, schema in (
-        ("node", "nodes", NODE_HISTORY_SCHEMA),
-        ("way", "ways", WAY_HISTORY_SCHEMA),
-    ):
-        cols = spark.createDataFrame([], schema).columns
-        entities.filter(f"osm_type = '{kind}'").select(*cols).write.parquet(
-            os.path.join(args.data, sub)
+        manager = ContributionReplicationManager(
+            spark=spark,
+            data_dir=args.data,
+            server=server_for(args.replication_endpoint, entity_server),
+            out_dir=args.out,
         )
-    with open(os.path.join(args.data, "state.txt"), "w") as f:
-        f.write(state_text)
-    with open(os.path.join(args.out, "state.txt"), "w") as f:
-        f.write(state_text)
-    print(f"replication initialized at sequence {start.sequence}")
+        try:
+            start = manager.seed(entities)
+        except ValueError as e:
+            print(e, file=sys.stderr)
+            return 1
+        print(f"replication initialized at sequence {start.sequence}")
     return 0
 
 
@@ -260,7 +219,6 @@ def cmd_replications(args) -> int:
         ContributionReplicationManager,
         run_replication_update,
     )
-    from .streaming.replication import ReplicationState
     from .streaming.server import changeset_server, entity_server, server_for
 
     if args.just_changesets and args.just_contributions:
@@ -270,25 +228,20 @@ def cmd_replications(args) -> int:
         )
 
     spark = get_spark(app_name="replications")
-    os.makedirs(args.data, exist_ok=True)
 
     contribution_manager = None
     if not args.just_changesets:
-        state_path = os.path.join(args.data, "state.txt")
-        if not os.path.exists(state_path) and args.start_sequence is not None:
-            with open(state_path, "w") as f:
-                f.write(ReplicationState(args.start_sequence, "").format())
         contribution_manager = ContributionReplicationManager(
-            server=server_for(args.endpoint, entity_server),
             spark=spark,
             data_dir=args.data,
-            out_dir=args.parquet_data or os.path.join(args.data, "updates"),
+            server=server_for(args.endpoint, entity_server),
+            out_dir=args.parquet_data,
             max_size=args.size,
             country_features=(
                 _load_country_csv(args.country_file) if args.country_file else None
             ),
         )
-        contribution_manager.initialize_local_state()
+        contribution_manager.load(args.start_sequence)
 
     changeset_manager = None
     if not args.just_contributions:
@@ -397,70 +350,22 @@ def cmd_fileinfo(args) -> int:
 
 
 def cmd_replication_store(args) -> int:
-    """Peek into the replication state tables for individual OSM elements
+    """Peek into the replication store for individual OSM elements
     (``debug replication-store``, ``UpdateStoreRocksDb.query:36-57`` /
-    ``docs/CLI.md §Inspect Replication Store``).
-
-    The reference's RocksDB point-lookups become predicate-pushdown parquet
-    scans over the manager's history tables (``<data>/nodes``, ``<data>/
-    ways``): latest version per element plus derived back-references
-    (ways containing the node; relations containing the member, when a
-    relations table exists). ``osm_id = N`` prunes row groups via parquet
-    min/max stats, so a lookup touches only matching row groups — the
-    distributed analog of the keyed store read, no full scan.
-    """
+    ``docs/CLI.md §Inspect Replication Store``): each element's latest
+    stored version, and for a node the ways that reference it, as
+    :meth:`ContributionReplicationManager.lookup` answers them."""
     from .session import get_spark
-    from .streaming.manager import (
-        NODE_HISTORY_SCHEMA,
-        WAY_HISTORY_SCHEMA,
-        _history_or_empty,
-    )
+    from .streaming.manager import ContributionReplicationManager
 
-    spark = get_spark(app_name="replication-store")
-    nodes = _history_or_empty(
-        spark, os.path.join(args.data, "nodes"), NODE_HISTORY_SCHEMA
+    manager = ContributionReplicationManager(
+        spark=get_spark(app_name="replication-store"), data_dir=args.data
     )
-    ways = _history_or_empty(
-        spark, os.path.join(args.data, "ways"), WAY_HISTORY_SCHEMA
-    )
-
-    def latest(df, osm_id):
-        rows = (
-            df.filter(F.col("osm_id") == osm_id)
-            .orderBy(F.desc("version"), F.desc("ts"))
-            .limit(1)
-            .collect()
-        )
-        if not rows:
-            return None
-        d = rows[0].asDict(recursive=True)
-        if d.get("ts") is not None:
-            d["ts"] = d["ts"].isoformat()
-        return d
-
     out = {}
     for param in args.elements:
         etype, _, sid = param.partition("/")
-        osm_id = int(sid)
-        entry: dict = {}
-        if etype.startswith("n"):
-            entry["entity"] = latest(nodes, osm_id)
-            # back-references, derived: latest visible way versions whose
-            # refs contain the node (the NODE_WAY merge-operator store)
-            w = W.partitionBy("osm_id").orderBy(F.desc("version"))
-            entry["ways"] = sorted(
-                r.osm_id
-                for r in ways.filter(F.array_contains("refs", osm_id))
-                .withColumn("_rn", F.row_number().over(w))
-                .filter("_rn = 1 AND visible")
-                .select("osm_id")
-                .collect()
-            )
-        elif etype.startswith("w"):
-            entry["entity"] = latest(ways, osm_id)
-        else:
-            entry["entity"] = None  # relation history not kept by the manager
-        out[param] = entry
+        kind = {"n": "node", "w": "way"}.get(etype[:1], "relation")
+        out[param] = manager.lookup(kind, int(sid))
     print(json.dumps(out, indent=2, default=str))
     return 0
 
@@ -1012,7 +917,10 @@ def main(argv=None) -> int:
     r.add_argument("--jcb", "--just-contributions", dest="just_contributions", action="store_true")
     r.add_argument("--continue", dest="continuous", action="store_true")
     r.add_argument("--wait-time", type=float, default=90.0)
-    r.add_argument("--start-sequence", type=int, help="seed <data>/state.txt if missing")
+    r.add_argument(
+        "--start-sequence", type=int,
+        help="contribution sequence to start from when <data> holds no state yet",
+    )
     r.add_argument("--changeset-start-sequence", type=int)
     r.set_defaults(fn=cmd_replications)
 

@@ -31,9 +31,12 @@ side is co-located and the merge is shuffle-free on the big side.
 
 On disk the store is ``<data>/changesets`` (parquet) plus its state row
 ``<data>/changeset_state.txt``, both owned by :class:`ChangesetStateManager`:
-a pass that advanced the stream commits the store before the contribution
-stream reads it, like the reference's ``ReplicationManager`` commits the
-changeset database first (``ReplicationManager.java:57-75``).
+``load`` starts the stream from the state row, ``--changeset-start-sequence``
+or, like the reference, the newest changeset already in the store (the
+same ``load(start_sequence)`` start as the contribution stream's manager),
+and a pass that advanced the stream commits the store before the
+contribution stream reads it, like the reference's ``ReplicationManager``
+commits the changeset database first (``ReplicationManager.java:57-75``).
 """
 
 from __future__ import annotations
@@ -249,19 +252,32 @@ class ChangesetStateManager:
         return os.path.join(self.data_dir, "changeset_state.txt")
 
     def load(self, start_sequence: int | None = None) -> None:
-        """Repair a crashed commit, then read the state row
-        (``changeset_state.txt``, else ``start_sequence``) and the
-        committed store (an empty one before the first commit)."""
+        """Repair a crashed commit, read the committed store (an empty one
+        before the first commit), then the state row: ``changeset_state.txt``,
+        else ``start_sequence`` (``--changeset-start-sequence``), else the
+        published state the store's newest changeset falls in
+        (``ChangesetStateManager.java:44-57``). An empty store with neither
+        raises ``ValueError``."""
         self._recover()
+        if os.path.isdir(self._store_path):
+            self.store = self.spark.read.parquet(self._store_path)
+        else:
+            self.store = self.spark.createDataFrame([], CHANGESET_STORE_SCHEMA)
         if os.path.exists(self._state_path):
             with open(self._state_path) as f:
                 self.local_state = ReplicationState.parse(f.read())
         elif start_sequence is not None:
             self.local_state = ReplicationState(start_sequence, "")
-        if os.path.isdir(self._store_path):
-            self.store = self.spark.read.parquet(self._store_path)
         else:
-            self.store = self.spark.createDataFrame([], CHANGESET_STORE_SCHEMA)
+            newest = self.store.agg(F.max("created_at")).first()[0]
+            if newest is None:
+                raise ValueError(
+                    "empty changeset store and no state: run the bulk changeset "
+                    "load first (reference: 'run changeset command first')"
+                )
+            self.local_state = self.server.find_start_state_by_timestamp(
+                newest, self.server.get_latest_remote_state()
+            )
 
     def catch_up(self, remote: ReplicationState, now: datetime) -> None:
         """One pass of the stream: apply (local, remote], reconcile stale
@@ -305,23 +321,6 @@ class ChangesetStateManager:
             if os.path.isdir(leftover):
                 shutil.rmtree(leftover)
 
-    # -- state bootstrap (ChangesetStateManager.java:44-57) ----------------
-
-    def initialize_local_state(self, max_local_timestamp: datetime | None) -> None:
-        """If no persisted state row exists, estimate the starting sequence
-        from the newest changeset already in the store."""
-        if self.local_state is not None:
-            return
-        if max_local_timestamp is None:
-            raise ValueError(
-                "empty changeset store and no state: run the bulk changeset "
-                "load first (reference: 'run changeset command first')"
-            )
-        remote = self.server.get_latest_remote_state()
-        self.local_state = self.server.find_start_state_by_timestamp(
-            max_local_timestamp, remote
-        )
-
     # -- catch-up loop (ChangesetStateManager.java:79-115) -----------------
 
     def update_to_remote_state(
@@ -331,7 +330,7 @@ class ChangesetStateManager:
         ``batch_size``; each batch is one upsert-merge and one state
         advance. Returns the new store DataFrame."""
         if self.local_state is None:
-            raise ValueError("initialize_local_state first")
+            raise ValueError("no local state: load first")
         remote = remote or self.server.get_latest_remote_state()
         first = self.local_state.sequence + 1 + self.server.replication_offset
         steps = remote.sequence - self.local_state.sequence

@@ -27,9 +27,16 @@ idempotent. Each sequence runs in its own run scope, so what it staged is
 released once its files are written, however long a ``--continue`` run
 goes on.
 
+:class:`ContributionReplicationManager` is the one owner of that store:
+``seed`` writes it from a bulk extract (the bulk → incremental handoff),
+``load`` reads or starts its state row ``<data>/state.txt``, each
+sequence appends to the tables, and ``lookup`` answers the
+``replication-store`` peek with the R4/J7 rules the update uses.
+
 A pass (:func:`run_replication_update`) catches the changeset stream up
 and commits its store first (``ChangesetStateManager`` owns the store and
 its state row); the contribution stream then joins the committed store.
+Both managers start the same way: ``load(start_sequence)``.
 """
 
 from __future__ import annotations
@@ -47,6 +54,8 @@ from ..session import run_scope
 from .replication import (
     IncrementalUpdater,
     ReplicationState,
+    latest_state,
+    node_way_backrefs,
     process_until,
     sequence_path,
 )
@@ -76,46 +85,117 @@ def _history_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
 
 @dataclass
 class ContributionReplicationManager:
-    """Drives the contribution stream of the ``replications`` command.
+    """Drives the contribution stream of the ``replications`` command and
+    owns its store in ``data_dir``: the history tables ``nodes``/``ways``
+    and the state row ``state.txt``.
 
-    ``data_dir`` is the working directory (local state + history tables);
+    ``server`` is the entity stream (seeding and catch-up need it).
     ``out_dir`` is where per-sequence contribution parquet + published
-    state files land (``--parquet-data``). ``changeset_store`` is the
-    committed changeset store the output is enriched from (None: every
-    row gets the default changeset record).
+    state files land (``--parquet-data``, default ``<data>/updates``).
+    ``changeset_store`` is the committed changeset store the output is
+    enriched from (None: every row gets the default changeset record).
     """
 
-    server: Server
     spark: SparkSession
     data_dir: str
-    out_dir: str
+    server: Server | None = None
+    out_dir: str | None = None
     max_size: int = 0  # 0 = unlimited, like the reference's --size
     country_features: list | None = None
     changeset_store: DataFrame | None = None
     local_state: ReplicationState | None = None
     applied: list[int] = field(default_factory=list)
 
-    # -- state files (ContributionStateManager.java:80-114) ----------------
+    def __post_init__(self) -> None:
+        if self.out_dir is None:
+            self.out_dir = os.path.join(self.data_dir, "updates")
 
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self.data_dir, "state.txt")
+    # -- the store on disk --------------------------------------------------
 
-    def initialize_local_state(self) -> None:
-        if self.local_state is not None:
-            return
-        if not os.path.exists(self._state_path):
+    def _path(self, name: str) -> str:
+        return os.path.join(self.data_dir, name)
+
+    def _history(self) -> tuple[DataFrame, DataFrame]:
+        """The node and way history tables (empty before the first write)."""
+        return (
+            _history_or_empty(self.spark, self._path("nodes"), NODE_HISTORY_SCHEMA),
+            _history_or_empty(self.spark, self._path("ways"), WAY_HISTORY_SCHEMA),
+        )
+
+    def seed(self, entities: DataFrame) -> ReplicationState:
+        """The bulk → incremental handoff (``Contributions2Parquet.java:
+        109-201``): the history tables from a bulk extract's entities, then
+        the state row (also published in ``out_dir``) at the greatest state
+        not after the extract's newest entity. ``ValueError`` for tables
+        already there (``:137-141``), an extract with no entities or no
+        state that old; the start is resolved before any write, so a
+        refusal leaves no half-seeded store."""
+        for sub in ("nodes", "ways"):
+            if os.path.isdir(self._path(sub)) and os.listdir(self._path(sub)):
+                raise ValueError("replication directory is not empty!")
+        max_ts = entities.agg(F.max("ts")).first()[0]
+        if max_ts is None:
+            raise ValueError("extract contains no entities; cannot initialize replication")
+        start = self.server.find_start_state_by_timestamp(
+            max_ts.replace(tzinfo=timezone.utc), self.fetch_remote_state()
+        )
+        for kind, history in zip(("node", "way"), self._history()):
+            entities.filter(F.col("osm_type") == kind).select(
+                *history.columns
+            ).write.parquet(self._path(kind + "s"))
+        self._advance_local_state(start)
+        with open(os.path.join(self.out_dir, "state.txt"), "w") as f:
+            f.write(start.format())
+        return start
+
+    def lookup(self, osm_type: str, osm_id: int) -> dict:
+        """One element as the store holds it (``UpdateStoreRocksDb.query:
+        36-57``): its latest version (R4; a tombstone once deleted) and, for
+        a node, the ways whose latest version is visible and references it
+        (J7), the rules :class:`IncrementalUpdater` applies. The ``osm_id``
+        filter comes first, so a lookup reads only the row groups whose
+        stats admit the id. Relation history is not kept (entity None)."""
+        if osm_type == "relation":
+            return {"entity": None}
+        nodes, ways = self._history()
+        row = latest_state(
+            (nodes if osm_type == "node" else ways).filter(F.col("osm_id") == osm_id)
+        ).first()
+        entry = {
+            "entity": None
+            if row is None
+            else {**row.asDict(recursive=True), "ts": row.ts.isoformat()}
+        }
+        if osm_type == "node":
+            # the latest version of every way that ever referenced the node
+            # decides, including ones that since dropped it or were deleted
+            touching = ways.filter(F.array_contains("refs", osm_id)).select("osm_id")
+            backrefs = node_way_backrefs(
+                latest_state(ways.join(touching, "osm_id", "left_semi"))
+            ).filter(F.col("node_id") == osm_id)
+            entry["ways"] = sorted(r.way_id for r in backrefs.collect())
+        return entry
+
+    # -- state row (ContributionStateManager.java:80-114) ------------------
+
+    def load(self, start_sequence: int | None = None) -> None:
+        """Read the state row; without one, start it at ``start_sequence``
+        (``--start-sequence``)."""
+        if os.path.exists(self._path("state.txt")):
+            with open(self._path("state.txt")) as f:
+                self.local_state = ReplicationState.parse(f.read())
+        elif start_sequence is not None:
+            self._advance_local_state(ReplicationState(start_sequence, ""))
+        else:
             raise FileNotFoundError(
-                f"{self._state_path} missing: seed it with the sequence the "
-                "bulk contributions run ended at (reference: state.txt is "
+                f"{self._path('state.txt')} missing: seed it with the sequence "
+                "the bulk contributions run ended at (reference: state.txt is "
                 "written by the initial planet import)"
             )
-        with open(self._state_path) as f:
-            self.local_state = ReplicationState.parse(f.read())
 
     def _advance_local_state(self, state: ReplicationState) -> None:
         os.makedirs(self.data_dir, exist_ok=True)
-        with open(self._state_path, "w") as f:
+        with open(self._path("state.txt"), "w") as f:
             f.write(state.format())
         self.local_state = state
 
@@ -134,7 +214,7 @@ class ContributionReplicationManager:
         the target walks back from the remote state until its timestamp
         respects the cutoff (``updateToRemoteState(Instant, …)``)."""
         if self.local_state is None:
-            self.initialize_local_state()
+            self.load()
         target = remote or self.fetch_remote_state()
         if process_until is not None:
             while (
@@ -162,12 +242,7 @@ class ContributionReplicationManager:
         from ..sources.osmxml import osc_batch
 
         seq = state.sequence
-        nodes, ways = (os.path.join(self.data_dir, sub) for sub in ("nodes", "ways"))
-        updater = IncrementalUpdater(
-            self.spark,
-            _history_or_empty(self.spark, nodes, NODE_HISTORY_SCHEMA),
-            _history_or_empty(self.spark, ways, WAY_HISTORY_SCHEMA),
-        )
+        updater = IncrementalUpdater(self.spark, *self._history())
         node_contribs, way_contribs = updater.apply_batch(
             osc_batch(self.spark, self.server.get_replication_file(seq))
         )
@@ -196,8 +271,8 @@ class ContributionReplicationManager:
         # durable history append (the RocksDB-commit analog,
         # ``updater.updateStore()``) — O(|diff|) rows; the next sequence
         # plans against the re-read table roots, not this lineage
-        new_nodes.write.mode("append").parquet(nodes)
-        new_ways.write.mode("append").parquet(ways)
+        new_nodes.write.mode("append").parquet(self._path("nodes"))
+        new_ways.write.mode("append").parquet(self._path("ways"))
 
         self._publish_state(state, out_path)
         self._advance_local_state(state)

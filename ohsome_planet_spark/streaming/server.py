@@ -17,7 +17,8 @@ callers treat as the end of the stream, not a transient fault.
 Timestamp→sequence discovery ports the pyosmium algorithm the reference
 vendors (``Server.java:190-275``): probe the earliest available state,
 then interpolate on elapsed-seconds-per-sequence until the bracket
-collapses.
+collapses. A target older than every available state fails loudly
+instead of starting after it.
 """
 
 from __future__ import annotations
@@ -175,12 +176,19 @@ class Server:
     def find_start_state_by_timestamp(
         self, target: datetime, remote_state: ReplicationState
     ) -> ReplicationState:
-        """Greatest published state whose timestamp is ≤ ``target``."""
+        """Greatest published state whose timestamp is ≤ ``target``.
+        Raises ``ValueError`` when every available state is newer: a later
+        start would silently skip the diffs in between."""
         if target.tzinfo is None:
             target = target.replace(tzinfo=timezone.utc)
         if self._state_ts(remote_state) <= target:
             return remote_state
         lower, upper = self._states_around(remote_state, target)
+        if self._state_ts(lower) > target:
+            raise ValueError(
+                f"no replication state at or before {target.isoformat()}: the "
+                f"earliest available is sequence {lower.sequence} ({lower.timestamp})"
+            )
         if self._state_ts(lower) == target:
             return lower
         while True:
@@ -210,13 +218,19 @@ class Server:
 
     def _earliest_available(self, upper: ReplicationState) -> ReplicationState:
         """Probe from sequence 0 upward; on a gap (expired state file),
-        bisect toward the known-good upper (``Server.java:247-263``)."""
+        bisect toward the known-good upper (``Server.java:247-263``). Once
+        the midpoint cannot move past the last probe, nothing below
+        ``upper`` is available and ``upper`` is returned (pyosmium's
+        ``newid <= lowerid`` rule)."""
         seq = 0
         while True:
             try:
                 return self.get_remote_state(seq + self.replication_offset)
             except FileNotFoundError:
-                seq = (upper.sequence + seq) // 2
+                mid = (upper.sequence + seq) // 2
+                if mid <= seq:
+                    return upper
+                seq = mid
 
     def _estimate_seq(
         self, target: datetime, lower: ReplicationState, upper: ReplicationState

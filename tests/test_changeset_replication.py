@@ -310,23 +310,30 @@ def test_update_unclosed_batches_of_100(spark):
     assert out.filter("open").count() == 0
 
 
-def test_initialize_local_state_estimates_from_timestamp(spark):
+def test_initialize_local_state_estimates_from_timestamp(spark, tmp_path):
+    """Without a state row or a start sequence, ``load`` starts at the
+    published state the store's newest changeset falls in."""
     files = {}
     for s in range(0, 61):
         iso = datetime(2025, 10, 1, s // 60, s % 60, tzinfo=timezone.utc).isoformat()
         files[sequence_path(s) + ".state.txt"] = _state_file(s, iso)
     files["state.txt"] = _state_file(60, datetime(2025, 10, 1, 1, 0, tzinfo=timezone.utc).isoformat())
     srv = entity_server("https://x/", fetch=_MapTransport(files))
-    mgr = ChangesetStateManager(srv, spark)
-    mgr.initialize_local_state(datetime(2025, 10, 1, 0, 42, 30, tzinfo=timezone.utc))
+    newest = _row(1, open=False, minute=42)
+    newest["created_at"] = datetime(2025, 10, 1, 0, 42, 30)
+    _df(spark, [_row(2, open=False, minute=7), newest]).write.parquet(
+        str(tmp_path / "changesets")
+    )
+    mgr = ChangesetStateManager(srv, spark, data_dir=str(tmp_path))
+    mgr.load()
     assert mgr.local_state.sequence == 42
 
 
-def test_initialize_requires_bulk_load_first(spark):
+def test_initialize_requires_bulk_load_first(spark, tmp_path):
     srv = entity_server("https://x/", fetch=_MapTransport({}))
-    mgr = ChangesetStateManager(srv, spark)
+    mgr = ChangesetStateManager(srv, spark, data_dir=str(tmp_path))
     with pytest.raises(ValueError, match="changeset command"):
-        mgr.initialize_local_state(None)
+        mgr.load()
 
 
 # --- S16 JDBC drop-in (sources/jdbc.py) --------------------------------------

@@ -22,6 +22,7 @@ from ohsome_planet_spark.streaming.replication import (
     sequence_path,
 )
 from ohsome_planet_spark.schemas import NODE_SCHEMA, WAY_SCHEMA
+from ohsome_planet_spark.streaming.manager import NODE_HISTORY_SCHEMA, WAY_HISTORY_SCHEMA
 
 
 def ts(sec):
@@ -192,9 +193,10 @@ def test_sequence_path():
     assert sequence_path(42) == "000/000/042"
 
 
-def _ten_second_server(latest: int):
+def _ten_second_server(latest: int, earliest: int = 0, fetches: list | None = None):
     """An entity server whose state ``seq`` carries timestamp ``seq * 10``
-    seconds, published up to ``latest``."""
+    seconds, published from ``earliest`` up to ``latest``. ``fetches``
+    records each request and stops a search that runs past 100 of them."""
     from ohsome_planet_spark.streaming.server import entity_server
 
     def state(seq):
@@ -202,15 +204,20 @@ def _ten_second_server(latest: int):
         return f"sequenceNumber={seq}\ntimestamp={stamp}\n".encode()
 
     def fetch(url):
+        if fetches is not None:
+            fetches.append(url)
+            if len(fetches) > 100:
+                raise RuntimeError("unbounded search")
         rel = url[len("local://mirror/"):]
         if rel == "state.txt":
             return state(latest)
         seq = int(rel[: -len(".state.txt")].replace("/", ""))
-        if not 0 <= seq <= latest:
+        if not earliest <= seq <= latest:
             raise FileNotFoundError(url)
         return state(seq)
 
-    return entity_server("local://mirror/", fetch=fetch)
+    # one attempt: the fetch cap must end the search, not be retried
+    return entity_server("local://mirror/", fetch=fetch, max_attempts=1)
 
 
 def test_bisection():
@@ -224,6 +231,18 @@ def test_bisection():
     assert find(555) == 55
     assert find(9999) == 100
     assert find(0) == 0
+
+
+@pytest.mark.parametrize("earliest", [100, 50])
+def test_start_discovery_fails_when_older_states_expired(earliest):
+    """A target older than every state the server still keeps ends the
+    gap bisection within a few fetches and raises, naming the target and
+    the earliest available sequence, instead of starting after it."""
+    fetches = []
+    server = _ten_second_server(100, earliest=earliest, fetches=fetches)
+    with pytest.raises(ValueError, match=f"earliest available is sequence {earliest} "):
+        server.find_start_state_by_timestamp(ts(5), server.get_latest_remote_state())
+    assert len(fetches) <= 20, fetches
 
 
 def test_changeset_lag_holdback(tmp_path):
@@ -314,3 +333,105 @@ def test_waiter_sleep_interruptible():
     w = Waiter(shutdown_event=stop, clock=lambda: None)
     with pytest.raises(InterruptedError):
         w.sleep(5, "test")
+
+
+# --- relation support in the IncrementalUpdater: J6 filter on relation rows,
+# J7 dirty propagation node -> way -> relation, R3 relation rebuild ---------
+
+REL_HISTORY_SCHEMA = (
+    "osm_type string, osm_id bigint, version int, ts timestamp,"
+    " changeset bigint, user_id bigint, user_name string, visible boolean,"
+    " tags map<string,string>,"
+    " members array<struct<type:string,id:bigint,role:string>>"
+)
+
+
+def _mk_node(nid, ver, ts, lon, lat, cs=1):
+    import datetime as dt
+
+    return (
+        "node", nid, ver, dt.datetime.fromtimestamp(ts, dt.timezone.utc)
+        .replace(tzinfo=None), cs, 7, "u7", True, {}, lon, lat,
+    )
+
+
+class TestIncrementalRelations:
+    @pytest.fixture()
+    def seeded(self, spark):
+        import datetime as dt
+
+        t0 = 1_700_000_000
+
+        def d(ts):
+            return dt.datetime.fromtimestamp(ts, dt.timezone.utc).replace(
+                tzinfo=None
+            )
+
+        nodes = spark.createDataFrame(
+            [
+                _mk_node(1, 1, t0, 0.0, 0.0),
+                _mk_node(2, 1, t0, 1.0, 0.0),
+                _mk_node(3, 1, t0, 1.0, 1.0),
+                _mk_node(4, 1, t0, 0.0, 1.0),
+            ],
+            NODE_HISTORY_SCHEMA,
+        )
+        ways = spark.createDataFrame(
+            [(
+                "way", 100, 1, d(t0 + 10), 2, 7, "u7", True,
+                {"building": "yes"}, [1, 2, 3, 4, 1],
+            )],
+            WAY_HISTORY_SCHEMA,
+        )
+        rels = spark.createDataFrame(
+            [(
+                "relation", 900, 1, d(t0 + 20), 3, 7, "u7", True,
+                {"type": "multipolygon", "landuse": "forest"},
+                [{"type": "way", "id": 100, "role": "outer"}],
+            )],
+            REL_HISTORY_SCHEMA,
+        )
+        return nodes, ways, rels, t0
+
+    def test_node_move_propagates_to_relation(self, spark, seeded):
+        from ohsome_planet_spark.streaming.replication import IncrementalUpdater
+
+        nodes, ways, rels, t0 = seeded
+        upd = IncrementalUpdater(spark, nodes, ways, rel_history=rels)
+        batch = spark.createDataFrame(
+            [_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9)], NODE_HISTORY_SCHEMA
+        )
+        n_c, w_c, r_c = upd.apply_batch(batch)
+        # the relation was NOT in the batch but its member way's node moved:
+        # J7 must mark it dirty and R3 rebuild it with a minor version
+        rrows = r_c.orderBy("valid_from").collect()
+        assert [r.osm_id for r in rrows] == [900, 900]
+        assert [r.osm_minor_version for r in rrows] == [0, 1]
+        assert [r.osm_edits for r in rrows] == [1, 2]
+        wrows = w_c.orderBy("valid_from").collect()
+        assert [w.osm_minor_version for w in wrows] == [0, 1]
+        # affected sets exposed for the delete-insert merge
+        aff_n, aff_w, aff_r = upd.last_affected
+        assert [r.osm_id for r in aff_r.collect()] == [900]
+
+    def test_relation_version_replay_dropped(self, spark, seeded):
+        from ohsome_planet_spark.streaming.replication import IncrementalUpdater
+
+        nodes, ways, rels, t0 = seeded
+        upd = IncrementalUpdater(spark, nodes, ways, rel_history=rels)
+        # replay of the stored relation v1 -> J6 drops it; nothing dirty
+        replay = rels
+        n_c, w_c, r_c = upd.apply_batch(replay)
+        assert r_c.count() == 0
+        assert upd.rel_history.count() == 1  # history unchanged
+
+    def test_two_tuple_contract_without_relations(self, spark, seeded):
+        from ohsome_planet_spark.streaming.replication import IncrementalUpdater
+
+        nodes, ways, _, t0 = seeded
+        upd = IncrementalUpdater(spark, nodes, ways)
+        batch = spark.createDataFrame(
+            [_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9)], NODE_HISTORY_SCHEMA
+        )
+        out = upd.apply_batch(batch)
+        assert len(out) == 2  # backward-compatible return shape

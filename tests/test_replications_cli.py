@@ -596,3 +596,116 @@ def test_catch_up_releases_what_each_sequence_staged(spark, mirror, tmp_path):
         assert manager.update_to_remote_state() == 3
         assert scope.cached == []
     assert manager.applied == [101, 102, 103]
+
+
+def test_replication_store_peek_follows_each_ways_latest_version(spark, tmp_path, capsys):
+    """A node's back-references are the ways whose latest version is
+    visible and still references it (J7, as the update derives them): a
+    way that dropped the node or was deleted no longer counts."""
+    from ohsome_planet_spark.streaming.manager import (
+        NODE_HISTORY_SCHEMA,
+        WAY_HISTORY_SCHEMA,
+    )
+
+    data = str(tmp_path / "data")
+    t = datetime(2025, 10, 22, 9, 0)
+
+    def way(wid, version, refs, visible=True):
+        tags = {"highway": "residential"} if visible else {}
+        return ("way", wid, version, t.replace(minute=version), 1, 1, "One",
+                visible, tags, refs)
+
+    spark.createDataFrame(
+        [("node", n, 1, t, 1, 1, "One", True, {}, 1.0, float(n)) for n in (1, 2, 3)],
+        NODE_HISTORY_SCHEMA,
+    ).write.parquet(os.path.join(data, "nodes"))
+    spark.createDataFrame(
+        [
+            way(10, 1, [1, 2]), way(10, 2, [2, 3]),  # v2 drops node 1
+            way(11, 1, [1, 2]), way(11, 2, [], visible=False),  # v2 deletes it
+        ],
+        WAY_HISTORY_SCHEMA,
+    ).write.parquet(os.path.join(data, "ways"))
+
+    assert main(["replication-store", "--data", data, "n/1", "n/2", "w/11"]) == 0
+    out = json.loads(capsys.readouterr().out)
+    assert out["n/1"]["ways"] == []
+    assert out["n/2"]["ways"] == [10]
+    assert out["w/11"]["entity"]["version"] == 2
+    assert out["w/11"]["entity"]["visible"] is False
+
+
+def _dual_stream_argv(data, tmp_path, mirror, root):
+    return [
+        "replications", "--data", data, "--parquet-data", str(tmp_path / "out"),
+        "--endpoint", f"file://{mirror}", "--start-sequence", "100",
+        "--replication-changesets", f"file://{root}",
+    ]
+
+
+def test_dual_stream_pass_starts_changesets_from_the_store(spark, mirror, tmp_path, capsys):
+    """Without ``changeset_state.txt`` or ``--changeset-start-sequence``, a
+    dual-stream pass starts the changeset stream at the published state its
+    store's newest changeset falls in (``ChangesetStateManager.java:44-57``)."""
+    from ohsome_planet_spark.streaming.changesets import CHANGESET_STORE_SCHEMA
+
+    root, data = str(tmp_path / "changesets"), str(tmp_path / "data")
+    for seq, ids in ((100, []), (101, [11]), (102, [12]), (103, [13]), (104, [])):
+        _publish_changesets(root, seq, ids)
+    newest = datetime(2025, 10, 22, 9, 2)  # the timestamp of state 102
+    spark.createDataFrame(
+        [(10, 1, newest, newest, False, "One", {}, [], 1.0, 1.0, 2.0, 2.0, None)],
+        CHANGESET_STORE_SCHEMA,
+    ).write.parquet(os.path.join(data, "changesets"))
+
+    assert main(_dual_stream_argv(data, tmp_path, mirror, root)) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["changeset_state"] == 104
+    assert report["applied_sequences"] == [101, 102, 103]
+    # the stream started at 102: the minutes up to it (11, 12) were skipped
+    store = spark.read.parquet(os.path.join(data, "changesets"))
+    assert {r.id for r in store.select("id").collect()} == {10, 13}
+
+
+def test_dual_stream_pass_without_changeset_state_needs_a_store(spark, mirror, tmp_path):
+    root, data = str(tmp_path / "changesets"), str(tmp_path / "data")
+    for seq, ids in ((100, []), (101, [11])):
+        _publish_changesets(root, seq, ids)
+    with pytest.raises(ValueError, match="run the bulk changeset load first"):
+        main(_dual_stream_argv(data, tmp_path, mirror, root))
+
+
+def test_seeding_requires_data(tmp_path):
+    assert main([
+        "contributions", "--pbf", str(tmp_path / "missing.osh.pbf"),
+        "--out", str(tmp_path / "out"), "--replication-endpoint", "file:///nowhere",
+    ]) == 2
+
+
+def test_seeding_refuses_a_non_empty_store(spark, handoff_mirror, tmp_path, capsys):
+    """``Contributions2Parquet.java:137-141``: a ``<data>`` that already
+    holds history is left exactly as it was."""
+    data, out = tmp_path / "data", str(tmp_path / "contribs")
+    (data / "nodes").mkdir(parents=True)
+    (data / "nodes" / "part-0.parquet").write_bytes(b"kept")
+    assert main([
+        "contributions", "--pbf", _write_seed_pbf(tmp_path), "--out", out,
+        "--data", str(data), "--replication-endpoint", f"file://{handoff_mirror}",
+    ]) == 1
+    assert "replication directory is not empty!" in capsys.readouterr().err
+    assert os.listdir(data) == ["nodes"]
+    assert (data / "nodes" / "part-0.parquet").read_bytes() == b"kept"
+    assert not os.path.exists(os.path.join(out, "state.txt"))
+
+
+def test_seeding_refuses_an_empty_extract(spark, handoff_mirror, tmp_path, capsys):
+    from tests.pbf_encoder import write_pbf
+
+    pbf, data = str(tmp_path / "empty.osh.pbf"), str(tmp_path / "data")
+    write_pbf(pbf, [])
+    assert main([
+        "contributions", "--pbf", pbf, "--out", str(tmp_path / "contribs"),
+        "--data", data, "--replication-endpoint", f"file://{handoff_mirror}",
+    ]) == 1
+    assert "extract contains no entities" in capsys.readouterr().err
+    assert not os.path.exists(os.path.join(data, "nodes"))

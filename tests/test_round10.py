@@ -5,14 +5,11 @@
 - GeoJSON geometry serialization (independent referee: parse with the
   stdlib json module and compare VALUES, not strings, so the test shares
   no formatting code with the implementation);
-- relation support in the IncrementalUpdater (J6 filter on relation rows,
-  J7 dirty propagation node→way→relation, R3 relation rebuild);
 - deterministic localCheckpoint block release via release_cached().
 """
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -573,115 +570,6 @@ class TestIsoBmff:
             for r in with_media_meta(df).select("media_id", "kind").collect()
         }
         assert kinds == {1: "wav", 2: "mp4", 3: "riff"}
-
-
-NODE_SCHEMA = (
-    "osm_type string, osm_id bigint, version int, ts timestamp,"
-    " changeset bigint, user_id bigint, user_name string, visible boolean,"
-    " tags map<string,string>, lon double, lat double"
-)
-WAY_SCHEMA = (
-    "osm_type string, osm_id bigint, version int, ts timestamp,"
-    " changeset bigint, user_id bigint, user_name string, visible boolean,"
-    " tags map<string,string>, refs array<bigint>"
-)
-REL_SCHEMA = (
-    "osm_type string, osm_id bigint, version int, ts timestamp,"
-    " changeset bigint, user_id bigint, user_name string, visible boolean,"
-    " tags map<string,string>,"
-    " members array<struct<type:string,id:bigint,role:string>>"
-)
-
-
-def _mk_node(nid, ver, ts, lon, lat, cs=1):
-    import datetime as dt
-
-    return (
-        "node", nid, ver, dt.datetime.fromtimestamp(ts, dt.timezone.utc)
-        .replace(tzinfo=None), cs, 7, "u7", True, {}, lon, lat,
-    )
-
-
-class TestIncrementalRelations:
-    @pytest.fixture()
-    def seeded(self, spark):
-        import datetime as dt
-
-        t0 = 1_700_000_000
-
-        def d(ts):
-            return dt.datetime.fromtimestamp(ts, dt.timezone.utc).replace(
-                tzinfo=None
-            )
-
-        nodes = spark.createDataFrame(
-            [
-                _mk_node(1, 1, t0, 0.0, 0.0),
-                _mk_node(2, 1, t0, 1.0, 0.0),
-                _mk_node(3, 1, t0, 1.0, 1.0),
-                _mk_node(4, 1, t0, 0.0, 1.0),
-            ],
-            NODE_SCHEMA,
-        )
-        ways = spark.createDataFrame(
-            [(
-                "way", 100, 1, d(t0 + 10), 2, 7, "u7", True,
-                {"building": "yes"}, [1, 2, 3, 4, 1],
-            )],
-            WAY_SCHEMA,
-        )
-        rels = spark.createDataFrame(
-            [(
-                "relation", 900, 1, d(t0 + 20), 3, 7, "u7", True,
-                {"type": "multipolygon", "landuse": "forest"},
-                [{"type": "way", "id": 100, "role": "outer"}],
-            )],
-            REL_SCHEMA,
-        )
-        return nodes, ways, rels, t0
-
-    def test_node_move_propagates_to_relation(self, spark, seeded):
-        from ohsome_planet_spark.streaming.replication import IncrementalUpdater
-
-        nodes, ways, rels, t0 = seeded
-        upd = IncrementalUpdater(spark, nodes, ways, rel_history=rels)
-        batch = spark.createDataFrame(
-            [_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9)], NODE_SCHEMA
-        )
-        n_c, w_c, r_c = upd.apply_batch(batch)
-        # the relation was NOT in the batch but its member way's node moved:
-        # J7 must mark it dirty and R3 rebuild it with a minor version
-        rrows = r_c.orderBy("valid_from").collect()
-        assert [r.osm_id for r in rrows] == [900, 900]
-        assert [r.osm_minor_version for r in rrows] == [0, 1]
-        assert [r.osm_edits for r in rrows] == [1, 2]
-        wrows = w_c.orderBy("valid_from").collect()
-        assert [w.osm_minor_version for w in wrows] == [0, 1]
-        # affected sets exposed for the delete-insert merge
-        aff_n, aff_w, aff_r = upd.last_affected
-        assert [r.osm_id for r in aff_r.collect()] == [900]
-
-    def test_relation_version_replay_dropped(self, spark, seeded):
-        from ohsome_planet_spark.streaming.replication import IncrementalUpdater
-
-        nodes, ways, rels, t0 = seeded
-        upd = IncrementalUpdater(spark, nodes, ways, rel_history=rels)
-        # replay of the stored relation v1 -> J6 drops it; nothing dirty
-        replay = rels
-        n_c, w_c, r_c = upd.apply_batch(replay)
-        assert r_c.count() == 0
-        assert upd.rel_history.count() == 1  # history unchanged
-
-    def test_two_tuple_contract_without_relations(self, spark, seeded):
-        from ohsome_planet_spark.streaming.replication import IncrementalUpdater
-
-        nodes, ways, _, t0 = seeded
-        upd = IncrementalUpdater(spark, nodes, ways)
-        batch = spark.createDataFrame(
-            [_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9)], NODE_SCHEMA
-        )
-        out = upd.apply_batch(batch)
-        assert len(out) == 2  # backward-compatible return shape
 
 
 class TestCheckpointLifecycle:
