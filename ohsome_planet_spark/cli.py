@@ -6,6 +6,7 @@
         [--filter-relation-tag-keys k1,k2] [--multipolygon-member-limit N]
         [--data dir --replication-endpoint url]   # initialize for replication
     python -m ohsome_planet_spark.cli changesets --input dump.osm.bz2 --out dir
+        # --out <data>/changesets seeds the store `replications` upserts
     python -m ohsome_planet_spark.cli replications --data dir [--endpoint url]
     python -m ohsome_planet_spark.cli fileinfo --pbf in.osh.pbf
     python -m ohsome_planet_spark.cli curate --input docs.parquet --out dir
@@ -43,6 +44,7 @@ def cmd_contributions(args) -> int:
         synthesize_contributions,
         way_contribution_events,
     )
+    from .schemas import split_entities
     from .session import get_spark, truncate_lineage
     from .sources.geoparquet import write_contributions
     from .sources.pbf import read_pbf
@@ -56,6 +58,25 @@ def cmd_contributions(args) -> int:
     from .sources.output import resolve_output_location
 
     args.out = resolve_output_location(spark, args.out)
+    manager = None
+    if args.replication_endpoint:
+        # bulk -> incremental handoff ("Initialize for Replication",
+        # docs/CLI.md:74-127): a store that is already there is refused
+        # before the bulk run
+        from .streaming.manager import ContributionReplicationManager
+        from .streaming.server import entity_server, server_for
+
+        manager = ContributionReplicationManager(
+            spark=spark,
+            data_dir=args.data,
+            server=server_for(args.replication_endpoint, entity_server),
+            out_dir=args.out,
+        )
+        try:
+            manager.check_empty()
+        except ValueError as e:
+            print(e, file=sys.stderr)
+            return 1
     # Stage the decode and the way merge once each: every entity stream,
     # the enrichment and the replication seeding read the one decode, and
     # the way and relation streams share the one way merge. At small data
@@ -64,9 +85,7 @@ def cmd_contributions(args) -> int:
     # truncate_lineage turns into a reliable checkpoint when a checkpoint
     # dir is set.
     entities = truncate_lineage(read_pbf(spark, args.pbf))
-    nodes = entities.filter("osm_type = 'node'").drop("refs", "members", "osm_type")
-    ways = entities.filter("osm_type = 'way'").drop("lon", "lat", "members", "osm_type")
-    rels = entities.filter("osm_type = 'relation'").drop("lon", "lat", "refs", "osm_type")
+    nodes, ways, rels = split_entities(entities)
     if args.filter_relation_tag_keys:
         rels = filter_relation_tag_keys(rels, args.filter_relation_tag_keys.split(","))
     bundled = truncate_lineage(bundled_way_instants(ways, nodes))
@@ -119,19 +138,9 @@ def cmd_contributions(args) -> int:
         )
     print(f"wrote contributions to {args.out}")
 
-    if args.replication_endpoint:
-        # bulk -> incremental handoff ("Initialize for Replication",
-        # docs/CLI.md:74-127): the manager seeds its store from the one
-        # decode and starts it at the extract's newest entity
-        from .streaming.manager import ContributionReplicationManager
-        from .streaming.server import entity_server, server_for
-
-        manager = ContributionReplicationManager(
-            spark=spark,
-            data_dir=args.data,
-            server=server_for(args.replication_endpoint, entity_server),
-            out_dir=args.out,
-        )
+    if manager is not None:
+        # the manager seeds its store from the one decode and starts it at
+        # the extract's newest entity
         try:
             start = manager.seed(entities)
         except ValueError as e:
@@ -186,8 +195,8 @@ def cmd_changesets(args) -> int:
     from .sources.osmxml import read_changesets
 
     spark = get_spark(app_name="changesets")
-    df = read_changesets(spark, args.input)
-    df.write.mode("overwrite").parquet(args.out)
+    read_changesets(spark, args.input).write.mode("overwrite").parquet(args.out)
+    written = spark.read.parquet(args.out)
     if getattr(args, "jdbc", None):
         # S16 drop-in: mirror the table into PostgreSQL with the
         # reference's conflict semantics (ChangesetDB.java:127-186)
@@ -195,9 +204,9 @@ def cmd_changesets(args) -> int:
 
         sink = ChangesetJdbcSink(url=args.jdbc, table=args.jdbc_table)
         sink.ensure_tables()
-        sink.upsert(spark.read.parquet(args.out))
+        sink.upsert(written)
         print(f"upserted into {args.jdbc_table} via {args.jdbc}")
-    print(f"wrote {df.count()} changesets to {args.out}")
+    print(f"wrote {written.count()} changesets to {args.out}")
     return 0
 
 
@@ -869,7 +878,11 @@ def main(argv=None) -> int:
     )
     c.set_defaults(fn=cmd_contributions)
 
-    ch = sub.add_parser("changesets", help="changeset dump -> parquet table")
+    ch = sub.add_parser(
+        "changesets",
+        help="changeset dump -> changeset table (--out <data>/changesets seeds"
+        " the store `replications` upserts)",
+    )
     ch.add_argument("--input", required=True)
     ch.add_argument("--out", required=True)
     ch.add_argument("--jdbc", help="optional PostgreSQL JDBC url to mirror into (S16)")

@@ -10,7 +10,8 @@ itself following the iD editor's commit-UI rules):
 - drop the leading ``#``; keep tags with length ≥ 2 that aren't all digits;
 - distinct + sorted.
 
-Editor = the changeset's ``created_by`` tag (``ChangesetDb.java:50``).
+Editor = the changeset's ``created_by`` tag (``ChangesetDb.java:50``), read
+by the J4 join (``operators.contributions.with_changesets``).
 
 All native Spark expressions — regexp_extract_all/array ops, no UDF.
 """
@@ -55,7 +56,3 @@ def hashtags_from_tags_expr(tags: Column) -> Column:
         F.coalesce(tags.getItem("hashtags"), F.lit("")),
         F.coalesce(tags.getItem("comment"), F.lit("")),
     )
-
-
-def editor_expr(tags: Column) -> Column:
-    return tags.getItem("created_by")

@@ -602,27 +602,26 @@ def _synth_select_list(status, tags, tags_before, contrib_type, xz_level, xz_cod
 
 
 # ---------------------------------------------------------------------------
-# changeset enrichment (J4) — broadcast equi-join with default fallback
+# changeset enrichment (J4) — left equi-join with default fallback
 # ---------------------------------------------------------------------------
 
 
-def with_changesets(
-    contribs: DataFrame, changesets: DataFrame, prune: bool = True
-) -> DataFrame:
-    """Join changeset metadata onto contributions (SURVEY.md J4).
+def with_changesets(contribs: DataFrame, changesets: DataFrame) -> DataFrame:
+    """Join changeset metadata onto contributions (SURVEY.md J4): one plain
+    left equi-join on ``changeset_id``, the same for the bulk run, the
+    replication pass and the registry.
 
     Missing changeset ids fall back to the reference's default record —
     created_at = epoch, empty tags/hashtags, null editor
     (``util/Utils.java:50-66``). Editor = changeset tags['created_by'] (A11,
     ``ChangesetDb.java:50``).
 
-    Scale shape: the planet changesets table is ~150 M rows — never
-    unconditionally broadcast. With ``prune`` (the incremental/batch
-    regime), the changesets side is first semi-joined down to the ids the
-    batch actually references; AQE then sees a dimension-sized build side
-    at runtime and picks a broadcast-hash join on its own. For full-history
-    runs pass ``prune=False`` and the enrichment is a plain sort-merge
-    equi-join on changeset_id.
+    Scale shape: the planet changesets table is ~150 M rows, so it is never
+    unconditionally broadcast; AQE picks a broadcast-hash join when the
+    changesets side is dimension-sized at runtime, else a sort-merge join.
+    A replication pass scans the whole store either way, so at planet
+    scale the store's O(store) per-pass cost stays open; a semi-join to
+    the referenced ids would not remove that scan.
     """
     cs = changesets.select(
         F.col("id").alias("_cs_id"),
@@ -631,22 +630,6 @@ def with_changesets(
         F.coalesce("tags", _empty_tags()).alias("_cs_tags"),
         F.coalesce("hashtags", F.array().cast("array<string>")).alias("_cs_hashtags"),
     )
-    if prune:
-        # the contribs plan feeds both the semi-join build side and the
-        # probe side of the enrichment join — persist so the (potentially
-        # expensive) upstream pipeline is computed once, not twice
-        from pyspark.storagelevel import StorageLevel
-
-        from ..session import register_cached
-
-        if contribs.storageLevel == StorageLevel.NONE:
-            contribs = register_cached(
-                contribs.persist(StorageLevel.MEMORY_AND_DISK)
-            )
-        referenced = contribs.select(
-            F.col("changeset_id").alias("_cs_id")
-        ).distinct()
-        cs = cs.join(referenced, "_cs_id", "left_semi")
     joined = contribs.join(cs, contribs["changeset_id"] == cs["_cs_id"], "left")
     changeset_struct = F.struct(
         F.col("changeset_id").alias("id"),
@@ -671,9 +654,9 @@ def enrich_contributions(
     empty store, so every row gets the default record) and the country
     lookup (no ``country_features`` writes an empty ``countries`` array)."""
     if changesets is None:
-        from ..schemas import CHANGESET_SCHEMA
+        from ..sources.osmxml import changeset_frame
 
-        changesets = contribs.sparkSession.createDataFrame([], CHANGESET_SCHEMA)
+        changesets = changeset_frame(contribs.sparkSession, [])
     contribs = with_changesets(contribs, changesets)
     if country_features is None:
         return contribs.withColumn("countries", F.array().cast("array<string>"))

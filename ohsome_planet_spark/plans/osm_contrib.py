@@ -16,6 +16,7 @@ from ..operators.contributions import (
     synthesize_contributions, way_contribution_events,
 )
 from ..operators.spatial import join_countries, rect_feature
+from ..schemas import split_entities
 from ..session import scratch
 
 from ._registry import _produce_then_query, _register, _t, staged_sort
@@ -327,7 +328,7 @@ def contrib_changesets(spark: SparkSession, sf_dir: str) -> DataFrame:
     record for missing ids (``util/Utils.java:50-66``), editor from
     tags['created_by'] (A11, ``ChangesetDb.java:50``). Every third
     changeset id is withheld so the default-record path is exercised.
-    Scale shape: semi-join-pruned build side, AQE-picked broadcast
+    Scale shape: one plain left equi-join, AQE-picked broadcast
     (see ``with_changesets``)."""
     out = _orders_with_changesets(spark, sf_dir)
     return out.select(
@@ -1636,27 +1637,6 @@ ORDER BY osm_type, osm_id, osm_edits
 """
 
 
-_FULLROW_NODE_COLS = [
-    "osm_id", "version", "ts", "changeset", "user_id", "user_name",
-    "visible", "tags", "lon", "lat",
-]
-_FULLROW_WAY_COLS = _FULLROW_NODE_COLS[:-2] + ["refs"]
-_FULLROW_REL_COLS = _FULLROW_NODE_COLS[:-2] + ["members"]
-
-
-def _fullrow_typed(ents: DataFrame):
-    """Split a decoded entity frame into per-type history frames (the
-    updater/history schema: ``osm_type`` + the type's columns)."""
-    def typed(t, cols):
-        return ents.filter(F.col("osm_type") == t).select("osm_type", *cols)
-
-    return (
-        typed("node", _FULLROW_NODE_COLS),
-        typed("way", _FULLROW_WAY_COLS),
-        typed("relation", _FULLROW_REL_COLS),
-    )
-
-
 def _fullrow_build(nodes: DataFrame, ways: DataFrame, rels: DataFrame) -> DataFrame:
     """The bulk three-pipeline contribution build: the way merge + geometry
     bundle is computed ONCE and staged; the way pipeline projects
@@ -1688,11 +1668,7 @@ def _fullrow_enrich(spark: SparkSession, sf_dir: str, contribs: DataFrame) -> Da
     from ..operators.contributions import with_changesets
     from ..operators.spatial import geometry_countries_udf
 
-    # prune=False: the fixture dim is already dimension-sized (AQE
-    # broadcasts it); the semi-join prune pass would only add stages here
-    contribs = with_changesets(
-        contribs, _fullrow_changesets(spark, sf_dir), prune=False
-    )
+    contribs = with_changesets(contribs, _fullrow_changesets(spark, sf_dir))
     feats = [
         rect_feature("AAA", -180.0, -90.0, -100.1, 90.0),
         rect_feature("BBB", -100.1, -90.0, -50.1, 90.0),
@@ -1808,11 +1784,9 @@ def contrib_full_row_from_pbf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merge inside the relation pipeline) would otherwise each re-run the
     # blob-decode scan — at planet scale this is the staged decode table
     ents = truncate_lineage(read_pbf(spark, path))
-    nodes, ways, rels = _fullrow_typed(ents)
-    # stage the synthesized union before enrichment: J4's semi-join build
-    # side and probe side, and the countries projection, each replan the
-    # 3-pipeline union otherwise (the in-session analog of the reference's
-    # produce-then-enrich staging)
+    nodes, ways, rels = split_entities(ents)
+    # stage the synthesized union before enrichment (the in-session analog
+    # of the reference's produce-then-enrich staging)
     contribs = truncate_lineage(_fullrow_build(nodes, ways, rels))
     return _fullrow_project(_fullrow_enrich(spark, sf_dir, contribs))
 
@@ -1869,7 +1843,7 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ents = _produce_then_query(
         spark, sf_dir, "fullrow_ents", lambda: read_pbf(spark, path)
     )
-    all_nodes, all_ways, all_rels = _fullrow_typed(ents)
+    all_nodes, all_ways, all_rels = split_entities(ents)
 
     seed = F.col("version") == 1
     updater = IncrementalUpdater(

@@ -11,6 +11,7 @@ from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..schemas import RELATION_SCHEMA
 from ..session import scratch
 from ._registry import _register, _t, staged_sort
 
@@ -237,10 +238,8 @@ def replication_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     changed = kept.select("osm_id").distinct()
     no_changed_ways = spark.createDataFrame([], "osm_id bigint")
-    no_relations = spark.createDataFrame(
-        [],
-        "osm_id bigint, visible boolean,"
-        " members array<struct<type:string,id:bigint,role:string>>",
+    no_relations = spark.createDataFrame([], RELATION_SCHEMA).select(
+        "osm_id", "visible", "members"
     )
     dirty_ways, _ = dirty_parents(changed, no_changed_ways, ways, no_relations)
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import datetime as _dt
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # valid_to sentinel for open-ended (latest / deleted) contributions.
@@ -25,66 +27,78 @@ VALID_TO_SENTINEL_STR = "2222-01-01 00:00:00"
 
 OSM_NODE, OSM_WAY, OSM_RELATION = "node", "way", "relation"
 
+_OSM_TYPE_FIELD = T.StructField("osm_type", T.StringType(), True)
+
 _COMMON_ENTITY_FIELDS = [
     T.StructField("osm_id", T.LongType(), False),
     T.StructField("version", T.IntegerType(), False),
     T.StructField("ts", T.TimestampType(), False),
     T.StructField("changeset", T.LongType(), True),
-    # bigint: matches ENTITY_ROW_SCHEMA (sources/pbf.py) — uid > int32
-    # occurs on real wire input, and mixed-width parquet histories fail
-    # the vectorized reader with PARQUET_COLUMN_DATA_TYPE_MISMATCH
+    # bigint: uid > int32 occurs on real wire input, and mixed-width parquet
+    # histories fail the vectorized reader with
+    # PARQUET_COLUMN_DATA_TYPE_MISMATCH
     T.StructField("user_id", T.LongType(), True),
     T.StructField("user_name", T.StringType(), True),
     T.StructField("visible", T.BooleanType(), False),
     T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
 ]
 
-NODE_SCHEMA = T.StructType(
-    _COMMON_ENTITY_FIELDS
-    + [
-        T.StructField("lon", T.DoubleType(), True),
-        T.StructField("lat", T.DoubleType(), True),
-    ]
-)
-
-WAY_SCHEMA = T.StructType(
-    _COMMON_ENTITY_FIELDS
-    + [
-        T.StructField("refs", T.ArrayType(T.LongType()), True),
-    ]
-)
-
 MEMBER_SCHEMA = T.StructType(
     [
-        T.StructField("type", T.StringType(), False),
-        T.StructField("id", T.LongType(), False),
+        T.StructField("type", T.StringType(), True),
+        T.StructField("id", T.LongType(), True),
         T.StructField("role", T.StringType(), True),
     ]
 )
 
-RELATION_SCHEMA = T.StructType(
-    _COMMON_ENTITY_FIELDS
-    + [
-        T.StructField("members", T.ArrayType(MEMBER_SCHEMA), True),
+# each type's own columns, after the common ones
+_NODE_FIELDS = [
+    T.StructField("lon", T.DoubleType(), True),
+    T.StructField("lat", T.DoubleType(), True),
+]
+_WAY_FIELDS = [T.StructField("refs", T.ArrayType(T.LongType()), True)]
+_RELATION_FIELDS = [T.StructField("members", T.ArrayType(MEMBER_SCHEMA), True)]
+
+# the per-type entity layouts: what the contribution operators read
+NODE_SCHEMA = T.StructType(_COMMON_ENTITY_FIELDS + _NODE_FIELDS)
+WAY_SCHEMA = T.StructType(_COMMON_ENTITY_FIELDS + _WAY_FIELDS)
+RELATION_SCHEMA = T.StructType(_COMMON_ENTITY_FIELDS + _RELATION_FIELDS)
+
+# the decoders' one row for every type (PBF blocks, osmChange diffs):
+# ``osm_type``, the common columns, then every type's own columns, all
+# nullable since a row fills only its own type's
+ENTITY_ROW_SCHEMA = T.StructType(
+    [
+        T.StructField(f.name, f.dataType, True)
+        for f in [_OSM_TYPE_FIELD]
+        + _COMMON_ENTITY_FIELDS
+        + _NODE_FIELDS
+        + _WAY_FIELDS
+        + _RELATION_FIELDS
     ]
 )
 
-CHANGESET_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("created_at", T.TimestampType(), True),
-        T.StructField("closed_at", T.TimestampType(), True),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("hashtags", T.ArrayType(T.StringType()), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("user_name", T.StringType(), True),
-        T.StructField("open", T.BooleanType(), True),
-        T.StructField("min_lon", T.DoubleType(), True),
-        T.StructField("min_lat", T.DoubleType(), True),
-        T.StructField("max_lon", T.DoubleType(), True),
-        T.StructField("max_lat", T.DoubleType(), True),
-    ]
-)
+
+def history_schema(layout: T.StructType) -> T.StructType:
+    """A history table's schema: ``osm_type`` then the type's layout (the
+    replication store's ``<data>/nodes`` and ``<data>/ways``)."""
+    return T.StructType([_OSM_TYPE_FIELD] + layout.fields)
+
+
+def split_entities(entities: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """A decoded entity frame → its node, way and relation histories, each
+    ``osm_type`` plus the type's layout (:func:`history_schema`)."""
+    return tuple(
+        entities.filter(F.col("osm_type") == kind).select(
+            *history_schema(layout).fieldNames()
+        )
+        for kind, layout in (
+            (OSM_NODE, NODE_SCHEMA),
+            (OSM_WAY, WAY_SCHEMA),
+            (OSM_RELATION, RELATION_SCHEMA),
+        )
+    )
+
 
 # --- output -----------------------------------------------------------------
 

@@ -27,6 +27,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+from .osmxml import CHANGESET_SCHEMA
+
 __all__ = ["ChangesetJdbcSink", "changeset_merge_sql", "CHANGESET_TABLE_DDL"]
 
 # mirrors the reference's setupChangesetDB.sql (bbox columns in place of
@@ -47,10 +49,8 @@ CREATE TABLE IF NOT EXISTS {table} (
   max_lat double precision
 )"""
 
-_COLS = (
-    "id user_id created_at closed_at open user_name tags hashtags"
-    " min_lon min_lat max_lon max_lat"
-).split()
+# the changeset table's columns; the WKB ``geom`` has no column here
+_COLS = [c for c in CHANGESET_SCHEMA.fieldNames() if c != "geom"]
 
 
 def changeset_merge_sql(table: str = "changesets", staging: str = "changesets_staging") -> str:

@@ -1,5 +1,5 @@
 """OSM XML sources (SURVEY.md S9/S10): osmChange (`.osc` / `.osc.gz`)
-diffs and changeset dump parsing.
+diffs, changeset XML parsing and the changeset table.
 
 The reference uses StAX parsers (``osm-xml/.../OscParser.java:27-317``,
 ``OSMXmlEntityReader.java``, ``ChangesetXmlReader.java``); here the parse is
@@ -7,6 +7,15 @@ The reference uses StAX parsers (``osm-xml/.../OscParser.java:27-317``,
 edits ≈ a few MB), so the Spark side is one narrow stage per file with no
 shuffle. Changeset dumps (`.osm.bz2`, multi-stream) split on bz2 block
 boundaries for parallel decompression like the reference's PBZ2Reader.
+
+The reference keeps one ``changesets`` table: the bulk load fills it, the
+replication stream upserts it and the contributions join it
+(``ChangesetDB.java:127-296``). Here that table is :data:`CHANGESET_SCHEMA`,
+and :func:`changeset_frame` is its one row builder: ``cli changesets``
+(:func:`read_changesets`), the replication batches and the API
+reconciliation (``streaming.changesets``) all write through it, so
+``changesets --out <data>/changesets`` seeds the store ``replications``
+upserts.
 """
 
 from __future__ import annotations
@@ -19,8 +28,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .pbf import ENTITY_ROW_SCHEMA
+from ..schemas import ENTITY_ROW_SCHEMA
 
 _GZ_MAGIC = b"\x1f\x8b"
 
@@ -115,21 +126,7 @@ def encode_osc(rows: list[dict]) -> bytes:
     return ET.tostring(root, encoding="utf-8", xml_declaration=True)
 
 
-_COLUMNS = [
-    "osm_type",
-    "osm_id",
-    "version",
-    "ts",
-    "changeset",
-    "user_id",
-    "user_name",
-    "visible",
-    "tags",
-    "lon",
-    "lat",
-    "refs",
-    "members",
-]
+_COLUMNS = ENTITY_ROW_SCHEMA.fieldNames()
 
 
 def osc_batch(spark: SparkSession, data: bytes) -> DataFrame:
@@ -161,11 +158,30 @@ def read_osc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
 
 # --- changeset dumps (S9) ----------------------------------------------------
 
-CHANGESET_ROW_SCHEMA = (
-    "id bigint, created_at timestamp, closed_at timestamp,"
-    " tags map<string,string>, user_id bigint, user_name string, open boolean,"
-    " min_lon double, min_lat double, max_lon double, max_lat double,"
-    " num_changes int, comments_count int"
+# The changeset table, as the reference's ``changesets`` table
+# (setupChangesetDB.sql): id, user_id, created_at, closed_at, open,
+# user_name, tags, hashtags, plus the raw bbox coords and the
+# PostGIS-equivalent bbox polygon (``geom Polygon 4326``) as WKB.
+CHANGESET_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("created_at", T.TimestampType()),
+        T.StructField("closed_at", T.TimestampType()),
+        T.StructField("open", T.BooleanType()),
+        T.StructField("user_name", T.StringType()),
+        T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("hashtags", T.ArrayType(T.StringType())),
+        T.StructField("min_lon", T.DoubleType()),
+        T.StructField("min_lat", T.DoubleType()),
+        T.StructField("max_lon", T.DoubleType()),
+        T.StructField("max_lat", T.DoubleType()),
+        T.StructField("geom", T.BinaryType()),
+    ]
+)
+# the parsed columns: the table without the two the builder derives
+_PARSED_SCHEMA = T.StructType(
+    [f for f in CHANGESET_SCHEMA if f.name not in ("hashtags", "geom")]
 )
 
 _BZ2_STREAM_MAGIC = b"BZh91AY&SY"
@@ -218,12 +234,66 @@ def parse_changesets_bytes(data: bytes) -> list[dict]:
     return out
 
 
-def read_changesets(spark: SparkSession, path: str) -> DataFrame:
-    """Changeset dump (.osm or multi-stream .osm.bz2) → DataFrame with
-    derived hashtags/editor applied at ingest (A10/A11)."""
-    from pyspark.sql import functions as F
+def bbox_geom_udf():
+    """WKB bbox polygon from min/max lon/lat — the store-write equivalent
+    of the reference's ``getBBOXasWKT``
+    (``OSMChangesets.java:81-88`` / ``ChangesetDB.java:178``): CCW ring
+    (min,min) → (max,min) → (max,max) → (min,max) → close, NULL when any
+    coordinate is missing. Arrow-batched (no native double→IEEE-bytes
+    expression exists); runs once per store write, off the query hot path.
+    """
+    import math
+    import struct
 
-    from ..functions.hashtags import editor_expr, hashtags_from_tags_expr
+    from pyspark.sql.functions import pandas_udf
+
+    # little-endian WKB: byteOrder=1, type=3 (Polygon), 1 ring, 5 points
+    header = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
+
+    @pandas_udf("binary")
+    def _bbox_wkb(
+        min_lon: pd.Series, min_lat: pd.Series, max_lon: pd.Series, max_lat: pd.Series
+    ) -> pd.Series:
+        out = []
+        for a, b, c, d in zip(min_lon, min_lat, max_lon, max_lat):
+            if any(v is None or (isinstance(v, float) and math.isnan(v)) for v in (a, b, c, d)):
+                out.append(None)
+            else:
+                out.append(header + struct.pack("<10d", a, b, c, b, c, d, a, d, a, b))
+        return pd.Series(out, dtype=object)
+
+    return _bbox_wkb
+
+
+def changeset_frame(
+    spark: SparkSession, rows: list[dict] | DataFrame, with_pos: bool = False
+) -> DataFrame:
+    """The one builder of the changeset table: parsed changesets
+    (:func:`parse_changesets_bytes` dicts, or a frame of them) → a
+    :data:`CHANGESET_SCHEMA` frame, with ``hashtags`` derived from the
+    ``comment`` tag (A10) and ``geom`` from the bbox. ``with_pos`` appends
+    ``_pos``, the rows' apply order, for ``streaming.changesets.batch_winner``."""
+    from ..functions.hashtags import hashtags_from_tags_expr
+
+    if not isinstance(rows, DataFrame):
+        schema = T.StructType(
+            _PARSED_SCHEMA.fields + ([T.StructField("_pos", T.LongType())] if with_pos else [])
+        )
+        pdf = pd.DataFrame(rows, columns=_PARSED_SCHEMA.fieldNames())
+        if with_pos:
+            pdf["_pos"] = range(len(pdf))
+        rows = spark.createDataFrame(pdf if len(pdf) else [], schema)
+    return rows.withColumns(
+        {
+            "hashtags": hashtags_from_tags_expr(F.col("tags")),
+            "geom": bbox_geom_udf()("min_lon", "min_lat", "max_lon", "max_lat"),
+        }
+    ).select(*CHANGESET_SCHEMA.fieldNames(), *(["_pos"] if with_pos else []))
+
+
+def read_changesets(spark: SparkSession, path: str) -> DataFrame:
+    """Changeset dump (.osm or multi-stream .osm.bz2) → the changeset
+    table (:func:`changeset_frame`)."""
     from ..session import ship_package
 
     ship_package(spark)
@@ -238,20 +308,14 @@ def read_changesets(spark: SparkSession, path: str) -> DataFrame:
             [(i,) for i in range(len(streams))], "stream_idx int"
         )
         bstreams = spark.sparkContext.broadcast(streams)
+        columns = _PARSED_SCHEMA.fieldNames()
 
         def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 rows = []
                 for i in pdf["stream_idx"]:
                     rows.extend(parse_changesets_bytes(bz2.decompress(bstreams.value[i])))
-                yield pd.DataFrame(rows)
+                yield pd.DataFrame(rows, columns=columns)
 
-        df = index.mapInPandas(parse, CHANGESET_ROW_SCHEMA)
-    else:
-        rows = parse_changesets_bytes(_read_maybe_compressed(path))
-        pdf = pd.DataFrame(rows)
-        df = spark.createDataFrame(pdf) if len(pdf) else spark.createDataFrame([], CHANGESET_ROW_SCHEMA)
-
-    return df.withColumn("hashtags", hashtags_from_tags_expr(F.col("tags"))).withColumn(
-        "editor", editor_expr(F.col("tags"))
-    )
+        return changeset_frame(spark, index.mapInPandas(parse, _PARSED_SCHEMA))
+    return changeset_frame(spark, parse_changesets_bytes(_read_maybe_compressed(path)))

@@ -31,7 +31,8 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..schemas import ENTITY_ROW_SCHEMA
 
 # --- protobuf wire primitives ------------------------------------------------
 
@@ -395,20 +396,13 @@ def _decode_relation(buf, strings, date_gran):
 
 # --- Spark integration -------------------------------------------------------
 
-ENTITY_ROW_SCHEMA = (
-    "osm_type string, osm_id bigint, version int, ts timestamp, changeset bigint,"
-    " user_id bigint, user_name string, visible boolean,"
-    " tags map<string,string>, lon double, lat double,"
-    " refs array<bigint>, members array<struct<type:string,id:bigint,role:string>>"
-)
-
-
-def read_pbf(spark: SparkSession, path: str, entity_type: str | None = None) -> DataFrame:
-    """PBF file → unified entity DataFrame (filterable by osm_type).
+def read_pbf(spark: SparkSession, path: str) -> DataFrame:
+    """PBF file → unified entity DataFrame (``ENTITY_ROW_SCHEMA``; split it
+    by type with :func:`..schemas.split_entities`).
 
     The blob index is computed driver-side; decode runs distributed via
-    ``mapInPandas`` over index partitions. ``entity_type`` prunes whole
-    blobs when the file carries per-type blobs (Sort.Type_then_ID files do).
+    ``mapInPandas`` over index partitions. Every blob is decoded; the
+    ``osmpbf`` data source (``pbf_datasource``) prunes whole blobs by type.
     """
     from ..session import ship_package
 
@@ -419,6 +413,7 @@ def read_pbf(spark: SparkSession, path: str, entity_type: str | None = None) -> 
     )
     nparts = max(1, min(len(refs), spark.sparkContext.defaultParallelism))
     index = index.repartition(nparts)
+    columns = ENTITY_ROW_SCHEMA.fieldNames()
 
     def decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -446,26 +441,6 @@ def read_pbf(spark: SparkSession, path: str, entity_type: str | None = None) -> 
                             "members": e.get("members"),
                         }
                     )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "osm_type",
-                    "osm_id",
-                    "version",
-                    "ts",
-                    "changeset",
-                    "user_id",
-                    "user_name",
-                    "visible",
-                    "tags",
-                    "lon",
-                    "lat",
-                    "refs",
-                    "members",
-                ],
-            )
+            yield pd.DataFrame(rows, columns=columns)
 
-    df = index.mapInPandas(decode_partition, ENTITY_ROW_SCHEMA)
-    if entity_type:
-        df = df.filter(F.col("osm_type") == entity_type)
-    return df
+    return index.mapInPandas(decode_partition, ENTITY_ROW_SCHEMA)

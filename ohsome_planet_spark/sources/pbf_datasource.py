@@ -28,8 +28,10 @@ from pyspark.sql.datasource import (
     Filter,
     InputPartition,
 )
+from pyspark.sql.types import StructType
 
-from .pbf import ENTITY_ROW_SCHEMA, decode_block, read_blob, scan_blobs
+from ..schemas import ENTITY_ROW_SCHEMA
+from .pbf import decode_block, read_blob, scan_blobs
 
 _TYPE_ORDER = {"node": 0, "way": 1, "relation": 2}
 
@@ -146,7 +148,7 @@ class OsmPbfDataSource(DataSource):
     def name(cls) -> str:
         return "osmpbf"
 
-    def schema(self) -> str:
+    def schema(self) -> StructType:
         return ENTITY_ROW_SCHEMA
 
     def reader(self, schema) -> OsmPbfReader:

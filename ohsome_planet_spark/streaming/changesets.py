@@ -29,8 +29,11 @@ touches |batch| + |matching ids| rows. The full-outer merge shuffles the
 *batch* (small) and the state once — on a bucketed/Delta table the state
 side is co-located and the merge is shuffle-free on the big side.
 
-On disk the store is ``<data>/changesets`` (parquet) plus its state row
-``<data>/changeset_state.txt``, both owned by :class:`ChangesetStateManager`:
+On disk the store is ``<data>/changesets`` (parquet, the one changeset
+table ``sources.osmxml.CHANGESET_SCHEMA``) plus its state row
+``<data>/changeset_state.txt``, both owned by :class:`ChangesetStateManager`.
+The bulk load ``changesets --out <data>/changesets`` seeds the store, and
+every batch here is built by the same ``sources.osmxml.changeset_frame``.
 ``load`` starts the stream from the state row, ``--changeset-start-sequence``
 or, like the reference, the newest changeset already in the store (the
 same ``load(start_sequence)`` start as the contribution stream's manager),
@@ -43,70 +46,24 @@ from __future__ import annotations
 
 import os
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timedelta
 from typing import Callable, Iterable, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..sources.osmxml import parse_changesets_bytes
+from ..sources.osmxml import CHANGESET_SCHEMA, changeset_frame, parse_changesets_bytes
 from .replication import ReplicationState
 from .server import Server
 
 __all__ = [
-    "CHANGESET_STORE_SCHEMA",
-    "bbox_geom_udf",
     "batch_winner",
     "upsert_changesets",
     "pending_changesets",
     "open_changesets_older_than",
     "ChangesetStateManager",
 ]
-
-# Store columns mirror the reference's ``changesets`` table
-# (setupChangesetDB.sql): id, user_id, created_at, closed_at, open,
-# user_name, tags, hashtags, plus the raw bbox coords and the
-# PostGIS-equivalent bbox polygon (``geom Polygon 4326``) as WKB.
-CHANGESET_STORE_SCHEMA = (
-    "id bigint, user_id bigint, created_at timestamp, closed_at timestamp,"
-    " open boolean, user_name string, tags map<string,string>,"
-    " hashtags array<string>,"
-    " min_lon double, min_lat double, max_lon double, max_lat double,"
-    " geom binary"
-)
-
-
-def bbox_geom_udf():
-    """WKB bbox polygon from min/max lon/lat — the store-write equivalent
-    of the reference's ``getBBOXasWKT``
-    (``OSMChangesets.java:81-88`` / ``ChangesetDB.java:178``): CCW ring
-    (min,min) → (max,min) → (max,max) → (min,max) → close, NULL when any
-    coordinate is missing. Arrow-batched (no native double→IEEE-bytes
-    expression exists); runs once per store write, off the query hot path.
-    """
-    import math
-    import struct
-
-    from pyspark.sql.functions import pandas_udf
-
-    # little-endian WKB: byteOrder=1, type=3 (Polygon), 1 ring, 5 points
-    header = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
-
-    @pandas_udf("binary")
-    def _bbox_wkb(
-        min_lon: pd.Series, min_lat: pd.Series, max_lon: pd.Series, max_lat: pd.Series
-    ) -> pd.Series:
-        out = []
-        for a, b, c, d in zip(min_lon, min_lat, max_lon, max_lat):
-            if any(v is None or (isinstance(v, float) and math.isnan(v)) for v in (a, b, c, d)):
-                out.append(None)
-            else:
-                out.append(header + struct.pack("<10d", a, b, c, b, c, d, a, d, a, b))
-        return pd.Series(out, dtype=object)
-
-    return _bbox_wkb
 
 _PLACEHOLDER_CREATED_AT = "2000-01-01 00:00:00"
 
@@ -188,35 +145,6 @@ def open_changesets_older_than(
     ).select("id")
 
 
-def _rows_to_df(
-    spark: SparkSession, rows: list[dict], with_pos: bool = True
-) -> DataFrame:
-    """Parsed changeset dicts (``parse_changesets_bytes`` shape) → store
-    DataFrame, with derived hashtags/editor-adjacent columns and the apply
-    order preserved in ``_pos``."""
-    from ..functions.hashtags import hashtags_from_tags_expr
-
-    pdf = pd.DataFrame(rows)
-    schema = CHANGESET_STORE_SCHEMA.replace(
-        " hashtags array<string>,", ""
-    ).replace(", geom binary", "") + (", _pos bigint" if with_pos else "")
-    cols = [
-        "id", "user_id", "created_at", "closed_at", "open", "user_name",
-        "tags", "min_lon", "min_lat", "max_lon", "max_lat",
-    ] + (["_pos"] if with_pos else [])
-    if len(pdf):
-        if with_pos:
-            pdf["_pos"] = range(len(pdf))
-        df = spark.createDataFrame(pdf[cols], schema)
-    else:
-        df = spark.createDataFrame([], schema)
-    return df.withColumn(
-        "hashtags", hashtags_from_tags_expr(F.col("tags"))
-    ).withColumn(
-        "geom", bbox_geom_udf()("min_lon", "min_lat", "max_lon", "max_lat")
-    )
-
-
 @dataclass
 class ChangesetStateManager:
     """Driver-side orchestration of the changeset stream
@@ -234,7 +162,6 @@ class ChangesetStateManager:
     local_state: ReplicationState | None = None
     batch_size: int = 500
     api_batch_size: int = 100
-    closed_ids: set[int] = field(default_factory=set)
     # optional S16 drop-in: every upserted batch is mirrored into
     # PostgreSQL (sources.jdbc.ChangesetJdbcSink or compatible)
     jdbc_sink: object | None = None
@@ -262,7 +189,7 @@ class ChangesetStateManager:
         if os.path.isdir(self._store_path):
             self.store = self.spark.read.parquet(self._store_path)
         else:
-            self.store = self.spark.createDataFrame([], CHANGESET_STORE_SCHEMA)
+            self.store = self.spark.createDataFrame([], CHANGESET_SCHEMA)
         if os.path.exists(self._state_path):
             with open(self._state_path) as f:
                 self.local_state = ReplicationState.parse(f.read())
@@ -342,12 +269,8 @@ class ChangesetStateManager:
     def _update_batch(self, state: DataFrame, batch: Sequence[int]) -> DataFrame:
         rows: list[dict] = []
         for seq in batch:  # files are km-scale; fetch serially on the driver
-            for row in parse_changesets_bytes(self.server.get_replication_file(seq)):
-                rows.append(row)
-        for row in rows:
-            if not row["open"]:
-                self.closed_ids.add(row["id"])
-        batch_df = _rows_to_df(self.spark, rows)
+            rows.extend(parse_changesets_bytes(self.server.get_replication_file(seq)))
+        batch_df = changeset_frame(self.spark, rows, with_pos=True)
         state = upsert_changesets(state, batch_df)
         if self.jdbc_sink is not None:
             self.jdbc_sink.upsert(batch_winner(batch_df))
@@ -380,7 +303,7 @@ class ChangesetStateManager:
                 # mirror / tests): leave the rows open, reconcile next pass
                 continue
         if rows:
-            batch_df = _rows_to_df(self.spark, rows)
+            batch_df = changeset_frame(self.spark, rows, with_pos=True)
             state = upsert_changesets(state, batch_df)
             if self.jdbc_sink is not None:
                 self.jdbc_sink.upsert(batch_winner(batch_df))

@@ -49,7 +49,9 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from ..schemas import NODE_SCHEMA, WAY_SCHEMA, history_schema, split_entities
 from ..session import run_scope
 from .replication import (
     IncrementalUpdater,
@@ -63,19 +65,11 @@ from .server import Server, parse_iso
 
 __all__ = ["ContributionReplicationManager", "run_replication_update"]
 
-NODE_HISTORY_SCHEMA = (
-    "osm_type string, osm_id bigint, version int, ts timestamp,"
-    " changeset bigint, user_id bigint, user_name string, visible boolean,"
-    " tags map<string,string>, lon double, lat double"
-)
-WAY_HISTORY_SCHEMA = (
-    "osm_type string, osm_id bigint, version int, ts timestamp,"
-    " changeset bigint, user_id bigint, user_name string, visible boolean,"
-    " tags map<string,string>, refs array<bigint>"
-)
+NODE_HISTORY_SCHEMA = history_schema(NODE_SCHEMA)
+WAY_HISTORY_SCHEMA = history_schema(WAY_SCHEMA)
 
 
-def _history_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
+def _history_or_empty(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     if os.path.isdir(path) and any(
         f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
     ):
@@ -127,26 +121,31 @@ class ContributionReplicationManager:
         109-201``): the history tables from a bulk extract's entities, then
         the state row (also published in ``out_dir``) at the greatest state
         not after the extract's newest entity. ``ValueError`` for tables
-        already there (``:137-141``), an extract with no entities or no
-        state that old; the start is resolved before any write, so a
+        already there (:meth:`check_empty`), an extract with no entities or
+        no state that old; the start is resolved before any write, so a
         refusal leaves no half-seeded store."""
-        for sub in ("nodes", "ways"):
-            if os.path.isdir(self._path(sub)) and os.listdir(self._path(sub)):
-                raise ValueError("replication directory is not empty!")
+        self.check_empty()
         max_ts = entities.agg(F.max("ts")).first()[0]
         if max_ts is None:
             raise ValueError("extract contains no entities; cannot initialize replication")
         start = self.server.find_start_state_by_timestamp(
             max_ts.replace(tzinfo=timezone.utc), self.fetch_remote_state()
         )
-        for kind, history in zip(("node", "way"), self._history()):
-            entities.filter(F.col("osm_type") == kind).select(
-                *history.columns
-            ).write.parquet(self._path(kind + "s"))
+        nodes, ways, _ = split_entities(entities)
+        nodes.write.parquet(self._path("nodes"))
+        ways.write.parquet(self._path("ways"))
         self._advance_local_state(start)
         with open(os.path.join(self.out_dir, "state.txt"), "w") as f:
             f.write(start.format())
         return start
+
+    def check_empty(self) -> None:
+        """``ValueError`` when the history tables already hold files
+        (``Contributions2Parquet.java:137-141``). It needs no extract, so a
+        bulk run checks it before its decode."""
+        for sub in ("nodes", "ways"):
+            if os.path.isdir(self._path(sub)) and os.listdir(self._path(sub)):
+                raise ValueError("replication directory is not empty!")
 
     def lookup(self, osm_type: str, osm_id: int) -> dict:
         """One element as the store holds it (``UpdateStoreRocksDb.query:

@@ -27,6 +27,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..schemas import RELATION_SCHEMA
+
 
 def latest_state(entities: DataFrame) -> DataFrame:
     """R4: latest version per (osm_type, osm_id); invisible latests are kept
@@ -347,10 +349,8 @@ class IncrementalUpdater:
                 [self.node_history, self.way_history]
             )
             self.node_history, self.way_history = cut
-            latest_rels = self.spark.createDataFrame(
-                [],
-                "osm_id bigint, visible boolean,"
-                " members array<struct<type:string,id:bigint,role:string>>",
+            latest_rels = self.spark.createDataFrame([], RELATION_SCHEMA).select(
+                "osm_id", "visible", "members"
             )
         dirty_ways, dirty_rels = dirty_parents(
             changed_node_ids, changed_way_ids, latest_state(self.way_history), latest_rels

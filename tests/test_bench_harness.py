@@ -380,3 +380,43 @@ def test_perfbench_trace_targets_resolve_and_restore(monkeypatch):
         tracer.restore()
         for owner, attr, original in patched:
             assert getattr(owner, attr) is original, f"{workload.name}: {attr}"
+
+
+def test_bench_seeded_inputs_match_the_package_schemas(tmp_path, monkeypatch):
+    """The product bench (``perfbench/``) seeds the replication store by
+    hand with pyarrow: the changeset store (``gen.write_changesets_parquet
+    (store=True)``) and the node and way histories
+    (``workloads.seed_replication_data``). Their columns and types must be
+    the package's changeset table and history schemas, so a schema edit
+    that would break the bench's inputs fails here. No Spark session."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from ohsome_planet_spark.sources.osmxml import CHANGESET_SCHEMA
+    from ohsome_planet_spark.streaming.manager import (
+        NODE_HISTORY_SCHEMA,
+        WAY_HISTORY_SCHEMA,
+    )
+
+    monkeypatch.syspath_prepend(os.path.join(REPO, "perfbench"))
+    import gen
+    import workloads
+
+    def columns(schema):
+        return [(f.name, f.dataType) for f in schema]
+
+    def written(path):
+        return columns(from_arrow_schema(pq.read_schema(path)))
+
+    city = gen.make_city(1, gen.CityParams(grid=2, relations=1))
+    store = str(tmp_path / "store.parquet")
+    gen.write_changesets_parquet(city.changesets, store, store=True)
+    assert written(store) == columns(CHANGESET_SCHEMA)
+
+    data = str(tmp_path / "data")
+    workloads.seed_replication_data(city, data)
+    for sub, schema in (("nodes", NODE_HISTORY_SCHEMA), ("ways", WAY_HISTORY_SCHEMA)):
+        assert written(os.path.join(data, sub, "part-0.parquet")) == columns(schema)
+    assert written(os.path.join(data, "changesets", "part-0.parquet")) == columns(
+        CHANGESET_SCHEMA
+    )

@@ -10,9 +10,10 @@ import gzip
 from datetime import datetime, timezone
 
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
+from ohsome_planet_spark.sources.osmxml import CHANGESET_SCHEMA
 from ohsome_planet_spark.streaming.changesets import (
-    CHANGESET_STORE_SCHEMA,
     ChangesetStateManager,
     batch_winner,
     open_changesets_older_than,
@@ -56,7 +57,9 @@ def _row(id, open, minute=0, user="u", pos=None):
 
 
 def _df(spark, rows, with_pos=False):
-    schema = CHANGESET_STORE_SCHEMA + (", _pos bigint" if with_pos else "")
+    schema = StructType(
+        CHANGESET_SCHEMA.fields + ([StructField("_pos", LongType())] if with_pos else [])
+    )
     return spark.createDataFrame(
         [tuple(r.values()) for r in rows], schema
     )
@@ -264,7 +267,6 @@ def test_update_to_remote_state_batches_and_advances(spark):
     # ids 101,102 closed by later files; 103 still open
     assert out[101].open is False and out[102].open is False
     assert out[103].open is True
-    assert mgr.closed_ids == {101, 102}
     assert mgr.local_state.sequence == 3  # advanced to the batch tail
     # batch_size=2 -> two upsert batches: state fetches for seq 2 and 3
     state_fetches = [u for u in t.requests if u.endswith(".state.txt")]
@@ -443,7 +445,7 @@ def test_bbox_geom_wkb(spark):
     NULL when any coordinate is missing."""
     import struct
 
-    from ohsome_planet_spark.streaming.changesets import bbox_geom_udf
+    from ohsome_planet_spark.sources.osmxml import bbox_geom_udf
 
     df = spark.createDataFrame(
         [(1, 10.0, 20.0, 11.0, 21.0), (2, None, 20.0, 11.0, 21.0)],
@@ -461,9 +463,9 @@ def test_bbox_geom_wkb(spark):
     assert pts == (10.0, 20.0, 11.0, 20.0, 11.0, 21.0, 10.0, 21.0, 10.0, 20.0)
 
     # the batch-ingest path attaches the same column
-    from ohsome_planet_spark.streaming.changesets import _rows_to_df
+    from ohsome_planet_spark.sources.osmxml import changeset_frame
 
-    out = _rows_to_df(
+    out = changeset_frame(
         spark,
         [{
             "id": 7, "user_id": 1, "created_at": None, "closed_at": None,

@@ -96,13 +96,14 @@ def test_contributions_cli_with_changeset_enrichment(spark, pbf, tmp_path):
     """--changesets wiring (J4): contribution rows carry the changeset's
     hashtags/editor; ids missing from the table get the reference's
     default record (epoch created_at, empty tags)."""
-    from ohsome_planet_spark.schemas import CHANGESET_SCHEMA
+    from ohsome_planet_spark.sources.osmxml import CHANGESET_SCHEMA
 
     cs_path = str(tmp_path / "changesets.parquet")
     spark.createDataFrame(
         [
-            (10, None, None, {"comment": "x #fixit", "created_by": "JOSM"},
-             ["#fixit"], 7, "alice", False, None, None, None, None),
+            (10, 7, None, None, False, "alice",
+             {"comment": "x #fixit", "created_by": "JOSM"}, ["#fixit"],
+             None, None, None, None, None),
         ],
         CHANGESET_SCHEMA,
     ).write.parquet(cs_path)

@@ -13,7 +13,8 @@ from ohsome_planet_spark.operators.contributions import (
     synthesize_contributions,
     with_changesets,
 )
-from ohsome_planet_spark.schemas import CHANGESET_SCHEMA, NODE_SCHEMA, VALID_TO_SENTINEL
+from ohsome_planet_spark.schemas import NODE_SCHEMA, VALID_TO_SENTINEL
+from ohsome_planet_spark.sources.osmxml import CHANGESET_SCHEMA
 
 
 def ts(s):
@@ -198,13 +199,14 @@ def test_changeset_enrichment_with_default(spark):
         [
             (
                 100,
+                1,
                 ts("2019-12-31T23:00:00"),
                 ts("2020-01-01T01:00:00"),
+                False,
+                "u",
                 {"comment": "add #cafe", "created_by": "JOSM"},
                 ["cafe"],
-                1,
-                "u",
-                False,
+                None,
                 None,
                 None,
                 None,

@@ -647,7 +647,7 @@ def test_dual_stream_pass_starts_changesets_from_the_store(spark, mirror, tmp_pa
     """Without ``changeset_state.txt`` or ``--changeset-start-sequence``, a
     dual-stream pass starts the changeset stream at the published state its
     store's newest changeset falls in (``ChangesetStateManager.java:44-57``)."""
-    from ohsome_planet_spark.streaming.changesets import CHANGESET_STORE_SCHEMA
+    from ohsome_planet_spark.sources.osmxml import CHANGESET_SCHEMA
 
     root, data = str(tmp_path / "changesets"), str(tmp_path / "data")
     for seq, ids in ((100, []), (101, [11]), (102, [12]), (103, [13]), (104, [])):
@@ -655,7 +655,7 @@ def test_dual_stream_pass_starts_changesets_from_the_store(spark, mirror, tmp_pa
     newest = datetime(2025, 10, 22, 9, 2)  # the timestamp of state 102
     spark.createDataFrame(
         [(10, 1, newest, newest, False, "One", {}, [], 1.0, 1.0, 2.0, 2.0, None)],
-        CHANGESET_STORE_SCHEMA,
+        CHANGESET_SCHEMA,
     ).write.parquet(os.path.join(data, "changesets"))
 
     assert main(_dual_stream_argv(data, tmp_path, mirror, root)) == 0
@@ -665,6 +665,80 @@ def test_dual_stream_pass_starts_changesets_from_the_store(spark, mirror, tmp_pa
     # the stream started at 102: the minutes up to it (11, 12) were skipped
     store = spark.read.parquet(os.path.join(data, "changesets"))
     assert {r.id for r in store.select("id").collect()} == {10, 13}
+
+
+# one tagged closed changeset (the store's newest, at state 102's time) and
+# one untagged open one; num_changes/comments_count are parsed, not stored
+CHANGESET_DUMP = """<?xml version='1.0' encoding='UTF-8'?>
+<osm version="0.6">
+  <changeset id="10" created_at="2025-10-22T09:02:00Z" closed_at="2025-10-22T09:02:30Z"
+      open="false" uid="7" user="Dump" num_changes="3" comments_count="1"
+      min_lon="10.0" min_lat="20.0" max_lon="11.0" max_lat="21.0">
+    <tag k="comment" v="add #mapathon"/>
+    <tag k="created_by" v="JOSM"/>
+  </changeset>
+  <changeset id="12" created_at="2025-10-22T09:01:00Z" open="true" uid="8" user="Open"/>
+</osm>"""
+
+
+def test_changesets_cli_writes_the_changeset_table(spark, tmp_path, capsys):
+    """``changesets`` writes the one changeset table: the store's columns
+    and types, ``hashtags`` from the ``comment`` tag and ``geom`` the bbox
+    polygon (NULL without a bbox)."""
+    import struct
+
+    dump, out = tmp_path / "dump.osm", str(tmp_path / "changesets")
+    dump.write_text(CHANGESET_DUMP)
+    assert main(["changesets", "--input", str(dump), "--out", out]) == 0
+    assert "wrote 2 changesets" in capsys.readouterr().out
+
+    from ohsome_planet_spark.sources.osmxml import CHANGESET_SCHEMA
+
+    table = spark.read.parquet(out)
+    assert [(f.name, f.dataType) for f in table.schema] == [
+        (f.name, f.dataType) for f in CHANGESET_SCHEMA
+    ]
+    rows = {r.id: r for r in table.collect()}
+    tagged, untagged = rows[10], rows[12]
+    assert tagged.tags == {"comment": "add #mapathon", "created_by": "JOSM"}
+    assert tagged.hashtags == ["mapathon"]
+    assert (tagged.user_id, tagged.user_name, tagged.open) == (7, "Dump", False)
+    assert tagged.created_at == datetime(2025, 10, 22, 9, 2)
+    assert struct.unpack("<10d", tagged.geom[13:]) == (
+        10.0, 20.0, 11.0, 20.0, 11.0, 21.0, 10.0, 21.0, 10.0, 20.0
+    )
+    assert untagged.tags == {} and untagged.hashtags == []
+    assert untagged.open is True and untagged.closed_at is None
+    assert untagged.geom is None
+
+
+def test_bulk_changeset_load_seeds_the_store(spark, tmp_path, capsys):
+    """``changesets --out <data>/changesets`` seeds the store that
+    ``replications --jcs`` upserts: with no state row and no flag the stream
+    starts at the state the store's newest changeset falls in (102), a
+    changeset closed in the dump stays as the dump had it, an open one is
+    replaced and a new one inserted."""
+    root, data = str(tmp_path / "stream"), str(tmp_path / "data")
+    dump = tmp_path / "dump.osm"
+    dump.write_text(CHANGESET_DUMP)
+    assert main([
+        "changesets", "--input", str(dump), "--out", os.path.join(data, "changesets"),
+    ]) == 0
+    for seq, ids in ((100, []), (101, [11]), (102, []), (103, [10, 12]), (104, [13])):
+        _publish_changesets(root, seq, ids)
+    capsys.readouterr()
+
+    assert main([
+        "replications", "--data", data, "--jcs",
+        "--replication-changesets", f"file://{root}",
+    ]) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["changeset_state"] == 104
+    rows = {r.id: r for r in spark.read.parquet(os.path.join(data, "changesets")).collect()}
+    assert set(rows) == {10, 12, 13}  # 11 was published before the start
+    assert (rows[10].user_name, rows[10].hashtags) == ("Dump", ["mapathon"])
+    assert (rows[12].user_name, rows[12].open) == ("One", False)
+    assert (rows[13].user_name, rows[13].open) == ("One", False)
 
 
 def test_dual_stream_pass_without_changeset_state_needs_a_store(spark, mirror, tmp_path):
@@ -696,6 +770,8 @@ def test_seeding_refuses_a_non_empty_store(spark, handoff_mirror, tmp_path, caps
     assert os.listdir(data) == ["nodes"]
     assert (data / "nodes" / "part-0.parquet").read_bytes() == b"kept"
     assert not os.path.exists(os.path.join(out, "state.txt"))
+    # refused before the bulk run: no contributions were written
+    assert not [f for _, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")]
 
 
 def test_seeding_refuses_an_empty_extract(spark, handoff_mirror, tmp_path, capsys):
