@@ -1791,18 +1791,18 @@ def contrib_full_row_from_pbf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fullrow_project(_fullrow_enrich(spark, sf_dir, contribs))
 
 
-def _osc_roundtrip_batch(spark: SparkSession, wave: DataFrame) -> DataFrame:
+def _osc_roundtrip_batch(wave: DataFrame) -> list[dict]:
     """Collect one wave (fixture-sized), write it as osmChange XML, parse
-    it back, and return the entity batch frame — the .osc wire seam the
+    it back, and return the driver rows — the .osc wire seam the
     production replication loop consumes (``apply_sequences`` does the
     identical parse from a server)."""
-    from ..sources.osmxml import encode_osc, osc_batch
+    from ..sources.osmxml import encode_osc, parse_osc_bytes
 
     rows = [
         r.asDict(recursive=True)
         for r in wave.orderBy("osm_type", "osm_id", "version").collect()
     ]
-    return osc_batch(spark, encode_osc(rows))
+    return parse_osc_bytes(encode_osc(rows))
 
 
 @_register("contrib_full_row_incremental", _fullrow_oracle())
@@ -1825,13 +1825,14 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     dirty parent, broken counter continuation, or stale merge leaves the
     un-rebuilt base rows in place and fails the hash.
 
-    Scale shape: each batch costs |diff| + |affected id histories| (the
-    rebuilds semi-join-prune every history table); the merge is an
-    anti-join on the affected-id dimension (broadcast) + union; lineage
-    is truncated per batch so plan depth stays O(1) across batches."""
+    Scale shape: each batch costs |diff| + |affected id histories| (J6/J7
+    are keyed reads decided on the driver, and the rebuilds filter every
+    history to the affected ids); the merge drops the affected ids by one
+    ``IN`` filter per type + union; the histories are lineage-cut from the
+    second wave on, so plan depth stays O(1) across batches."""
     from ..session import truncate_lineage
     from ..sources.pbf import read_pbf
-    from ..streaming.replication import IncrementalUpdater
+    from ..streaming.replication import IncrementalUpdater, ids_in
 
     path = _pbf_fullrow_fixture(spark, sf_dir)
     # the decoded entity table and the bulk(0) seed are one-time
@@ -1873,13 +1874,14 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ents.filter(F.col("version") == 2),
         ents.filter(F.col("version") >= 3),
     )
-    # WAVE-PIPELINED planning: each wave's advance (J6 append + J7
-    # affected ids + history truncation) is cheap and order-dependent,
-    # while its R3 rebuild CONSTRUCTION is the dominant, scale-invariant
-    # driver cost and depends only on the advanced snapshot — so wave
-    # N+1 advances while wave N's rebuilds plan on a worker thread
-    # (round-10 verdict, Next #3). Histories stay O(1) deep because
-    # advance_batch truncates them in place per wave.
+    # WAVE-PIPELINED planning: each wave's advance (keyed J6/J7 reads,
+    # the delta append, and from the second wave the history lineage cut)
+    # is cheap and order-dependent, while its R3 rebuild CONSTRUCTION is
+    # the dominant, scale-invariant driver cost and depends only on the
+    # advanced snapshot — so wave N+1 advances while wave N's rebuilds
+    # plan on a worker thread (round-10 verdict, Next #3). Histories stay
+    # O(1) deep because advance_batch cuts a history that already carries
+    # an earlier wave's delta.
     from ..session import scope_pool, truncate_lineage_many
 
     def _seamed_rebuilds(snapshot, affected):
@@ -1896,28 +1898,19 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scope_pool(len(waves)) as pool:
         staged_waves = []
         for wave in waves:
-            batch = _osc_roundtrip_batch(spark, wave)
-            snapshot, affected = updater.advance_batch(batch)
+            snapshot, affected = updater.advance_batch(_osc_roundtrip_batch(wave))
             staged_waves.append(
                 (affected, pool.submit(_seamed_rebuilds, snapshot, affected))
             )
-        for (aff_nodes, aff_ways, aff_rels), fut in staged_waves:
+        for affected, fut in staged_waves:
             rebuilt = fut.result()
-            affected = (
-                aff_nodes.select(F.lit("node").alias("osm_type"), "osm_id")
-                .unionByName(
-                    aff_ways.select(F.lit("way").alias("osm_type"), "osm_id")
-                )
-                .unionByName(
-                    aff_rels.select(F.lit("relation").alias("osm_type"), "osm_id")
-                )
-            )
             # R4 delete-insert merge: replace every affected id's rows with
-            # the rebuilt ones (the affected-id dim is batch-sized ->
-            # broadcast)
-            contribs = contribs.join(
-                F.broadcast(affected), ["osm_type", "osm_id"], "left_anti"
-            )
+            # the rebuilt ones (the affected ids are batch-sized driver
+            # sets -> one IN filter per type)
+            dropped = F.lit(False)
+            for kind, ids in zip(("node", "way", "relation"), affected):
+                dropped = dropped | ((F.col("osm_type") == kind) & ids_in("osm_id", ids))
+            contribs = contribs.filter(~dropped)
             for frame in rebuilt:
                 contribs = contribs.unionByName(frame)
     # stage the merged table once, after the LAST wave (intermediate

@@ -4,6 +4,7 @@ checkpoint state."""
 
 from __future__ import annotations
 
+import warnings
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
@@ -209,7 +210,7 @@ def replication_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers each — persist so the events window computes once
     from pyspark.storagelevel import StorageLevel
 
-    from ..session import register_cached
+    from ..session import empty_frame, register_cached
 
     hist = register_cached(hist.persist(StorageLevel.MEMORY_AND_DISK))
 
@@ -237,8 +238,8 @@ def replication_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("refs"),
     )
     changed = kept.select("osm_id").distinct()
-    no_changed_ways = spark.createDataFrame([], "osm_id bigint")
-    no_relations = spark.createDataFrame([], RELATION_SCHEMA).select(
+    no_changed_ways = empty_frame(spark, "osm_id bigint")
+    no_relations = empty_frame(spark, RELATION_SCHEMA).select(
         "osm_id", "visible", "members"
     )
     dirty_ways, _ = dirty_parents(changed, no_changed_ways, ways, no_relations)
@@ -435,6 +436,16 @@ def _stream_conf(
         if is_local_master and os.access("/dev/shm", os.W_OK)
         else None
     )
+    if ckpt_base is None and not is_local_master:
+        # Spark's default temp checkpoint is a driver-local directory: the
+        # same node-locality hazard as /dev/shm once executors are remote
+        warnings.warn(
+            "streaming checkpoints fall back to a driver-local temp directory "
+            f"on master {spark.sparkContext.master!r}; set SPARK_GRAFT_STREAM_CKPT "
+            "to storage every executor can reach",
+            RuntimeWarning,
+            stacklevel=3,
+        )
     ckpt_key = "spark.sql.streaming.checkpointLocation"
     ckpt_dir = None
     if ckpt_base:

@@ -100,6 +100,14 @@ def release_cached(blocking: bool = False) -> int:
     return _SCOPE.get().release(blocking)
 
 
+def empty_frame(spark: SparkSession, schema):
+    """An empty frame of ``schema`` that starts no Python worker.
+    ``createDataFrame([], schema)`` goes through a Python RDD, so every
+    job that reads it forks the Python daemon and its workers; an empty
+    JVM RDD has no partitions to run."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 def truncate_lineage(df, eager: bool = False):
     """Cut a DataFrame's lineage (iterative algorithms and staged pipeline
     seams must, or plan depth doubles per round/stage).

@@ -23,6 +23,7 @@ from __future__ import annotations
 import bz2
 import gzip
 import os
+import struct
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
@@ -129,15 +130,6 @@ def encode_osc(rows: list[dict]) -> bytes:
 _COLUMNS = ENTITY_ROW_SCHEMA.fieldNames()
 
 
-def osc_batch(spark: SparkSession, data: bytes) -> DataFrame:
-    """One osmChange document → entity batch frame: the driver-side parse
-    every replication consumer applies (the minute files are
-    kilobyte-scale, like the reference's own fetch loop)."""
-    return spark.createDataFrame(
-        pd.DataFrame(parse_osc_bytes(data), columns=_COLUMNS), ENTITY_ROW_SCHEMA
-    )
-
-
 def read_osc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """One or many .osc(.gz) files → entity DataFrame (S10)."""
     from ..session import ship_package
@@ -179,10 +171,8 @@ CHANGESET_SCHEMA = T.StructType(
         T.StructField("geom", T.BinaryType()),
     ]
 )
-# the parsed columns: the table without the two the builder derives
-_PARSED_SCHEMA = T.StructType(
-    [f for f in CHANGESET_SCHEMA if f.name not in ("hashtags", "geom")]
-)
+# the parsed columns: the table without the one the builder derives
+_PARSED_SCHEMA = T.StructType([f for f in CHANGESET_SCHEMA if f.name != "hashtags"])
 
 _BZ2_STREAM_MAGIC = b"BZh91AY&SY"
 
@@ -204,11 +194,34 @@ def split_bz2_streams(data: bytes) -> list[bytes]:
     return [data[offsets[i] : offsets[i + 1]] for i in range(len(offsets) - 1)]
 
 
+# little-endian WKB header: byteOrder=1, type=3 (Polygon), 1 ring, 5 points
+_BBOX_WKB_HEADER = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
+
+
+def bbox_wkb(min_lon, min_lat, max_lon, max_lat) -> bytes | None:
+    """WKB bbox polygon from min/max lon/lat — the store-write equivalent
+    of the reference's ``getBBOXasWKT`` (``OSMChangesets.java:81-88`` /
+    ``ChangesetDB.java:178``): CCW ring (min,min) → (max,min) → (max,max)
+    → (min,max) → close, None when any coordinate is missing."""
+    if None in (min_lon, min_lat, max_lon, max_lat):
+        return None
+    return _BBOX_WKB_HEADER + struct.pack(
+        "<10d",
+        min_lon, min_lat, max_lon, min_lat, max_lon, max_lat, min_lon, max_lat,
+        min_lon, min_lat,
+    )
+
+
 def parse_changesets_bytes(data: bytes) -> list[dict]:
-    """<changeset> elements → rows (``ChangesetXmlReader.java``)."""
+    """<changeset> elements → rows (``ChangesetXmlReader.java``), with the
+    bbox polygon ``geom`` (:func:`bbox_wkb`) computed at the parse."""
     root = ET.fromstring(data)
     out = []
     for cs in root.iter("changeset"):
+        bbox = [
+            float(cs.get(k)) if cs.get(k) else None
+            for k in ("min_lon", "min_lat", "max_lon", "max_lat")
+        ]
         out.append(
             {
                 "id": int(cs.get("id")),
@@ -222,10 +235,8 @@ def parse_changesets_bytes(data: bytes) -> list[dict]:
                 "user_id": int(cs.get("uid", "0")),
                 "user_name": cs.get("user", ""),
                 "open": cs.get("open", "false") == "true",
-                "min_lon": float(cs.get("min_lon")) if cs.get("min_lon") else None,
-                "min_lat": float(cs.get("min_lat")) if cs.get("min_lat") else None,
-                "max_lon": float(cs.get("max_lon")) if cs.get("max_lon") else None,
-                "max_lat": float(cs.get("max_lat")) if cs.get("max_lat") else None,
+                **dict(zip(("min_lon", "min_lat", "max_lon", "max_lat"), bbox)),
+                "geom": bbox_wkb(*bbox),
                 # ChangesetXmlReader.java:65-66
                 "num_changes": int(cs.get("num_changes", "0")),
                 "comments_count": int(cs.get("comments_count", "0")),
@@ -234,61 +245,32 @@ def parse_changesets_bytes(data: bytes) -> list[dict]:
     return out
 
 
-def bbox_geom_udf():
-    """WKB bbox polygon from min/max lon/lat — the store-write equivalent
-    of the reference's ``getBBOXasWKT``
-    (``OSMChangesets.java:81-88`` / ``ChangesetDB.java:178``): CCW ring
-    (min,min) → (max,min) → (max,max) → (min,max) → close, NULL when any
-    coordinate is missing. Arrow-batched (no native double→IEEE-bytes
-    expression exists); runs once per store write, off the query hot path.
-    """
-    import math
-    import struct
-
-    from pyspark.sql.functions import pandas_udf
-
-    # little-endian WKB: byteOrder=1, type=3 (Polygon), 1 ring, 5 points
-    header = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
-
-    @pandas_udf("binary")
-    def _bbox_wkb(
-        min_lon: pd.Series, min_lat: pd.Series, max_lon: pd.Series, max_lat: pd.Series
-    ) -> pd.Series:
-        out = []
-        for a, b, c, d in zip(min_lon, min_lat, max_lon, max_lat):
-            if any(v is None or (isinstance(v, float) and math.isnan(v)) for v in (a, b, c, d)):
-                out.append(None)
-            else:
-                out.append(header + struct.pack("<10d", a, b, c, b, c, d, a, d, a, b))
-        return pd.Series(out, dtype=object)
-
-    return _bbox_wkb
-
-
 def changeset_frame(
     spark: SparkSession, rows: list[dict] | DataFrame, with_pos: bool = False
 ) -> DataFrame:
     """The one builder of the changeset table: parsed changesets
     (:func:`parse_changesets_bytes` dicts, or a frame of them) → a
     :data:`CHANGESET_SCHEMA` frame, with ``hashtags`` derived from the
-    ``comment`` tag (A10) and ``geom`` from the bbox. ``with_pos`` appends
-    ``_pos``, the rows' apply order, for ``streaming.changesets.batch_winner``."""
+    ``comment`` tag (A10), a JVM expression, so building the table runs no
+    Python worker. ``with_pos`` appends ``_pos``, the rows' apply order,
+    for ``streaming.changesets.batch_winner``."""
     from ..functions.hashtags import hashtags_from_tags_expr
+    from ..session import empty_frame
 
     if not isinstance(rows, DataFrame):
         schema = T.StructType(
             _PARSED_SCHEMA.fields + ([T.StructField("_pos", T.LongType())] if with_pos else [])
         )
-        pdf = pd.DataFrame(rows, columns=_PARSED_SCHEMA.fieldNames())
-        if with_pos:
-            pdf["_pos"] = range(len(pdf))
-        rows = spark.createDataFrame(pdf if len(pdf) else [], schema)
-    return rows.withColumns(
-        {
-            "hashtags": hashtags_from_tags_expr(F.col("tags")),
-            "geom": bbox_geom_udf()("min_lon", "min_lat", "max_lon", "max_lat"),
-        }
-    ).select(*CHANGESET_SCHEMA.fieldNames(), *(["_pos"] if with_pos else []))
+        if rows:
+            pdf = pd.DataFrame(rows, columns=_PARSED_SCHEMA.fieldNames())
+            if with_pos:
+                pdf["_pos"] = range(len(pdf))
+            rows = spark.createDataFrame(pdf, schema)
+        else:
+            rows = empty_frame(spark, schema)
+    return rows.withColumn("hashtags", hashtags_from_tags_expr(F.col("tags"))).select(
+        *CHANGESET_SCHEMA.fieldNames(), *(["_pos"] if with_pos else [])
+    )
 
 
 def read_changesets(spark: SparkSession, path: str) -> DataFrame:

@@ -53,6 +53,7 @@ from typing import Callable, Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..session import empty_frame
 from ..sources.osmxml import CHANGESET_SCHEMA, changeset_frame, parse_changesets_bytes
 from .replication import ReplicationState
 from .server import Server
@@ -189,7 +190,7 @@ class ChangesetStateManager:
         if os.path.isdir(self._store_path):
             self.store = self.spark.read.parquet(self._store_path)
         else:
-            self.store = self.spark.createDataFrame([], CHANGESET_SCHEMA)
+            self.store = empty_frame(self.spark, CHANGESET_SCHEMA)
         if os.path.exists(self._state_path):
             with open(self._state_path) as f:
                 self.local_state = ReplicationState.parse(f.read())

@@ -17,15 +17,20 @@ Reference behavior (re-expressed, not ported):
   at the last advanced sequence.
 
 Spark shape: the RocksDB latest-state store becomes two append-only
-history tables (``<data>/nodes``, ``<data>/ways``). Each sequence reads
-the table roots, appends only its J6-surviving rows (O(|diff|) I/O), and
-the next sequence re-reads the roots — a *reliable* staged intermediate,
-so lineage is truncated by storage, not ``localCheckpoint`` (executor loss
-mid-catch-up replays from parquet, unlike block-storage checkpoints). The
-J6 replay filter makes a crash between append and state-advance
-idempotent. Each sequence runs in its own run scope, so what it staged is
-released once its files are written, however long a ``--continue`` run
-goes on.
+history tables (``<data>/nodes``, ``<data>/ways``). Each sequence parses
+its diff on the driver, answers J6/J7 with keyed reads of the table roots
+(:class:`.replication.IncrementalUpdater`), rebuilds the affected ids in
+Spark and writes their contributions, then appends its J6-surviving rows,
+already on the driver, as one pyarrow file per non-empty table (O(|diff|)
+I/O, no Spark job). The next sequence re-reads the roots — a *reliable*
+staged intermediate, so lineage is truncated by storage, never by
+``localCheckpoint`` (executor loss mid-catch-up replays from parquet,
+unlike block-storage checkpoints). The keyed reads still scan the store,
+O(store), until the tables are clustered by key. The J6 replay filter
+keeps a crash between append and state-advance from duplicating history
+rows. Each sequence
+runs in its own run scope, so what it staged is released once its files
+are written, however long a ``--continue`` run goes on.
 
 :class:`ContributionReplicationManager` is the one owner of that store:
 ``seed`` writes it from a bulk extract (the bulk → incremental handoff),
@@ -52,13 +57,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..schemas import NODE_SCHEMA, WAY_SCHEMA, history_schema, split_entities
-from ..session import run_scope
+from ..session import empty_frame, run_scope
 from .replication import (
     IncrementalUpdater,
     ReplicationState,
-    latest_state,
-    node_way_backrefs,
+    ids_in,
+    keyed_histories,
+    latest_version,
     process_until,
+    referencing,
     sequence_path,
 )
 from .server import Server, parse_iso
@@ -74,7 +81,7 @@ def _history_or_empty(spark: SparkSession, path: str, schema: StructType) -> Dat
         f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
     ):
         return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+    return empty_frame(spark, schema)
 
 
 @dataclass
@@ -151,15 +158,15 @@ class ContributionReplicationManager:
         """One element as the store holds it (``UpdateStoreRocksDb.query:
         36-57``): its latest version (R4; a tombstone once deleted) and, for
         a node, the ways whose latest version is visible and references it
-        (J7), the rules :class:`IncrementalUpdater` applies. The ``osm_id``
-        filter comes first, so a lookup reads only the row groups whose
-        stats admit the id. Relation history is not kept (entity None)."""
+        (J7). Both are the keyed reads :class:`IncrementalUpdater` answers
+        J6/J7 with, so a lookup reads only the row groups whose stats admit
+        the id. Relation history is not kept (entity None)."""
         if osm_type == "relation":
             return {"entity": None}
         nodes, ways = self._history()
-        row = latest_state(
-            (nodes if osm_type == "node" else ways).filter(F.col("osm_id") == osm_id)
-        ).first()
+        history = nodes if osm_type == "node" else ways
+        versions = history.filter(ids_in("osm_id", [osm_id])).collect()
+        row = latest_version(versions) if versions else None
         entry = {
             "entity": None
             if row is None
@@ -168,11 +175,11 @@ class ContributionReplicationManager:
         if osm_type == "node":
             # the latest version of every way that ever referenced the node
             # decides, including ones that since dropped it or were deleted
-            touching = ways.filter(F.array_contains("refs", osm_id)).select("osm_id")
-            backrefs = node_way_backrefs(
-                latest_state(ways.join(touching, "osm_id", "left_semi"))
-            ).filter(F.col("node_id") == osm_id)
-            entry["ways"] = sorted(r.way_id for r in backrefs.collect())
+            parents = keyed_histories(
+                ways, (), ("osm_id", "version", "ts", "visible", "refs"),
+                touching=f"array_contains(refs, {int(osm_id)})",
+            )
+            entry["ways"] = sorted(referencing(parents, "refs", lambda n: n == osm_id))
         return entry
 
     # -- state row (ContributionStateManager.java:80-114) ------------------
@@ -226,8 +233,8 @@ class ContributionReplicationManager:
         if self.max_size > 0:
             seqs = seqs[: self.max_size]
         for seq in seqs:
-            # what a sequence stages (its deltas, the enrichment input, the
-            # history checkpoints) is released once its files are written
+            # whatever a sequence stages is released once its files are
+            # written
             with run_scope():
                 self._process(self.server.get_remote_state(seq))
         return len(seqs)
@@ -238,15 +245,13 @@ class ContributionReplicationManager:
         .java:177-245``)."""
         from ..operators.contributions import enrich_contributions
         from ..sources.geoparquet import write_contributions
-        from ..sources.osmxml import osc_batch
+        from ..sources.osmxml import parse_osc_bytes
 
         seq = state.sequence
         updater = IncrementalUpdater(self.spark, *self._history())
         node_contribs, way_contribs = updater.apply_batch(
-            osc_batch(self.spark, self.server.get_replication_file(seq))
+            parse_osc_bytes(self.server.get_replication_file(seq))
         )
-        # only the J6-surviving delta is appended to storage — O(|diff|)
-        new_nodes, new_ways = updater.last_applied
 
         contribs = node_contribs.unionByName(way_contribs, allowMissingColumns=True)
         # the reference drops contributions with no tags before or after
@@ -268,14 +273,29 @@ class ContributionReplicationManager:
         )
 
         # durable history append (the RocksDB-commit analog,
-        # ``updater.updateStore()``) — O(|diff|) rows; the next sequence
-        # plans against the re-read table roots, not this lineage
-        new_nodes.write.mode("append").parquet(self._path("nodes"))
-        new_ways.write.mode("append").parquet(self._path("ways"))
+        # ``updater.updateStore()``): the J6-surviving delta is already on
+        # the driver, so each non-empty table becomes one file, and the
+        # next sequence plans against the re-read table roots
+        for sub, delta in zip(("nodes", "ways"), updater.last_applied):
+            if delta.num_rows:
+                self._append_history(sub, seq, delta)
 
         self._publish_state(state, out_path)
         self._advance_local_state(state)
         self.applied.append(seq)
+
+    def _append_history(self, sub: str, seq: int, delta) -> None:
+        """One history file for one sequence's delta, written beside the
+        table under a hidden name (Spark lists no dot-files) and renamed
+        into place, so a crash never leaves a half-written file."""
+        import pyarrow.parquet as pq
+
+        root = self._path(sub)
+        os.makedirs(root, exist_ok=True)
+        name = f"seq-{seq:09d}.parquet"
+        tmp = os.path.join(root, f".{name}.tmp")
+        pq.write_table(delta, tmp, compression="zstd")
+        os.replace(tmp, os.path.join(root, name))
 
     def _publish_state(self, state: ReplicationState, parquet_path: str) -> None:
         """Published artifacts next to the parquet: per-sequence

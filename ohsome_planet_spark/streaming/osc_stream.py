@@ -15,8 +15,9 @@ files. What Structured Streaming adds over the driver loop:
 
 Per-batch work: the micro-batch's rows are the raw XML texts (the minute
 files are kilobyte-scale, same driver-side footprint as the reference's
-fetch loop); parsing + diff application stay the cluster-side DataFrame
-plans in :mod:`.replication`.
+fetch loop); each is parsed on the driver and applied by key
+(:meth:`.replication.IncrementalUpdater.apply_batch`), and only the
+rebuilds of the affected ids are cluster-side plans.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ __all__ = ["stream_osc_directory"]
 
 
 def _apply_micro_batch(batch_df: DataFrame, updater: IncrementalUpdater) -> None:
-    from ..sources.osmxml import osc_batch
+    from ..sources.osmxml import parse_osc_bytes
 
     # one row per file; minute files are km-scale so collecting the XML to
     # the driver matches the reference's own fetch loop. Apply in filename
@@ -41,7 +42,7 @@ def _apply_micro_batch(batch_df: DataFrame, updater: IncrementalUpdater) -> None
         ).collect()
     )
     for _, xml in files:
-        updater.apply_batch(osc_batch(batch_df.sparkSession, xml.encode()))
+        updater.apply_batch(parse_osc_bytes(xml.encode()))
 
 
 def stream_osc_directory(

@@ -3,31 +3,41 @@
 The reference keeps RocksDB latest-state + back-reference stores and
 applies one ``.osc.gz`` per micro-batch
 (``ohsome-replication-update/.../ContributionUpdater.java``,
-``ContributionStateManager.java``). The Spark shape replaces every store
-with a table + join:
+``ContributionStateManager.java``). Here every store is a history table,
+and the rules are written twice: once relationally, as the spec (and the
+registry's ``replication_batch``), and once by key, as the updater runs
+them:
 
-- latest-state store  → a Parquet/Delta table keyed by (osm_type, osm_id),
-  updated by an anti-join + union merge (R4);
+- latest-state store  → the newest stored version per (osm_type, osm_id)
+  (R4: :func:`latest_state`; by key, :func:`latest_version`);
 - back-reference stores → derived on demand from the latest ways/relations
-  by exploding refs/members (J7) — no merge-operators, no state maintenance;
-- diff application   → equi-join of the batch against the before-state with
-  the reference's filter semantics (J6): drop versions ≤ stored version and
-  deletes that have no before-state (``ContributionUpdater.java:338-369``);
+  by their refs/members (J7: :func:`dirty_parents`; by key,
+  :func:`referencing`) — no merge-operators, no state maintenance;
+- diff application   → the reference's filter semantics (J6): drop
+  versions ≤ stored version and deletes that have no before-state
+  (``ContributionUpdater.java:338-369``; :func:`filter_diff_against_state`);
 - incremental rebuild → rerun the (deterministic) contribution synthesis on
   the affected ids only (R3); counters continue because the full history of
   an affected id participates in the windows.
 
-Each batch touches |diff| + |affected parents| rows, never the planet.
+A batch touches its keys: the diff is parsed on the driver, so its ids are
+known before any Spark job, and J6/J7 are keyed reads (one ``osm_id IN
+(…)`` expression per key set, :func:`keyed_histories`) that bring back
+only ids, versions and ``visible``/``refs``/``members``; the rules then run
+in Python, and the rebuilds read the affected ids' histories only. What a
+batch plans, shuffles and collects is O(|diff| + |affected histories|).
+Each keyed read still scans the store (O(store)) until the history tables
+are clustered by key.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-
-from ..schemas import RELATION_SCHEMA
+from pyspark.sql.types import StructType
 
 
 def latest_state(entities: DataFrame) -> DataFrame:
@@ -125,9 +135,21 @@ def dirty_parents(
     return dirty_ways, dirty_rels
 
 
-def rebuild_affected_nodes(
-    node_history: DataFrame, affected_ids: DataFrame
-) -> DataFrame:
+def _in_sql(expr: str, ids) -> str:
+    if not ids:
+        return "false"
+    return f"{expr} IN ({', '.join(str(int(i)) for i in sorted(ids))})"
+
+
+def ids_in(col: str, ids) -> Column:
+    """``col IN (…)`` over a driver-side key set as ONE SQL expression, so
+    building it is one py4j hop (``isin(*ids)`` makes one per id); Parquet
+    min/max statistics and bloom filters can skip row groups on it. An
+    empty set is ``false``."""
+    return F.expr(_in_sql(col, ids))
+
+
+def rebuild_affected_nodes(node_history: DataFrame, affected_ids) -> DataFrame:
     """R3 for nodes: rerun the full synthesis on affected ids only. The
     deterministic windows reproduce minor/edits counters exactly, so no
     explicit counter continuation state is needed."""
@@ -136,14 +158,14 @@ def rebuild_affected_nodes(
         synthesize_contributions,
     )
 
-    affected = node_history.join(affected_ids.select("osm_id"), "osm_id", "left_semi")
+    affected = node_history.filter(ids_in("osm_id", affected_ids))
     return synthesize_contributions(node_contribution_events(affected))
 
 
 def rebuild_affected_ways(
     way_history: DataFrame,
     node_history: DataFrame,
-    affected_ids: DataFrame,
+    affected_ids,
     bundled: DataFrame | None = None,
 ) -> DataFrame:
     from ..operators.contributions import (
@@ -151,9 +173,9 @@ def rebuild_affected_ways(
         way_contribution_events,
     )
 
-    affected = way_history.join(affected_ids.select("osm_id"), "osm_id", "left_semi")
+    affected = way_history.filter(ids_in("osm_id", affected_ids))
     if bundled is not None:
-        bundled = bundled.join(affected_ids.select("osm_id"), "osm_id", "left_semi")
+        bundled = bundled.filter(ids_in("osm_id", affected_ids))
     return synthesize_contributions(
         way_contribution_events(affected, node_history, bundled=bundled)
     )
@@ -163,7 +185,7 @@ def rebuild_affected_relations(
     rel_history: DataFrame,
     way_history: DataFrame,
     node_history: DataFrame,
-    affected_ids: DataFrame,
+    affected_ids,
     bundled: DataFrame | None = None,
 ) -> DataFrame:
     """R3 for relations: rerun the nested J2+J3 synthesis on affected
@@ -177,7 +199,7 @@ def rebuild_affected_relations(
         synthesize_contributions,
     )
 
-    affected = rel_history.join(affected_ids.select("osm_id"), "osm_id", "left_semi")
+    affected = rel_history.filter(ids_in("osm_id", affected_ids))
     return synthesize_contributions(
         relation_contribution_events(
             affected, way_history, node_history, bundled_ways=bundled
@@ -246,6 +268,85 @@ def process_until(
     return changeset_ts
 
 
+# --- keyed reads: J6/J7 answered by key on the driver -----------------------
+
+
+def keyed_histories(
+    history: DataFrame, ids, cols: tuple[str, ...], touching: str | None = None
+) -> dict[int, list]:
+    """The stored versions (``cols`` only) of every id in ``ids`` and, with
+    a ``touching`` SQL predicate, of every id that has a version matching
+    it, grouped by id on the driver. A touching id needs its FULL history,
+    since its latest version decides (a way whose latest version dropped
+    the moved node is no parent), so it costs a second read: first the
+    matching ids, then all their versions."""
+    ids = set(ids)
+    if touching is not None:
+        ids |= {r.osm_id for r in history.filter(touching).select("osm_id").collect()}
+    out: dict[int, list] = {}
+    if ids:
+        for r in history.filter(ids_in("osm_id", ids)).select(*cols).collect():
+            out.setdefault(r.osm_id, []).append(r)
+    return out
+
+
+def latest_version(versions: list):
+    """R4 over one id's versions, in :func:`latest_state`'s order."""
+    return max(versions, key=lambda r: (r["version"], r["ts"]))
+
+
+def referencing(histories: dict[int, list], field: str, hit) -> set[int]:
+    """J7 by key: the ids whose latest version is visible and has an entry
+    of ``field`` (``refs`` / ``members``) for which ``hit`` holds."""
+    out = set()
+    for pid, versions in histories.items():
+        latest = latest_version(versions)
+        if latest["visible"] and any(hit(x) for x in latest[field] or ()):
+            out.add(pid)
+    return out
+
+
+def _j6(diff: list[dict], histories: dict[int, list]) -> list[dict]:
+    """J6 by key (:func:`filter_diff_against_state`'s rule): a version
+    above the stored latest one, or a visible version of an id the store
+    lacks. Replays and deletes without a before-state drop."""
+    keep = []
+    for r in diff:
+        stored = histories.get(r["osm_id"])
+        if stored is None:
+            if r["visible"]:
+                keep.append(r)
+        elif r["version"] > max(v["version"] for v in stored):
+            keep.append(r)
+    return keep
+
+
+def _arrow_rows(rows: list[dict], schema: StructType):
+    """Driver rows → a pyarrow table of ``schema`` (absent keys are
+    nulls), the form that becomes a frame (``createDataFrame`` of a table
+    runs on the JVM) and a history file alike."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.fieldNames()
+    return pa.Table.from_pylist(
+        [{n: r.get(n) for n in names} for r in rows], schema=to_arrow_schema(schema)
+    )
+
+
+class Snapshot(NamedTuple):
+    """The histories after one advance, plus the keys the rebuilds prune
+    with: ``way_refs``, every node any version of an affected way
+    references; ``member_ways``, every way any version of an affected
+    relation references."""
+
+    node_history: DataFrame
+    way_history: DataFrame
+    rel_history: DataFrame | None
+    way_refs: frozenset
+    member_ways: frozenset
+
+
 # --- incremental update loop (S12 end-to-end; ContributionUpdater.java) ------
 
 
@@ -258,9 +359,19 @@ class IncrementalUpdater:
     minor/edit counters from stored values; here the *full history* of an
     affected id is kept (a partitioned table at planet scale) and the
     deterministic window synthesis reproduces the continued counters —
-    no counter state to maintain or corrupt. Each batch's cost is
-    |diff| + |histories of affected ids|, never the planet.
+    no counter state to maintain or corrupt.
+
+    A batch touches its keys: the diff arrives as driver rows, J6 and J7
+    are keyed reads that bring back only ids, versions and
+    ``visible``/``refs``/``members`` (:func:`keyed_histories`), and the
+    R3 rebuilds read the histories of the affected ids only. Each read
+    still scans the store (O(store)) until the history tables are
+    clustered by key; what a batch plans, shuffles and brings back is
+    O(|diff| + |affected histories|).
     """
+
+    # each type's history attribute
+    _HISTORY = {"node": "node_history", "way": "way_history", "relation": "rel_history"}
 
     def __init__(
         self,
@@ -276,108 +387,126 @@ class IncrementalUpdater:
         # also J6-filters relation rows, propagates member dirtiness to
         # parent relations (J7) and returns a third contribution frame
         self.rel_history = rel_history
+        # the types whose history already carries an earlier batch's delta
+        self._grown: set[str] = set()
 
-    def _typed(self, batch: DataFrame, osm_type: str, history: DataFrame) -> DataFrame:
-        """Project the batch onto one type's history schema; columns the
-        batch doesn't carry (a node-only .osc slice has no refs/members)
-        fill with typed nulls."""
-        present = set(batch.columns)
-        sel = [
-            (F.col(f.name) if f.name in present else F.lit(None).cast(f.dataType)).alias(
-                f.name
-            )
-            for f in history.schema.fields
-            if f.name != "osm_type"
-        ]
-        return batch.filter(F.col("osm_type") == osm_type).select("osm_type", *sel)
+    def _append(self, new: dict[str, list[dict]]) -> tuple:
+        """Append each type's J6 survivors to its history; returns the
+        deltas as pyarrow tables. An empty delta leaves its history as it
+        is and builds no frame. A history that already carries an earlier
+        batch's delta is lineage-cut once it grows again, so the next
+        batch plans against a leaf (independent frames — planned
+        concurrently); a one-batch updater never cuts."""
+        from ..session import truncate_lineage_many
 
-    def advance_batch(self, batch: DataFrame):
-        """The cheap, ORDER-DEPENDENT half of a batch: J6-filter the diff
-        against the latest stored state, append the survivors to the
-        histories (which advance in place and are lineage-truncated so
-        the next batch plans against leaves), and derive the J7
-        affected-id frames. Returns ``(snapshot, affected)``: the
-        post-advance (node, way, rel) history triple and the per-type
-        affected-id frames. :meth:`build_rebuilds` depends only on the
-        snapshot, so callers may run it CONCURRENTLY with later advances
-        — wave-pipelined planning (the rebuild construction is the
-        batch's dominant, scale-invariant driver cost)."""
-        from ..session import register_cached, truncate_lineage_many
+        tables, cut = [], []
+        for kind, delta in new.items():
+            history = getattr(self, self._HISTORY[kind])
+            tables.append(_arrow_rows(delta, history.schema))
+            if delta:
+                setattr(self, self._HISTORY[kind], history.unionByName(
+                    self.spark.createDataFrame(tables[-1], history.schema)
+                ))
+                if kind in self._grown:
+                    cut.append(kind)
+                self._grown.add(kind)
+        frames = truncate_lineage_many([getattr(self, self._HISTORY[k]) for k in cut])
+        for kind, frame in zip(cut, frames):
+            setattr(self, self._HISTORY[kind], frame)
+        return tuple(tables)
 
-        nodes = self._typed(batch, "node", self.node_history)
-        ways = self._typed(batch, "way", self.way_history)
+    def advance_batch(self, rows: list[dict]):
+        """The cheap, ORDER-DEPENDENT half of a batch. ``rows`` is the diff
+        as parsed on the driver (:func:`..sources.osmxml.parse_osc_bytes`
+        dicts). J6 keeps the genuinely new versions, which are appended to
+        the histories; J7 finds the parents of what changed. Both are
+        keyed reads of the stored histories, decided in Python. Returns
+        ``(snapshot, affected)``: a :class:`Snapshot` and the per-type
+        affected id sets ``(nodes, ways[, relations])``.
+        :meth:`build_rebuilds` depends only on those, so callers may run
+        it CONCURRENTLY with later advances — wave-pipelined planning (the
+        rebuild construction is the batch's dominant driver cost)."""
+        diff: dict[str, list[dict]] = {"node": [], "way": [], "relation": []}
+        for r in rows:
+            diff[r["osm_type"]].append(r)
 
-        node_state = latest_state(self.node_history)
-        way_state = latest_state(self.way_history)
-        new_nodes = register_cached(
-            filter_diff_against_state(nodes, node_state).persist()
+        def ids(kind):
+            return {r["osm_id"] for r in diff[kind]}
+
+        node_hist = keyed_histories(self.node_history, ids("node"), ("osm_id", "version"))
+        new = {"node": _j6(diff["node"], node_hist)}
+        changed_nodes = {r["osm_id"] for r in new["node"]}
+
+        # every way in the diff or referencing a changed node, in full
+        way_hist = keyed_histories(
+            self.way_history, ids("way"), ("osm_id", "version", "ts", "visible", "refs"),
+            touching=f"exists(refs, r -> {_in_sql('r', changed_nodes)})"
+            if changed_nodes else None,
         )
-        new_ways = register_cached(
-            filter_diff_against_state(ways, way_state).persist()
+        new["way"] = _j6(diff["way"], way_hist)
+        changed_ways = {r["osm_id"] for r in new["way"]}
+        affected_ways = changed_ways | referencing(
+            {w: v for w, v in way_hist.items() if w not in changed_ways},
+            "refs", changed_nodes.__contains__,
         )
-        # the J6-surviving delta, exposed for callers that append it to a
-        # durable history table (ContributionReplicationManager)
-        self.last_applied = (new_nodes, new_ways)
+        way_refs = {
+            n
+            for versions in [way_hist.get(w, ()) for w in affected_ways] + [new["way"]]
+            for v in versions
+            for n in v["refs"] or ()
+        }
+        affected = (frozenset(changed_nodes), frozenset(affected_ways))
 
-        self.node_history = self.node_history.unionByName(new_nodes)
-        self.way_history = self.way_history.unionByName(new_ways)
-
-        changed_node_ids = new_nodes.select("osm_id").distinct()
-        changed_way_ids = new_ways.select("osm_id").distinct()
+        member_ways: set[int] = set()
         if self.rel_history is not None:
-            rels = self._typed(batch, "relation", self.rel_history)
-            new_rels = register_cached(
-                filter_diff_against_state(
-                    rels, latest_state(self.rel_history)
-                ).persist()
+            def hit(m):
+                return (m["type"] == "way" and m["id"] in affected_ways) or (
+                    m["type"] == "node" and m["id"] in changed_nodes
+                )
+
+            rel_hist = keyed_histories(
+                self.rel_history, ids("relation"),
+                ("osm_id", "version", "ts", "visible", "members"),
+                touching="exists(members, m -> "
+                f"(m.type = 'way' AND {_in_sql('m.id', affected_ways)})"
+                f" OR (m.type = 'node' AND {_in_sql('m.id', changed_nodes)}))"
+                if affected_ways or changed_nodes else None,
             )
-            self.rel_history = self.rel_history.unionByName(new_rels)
-            changed_rel_ids = new_rels.select("osm_id").distinct()
-            # truncate in place so BOTH the next advance and this batch's
-            # rebuilds plan against leaves (independent frames — plan
-            # concurrently)
-            cut = truncate_lineage_many(
-                [self.node_history, self.way_history, self.rel_history]
-            )
-            self.node_history, self.way_history, self.rel_history = cut
-            latest_rels = latest_state(self.rel_history).select(
-                "osm_id", "visible", "members"
-            )
-        else:
-            changed_rel_ids = None
-            cut = truncate_lineage_many(
-                [self.node_history, self.way_history]
-            )
-            self.node_history, self.way_history = cut
-            latest_rels = self.spark.createDataFrame([], RELATION_SCHEMA).select(
-                "osm_id", "visible", "members"
-            )
-        dirty_ways, dirty_rels = dirty_parents(
-            changed_node_ids, changed_way_ids, latest_state(self.way_history), latest_rels
-        )
-        affected_ways = changed_way_ids.unionByName(dirty_ways).distinct()
-        if changed_rel_ids is None:
-            affected = (changed_node_ids, affected_ways)
-        else:
-            affected = (
-                changed_node_ids,
-                affected_ways,
-                changed_rel_ids.unionByName(dirty_rels).distinct(),
-            )
+            new["relation"] = _j6(diff["relation"], rel_hist)
+            changed_rels = {r["osm_id"] for r in new["relation"]}
+            affected_rels = changed_rels | referencing(rel_hist, "members", hit)
+            member_ways = {
+                m["id"]
+                for versions in [rel_hist.get(r, ()) for r in affected_rels]
+                + [new["relation"]]
+                for v in versions
+                for m in v["members"] or ()
+                if m["type"] == "way"
+            }
+            affected += (frozenset(affected_rels),)
+
+        # the J6-surviving delta as pyarrow tables, for callers that append
+        # it to a durable history table (ContributionReplicationManager)
+        self.last_applied = self._append(new)
         self.last_affected = affected
-        snapshot = (self.node_history, self.way_history, self.rel_history)
+        snapshot = Snapshot(
+            self.node_history, self.way_history, self.rel_history,
+            frozenset(way_refs), frozenset(member_ways),
+        )
         return snapshot, affected
 
-    def build_rebuilds(self, snapshot, affected):
+    def build_rebuilds(self, snapshot: Snapshot, affected):
         """R3 rebuild pipelines over an advanced snapshot — the heavy,
-        order-INDEPENDENT half of a batch. The per-type constructions are
-        long blocking chains of py4j planning round-trips, so they run on
-        concurrent driver threads; the whole method is also safe to run
-        from a worker thread while later batches advance (wave-pipelined
-        planning — round-10 verdict, Next #3)."""
+        order-INDEPENDENT half of a batch. Each history is filtered to the
+        affected ids; the way rebuild reads only the nodes its ways
+        reference. The per-type constructions are long blocking chains of
+        py4j planning round-trips, so they run on concurrent driver
+        threads; the whole method is also safe to run from a worker thread
+        while later batches advance (wave-pipelined planning — round-10
+        verdict, Next #3)."""
         from ..session import scope_pool
 
-        node_history, way_history, rel_history = snapshot
+        node_history, way_history, rel_history = snapshot[:3]
         if len(affected) == 2:
             changed_node_ids, affected_ways = affected
             with scope_pool(2) as ex:
@@ -386,7 +515,9 @@ class IncrementalUpdater:
                 )
                 fut_ways = ex.submit(
                     rebuild_affected_ways,
-                    way_history, node_history, affected_ways,
+                    way_history,
+                    node_history.filter(ids_in("osm_id", snapshot.way_refs)),
+                    affected_ways,
                 )
                 return fut_nodes.result(), fut_ways.result()
         changed_node_ids, affected_ways, affected_rels = affected
@@ -397,14 +528,9 @@ class IncrementalUpdater:
         # ways referenced by affected relations.
         from ..operators.contributions import bundled_way_instants
 
-        aff_rel_hist = rel_history.join(affected_rels, "osm_id", "left_semi")
-        member_way_ids = (
-            aff_rel_hist.select(F.explode("members").alias("m"))
-            .filter(F.col("m.type") == "way")
-            .select(F.col("m.id").alias("osm_id"))
+        ways_touched = way_history.filter(
+            ids_in("osm_id", affected_ways | snapshot.member_ways)
         )
-        touched_way_ids = affected_ways.unionByName(member_way_ids).distinct()
-        ways_touched = way_history.join(touched_way_ids, "osm_id", "left_semi")
         # lineage-cut, not just persist: the bundled table is re-embedded in
         # the way rebuild, the relation rebuild AND (through the member
         # merge) the member-event union — persist alone leaves its full
@@ -432,30 +558,25 @@ class IncrementalUpdater:
             )
             return fut_nodes.result(), fut_ways.result(), fut_rels.result()
 
-    def apply_batch(self, batch: DataFrame):
-        """One osmChange batch → (node_contribs, way_contribs[, rel_contribs
-        when relation support is on]) for the affected ids; histories
-        advance in place. The J6 filter drops replayed versions so
-        re-applying a batch is idempotent. ``last_affected`` carries the
-        per-type affected-id frames so callers can delete-and-insert the
+    def apply_batch(self, rows: list[dict]):
+        """One osmChange batch (driver rows) → (node_contribs, way_contribs
+        [, rel_contribs when relation support is on]) for the affected ids;
+        histories advance in place. The J6 filter drops replayed versions
+        so re-applying a batch is idempotent. ``last_affected`` carries the
+        per-type affected id sets so callers can delete-and-insert the
         rebuilt rows into a durable contribution table
         (``ContributionStateManager.java:176-245``'s update write).
         Composition of :meth:`advance_batch` + :meth:`build_rebuilds`;
         multi-batch callers can pipeline the two halves instead."""
-        snapshot, affected = self.advance_batch(batch)
+        snapshot, affected = self.advance_batch(rows)
         return self.build_rebuilds(snapshot, affected)
 
     def apply_sequences(self, server, sequences) -> list[tuple[DataFrame, DataFrame]]:
         """Fetch + parse + apply each replication sequence in order via an
         (injectable-transport) :class:`.server.Server`."""
-        from ..sources.osmxml import osc_batch
+        from ..sources.osmxml import parse_osc_bytes
 
-        # advance_batch truncates the histories in place, so the per-batch
-        # plan stays O(1) deep — the production loop
-        # (ContributionReplicationManager) gets this for free by appending
-        # the delta to a durable history table and re-reading it between
-        # batches
         return [
-            self.apply_batch(osc_batch(self.spark, server.get_replication_file(seq)))
+            self.apply_batch(parse_osc_bytes(server.get_replication_file(seq)))
             for seq in sequences
         ]

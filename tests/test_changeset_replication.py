@@ -442,16 +442,19 @@ def test_upsert_differential_500_random_scenarios(spark):
 def test_bbox_geom_wkb(spark):
     """The store's ``geom`` column is the reference's PostGIS bbox polygon
     (``OSMChangesets.getBBOXasWKT``): CCW WKB ring from min/max lon/lat,
-    NULL when any coordinate is missing."""
+    NULL when any coordinate is missing. The parse computes it."""
     import struct
 
-    from ohsome_planet_spark.sources.osmxml import bbox_geom_udf
+    from ohsome_planet_spark.sources.osmxml import parse_changesets_bytes
 
-    df = spark.createDataFrame(
-        [(1, 10.0, 20.0, 11.0, 21.0), (2, None, 20.0, 11.0, 21.0)],
-        "id bigint, min_lon double, min_lat double, max_lon double, max_lat double",
-    ).withColumn("geom", bbox_geom_udf()("min_lon", "min_lat", "max_lon", "max_lat"))
-    rows = {r.id: r.geom for r in df.collect()}
+    rows = {
+        r["id"]: r["geom"]
+        for r in parse_changesets_bytes(
+            b'<osm><changeset id="1" min_lon="10.0" min_lat="20.0"'
+            b' max_lon="11.0" max_lat="21.0"/>'
+            b'<changeset id="2" min_lat="20.0" max_lon="11.0" max_lat="21.0"/></osm>'
+        )
+    }
     assert rows[2] is None
     wkb = rows[1]
     # little-endian, Polygon (3), one ring of five points
@@ -462,15 +465,18 @@ def test_bbox_geom_wkb(spark):
     pts = struct.unpack("<10d", wkb[13:])
     assert pts == (10.0, 20.0, 11.0, 20.0, 11.0, 21.0, 10.0, 21.0, 10.0, 20.0)
 
-    # the batch-ingest path attaches the same column
+    # the batch-ingest path carries the parsed column into the table
     from ohsome_planet_spark.sources.osmxml import changeset_frame
 
-    out = changeset_frame(
-        spark,
-        [{
-            "id": 7, "user_id": 1, "created_at": None, "closed_at": None,
-            "open": True, "user_name": "u", "tags": {},
-            "min_lon": 1.0, "min_lat": 2.0, "max_lon": 3.0, "max_lat": 4.0,
-        }],
-    ).collect()[0]
-    assert out.geom is not None and out.geom[0] == 1
+    frame = changeset_frame(
+        spark, parse_changesets_bytes(
+            b'<osm><changeset id="7" open="true" min_lon="1.0" min_lat="2.0"'
+            b' max_lon="3.0" max_lat="4.0"/></osm>'
+        )
+    )
+    # no Python UDF is left in the table's plan
+    assert "EvalPython" not in frame._jdf.queryExecution().executedPlan().toString()
+    out = {r.id: r.geom for r in frame.collect()}
+    assert out == {7: bytes(wkb[:13]) + struct.pack(
+        "<10d", 1.0, 2.0, 3.0, 2.0, 3.0, 4.0, 1.0, 4.0, 1.0, 2.0
+    )}

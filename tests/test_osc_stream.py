@@ -51,9 +51,9 @@ def test_stream_applies_files_and_checkpoints(spark, tmp_path):
     applied = []
     orig = IncrementalUpdater.apply_batch
 
-    def counting(self, batch):
-        applied.append(batch.count())
-        return orig(self, batch)
+    def counting(self, rows):
+        applied.append(len(rows))
+        return orig(self, rows)
 
     IncrementalUpdater.apply_batch = counting
     try:

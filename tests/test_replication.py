@@ -21,7 +21,7 @@ from ohsome_planet_spark.streaming.replication import (
     rebuild_affected_ways,
     sequence_path,
 )
-from ohsome_planet_spark.schemas import NODE_SCHEMA, WAY_SCHEMA
+from ohsome_planet_spark.schemas import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA, history_schema
 from ohsome_planet_spark.streaming.manager import NODE_HISTORY_SCHEMA, WAY_HISTORY_SCHEMA
 
 
@@ -169,9 +169,8 @@ class TestStateAndDiff:
         node_hist = spark.createDataFrame(
             nodes_before + [(2, 2, ts(50), 9, 1, "u", True, {}, 2.0, 0.0)], NODE_SCHEMA
         )
-        affected = spark.createDataFrame([(10,)], "osm_id bigint")
         out = sorted(
-            rebuild_affected_ways(ways, node_hist, affected).collect(),
+            rebuild_affected_ways(ways, node_hist, {10}).collect(),
             key=lambda r: r.osm_edits,
         )
         assert [r.osm_minor_version for r in out] == [0, 1]
@@ -355,6 +354,11 @@ def _mk_node(nid, ver, ts, lon, lat, cs=1):
     )
 
 
+def _diff_rows(*tuples, schema=NODE_HISTORY_SCHEMA):
+    """History-shaped tuples → the driver rows a parsed diff is."""
+    return [dict(zip(schema.fieldNames(), t)) for t in tuples]
+
+
 class TestIncrementalRelations:
     @pytest.fixture()
     def seeded(self, spark):
@@ -398,9 +402,7 @@ class TestIncrementalRelations:
 
         nodes, ways, rels, t0 = seeded
         upd = IncrementalUpdater(spark, nodes, ways, rel_history=rels)
-        batch = spark.createDataFrame(
-            [_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9)], NODE_HISTORY_SCHEMA
-        )
+        batch = _diff_rows(_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9))
         n_c, w_c, r_c = upd.apply_batch(batch)
         # the relation was NOT in the batch but its member way's node moved:
         # J7 must mark it dirty and R3 rebuild it with a minor version
@@ -412,7 +414,7 @@ class TestIncrementalRelations:
         assert [w.osm_minor_version for w in wrows] == [0, 1]
         # affected sets exposed for the delete-insert merge
         aff_n, aff_w, aff_r = upd.last_affected
-        assert [r.osm_id for r in aff_r.collect()] == [900]
+        assert sorted(aff_r) == [900]
 
     def test_relation_version_replay_dropped(self, spark, seeded):
         from ohsome_planet_spark.streaming.replication import IncrementalUpdater
@@ -420,7 +422,7 @@ class TestIncrementalRelations:
         nodes, ways, rels, t0 = seeded
         upd = IncrementalUpdater(spark, nodes, ways, rel_history=rels)
         # replay of the stored relation v1 -> J6 drops it; nothing dirty
-        replay = rels
+        replay = [r.asDict(recursive=True) for r in rels.collect()]
         n_c, w_c, r_c = upd.apply_batch(replay)
         assert r_c.count() == 0
         assert upd.rel_history.count() == 1  # history unchanged
@@ -430,8 +432,155 @@ class TestIncrementalRelations:
 
         nodes, ways, _, t0 = seeded
         upd = IncrementalUpdater(spark, nodes, ways)
-        batch = spark.createDataFrame(
-            [_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9)], NODE_HISTORY_SCHEMA
-        )
+        batch = _diff_rows(_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9))
         out = upd.apply_batch(batch)
         assert len(out) == 2  # backward-compatible return shape
+
+
+# --- keyed J6/J7 == the relational spec ---------------------------------------
+
+_T0 = 1_700_000_000
+
+
+def _row(kind, oid, version, visible=True, **payload):
+    return {
+        "osm_type": kind, "osm_id": oid, "version": version,
+        "ts": ts(_T0 + 60 * version), "changeset": version, "user_id": 7,
+        "user_name": "u", "visible": visible, "tags": {"k": "v"},
+        "lon": payload.get("lon"), "lat": payload.get("lat"),
+        "refs": payload.get("refs"), "members": payload.get("members"),
+    }
+
+
+def _payload(rng, kind, node_ids, way_ids):
+    if kind == "node":
+        return {"lon": rng.uniform(0, 1), "lat": rng.uniform(0, 1)}
+    if kind == "way":
+        return {"refs": rng.sample(node_ids, rng.randint(2, 4))}
+    return {"members": [
+        {"type": t, "id": rng.choice(node_ids if t == "node" else way_ids), "role": ""}
+        for t in rng.choices(["node", "way"], k=rng.randint(1, 3))
+    ]}
+
+
+def _keyed_case(seed):
+    """A seeded store and diff: random histories and edits (replays, new
+    versions, several versions of one id, deletes with and without a
+    before-state, creates), plus fixed cases on ids the random part never
+    uses: way 150 dropped node 201 in its latest version before 201
+    moves, node 202 gets two versions in the diff and relation 951 lists
+    it as a member, node 203 is replayed and node 999 is deleted unseen."""
+    import random
+
+    rng = random.Random(seed)
+    node_ids, way_ids, rel_ids = list(range(1, 25)), list(range(100, 112)), list(range(900, 905))
+    store = {"node": [], "way": [], "relation": []}
+    for kind, ids in (("node", node_ids), ("way", way_ids), ("relation", rel_ids)):
+        for oid in ids:
+            n = rng.randint(1, 3)
+            for v in range(1, n + 1):
+                visible = v < n or rng.random() > 0.15
+                store[kind].append(_row(kind, oid, v, visible, **_payload(rng, kind, node_ids, way_ids)))
+    store["node"] += [_row("node", n, 1, lon=0.5, lat=0.5) for n in (201, 202, 203)]
+    store["way"] += [_row("way", 150, 1, refs=[201, 202]), _row("way", 150, 2, refs=[203])]
+    store["relation"] += [
+        _row("relation", 950, 1, members=[{"type": "way", "id": 150, "role": ""}]),
+        _row("relation", 951, 1, members=[{"type": "node", "id": 202, "role": ""}]),
+    ]
+
+    diff = []
+    for kind, ids in (("node", node_ids), ("way", way_ids), ("relation", rel_ids)):
+        stored = {}
+        for r in store[kind]:
+            stored[r["osm_id"]] = max(stored.get(r["osm_id"], 0), r["version"])
+        for oid in rng.sample(ids, len(ids) // 3):
+            top = stored[oid]
+            case = rng.choice(["replay", "new", "several", "delete"])
+            if case == "replay":
+                v = rng.randint(1, top)
+                diff.append(next(r for r in store[kind] if r["osm_id"] == oid and r["version"] == v))
+                continue
+            for v in range(top + 1, top + (3 if case == "several" else 2)):
+                diff.append(_row(kind, oid, v, case != "delete",
+                                 **_payload(rng, kind, node_ids, way_ids)))
+        unseen = max(ids) + 50
+        diff.append(_row(kind, unseen, 1, **_payload(rng, kind, node_ids, way_ids)))
+        diff.append(_row(kind, unseen + 1, 2, False))  # delete, no before-state
+    diff += [
+        _row("node", 201, 2, lon=0.7, lat=0.7),
+        _row("node", 202, 2, lon=0.8, lat=0.8),
+        _row("node", 202, 3, lon=0.9, lat=0.9),
+        _row("node", 203, 1, lon=0.5, lat=0.5),
+        _row("node", 999, 3, False),
+    ]
+    rng.shuffle(diff)
+    return store, diff
+
+
+_HISTORY_SCHEMAS = {
+    "node": NODE_HISTORY_SCHEMA,
+    "way": WAY_HISTORY_SCHEMA,
+    "relation": history_schema(RELATION_SCHEMA),
+}
+
+
+def _frame(spark, kind, rows):
+    schema = _HISTORY_SCHEMAS[kind]
+    return spark.createDataFrame([tuple(r[n] for n in schema.fieldNames()) for r in rows], schema)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_keyed_advance_equals_relational_spec(spark, seed):
+    """The keyed J6/J7 of ``advance_batch`` (driver rows, keyed reads,
+    Python rules) keeps the same delta rows and finds the same affected
+    node, way and relation ids as the relational spec
+    (``filter_diff_against_state`` over ``latest_state``, then
+    ``dirty_parents``)."""
+    from ohsome_planet_spark.streaming.replication import IncrementalUpdater
+
+    store, diff = _keyed_case(seed)
+    kinds = ("node", "way", "relation")
+    hist = {k: _frame(spark, k, store[k]) for k in kinds}
+
+    # the spec
+    new = {
+        k: filter_diff_against_state(
+            _frame(spark, k, [r for r in diff if r["osm_type"] == k]), latest_state(hist[k])
+        )
+        for k in kinds
+    }
+    changed = {k: new[k].select("osm_id").distinct() for k in kinds}
+    dirty_ways, dirty_rels = dirty_parents(
+        changed["node"], changed["way"],
+        latest_state(hist["way"].unionByName(new["way"])),
+        latest_state(hist["relation"].unionByName(new["relation"])).select(
+            "osm_id", "visible", "members"
+        ),
+    )
+
+    def ids(*frames):
+        return {r.osm_id for f in frames for r in f.collect()}
+
+    want_delta = {
+        k: sorted((r.osm_id, r.version, r.visible) for r in new[k].collect()) for k in kinds
+    }
+    want_affected = (
+        ids(changed["node"]),
+        ids(changed["way"], dirty_ways),
+        ids(changed["relation"], dirty_rels),
+    )
+
+    upd = IncrementalUpdater(spark, hist["node"], hist["way"], rel_history=hist["relation"])
+    _, affected = upd.advance_batch(diff)
+    got_delta = {
+        k: sorted((r["osm_id"], r["version"], r["visible"]) for r in table.to_pylist())
+        for k, table in zip(kinds, upd.last_applied)
+    }
+    assert got_delta == want_delta
+    assert tuple(set(a) for a in affected) == want_affected
+
+    # the fixed cases hold on every seed
+    assert (202, 2, True) in got_delta["node"] and (202, 3, True) in got_delta["node"]
+    assert not {203, 999} & {i for i, _, _ in got_delta["node"]}
+    assert 150 not in affected[1] and 950 not in affected[2]
+    assert 951 in affected[2]

@@ -183,6 +183,72 @@ def _assert_bloom_filter(spark, directory: str, column: str) -> None:
     )
 
 
+def test_minute_appends_one_history_file_per_changed_table(
+    spark, mirror, tmp_path, capsys, monkeypatch
+):
+    """The J6 delta of a sequence is appended from the driver as one file
+    per non-empty history table, with no Spark write and no lineage
+    checkpoint: a node-only minute (102) adds exactly one file to
+    ``<data>/nodes`` and none to ``<data>/ways``, the file reads back with
+    the history schema, and re-running the sequence (its state row not yet
+    advanced) adds no history row."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ohsome_planet_spark.streaming.manager import NODE_HISTORY_SCHEMA
+
+    data = str(tmp_path / "data")
+    nodes, ways = os.path.join(data, "nodes"), os.path.join(data, "ways")
+    spark_writes = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kwargs):
+        spark_writes.append(path)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    checkpoints = []
+    real_checkpoint = DataFrame.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        checkpoints.append(self)
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording_checkpoint)
+    argv = [
+        "replications", "--data", data, "--parquet-data", str(tmp_path / "out"),
+        "--endpoint", f"file://{mirror}", "--jcb", "--start-sequence", "100",
+        "--size", "1",
+    ]
+
+    def one_pass():
+        assert main(argv) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    assert one_pass()["applied_sequences"] == [101]
+    before = {d: set(os.listdir(d)) for d in (nodes, ways)}
+    assert one_pass()["applied_sequences"] == [102]
+    added = {d: set(os.listdir(d)) - before[d] for d in (nodes, ways)}
+    assert len(added[nodes]) == 1 and not added[ways]
+    (name,) = added[nodes]
+    delta = spark.read.schema(NODE_HISTORY_SCHEMA).parquet(os.path.join(nodes, name))
+    assert [(r.osm_type, r.osm_id, r.version, r.lat) for r in delta.collect()] == [
+        ("node", 1, 2, 1.5)
+    ]
+    assert not [p for p in spark_writes if p.startswith((nodes, ways))]
+    assert not checkpoints
+
+    def history_rows():
+        return spark.read.schema(NODE_HISTORY_SCHEMA).parquet(nodes).count()
+
+    rows = history_rows()
+    with open(os.path.join(data, "state.txt"), "w") as f:
+        f.write(ReplicationState(101, TS[101]).format())
+    assert one_pass()["applied_sequences"] == [102]
+    assert history_rows() == rows
+    assert set(os.listdir(nodes)) == before[nodes] | added[nodes]
+
+
 def test_replications_cli_noop_when_caught_up(spark, mirror, tmp_path, capsys):
     data = str(tmp_path / "data")
     argv = [

@@ -14,6 +14,7 @@
 """
 
 import os
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,8 +99,10 @@ def test_stream_conf_tmpfs_only_under_local_master(tmp_path, monkeypatch):
     points SPARK_GRAFT_STREAM_CKPT at shared storage."""
     monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT", raising=False)
     stub = _StubSpark("spark://cluster-master:7077")
-    with _stream_conf(stub, "s3a://bucket/history"):
-        assert "spark.sql.streaming.checkpointLocation" not in stub.conf.d
+    # that default is a driver-local temp dir too, so the deployment is warned
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_STREAM_CKPT"):
+        with _stream_conf(stub, "s3a://bucket/history"):
+            assert "spark.sql.streaming.checkpointLocation" not in stub.conf.d
 
     local = _StubSpark("local[4]")
     with _stream_conf(local, "s3a://bucket/history"):
@@ -112,10 +115,12 @@ def test_stream_conf_tmpfs_only_under_local_master(tmp_path, monkeypatch):
     os.makedirs(shared, exist_ok=True)
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT", shared)
     remote = _StubSpark("spark://cluster-master:7077")
-    with _stream_conf(remote, "s3a://bucket/history"):
-        assert remote.conf.d["spark.sql.streaming.checkpointLocation"].startswith(
-            shared
-        )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        with _stream_conf(remote, "s3a://bucket/history"):
+            assert remote.conf.d[
+                "spark.sql.streaming.checkpointLocation"
+            ].startswith(shared)
 
 
 def test_constraint_prop_conf_override_and_nullable_key_join(spark):

@@ -67,15 +67,22 @@ def _run_stream(spark, plan_fn, indir, name):
     # the query alive waiting on wall-clock timers that never fire in-test
     # — previously this burned the full 120 s awaitTermination. Once two
     # consecutive completed micro-batches read zero rows the input is
-    # drained and the memory sink is final, so stop the query instead.
+    # drained and the memory sink is final, so stop the query instead, but
+    # only while the source reports no data available: a timer or watermark
+    # no-data batch also reads zero rows with a flush still pending. The
+    # poll and the final wait share one 120 s deadline.
     deadline = time.time() + 120
     while time.time() < deadline and q.isActive:
         rp = q.recentProgress
-        if len(rp) >= 2 and all(p["numInputRows"] == 0 for p in rp[-2:]):
+        if (
+            len(rp) >= 2
+            and all(p["numInputRows"] == 0 for p in rp[-2:])
+            and not q.status["isDataAvailable"]
+        ):
             q.stop()
             break
         time.sleep(0.2)
-    q.awaitTermination(30)
+    q.awaitTermination(max(0.0, deadline - time.time()))
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 
