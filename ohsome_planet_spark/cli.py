@@ -903,10 +903,10 @@ def main(argv=None) -> int:
 
     rs = sub.add_parser(
         "replication-store",
-        help="peek into replication state tables for OSM elements (n/ID w/ID)",
+        help="peek into replication state tables for OSM elements (n/ID w/ID r/ID)",
     )
     rs.add_argument("--data", required=True, help="replications working dir")
-    rs.add_argument("elements", nargs="+", help="e.g. n/1234 w/34565")
+    rs.add_argument("elements", nargs="+", help="e.g. n/1234 w/34565 r/42")
     rs.set_defaults(fn=cmd_replication_store)
 
     r = sub.add_parser(

@@ -140,7 +140,8 @@ def bundled_way_instants(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     so the way merge runs once, not twice. Three callers do: the bulk
     ``contributions`` CLI (``cli.cmd_contributions``), the registry's
     full-row build (``plans.osm_contrib._fullrow_build``) and the
-    replication rebuild (``IncrementalUpdater.build_rebuilds``)."""
+    replication rebuild of a batch that affects relations
+    (``IncrementalUpdater.apply_batch``)."""
     from ..functions.geometry import way_geom_bundle
     from .temporal_merge import way_contribution_instants
 

@@ -1794,8 +1794,8 @@ def contrib_full_row_from_pbf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _osc_roundtrip_batch(wave: DataFrame) -> list[dict]:
     """Collect one wave (fixture-sized), write it as osmChange XML, parse
     it back, and return the driver rows — the .osc wire seam the
-    production replication loop consumes (``apply_sequences`` does the
-    identical parse from a server)."""
+    production replication loop consumes (``ContributionReplicationManager``
+    does the identical parse of each sequence it fetches)."""
     from ..sources.osmxml import encode_osc, parse_osc_bytes
 
     rows = [
@@ -1814,7 +1814,7 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ContributionStateManager.java:176-245`` delete-inserts the rebuilt
     rows). Here: the same ``.osh.pbf`` wire bytes as the bulk gate →
     version-1 rows seed the histories and a bulk(0) build seeds the
-    contribution table → the version-2/3/4 rows apply as three
+    contribution table → the version-2/3/4 rows apply as two
     ``IncrementalUpdater`` batches (J6 replay filter, J7 dirty
     propagation to parent ways AND relations, R3 affected-only rebuild)
     with each batch's output delete-inserted into the contribution table
@@ -1828,11 +1828,13 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each batch costs |diff| + |affected id histories| (J6/J7
     are keyed reads decided on the driver, and the rebuilds filter every
     history to the affected ids); the merge drops the affected ids by one
-    ``IN`` filter per type + union; the histories are lineage-cut from the
-    second wave on, so plan depth stays O(1) across batches."""
-    from ..session import truncate_lineage
+    ``IN`` filter per type + union. The waves run one after another
+    through ``IncrementalUpdater.apply_batch``, the one entry point the
+    ``replications`` manager runs too; between them each history gains
+    its wave's J6 delta by one union."""
+    from ..session import truncate_lineage, truncate_lineage_many
     from ..sources.pbf import read_pbf
-    from ..streaming.replication import IncrementalUpdater, ids_in
+    from ..streaming.replication import IncrementalUpdater, ids_in, with_delta
 
     path = _pbf_fullrow_fixture(spark, sf_dir)
     # the decoded entity table and the bulk(0) seed are one-time
@@ -1844,75 +1846,39 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ents = _produce_then_query(
         spark, sf_dir, "fullrow_ents", lambda: read_pbf(spark, path)
     )
-    all_nodes, all_ways, all_rels = split_entities(ents)
-
     seed = F.col("version") == 1
-    updater = IncrementalUpdater(
-        spark,
-        all_nodes.filter(seed),
-        all_ways.filter(seed),
-        rel_history=all_rels.filter(seed),
-    )
+    histories = [h.filter(seed) for h in split_entities(ents)]
     contribs = _produce_then_query(
-        spark, sf_dir, "fullrow_base",
-        lambda: _fullrow_build(
-            updater.node_history, updater.way_history, updater.rel_history
-        ),
+        spark, sf_dir, "fullrow_base", lambda: _fullrow_build(*histories)
     )
-    # two replication batches: the node-move wave (v2), then the tag-edit +
+    # two replication waves, round-tripped through REAL osmChange wire
+    # bytes (encode_osc -> parse_osc_bytes, the S10 seam) exactly like
+    # minutely diffs arrive: the node-move wave (v2), then the tag-edit +
     # delete wave (v3+v4 in ONE batch — multiple versions of the same
     # entity inside a single .osc batch is a real minutely-diff shape and
     # exercises J6's multi-version keep). Every batch dirties essentially
     # the whole fixture (each way references a moved node), so per-batch
     # cost here is ~one bulk rebuild — the worst case, priced deliberately.
-    # two replication waves, round-tripped through REAL osmChange wire
-    # bytes (encode_osc -> parse_osc_bytes, the S10 seam) exactly like
-    # minutely diffs arrive. The driver-side encode is fixture
-    # construction (same documented pattern as _pbf_fullrow_fixture) —
-    # the pipeline under test starts at the parsed batch.
-    waves = (
-        ents.filter(F.col("version") == 2),
-        ents.filter(F.col("version") >= 3),
-    )
-    # WAVE-PIPELINED planning: each wave's advance (keyed J6/J7 reads,
-    # the delta append, and from the second wave the history lineage cut)
-    # is cheap and order-dependent, while its R3 rebuild CONSTRUCTION is
-    # the dominant, scale-invariant driver cost and depends only on the
-    # advanced snapshot — so wave N+1 advances while wave N's rebuilds
-    # plan on a worker thread (round-10 verdict, Next #3). Histories stay
-    # O(1) deep because advance_batch cuts a history that already carries
-    # an earlier wave's delta.
-    from ..session import scope_pool, truncate_lineage_many
-
-    def _seamed_rebuilds(snapshot, affected):
-        # seam each rebuilt frame ON the worker thread, in parallel: the
-        # final merged-table seam below then plans over three LogicalRDD
-        # leaves per wave instead of re-walking every rebuild pipeline in
-        # one giant sequential Catalyst run (interleaved A/B at sf0.1:
-        # ~0.93; the rebuilt frames are batch-sized, so the extra
-        # materialization is bounded at any scale)
-        return truncate_lineage_many(
-            list(updater.build_rebuilds(snapshot, affected))
-        )
-
-    with scope_pool(len(waves)) as pool:
-        staged_waves = []
-        for wave in waves:
-            snapshot, affected = updater.advance_batch(_osc_roundtrip_batch(wave))
-            staged_waves.append(
-                (affected, pool.submit(_seamed_rebuilds, snapshot, affected))
-            )
-        for affected, fut in staged_waves:
-            rebuilt = fut.result()
-            # R4 delete-insert merge: replace every affected id's rows with
-            # the rebuilt ones (the affected ids are batch-sized driver
-            # sets -> one IN filter per type)
-            dropped = F.lit(False)
-            for kind, ids in zip(("node", "way", "relation"), affected):
-                dropped = dropped | ((F.col("osm_type") == kind) & ids_in("osm_id", ids))
-            contribs = contribs.filter(~dropped)
-            for frame in rebuilt:
-                contribs = contribs.unionByName(frame)
+    # The driver-side encode is fixture construction (same documented
+    # pattern as _pbf_fullrow_fixture) — the pipeline under test starts at
+    # the parsed batch.
+    for wave in (ents.filter(F.col("version") == 2), ents.filter(F.col("version") >= 3)):
+        batch = IncrementalUpdater(spark, *histories).apply_batch(_osc_roundtrip_batch(wave))
+        histories = [with_delta(spark, h, d) for h, d in zip(histories, batch.delta)]
+        # R4 delete-insert merge: replace every affected id's rows with the
+        # rebuilt ones (the affected ids are batch-sized driver sets -> one
+        # IN filter per type)
+        dropped = F.lit(False)
+        for kind, ids in zip(("node", "way", "relation"), batch.affected):
+            dropped = dropped | ((F.col("osm_type") == kind) & ids_in("osm_id", ids))
+        contribs = contribs.filter(~dropped)
+        # seam the rebuilt frames, materialized concurrently: the final
+        # seam below then plans over their leaves instead of re-walking
+        # every rebuild pipeline in one sequential Catalyst run (the
+        # rebuilt frames are batch-sized, so the extra materialization is
+        # bounded at any scale)
+        for frame in truncate_lineage_many([f for f in batch.contributions if f is not None]):
+            contribs = contribs.unionByName(frame)
     # stage the merged table once, after the LAST wave (intermediate
     # waves' rebuild pipelines execute exactly once either way — at the
     # final materialization); the staged result keeps the enrichment +

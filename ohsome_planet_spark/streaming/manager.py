@@ -16,21 +16,24 @@ Reference behavior (re-expressed, not ported):
   ``state.txt`` / ``state.csv`` → advance the local state. A crash resumes
   at the last advanced sequence.
 
-Spark shape: the RocksDB latest-state store becomes two append-only
-history tables (``<data>/nodes``, ``<data>/ways``). Each sequence parses
-its diff on the driver, answers J6/J7 with keyed reads of the table roots
+Spark shape: the RocksDB latest-state store becomes three append-only
+history tables (``<data>/nodes``, ``<data>/ways``, ``<data>/relations``;
+a missing table reads as empty, so a store seeded before relations were
+kept, or without any, still runs). Each sequence parses its diff on the
+driver, answers J6/J7 with keyed reads of the table roots
 (:class:`.replication.IncrementalUpdater`), rebuilds the affected ids in
 Spark and writes their contributions, then appends its J6-surviving rows,
-already on the driver, as one pyarrow file per non-empty table (O(|diff|)
-I/O, no Spark job). The next sequence re-reads the roots — a *reliable*
-staged intermediate, so lineage is truncated by storage, never by
-``localCheckpoint`` (executor loss mid-catch-up replays from parquet,
-unlike block-storage checkpoints). The keyed reads still scan the store,
-O(store), until the tables are clustered by key. The J6 replay filter
-keeps a crash between append and state-advance from duplicating history
-rows. Each sequence
-runs in its own run scope, so what it staged is released once its files
-are written, however long a ``--continue`` run goes on.
+already on the driver, as one pyarrow file ``seq-NNNNNNNNN.parquet`` per
+non-empty table (O(|diff|) I/O, no Spark job). The next sequence re-reads
+the roots — a *reliable* staged intermediate, so lineage is truncated by
+storage, never by ``localCheckpoint`` (executor loss mid-catch-up replays
+from parquet, unlike block-storage checkpoints). The keyed reads still
+scan the store, O(store), until the tables are clustered by key. A
+sequence first removes the history files an interrupted attempt of it
+left, so a crash between the append and the state advance re-runs it
+from the same history, to the same delta and the same output. Each
+sequence runs in its own run scope, so what it staged is released once
+its files are written, however long a ``--continue`` run goes on.
 
 :class:`ContributionReplicationManager` is the one owner of that store:
 ``seed`` writes it from a bulk extract (the bulk → incremental handoff),
@@ -56,9 +59,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..schemas import NODE_SCHEMA, WAY_SCHEMA, history_schema, split_entities
+from ..schemas import (
+    NODE_SCHEMA,
+    RELATION_SCHEMA,
+    WAY_SCHEMA,
+    history_schema,
+    split_entities,
+)
 from ..session import empty_frame, run_scope
 from .replication import (
+    TYPES,
     IncrementalUpdater,
     ReplicationState,
     ids_in,
@@ -74,6 +84,13 @@ __all__ = ["ContributionReplicationManager", "run_replication_update"]
 
 NODE_HISTORY_SCHEMA = history_schema(NODE_SCHEMA)
 WAY_HISTORY_SCHEMA = history_schema(WAY_SCHEMA)
+RELATION_HISTORY_SCHEMA = history_schema(RELATION_SCHEMA)
+# the history table of each type, in TYPES order
+HISTORIES = (
+    ("nodes", NODE_HISTORY_SCHEMA),
+    ("ways", WAY_HISTORY_SCHEMA),
+    ("relations", RELATION_HISTORY_SCHEMA),
+)
 
 
 def _history_or_empty(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -84,11 +101,16 @@ def _history_or_empty(spark: SparkSession, path: str, schema: StructType) -> Dat
     return empty_frame(spark, schema)
 
 
+def _history_file(seq: int) -> str:
+    """The file one sequence appends to a history table."""
+    return f"seq-{seq:09d}.parquet"
+
+
 @dataclass
 class ContributionReplicationManager:
     """Drives the contribution stream of the ``replications`` command and
-    owns its store in ``data_dir``: the history tables ``nodes``/``ways``
-    and the state row ``state.txt``.
+    owns its store in ``data_dir``: the history tables
+    ``nodes``/``ways``/``relations`` and the state row ``state.txt``.
 
     ``server`` is the entity stream (seeding and catch-up need it).
     ``out_dir`` is where per-sequence contribution parquet + published
@@ -116,11 +138,12 @@ class ContributionReplicationManager:
     def _path(self, name: str) -> str:
         return os.path.join(self.data_dir, name)
 
-    def _history(self) -> tuple[DataFrame, DataFrame]:
-        """The node and way history tables (empty before the first write)."""
-        return (
-            _history_or_empty(self.spark, self._path("nodes"), NODE_HISTORY_SCHEMA),
-            _history_or_empty(self.spark, self._path("ways"), WAY_HISTORY_SCHEMA),
+    def _history(self) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """The node, way and relation history tables (each empty until its
+        first write)."""
+        return tuple(
+            _history_or_empty(self.spark, self._path(sub), schema)
+            for sub, schema in HISTORIES
         )
 
     def seed(self, entities: DataFrame) -> ReplicationState:
@@ -138,9 +161,8 @@ class ContributionReplicationManager:
         start = self.server.find_start_state_by_timestamp(
             max_ts.replace(tzinfo=timezone.utc), self.fetch_remote_state()
         )
-        nodes, ways, _ = split_entities(entities)
-        nodes.write.parquet(self._path("nodes"))
-        ways.write.parquet(self._path("ways"))
+        for (sub, _), history in zip(HISTORIES, split_entities(entities)):
+            history.write.parquet(self._path(sub))
         self._advance_local_state(start)
         with open(os.path.join(self.out_dir, "state.txt"), "w") as f:
             f.write(start.format())
@@ -150,7 +172,7 @@ class ContributionReplicationManager:
         """``ValueError`` when the history tables already hold files
         (``Contributions2Parquet.java:137-141``). It needs no extract, so a
         bulk run checks it before its decode."""
-        for sub in ("nodes", "ways"):
+        for sub, _ in HISTORIES:
             if os.path.isdir(self._path(sub)) and os.listdir(self._path(sub)):
                 raise ValueError("replication directory is not empty!")
 
@@ -160,11 +182,9 @@ class ContributionReplicationManager:
         a node, the ways whose latest version is visible and references it
         (J7). Both are the keyed reads :class:`IncrementalUpdater` answers
         J6/J7 with, so a lookup reads only the row groups whose stats admit
-        the id. Relation history is not kept (entity None)."""
-        if osm_type == "relation":
-            return {"entity": None}
-        nodes, ways = self._history()
-        history = nodes if osm_type == "node" else ways
+        the id."""
+        histories = dict(zip(TYPES, self._history()))
+        history, ways = histories[osm_type], histories["way"]
         versions = history.filter(ids_in("osm_id", [osm_id])).collect()
         row = latest_version(versions) if versions else None
         entry = {
@@ -248,12 +268,20 @@ class ContributionReplicationManager:
         from ..sources.osmxml import parse_osc_bytes
 
         seq = state.sequence
-        updater = IncrementalUpdater(self.spark, *self._history())
-        node_contribs, way_contribs = updater.apply_batch(
+        # the history files an interrupted attempt of this sequence
+        # appended: without them the keyed reads see the history it started
+        # from, so the re-run recomputes the same delta and the same output
+        for sub, _ in HISTORIES:
+            stale = os.path.join(self._path(sub), _history_file(seq))
+            if os.path.exists(stale):
+                os.remove(stale)
+        batch = IncrementalUpdater(self.spark, *self._history()).apply_batch(
             parse_osc_bytes(self.server.get_replication_file(seq))
         )
 
-        contribs = node_contribs.unionByName(way_contribs, allowMissingColumns=True)
+        contribs, *rest = [c for c in batch.contributions if c is not None]
+        for frame in rest:
+            contribs = contribs.unionByName(frame, allowMissingColumns=True)
         # the reference drops contributions with no tags before or after
         # (F5 tag-less updates, ContributionStateManager.java:202-204)
         contribs = contribs.filter(
@@ -276,7 +304,7 @@ class ContributionReplicationManager:
         # ``updater.updateStore()``): the J6-surviving delta is already on
         # the driver, so each non-empty table becomes one file, and the
         # next sequence plans against the re-read table roots
-        for sub, delta in zip(("nodes", "ways"), updater.last_applied):
+        for (sub, _), delta in zip(HISTORIES, batch.delta):
             if delta.num_rows:
                 self._append_history(sub, seq, delta)
 
@@ -292,7 +320,7 @@ class ContributionReplicationManager:
 
         root = self._path(sub)
         os.makedirs(root, exist_ok=True)
-        name = f"seq-{seq:09d}.parquet"
+        name = _history_file(seq)
         tmp = os.path.join(root, f".{name}.tmp")
         pq.write_table(delta, tmp, compression="zstd")
         os.replace(tmp, os.path.join(root, name))

@@ -28,6 +28,11 @@ in Python, and the rebuilds read the affected ids' histories only. What a
 batch plans, shuffles and collects is O(|diff| + |affected histories|).
 Each keyed read still scans the store (O(store)) until the history tables
 are clustered by key.
+
+One entry point, :meth:`IncrementalUpdater.apply_batch`, serves every
+caller (the ``replications`` manager and the bulk ≡ incremental gate):
+relations are always in the store, and a batch that affects none builds
+no relation pipeline.
 """
 
 from __future__ import annotations
@@ -334,25 +339,36 @@ def _arrow_rows(rows: list[dict], schema: StructType):
     )
 
 
-class Snapshot(NamedTuple):
-    """The histories after one advance, plus the keys the rebuilds prune
-    with: ``way_refs``, every node any version of an affected way
-    references; ``member_ways``, every way any version of an affected
-    relation references."""
-
-    node_history: DataFrame
-    way_history: DataFrame
-    rel_history: DataFrame | None
-    way_refs: frozenset
-    member_ways: frozenset
+TYPES = ("node", "way", "relation")
 
 
-# --- incremental update loop (S12 end-to-end; ContributionUpdater.java) ------
+def with_delta(spark, history: DataFrame, delta) -> DataFrame:
+    """``history`` with a batch's J6 delta (a pyarrow table of its schema)
+    appended. An empty delta builds no frame."""
+    if not delta.num_rows:
+        return history
+    return history.unionByName(spark.createDataFrame(delta, history.schema))
+
+
+class Batch(NamedTuple):
+    """One applied batch, each field in :data:`TYPES` order."""
+
+    # the rebuilt contributions of the affected ids; the relation frame is
+    # None when the batch affects no relation (no relation pipeline built)
+    contributions: tuple
+    # the affected id sets (frozensets), for a delete-insert merge
+    affected: tuple
+    # the J6-surviving rows as pyarrow tables, for the caller to append
+    # where its history lives
+    delta: tuple
+
+
+# --- incremental update (S12 end-to-end; ContributionUpdater.java) ----------
 
 
 class IncrementalUpdater:
-    """Applies ``.osc`` micro-batches to node/way history tables and
-    re-synthesizes contributions for the affected ids only
+    """Applies one ``.osc`` batch to node, way and relation history tables
+    and re-synthesizes contributions for the affected ids only
     (``ContributionUpdater.java:86-170``, ``ContributionUpdaterTest``).
 
     The reference keeps a RocksDB latest-state store and continues
@@ -368,65 +384,34 @@ class IncrementalUpdater:
     still scans the store (O(store)) until the history tables are
     clustered by key; what a batch plans, shuffles and brings back is
     O(|diff| + |affected histories|).
-    """
 
-    # each type's history attribute
-    _HISTORY = {"node": "node_history", "way": "way_history", "relation": "rel_history"}
+    The histories are read, never grown: :meth:`apply_batch` returns the
+    J6 delta, and the caller appends it where its history lives before
+    the next batch.
+    """
 
     def __init__(
         self,
         spark,
         node_history: DataFrame,
         way_history: DataFrame,
-        rel_history: DataFrame | None = None,
+        rel_history: DataFrame,
     ):
         self.spark = spark
         self.node_history = node_history
         self.way_history = way_history
-        # relation support is opt-in: with a rel_history table, apply_batch
-        # also J6-filters relation rows, propagates member dirtiness to
-        # parent relations (J7) and returns a third contribution frame
         self.rel_history = rel_history
-        # the types whose history already carries an earlier batch's delta
-        self._grown: set[str] = set()
 
-    def _append(self, new: dict[str, list[dict]]) -> tuple:
-        """Append each type's J6 survivors to its history; returns the
-        deltas as pyarrow tables. An empty delta leaves its history as it
-        is and builds no frame. A history that already carries an earlier
-        batch's delta is lineage-cut once it grows again, so the next
-        batch plans against a leaf (independent frames — planned
-        concurrently); a one-batch updater never cuts."""
-        from ..session import truncate_lineage_many
-
-        tables, cut = [], []
-        for kind, delta in new.items():
-            history = getattr(self, self._HISTORY[kind])
-            tables.append(_arrow_rows(delta, history.schema))
-            if delta:
-                setattr(self, self._HISTORY[kind], history.unionByName(
-                    self.spark.createDataFrame(tables[-1], history.schema)
-                ))
-                if kind in self._grown:
-                    cut.append(kind)
-                self._grown.add(kind)
-        frames = truncate_lineage_many([getattr(self, self._HISTORY[k]) for k in cut])
-        for kind, frame in zip(cut, frames):
-            setattr(self, self._HISTORY[kind], frame)
-        return tuple(tables)
-
-    def advance_batch(self, rows: list[dict]):
-        """The cheap, ORDER-DEPENDENT half of a batch. ``rows`` is the diff
-        as parsed on the driver (:func:`..sources.osmxml.parse_osc_bytes`
-        dicts). J6 keeps the genuinely new versions, which are appended to
-        the histories; J7 finds the parents of what changed. Both are
-        keyed reads of the stored histories, decided in Python. Returns
-        ``(snapshot, affected)``: a :class:`Snapshot` and the per-type
-        affected id sets ``(nodes, ways[, relations])``.
-        :meth:`build_rebuilds` depends only on those, so callers may run
-        it CONCURRENTLY with later advances — wave-pipelined planning (the
-        rebuild construction is the batch's dominant driver cost)."""
-        diff: dict[str, list[dict]] = {"node": [], "way": [], "relation": []}
+    def apply_batch(self, rows: list[dict]) -> Batch:
+        """One osmChange batch → a :class:`Batch`. ``rows`` is the diff as
+        parsed on the driver (:func:`..sources.osmxml.parse_osc_bytes`
+        dicts). J6 keeps the genuinely new versions, so re-applying a
+        batch is idempotent; J7 finds the ways and relations whose members
+        changed. Both are keyed reads of the stored histories, decided in
+        Python; the R3 rebuilds then read the histories plus the delta
+        (``ContributionStateManager.java:176-245``'s update write
+        delete-inserts the rebuilt rows by the affected ids)."""
+        diff: dict[str, list[dict]] = {kind: [] for kind in TYPES}
         for r in rows:
             diff[r["osm_type"]].append(r)
 
@@ -449,32 +434,31 @@ class IncrementalUpdater:
             {w: v for w, v in way_hist.items() if w not in changed_ways},
             "refs", changed_nodes.__contains__,
         )
-        way_refs = {
-            n
-            for versions in [way_hist.get(w, ()) for w in affected_ways] + [new["way"]]
-            for v in versions
-            for n in v["refs"] or ()
-        }
-        affected = (frozenset(changed_nodes), frozenset(affected_ways))
 
-        member_ways: set[int] = set()
-        if self.rel_history is not None:
-            def hit(m):
-                return (m["type"] == "way" and m["id"] in affected_ways) or (
-                    m["type"] == "node" and m["id"] in changed_nodes
-                )
-
-            rel_hist = keyed_histories(
-                self.rel_history, ids("relation"),
-                ("osm_id", "version", "ts", "visible", "members"),
-                touching="exists(members, m -> "
-                f"(m.type = 'way' AND {_in_sql('m.id', affected_ways)})"
-                f" OR (m.type = 'node' AND {_in_sql('m.id', changed_nodes)}))"
-                if affected_ways or changed_nodes else None,
+        def hit(m):
+            return (m["type"] == "way" and m["id"] in affected_ways) or (
+                m["type"] == "node" and m["id"] in changed_nodes
             )
-            new["relation"] = _j6(diff["relation"], rel_hist)
-            changed_rels = {r["osm_id"] for r in new["relation"]}
-            affected_rels = changed_rels | referencing(rel_hist, "members", hit)
+
+        # every relation in the diff or listing an affected way or a
+        # changed node as a member, in full
+        rel_hist = keyed_histories(
+            self.rel_history, ids("relation"),
+            ("osm_id", "version", "ts", "visible", "members"),
+            touching="exists(members, m -> "
+            f"(m.type = 'way' AND {_in_sql('m.id', affected_ways)})"
+            f" OR (m.type = 'node' AND {_in_sql('m.id', changed_nodes)}))"
+            if affected_ways or changed_nodes else None,
+        )
+        new["relation"] = _j6(diff["relation"], rel_hist)
+        changed_rels = {r["osm_id"] for r in new["relation"]}
+        affected_rels = changed_rels | referencing(rel_hist, "members", hit)
+
+        histories = (self.node_history, self.way_history, self.rel_history)
+        delta = tuple(_arrow_rows(new[kind], h.schema) for kind, h in zip(TYPES, histories))
+        affected = (frozenset(changed_nodes), frozenset(affected_ways), frozenset(affected_rels))
+        nodes, ways, rels = (with_delta(self.spark, h, d) for h, d in zip(histories, delta))
+        if affected_rels:
             member_ways = {
                 m["id"]
                 for versions in [rel_hist.get(r, ()) for r in affected_rels]
@@ -483,100 +467,62 @@ class IncrementalUpdater:
                 for m in v["members"] or ()
                 if m["type"] == "way"
             }
-            affected += (frozenset(affected_rels),)
+            contributions = _rebuild_with_relations(
+                nodes, ways, rels, affected, affected_ways | member_ways
+            )
+        else:
+            way_refs = {
+                n
+                for versions in [way_hist.get(w, ()) for w in affected_ways] + [new["way"]]
+                for v in versions
+                for n in v["refs"] or ()
+            }
+            contributions = _rebuild_without_relations(nodes, ways, affected, way_refs)
+        return Batch(contributions, affected, delta)
 
-        # the J6-surviving delta as pyarrow tables, for callers that append
-        # it to a durable history table (ContributionReplicationManager)
-        self.last_applied = self._append(new)
-        self.last_affected = affected
-        snapshot = Snapshot(
-            self.node_history, self.way_history, self.rel_history,
-            frozenset(way_refs), frozenset(member_ways),
+
+def _rebuild_without_relations(nodes, ways, affected, way_refs) -> tuple:
+    """R3 for a batch that affects no relation: the node and way rebuilds,
+    built on concurrent driver threads (each is a long blocking chain of
+    py4j planning round-trips); the way rebuild reads only the nodes its
+    ways reference (``way_refs``, from every version of them)."""
+    from ..session import scope_pool
+
+    changed_nodes, affected_ways, _ = affected
+    with scope_pool(2) as ex:
+        fut_nodes = ex.submit(rebuild_affected_nodes, nodes, changed_nodes)
+        fut_ways = ex.submit(
+            rebuild_affected_ways, ways, nodes.filter(ids_in("osm_id", way_refs)),
+            affected_ways,
         )
-        return snapshot, affected
+        return fut_nodes.result(), fut_ways.result(), None
 
-    def build_rebuilds(self, snapshot: Snapshot, affected):
-        """R3 rebuild pipelines over an advanced snapshot — the heavy,
-        order-INDEPENDENT half of a batch. Each history is filtered to the
-        affected ids; the way rebuild reads only the nodes its ways
-        reference. The per-type constructions are long blocking chains of
-        py4j planning round-trips, so they run on concurrent driver
-        threads; the whole method is also safe to run from a worker thread
-        while later batches advance (wave-pipelined planning — round-10
-        verdict, Next #3)."""
-        from ..session import scope_pool
 
-        node_history, way_history, rel_history = snapshot[:3]
-        if len(affected) == 2:
-            changed_node_ids, affected_ways = affected
-            with scope_pool(2) as ex:
-                fut_nodes = ex.submit(
-                    rebuild_affected_nodes, node_history, changed_node_ids
-                )
-                fut_ways = ex.submit(
-                    rebuild_affected_ways,
-                    way_history,
-                    node_history.filter(ids_in("osm_id", snapshot.way_refs)),
-                    affected_ways,
-                )
-                return fut_nodes.result(), fut_ways.result()
-        changed_node_ids, affected_ways, affected_rels = affected
-        # share ONE J3 way merge between the way and relation rebuilds
-        # (the batch's dominant cost — the reference memoizes member way
-        # contributions the same way, Contribution.java:26-28): instants
-        # for every way the batch touches, i.e. affected ways plus the
-        # ways referenced by affected relations.
-        from ..operators.contributions import bundled_way_instants
+def _rebuild_with_relations(nodes, ways, rels, affected, ways_touched) -> tuple:
+    """R3 for a batch that affects relations. The way and relation rebuilds
+    share ONE J3 way merge (the batch's dominant cost — the reference
+    memoizes member way contributions the same way,
+    ``Contribution.java:26-28``) over ``ways_touched``: the affected ways
+    plus every way any version of an affected relation lists."""
+    from ..operators.contributions import bundled_way_instants
+    from ..session import scope_pool, truncate_lineage
 
-        ways_touched = way_history.filter(
-            ids_in("osm_id", affected_ways | snapshot.member_ways)
-        )
-        # lineage-cut, not just persist: the bundled table is re-embedded in
+    changed_nodes, affected_ways, affected_rels = affected
+    with scope_pool(3) as ex:
+        # the node rebuild does not read the shared table: its construction
+        # overlaps the shared build and the way/relation rebuilds
+        fut_nodes = ex.submit(rebuild_affected_nodes, nodes, changed_nodes)
+        # lineage-cut, not just persist: the shared table is re-embedded in
         # the way rebuild, the relation rebuild AND (through the member
         # merge) the member-event union — persist alone leaves its full
         # logical tree in each, and the optimizer re-walks it per embedding
-        # (measured: the member-event seam's planning dominates batch cost)
-        from ..session import truncate_lineage
-
-        with scope_pool(3) as ex:
-            # node rebuild has no dependency on the bundled table: its
-            # construction overlaps the bundled build + way/rel rebuilds
-            fut_nodes = ex.submit(
-                rebuild_affected_nodes, node_history, changed_node_ids
-            )
-            bundled = truncate_lineage(
-                bundled_way_instants(ways_touched, node_history)
-            )
-            fut_ways = ex.submit(
-                rebuild_affected_ways,
-                way_history, node_history, affected_ways, bundled=bundled,
-            )
-            fut_rels = ex.submit(
-                rebuild_affected_relations,
-                rel_history, way_history, node_history, affected_rels,
-                bundled=bundled,
-            )
-            return fut_nodes.result(), fut_ways.result(), fut_rels.result()
-
-    def apply_batch(self, rows: list[dict]):
-        """One osmChange batch (driver rows) → (node_contribs, way_contribs
-        [, rel_contribs when relation support is on]) for the affected ids;
-        histories advance in place. The J6 filter drops replayed versions
-        so re-applying a batch is idempotent. ``last_affected`` carries the
-        per-type affected id sets so callers can delete-and-insert the
-        rebuilt rows into a durable contribution table
-        (``ContributionStateManager.java:176-245``'s update write).
-        Composition of :meth:`advance_batch` + :meth:`build_rebuilds`;
-        multi-batch callers can pipeline the two halves instead."""
-        snapshot, affected = self.advance_batch(rows)
-        return self.build_rebuilds(snapshot, affected)
-
-    def apply_sequences(self, server, sequences) -> list[tuple[DataFrame, DataFrame]]:
-        """Fetch + parse + apply each replication sequence in order via an
-        (injectable-transport) :class:`.server.Server`."""
-        from ..sources.osmxml import parse_osc_bytes
-
-        return [
-            self.apply_batch(parse_osc_bytes(server.get_replication_file(seq)))
-            for seq in sequences
-        ]
+        bundled = truncate_lineage(
+            bundled_way_instants(ways.filter(ids_in("osm_id", ways_touched)), nodes)
+        )
+        fut_ways = ex.submit(
+            rebuild_affected_ways, ways, nodes, affected_ways, bundled=bundled
+        )
+        fut_rels = ex.submit(
+            rebuild_affected_relations, rels, ways, nodes, affected_rels, bundled=bundled
+        )
+        return fut_nodes.result(), fut_ways.result(), fut_rels.result()

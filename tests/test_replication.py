@@ -401,9 +401,9 @@ class TestIncrementalRelations:
         from ohsome_planet_spark.streaming.replication import IncrementalUpdater
 
         nodes, ways, rels, t0 = seeded
-        upd = IncrementalUpdater(spark, nodes, ways, rel_history=rels)
-        batch = _diff_rows(_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9))
-        n_c, w_c, r_c = upd.apply_batch(batch)
+        upd = IncrementalUpdater(spark, nodes, ways, rels)
+        batch = upd.apply_batch(_diff_rows(_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9)))
+        n_c, w_c, r_c = batch.contributions
         # the relation was NOT in the batch but its member way's node moved:
         # J7 must mark it dirty and R3 rebuild it with a minor version
         rrows = r_c.orderBy("valid_from").collect()
@@ -413,28 +413,20 @@ class TestIncrementalRelations:
         wrows = w_c.orderBy("valid_from").collect()
         assert [w.osm_minor_version for w in wrows] == [0, 1]
         # affected sets exposed for the delete-insert merge
-        aff_n, aff_w, aff_r = upd.last_affected
+        aff_n, aff_w, aff_r = batch.affected
         assert sorted(aff_r) == [900]
 
     def test_relation_version_replay_dropped(self, spark, seeded):
         from ohsome_planet_spark.streaming.replication import IncrementalUpdater
 
         nodes, ways, rels, t0 = seeded
-        upd = IncrementalUpdater(spark, nodes, ways, rel_history=rels)
-        # replay of the stored relation v1 -> J6 drops it; nothing dirty
-        replay = [r.asDict(recursive=True) for r in rels.collect()]
-        n_c, w_c, r_c = upd.apply_batch(replay)
-        assert r_c.count() == 0
-        assert upd.rel_history.count() == 1  # history unchanged
-
-    def test_two_tuple_contract_without_relations(self, spark, seeded):
-        from ohsome_planet_spark.streaming.replication import IncrementalUpdater
-
-        nodes, ways, _, t0 = seeded
-        upd = IncrementalUpdater(spark, nodes, ways)
-        batch = _diff_rows(_mk_node(3, 2, t0 + 1000, 1.5, 1.5, cs=9))
-        out = upd.apply_batch(batch)
-        assert len(out) == 2  # backward-compatible return shape
+        upd = IncrementalUpdater(spark, nodes, ways, rels)
+        # replay of the stored relation v1 -> J6 drops it; nothing dirty,
+        # so no relation pipeline is built and the delta is empty
+        batch = upd.apply_batch([r.asDict(recursive=True) for r in rels.collect()])
+        assert batch.contributions[2] is None
+        assert batch.affected[2] == frozenset()
+        assert [d.num_rows for d in batch.delta] == [0, 0, 0]
 
 
 # --- keyed J6/J7 == the relational spec ---------------------------------------
@@ -531,7 +523,7 @@ def _frame(spark, kind, rows):
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_keyed_advance_equals_relational_spec(spark, seed):
-    """The keyed J6/J7 of ``advance_batch`` (driver rows, keyed reads,
+    """The keyed J6/J7 of ``apply_batch`` (driver rows, keyed reads,
     Python rules) keeps the same delta rows and finds the same affected
     node, way and relation ids as the relational spec
     (``filter_diff_against_state`` over ``latest_state``, then
@@ -570,11 +562,11 @@ def test_keyed_advance_equals_relational_spec(spark, seed):
         ids(changed["relation"], dirty_rels),
     )
 
-    upd = IncrementalUpdater(spark, hist["node"], hist["way"], rel_history=hist["relation"])
-    _, affected = upd.advance_batch(diff)
+    batch = IncrementalUpdater(spark, hist["node"], hist["way"], hist["relation"]).apply_batch(diff)
+    affected = batch.affected
     got_delta = {
         k: sorted((r["osm_id"], r["version"], r["visible"]) for r in table.to_pylist())
-        for k, table in zip(kinds, upd.last_applied)
+        for k, table in zip(kinds, batch.delta)
     }
     assert got_delta == want_delta
     assert tuple(set(a) for a in affected) == want_affected

@@ -1,7 +1,7 @@
 """Integration test for the ``replications`` CLI command: drive three
 replication sequences end-to-end through ``python -m ohsome_planet_spark.cli
 replications`` against a file:// mirror and check the written parquet
-matches the incremental updater run directly
+matches the incremental updater applied batch by batch
 (``cmd/Replications.java:27-130``, ``ReplicationManager.java:33-137``,
 ``ContributionStateManager.java:116-245``)."""
 
@@ -15,11 +15,9 @@ import pytest
 
 from ohsome_planet_spark.cli import main
 from ohsome_planet_spark.streaming.manager import run_replication_update
-from ohsome_planet_spark.streaming.replication import (
-    IncrementalUpdater,
-    ReplicationState,
-)
+from ohsome_planet_spark.streaming.replication import ReplicationState
 from ohsome_planet_spark.streaming.server import entity_server, file_fetch
+from tests.test_incremental_e2e import _apply_in_order
 
 OSC = {
     101: """<?xml version='1.0' encoding='UTF-8'?>
@@ -33,6 +31,10 @@ OSC = {
       <nd ref="1"/><nd ref="2"/>
       <tag k="highway" v="residential"/>
     </way>
+    <relation id="30" version="1" timestamp="2025-10-22T09:01:00Z" uid="1" user="One" changeset="11">
+      <member type="way" ref="10" role=""/>
+      <tag k="type" v="route"/><tag k="route" v="bus"/>
+    </relation>
   </create>
 </osmChange>""",
     102: """<?xml version='1.0' encoding='UTF-8'?>
@@ -53,6 +55,10 @@ OSC = {
       <nd ref="1"/><nd ref="2"/><nd ref="3"/>
       <tag k="highway" v="primary"/>
     </way>
+    <relation id="30" version="2" timestamp="2025-10-22T09:03:00Z" uid="2" user="Two" changeset="13">
+      <member type="way" ref="10" role=""/>
+      <tag k="type" v="route"/><tag k="route" v="tram"/>
+    </relation>
   </modify>
 </osmChange>""",
 }
@@ -111,34 +117,27 @@ def test_replications_cli_three_sequences(spark, mirror, tmp_path, capsys):
     assert local.sequence == 103
 
     # the written parquet for each sequence matches the incremental
-    # updater driven directly (with the manager's F5 tag-less filter)
+    # updater applied batch by batch (with the manager's F5 tag-less filter)
     server = entity_server("local://mirror/", fetch=file_fetch(mirror))
-    upd = IncrementalUpdater(
-        spark,
-        spark.createDataFrame([], "osm_type string, osm_id bigint, version int,"
-                              " ts timestamp, changeset bigint, user_id int,"
-                              " user_name string, visible boolean,"
-                              " tags map<string,string>, lon double, lat double"),
-        spark.createDataFrame([], "osm_type string, osm_id bigint, version int,"
-                              " ts timestamp, changeset bigint, user_id int,"
-                              " user_name string, visible boolean,"
-                              " tags map<string,string>, refs array<bigint>"),
-    )
     from pyspark.sql import functions as F
 
-    results = upd.apply_sequences(server, [101, 102, 103])
-    for seq, (node_c, way_c) in zip((101, 102, 103), results):
-        direct = node_c.unionByName(way_c, allowMissingColumns=True).filter(
+    batches, _ = _apply_in_order(spark, server, [101, 102, 103])
+    for seq, batch in zip((101, 102, 103), batches):
+        node_c, way_c, rel_c = batch.contributions
+        direct = node_c.unionByName(way_c, allowMissingColumns=True).unionByName(
+            rel_c, allowMissingColumns=True
+        ).filter(
             (F.size(F.coalesce("tags", F.create_map())) > 0)
             | (F.size(F.coalesce("tags_before", F.create_map())) > 0)
         )
         written = spark.read.parquet(os.path.join(out, f"000/000/{seq:03d}.opc.parquet"))
         assert _key_rows(written) == _key_rows(direct), f"seq {seq}"
 
-    # seq 103 touches node 3 (untagged -> dropped by the F5 filter) and
-    # way 10 (tagged -> rebuilt); node 1 is unaffected so not re-emitted
+    # seq 103 touches node 3 (untagged -> dropped by the F5 filter), way 10
+    # and relation 30 (tagged -> rebuilt); node 1 is unaffected so not
+    # re-emitted
     w103 = spark.read.parquet(os.path.join(out, "000/000/103.opc.parquet"))
-    assert {r.osm_id for r in w103.select("osm_id").collect()} == {10}
+    assert {r.osm_id for r in w103.select("osm_id").collect()} == {10, 30}
 
     # history tables are durable: way 10's latest stored version is 2
     ways = spark.read.parquet(os.path.join(data, "ways"))
@@ -432,7 +431,9 @@ def test_replication_store_peek(spark, mirror, tmp_path, capsys):
     assert main(argv) == 0
     capsys.readouterr()
 
-    assert main(["replication-store", "--data", data, "n/1", "n/3", "w/10", "n/99"]) == 0
+    assert main([
+        "replication-store", "--data", data, "n/1", "n/3", "w/10", "r/30", "n/99", "r/99",
+    ]) == 0
     out = json.loads(capsys.readouterr().out)
 
     # n/1: latest stored version is 2 (modified in seq 102), lat moved
@@ -446,9 +447,14 @@ def test_replication_store_peek(spark, mirror, tmp_path, capsys):
     # w/10: latest version 2 with the 3-node ref list
     assert out["w/10"]["entity"]["version"] == 2
     assert out["w/10"]["entity"]["refs"] == [1, 2, 3]
+    # r/30: latest version 2 (tags edited in 103), member way 10
+    assert out["r/30"]["entity"]["version"] == 2
+    assert out["r/30"]["entity"]["tags"] == {"type": "route", "route": "tram"}
+    assert out["r/30"]["entity"]["members"] == [{"type": "way", "id": 10, "role": ""}]
     # unknown element -> explicit null, like the reference's -1 sentinels
     assert out["n/99"]["entity"] is None
     assert out["n/99"]["ways"] == []
+    assert out["r/99"]["entity"] is None
 
 
 HANDOFF_OSC_101 = """<?xml version='1.0' encoding='UTF-8'?>
@@ -851,3 +857,151 @@ def test_seeding_refuses_an_empty_extract(spark, handoff_mirror, tmp_path, capsy
     ]) == 1
     assert "extract contains no entities" in capsys.readouterr().err
     assert not os.path.exists(os.path.join(data, "nodes"))
+
+
+def _rows(spark, path, ids=None):
+    """Every column of the contributions under ``path`` (the bulk layout's
+    partition column dropped), optionally only the (type, id) in ``ids``,
+    in a stable order."""
+    frame = spark.read.parquet(path)
+    rows = [
+        {k: v for k, v in r.asDict(recursive=True).items() if k != "layer"}
+        for r in frame.collect()
+    ]
+    if ids is not None:
+        rows = [r for r in rows if (r["osm_type"], r["osm_id"]) in ids]
+    return sorted(rows, key=lambda r: (r["osm_type"], r["osm_id"], r["osm_edits"]))
+
+
+def test_rerun_after_an_interrupted_sequence_writes_the_same_output(
+    spark, mirror, tmp_path, capsys
+):
+    """A crash after a sequence appended its history files but before its
+    state row advanced: the re-run drops what the interrupted attempt
+    appended, so it recomputes the same delta and rewrites the sequence's
+    parquet with the same rows (not an empty J6 replay)."""
+    data, out = str(tmp_path / "data"), str(tmp_path / "out")
+    argv = [
+        "replications", "--data", data, "--parquet-data", out,
+        "--endpoint", f"file://{mirror}", "--jcb", "--start-sequence", "100",
+    ]
+    assert main(argv) == 0
+    seq_103 = os.path.join(out, "000/000/103.opc.parquet")
+    before = _rows(spark, seq_103)
+    assert before
+
+    def history_files():
+        return {
+            sub: sorted(os.listdir(path)) if os.path.isdir(path) else []
+            for sub in ("nodes", "ways", "relations")
+            for path in [os.path.join(data, sub)]
+        }
+
+    history = history_files()
+
+    with open(os.path.join(data, "state.txt"), "w") as f:
+        f.write(ReplicationState(102, TS[102]).format())
+    capsys.readouterr()
+    assert main(argv) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["applied_sequences"] == [103]
+    assert _rows(spark, seq_103) == before
+    assert history_files() == history
+
+
+# a closed outer way (tagged, so both runs keep its contributions) and a
+# multipolygon over it, before sequence 100 of the relation mirror
+def _ms(iso):
+    return int(datetime.fromisoformat(iso).replace(tzinfo=timezone.utc).timestamp() * 1000)
+
+
+_SQUARE = {1: (0.0, 0.0), 2: (1.0, 0.0), 3: (1.0, 1.0), 4: (0.0, 1.0)}
+_SEED_HISTORY = {
+    "nodes": [
+        dict(osm_id=n, version=1, ts_ms=_ms("2025-10-22T09:00:00"), changeset=20, uid=1,
+             user="One", visible=True, tags={}, lon=lon, lat=lat)
+        for n, (lon, lat) in _SQUARE.items()
+    ],
+    "ways": [
+        dict(osm_id=40, version=1, ts_ms=_ms("2025-10-22T09:00:10"), changeset=20, uid=1,
+             user="One", visible=True, tags={"barrier": "fence"}, refs=[1, 2, 3, 4, 1]),
+    ],
+    "relations": [
+        dict(osm_id=50, version=1, ts_ms=_ms("2025-10-22T09:00:20"), changeset=20, uid=1,
+             user="One", visible=True, tags={"type": "multipolygon", "landuse": "forest"},
+             members=[{"type": "way", "id": 40, "role": "outer"}]),
+    ],
+}
+# sequence 101: node 3 of the outer way moves, then the relation's tags change
+_MINUTE_HISTORY = {
+    "nodes": [
+        dict(osm_id=3, version=2, ts_ms=_ms("2025-10-22T09:01:00"), changeset=21, uid=2,
+             user="Two", visible=True, tags={}, lon=1.5, lat=1.5),
+    ],
+    "ways": [],
+    "relations": [
+        dict(osm_id=50, version=2, ts_ms=_ms("2025-10-22T09:01:10"), changeset=22, uid=2,
+             user="Two", visible=True, tags={"type": "multipolygon", "landuse": "meadow"},
+             members=[{"type": "way", "id": 40, "role": "outer"}]),
+    ],
+}
+RELATION_OSC_101 = """<?xml version='1.0' encoding='UTF-8'?>
+<osmChange version="0.6" generator="test">
+  <modify>
+    <node id="3" version="2" timestamp="2025-10-22T09:01:00Z" uid="2" user="Two" changeset="21" lat="1.5" lon="1.5"/>
+    <relation id="50" version="2" timestamp="2025-10-22T09:01:10Z" uid="2" user="Two" changeset="22">
+      <member type="way" ref="40" role="outer"/>
+      <tag k="type" v="multipolygon"/><tag k="landuse" v="meadow"/>
+    </relation>
+  </modify>
+</osmChange>"""
+
+
+def test_relation_edits_converge_to_the_bulk_run(spark, tmp_path, capsys):
+    """Bulk ≡ incremental through the commands users run: a bulk run seeds
+    the store (relations included), one sequence moves a node of the
+    multipolygon's outer way and edits the relation's tags, and the pass's
+    rows for the way and the relation equal a bulk run over the full
+    history, every column."""
+    from ohsome_planet_spark.sources.pbf_encoder import write_history_pbf
+
+    root = tmp_path / "mirror"
+    seq_dir = root / "000" / "000"
+    seq_dir.mkdir(parents=True)
+    (seq_dir / "101.osc.gz").write_bytes(gzip.compress(RELATION_OSC_101.encode()))
+    for seq, ts in ((100, "2025-10-22T09:00:20Z"), (101, "2025-10-22T09:01:30Z")):
+        state = ReplicationState(seq, ts).format()
+        (seq_dir / f"{seq:03d}.state.txt").write_text(state)
+        (root / "state.txt").write_text(state)
+
+    seed_pbf, full_pbf = str(tmp_path / "seed.osh.pbf"), str(tmp_path / "full.osh.pbf")
+    write_history_pbf(seed_pbf, *_SEED_HISTORY.values())
+    write_history_pbf(full_pbf, *(
+        sorted(_SEED_HISTORY[k] + _MINUTE_HISTORY[k], key=lambda e: (e["osm_id"], e["version"]))
+        for k in ("nodes", "ways", "relations")
+    ))
+
+    data, updates, full = (str(tmp_path / d) for d in ("data", "updates", "full"))
+    assert main([
+        "contributions", "--pbf", seed_pbf, "--out", str(tmp_path / "bulk"),
+        "--data", data, "--replication-endpoint", f"file://{root}",
+    ]) == 0
+    assert main([
+        "replications", "--data", data, "--parquet-data", updates,
+        "--endpoint", f"file://{root}", "--jcb",
+    ]) == 0
+    assert main(["contributions", "--pbf", full_pbf, "--out", full]) == 0
+    capsys.readouterr()
+
+    ids = {("way", 40), ("relation", 50)}
+    got = _rows(spark, os.path.join(updates, "000/000/101.opc.parquet"), ids)
+    want = _rows(spark, full, ids)
+    assert {(r["osm_type"], r["osm_id"]) for r in want} == ids
+    assert [(r["osm_type"], r["osm_minor_version"]) for r in want if r["osm_version"] == 1] == [
+        ("relation", 0), ("relation", 1), ("way", 0), ("way", 1)
+    ]
+    assert got == want
+
+    assert main(["replication-store", "--data", data, "r/50"]) == 0
+    peek = json.loads(capsys.readouterr().out)
+    assert peek["r/50"]["entity"]["version"] == 2
