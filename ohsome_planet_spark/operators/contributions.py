@@ -563,12 +563,8 @@ def _synth_exprs() -> dict:
 _SYNTH_EXPRS: dict = {}
 
 
-def _synth_select_inner(*cols):
-    return list(cols)
-
-
 def _synth_select_list(status, tags, tags_before, contrib_type, xz_level, xz_code):
-    return _synth_select_inner(
+    return [
         status.alias("status"),
         F.col("ts").alias("valid_from"),
         F.coalesce("valid_to", F.lit(VALID_TO_SENTINEL)).alias("valid_to"),
@@ -599,7 +595,7 @@ def _synth_select_list(status, tags, tags_before, contrib_type, xz_level, xz_cod
         "members_count",
         "members",
         F.lit(0).cast("bigint").alias("build_time"),
-    )
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -115,9 +115,15 @@ def _pbf_fixture(spark: SparkSession, sf_dir: str) -> str:
 def _pbf_node_contribs(spark: SparkSession, path: str) -> DataFrame:
     """Decode the node histories of the PBF at ``path`` and synthesize
     their contributions: the columns the PBF node rows compare."""
-    from ..sources.pbf import read_pbf
+    from ..sources.pbf_datasource import register_pbf_source
 
-    ents = read_pbf(spark, path).filter(F.col("osm_type") == "node")
+    register_pbf_source(spark)
+    # entity_type reads only the blobs that can hold nodes (S7); the
+    # filter drops the ways a boundary blob may also hold
+    ents = (
+        spark.read.format("osmpbf").option("entity_type", "node").load(path)
+        .filter(F.col("osm_type") == "node")
+    )
     nodes = ents.select(
         "osm_id", "version", "ts", "changeset", "user_id", "user_name",
         "visible", "tags", "lon", "lat",
@@ -141,8 +147,9 @@ def _pbf_node_contribs(spark: SparkSession, path: str) -> DataFrame:
 @_register("contrib_from_pbf", _CONTRIB_FROM_PBF_ORACLE)
 def contrib_from_pbf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end S1-S6 + A1-A6 seam: real ``.osh.pbf`` bytes → distributed
-    blob decode (``read_pbf``, mapInPandas over the blob index) → node
-    contribution synthesis — the `Contributions2Parquet.call()` path
+    blob decode (the ``osmpbf`` data source behind ``read_pbf``: one task
+    per blob, node blobs only by S7 pruning) → node contribution synthesis —
+    the `Contributions2Parquet.call()` path
     (``Contributions2Parquet.java:125-207``) inside the hash-match gate.
     The oracle replays the same history from the events table in pure SQL;
     any decode bug (delta/zigzag, string table, info fields, granularity)

@@ -221,6 +221,16 @@ def ship_package(spark: SparkSession) -> None:
     _PACKAGE_SHIPPED.add(key)
 
 
+def register_source(spark: SparkSession, source) -> None:
+    """Register the Python Data Source class ``source`` on this session,
+    once. Its reader runs on the workers, which import it from the
+    package, so the package is shipped first."""
+    ship_package(spark)
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(source.name()):
+        spark.dataSource.register(source)
+
+
 def _default_driver_memory() -> str:
     """About half of the host's ``MemTotal``, capped at 16g. In local mode
     the executors share the driver JVM, and the Python workers need the

@@ -1,12 +1,13 @@
-"""OSM XML sources (SURVEY.md S9/S10): osmChange (`.osc` / `.osc.gz`)
-diffs, changeset XML parsing and the changeset table.
+"""OSM XML sources (SURVEY.md S9/S10): osmChange (`.osc`) diffs,
+changeset XML parsing, the changeset table and the changeset dump reader.
 
 The reference uses StAX parsers (``osm-xml/.../OscParser.java:27-317``,
-``OSMXmlEntityReader.java``, ``ChangesetXmlReader.java``); here the parse is
-``xml.etree`` inside ``mapInPandas`` — diffs are tiny (one minute of planet
-edits ≈ a few MB), so the Spark side is one narrow stage per file with no
-shuffle. Changeset dumps (`.osm.bz2`, multi-stream) split on bz2 block
-boundaries for parallel decompression like the reference's PBZ2Reader.
+``OSMXmlEntityReader.java``, ``ChangesetXmlReader.java``); here the parse
+is ``xml.etree``. A minutely diff is a few MB, so the replication pass
+parses it on the driver (:func:`parse_osc_bytes`). A changeset dump is
+read like the reference's ``PBZ2Reader``: the ``osmchangesets`` Data
+Source has one partition per bz2 stream, parsed on the executors by
+:func:`parse_changesets_bytes`, the parser the replication batches use.
 
 The reference keeps one ``changesets`` table: the bulk load fills it, the
 replication stream upserts it and the contributions join it
@@ -22,28 +23,29 @@ from __future__ import annotations
 
 import bz2
 import gzip
-import os
+import re
 import struct
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..schemas import ENTITY_ROW_SCHEMA
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _GZ_MAGIC = b"\x1f\x8b"
 
 
 def _read_maybe_compressed(path: str) -> bytes:
+    """A plain or gzip file's bytes (bz2 dumps are read by stream)."""
     with open(path, "rb") as f:
         data = f.read()
     if data[:2] == _GZ_MAGIC:
         return gzip.decompress(data)
-    if data[:3] == b"BZh":
-        return bz2.decompress(data)
     return data
 
 
@@ -127,27 +129,6 @@ def encode_osc(rows: list[dict]) -> bytes:
     return ET.tostring(root, encoding="utf-8", xml_declaration=True)
 
 
-_COLUMNS = ENTITY_ROW_SCHEMA.fieldNames()
-
-
-def read_osc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """One or many .osc(.gz) files → entity DataFrame (S10)."""
-    from ..session import ship_package
-
-    ship_package(spark)
-    paths = [paths] if isinstance(paths, str) else list(paths)
-    index = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                rows.extend(parse_osc_bytes(_read_maybe_compressed(p)))
-            yield pd.DataFrame(rows, columns=_COLUMNS)
-
-    return index.repartition(max(1, len(paths))).mapInPandas(parse, ENTITY_ROW_SCHEMA)
-
-
 # --- changeset dumps (S9) ----------------------------------------------------
 
 # The changeset table, as the reference's ``changesets`` table
@@ -173,26 +154,7 @@ CHANGESET_SCHEMA = T.StructType(
 )
 # the parsed columns: the table without the one the builder derives
 _PARSED_SCHEMA = T.StructType([f for f in CHANGESET_SCHEMA if f.name != "hashtags"])
-
-_BZ2_STREAM_MAGIC = b"BZh91AY&SY"
-
-
-def split_bz2_streams(data: bytes) -> list[bytes]:
-    """Split a multi-stream bz2 file on the stream magic so streams
-    decompress in parallel (``PBZ2Reader.java:24-150``)."""
-    offsets = []
-    start = 0
-    while True:
-        idx = data.find(_BZ2_STREAM_MAGIC, start)
-        if idx < 0:
-            break
-        offsets.append(idx)
-        start = idx + 1
-    if not offsets:
-        return []
-    offsets.append(len(data))
-    return [data[offsets[i] : offsets[i + 1]] for i in range(len(offsets) - 1)]
-
+_PARSED_ARROW = to_arrow_schema(_PARSED_SCHEMA)
 
 # little-endian WKB header: byteOrder=1, type=3 (Polygon), 1 ring, 5 points
 _BBOX_WKB_HEADER = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
@@ -273,31 +235,128 @@ def changeset_frame(
     )
 
 
-def read_changesets(spark: SparkSession, path: str) -> DataFrame:
-    """Changeset dump (.osm or multi-stream .osm.bz2) → the changeset
-    table (:func:`changeset_frame`)."""
-    from ..session import ship_package
+# --- the changeset dump as a Data Source (S9) -------------------------------
 
-    ship_package(spark)
+# a bz2 stream header: "BZh", the block-size level, the first block's magic
+_BZ2_STREAM = re.compile(rb"BZh[1-9]1AY&SY")
+_CHANGESET_START = re.compile(rb"<changeset[\s/>]")
+# a whole element (an attribute value may hold '>'; changesets don't nest)
+_CHANGESET = re.compile(
+    rb"""<changeset(?:\s+[^\s=/>]+\s*=\s*(?:"[^"]*"|'[^']*'))*\s*"""
+    rb"(?:/>|>.*?</changeset\s*>)",
+    re.S,
+)
+
+
+def bz2_stream_offsets(path: str) -> Iterator[int]:
+    """Byte offsets of the bz2 streams of ``path``, found by a chunked scan
+    for the stream header, so the file is never held whole
+    (``PBZ2Reader.java:24-150``)."""
     with open(path, "rb") as f:
-        head = f.read(3)
-    if head == b"BZh" and os.path.getsize(path) > 64 * 1024 * 1024:
-        # large multi-stream dump: ship stream ranges to workers
-        with open(path, "rb") as f:
-            data = f.read()
-        streams = split_bz2_streams(data)
-        index = spark.createDataFrame(
-            [(i,) for i in range(len(streams))], "stream_idx int"
-        )
-        bstreams = spark.sparkContext.broadcast(streams)
-        columns = _PARSED_SCHEMA.fieldNames()
+        buf = b""
+        while chunk := f.read(1 << 22):
+            # keep the last 9 bytes: a header cut by the chunk edge
+            buf = buf[-9:] + chunk
+            start = f.tell() - len(buf)
+            for m in _BZ2_STREAM.finditer(buf):
+                yield start + m.start()
 
-        def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for i in pdf["stream_idx"]:
-                    rows.extend(parse_changesets_bytes(bz2.decompress(bstreams.value[i])))
-                yield pd.DataFrame(rows, columns=columns)
 
-        return changeset_frame(spark, index.mapInPandas(parse, _PARSED_SCHEMA))
-    return changeset_frame(spark, parse_changesets_bytes(_read_maybe_compressed(path)))
+def _bz2_streams(path: str, offset: int) -> Iterator[bytes]:
+    """The decompressed bz2 streams of ``path`` from ``offset`` on, one
+    at a time."""
+    with open(path, "rb") as f:
+        f.seek(offset)
+        dec, out = bz2.BZ2Decompressor(), []
+        while chunk := f.read(1 << 20):
+            while chunk:
+                out.append(dec.decompress(chunk))
+                if not dec.eof:
+                    break
+                yield b"".join(out)
+                chunk, dec, out = dec.unused_data, bz2.BZ2Decompressor(), []
+    if out:
+        raise ValueError(f"{path}: the bz2 stream at the end is cut off")
+
+
+def _owned_changesets(streams: Iterator[bytes]) -> bytes | None:
+    """The ``<changeset>`` elements whose start tag begins in the first of
+    ``streams``, as one ``<osm>`` document, or None when none does.
+
+    A pbzip2-style dump compresses fixed-size input blocks as separate
+    streams, so an element, or its start tag, may run on past the end of
+    its stream; the following streams are read only until the last owned
+    element closes."""
+    buf = next(streams, b"")
+    own = len(buf)
+    lookahead = len(b"<changeset ")
+    while len(buf) < own + lookahead and (more := next(streams, None)) is not None:
+        buf += more
+    found = _CHANGESET_START.finditer(buf, 0, own + lookahead)
+    starts = [m.start() for m in found if m.start() < own]
+    if not starts:
+        return None
+    while (last := _CHANGESET.match(buf, starts[-1])) is None:
+        if (more := next(streams, None)) is None:
+            raise ValueError("changeset dump ends inside a <changeset> element")
+        buf += more
+    return b"<osm>" + buf[starts[0] : last.end()] + b"</osm>"
+
+
+@dataclass
+class DumpPartition(InputPartition):
+    path: str
+    offset: int | None  # of the partition's bz2 stream; None: plain or gzip
+
+
+class ChangesetDumpReader(DataSourceReader):
+    def __init__(self, path: str):
+        self.path = path
+
+    def partitions(self):
+        if not _is_bz2(self.path):
+            return [DumpPartition(self.path, None)]
+        offsets = list(bz2_stream_offsets(self.path))
+        if not offsets:
+            raise ValueError(f"{self.path}: no bz2 stream found")
+        return [DumpPartition(self.path, o) for o in offsets]
+
+    def read(self, partition: DumpPartition):
+        if partition.offset is None:
+            streams = iter([_read_maybe_compressed(partition.path)])
+        else:
+            streams = _bz2_streams(partition.path, partition.offset)
+        if (doc := _owned_changesets(streams)) is not None:
+            # the pandas → Arrow conversion of changeset_frame's createDataFrame
+            pdf = pd.DataFrame(parse_changesets_bytes(doc), columns=_PARSED_SCHEMA.fieldNames())
+            yield pa.RecordBatch.from_pandas(pdf, schema=_PARSED_ARROW, preserve_index=False)
+
+
+class ChangesetDumpDataSource(DataSource):
+    @classmethod
+    def name(cls) -> str:
+        return "osmchangesets"
+
+    def schema(self) -> T.StructType:
+        return _PARSED_SCHEMA
+
+    def reader(self, schema) -> ChangesetDumpReader:
+        return ChangesetDumpReader(self.options["path"])
+
+
+def _is_bz2(path: str) -> bool:
+    with open(path, "rb") as f:
+        return path.endswith(".bz2") or f.read(3) == b"BZh"
+
+
+def read_changesets(spark: SparkSession, path: str) -> DataFrame:
+    """Changeset dump (``.osm``, ``.osm.gz`` or multi-stream ``.osm.bz2``)
+    → the changeset table (:func:`changeset_frame`), read by the
+    ``osmchangesets`` data source: one partition per bz2 stream, parsed on
+    the executors by :func:`parse_changesets_bytes`."""
+    from ..session import register_source
+
+    if _is_bz2(path) and next(bz2_stream_offsets(path), None) is None:
+        raise ValueError(f"{path}: no bz2 stream found")
+    register_source(spark, ChangesetDumpDataSource)
+    return changeset_frame(spark, spark.read.format("osmchangesets").load(path))

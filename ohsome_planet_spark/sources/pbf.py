@@ -5,19 +5,16 @@ wire-format decoder (the OSM PBF format is published:
 https://wiki.openstreetmap.org/wiki/PBF_Format; reference implementation
 ``osm-pbf/.../OSMPbf.java:107-250``, ``Block.java``, ``group/*.java``).
 
-Spark shape:
+Spark shape: :func:`read_pbf` is the ``osmpbf`` Python Data Source
+(``pbf_datasource``). The driver scans only the blob framing (4-byte
+length + BlobHeader) into (offset, size, type) ranges, O(#blobs) seeks
+and no decompression (S1/S7); each blob is one partition, decoded on the
+executors with numpy-vectorized delta/zigzag decoding of the packed
+columns (S3-S6); the source's ``entity_type`` option skips whole blobs
+(S7).
 
-- the driver scans only the blob FRAMING (4-byte length + BlobHeader) to
-  build an index of (offset, size, type) ranges — O(#blobs) seeks, no
-  decompression (S1/S7);
-- the index becomes a DataFrame; ``mapInPandas`` partitions decode their
-  blob ranges in parallel with numpy-vectorized delta/zigzag decoding of
-  the packed columns (S3-S6);
-- entity-type partition pruning falls out of a filter on the index
-  DataFrame before the decode stage (S7) — Catalyst prunes whole blobs.
-
-Scale: a planet history PBF is ~100 GB with ~50k blobs; the index is tiny,
-decode parallelism = #blobs, and no shuffle happens until the caller groups
+Scale: a planet history PBF is ~100 GB with ~50k blobs; decode
+parallelism = #blobs, and no shuffle happens until the caller groups
 by id.
 """
 
@@ -29,10 +26,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import ENTITY_ROW_SCHEMA
 
 # --- protobuf wire primitives ------------------------------------------------
 
@@ -398,49 +392,11 @@ def _decode_relation(buf, strings, date_gran):
 
 def read_pbf(spark: SparkSession, path: str) -> DataFrame:
     """PBF file → unified entity DataFrame (``ENTITY_ROW_SCHEMA``; split it
-    by type with :func:`..schemas.split_entities`).
+    by type with :func:`..schemas.split_entities`), read by the ``osmpbf``
+    data source (:mod:`.pbf_datasource`): one partition per blob. Every
+    blob is read; the source's ``entity_type`` option reads one type's
+    blobs only (S7)."""
+    from .pbf_datasource import register_pbf_source
 
-    The blob index is computed driver-side; decode runs distributed via
-    ``mapInPandas`` over index partitions. Every blob is decoded; the
-    ``osmpbf`` data source (``pbf_datasource``) prunes whole blobs by type.
-    """
-    from ..session import ship_package
-
-    ship_package(spark)
-    refs = [r for r in scan_blobs(path) if r.header_type == "OSMData"]
-    index = spark.createDataFrame(
-        [(r.index, r.offset, r.size) for r in refs], "idx long, offset long, size long"
-    )
-    nparts = max(1, min(len(refs), spark.sparkContext.defaultParallelism))
-    index = index.repartition(nparts)
-    columns = ENTITY_ROW_SCHEMA.fieldNames()
-
-    def decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # note: r["size"], not r.size — Series.size is the element count
-            for _, r in pdf.iterrows():
-                data = read_blob(
-                    path, BlobRef(int(r["idx"]), "OSMData", int(r["offset"]), int(r["size"]))
-                )
-                for e in decode_block(data):
-                    rows.append(
-                        {
-                            "osm_type": e["osm_type"],
-                            "osm_id": e.get("osm_id"),
-                            "version": e.get("version", 1),
-                            "ts": pd.Timestamp(e.get("ts_ms", 0), unit="ms"),
-                            "changeset": e.get("changeset", 0),
-                            "user_id": e.get("uid", 0),
-                            "user_name": e.get("user", ""),
-                            "visible": e.get("visible", True),
-                            "tags": e.get("tags", {}),
-                            "lon": e.get("lon"),
-                            "lat": e.get("lat"),
-                            "refs": e.get("refs"),
-                            "members": e.get("members"),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=columns)
-
-    return index.mapInPandas(decode_partition, ENTITY_ROW_SCHEMA)
+    register_pbf_source(spark)
+    return spark.read.format("osmpbf").load(path)

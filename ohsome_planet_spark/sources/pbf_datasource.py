@@ -1,39 +1,40 @@
-"""PBF as a first-class Spark Python Data Source (Spark 4 API):
+"""PBF as a Spark Python Data Source (Spark 4 API), the reader behind
+``pbf.read_pbf``:
 
-    register_pbf_source(spark)
-    df = spark.read.format("osmpbf").load("planet.osh.pbf")
-    ways = df.filter("osm_type = 'way'")   # prunes whole blobs (S7)
+    df = read_pbf(spark, "planet.osh.pbf")  # format("osmpbf").load(path)
+    nodes = (spark.read.format("osmpbf").option("entity_type", "node")
+             .load(path).filter("osm_type = 'node'"))  # node blobs only (S7)
 
-This is the declarative twin of ``read_pbf`` (same decoder, same schema):
-the blob index becomes ``partitions()`` (one Spark task per blob — a
-planet file's ~20k blobs give the scheduler its units), and an
-``osm_type`` equality filter is pushed into partition planning via the
-reference's S7 type-range strategy (``OSMPbf.java:138-191``): PBF files
-sorted ``Sort.Type_then_ID`` store all nodes, then all ways, then all
-relations, so the first-entity type of O(log n) bisected blobs locates
-each type's blob range and every other blob is never read, let alone
-inflated. The filter is still returned to Spark as unhandled, so the
-boundary blob's leading tail of the previous type is filtered row-wise —
-pruning is an optimization, never a semantics change.
+``partitions()`` is the blob index, one Spark task per blob (a planet
+file's ~20k blobs give the scheduler its units), and :meth:`read` is the
+one row converter. The ``entity_type`` option narrows the partitions via
+the reference's S7 type-range strategy (``OSMPbf.java:138-191``): PBF
+files sorted ``Sort.Type_then_ID`` store all nodes, then all ways, then
+all relations, so the first-entity type of O(log n) bisected blobs
+locates each type's blob range and every other blob is never read, let
+alone inflated. A boundary blob may still hold the tail of the previous
+type or the head of the next, so the caller keeps its ``osm_type``
+filter: pruning is an optimization, never a semantics change.
+
+Pruning is an option of the load, not a ``pushFilters`` of the reader:
+Spark 4.1 keeps one pushed-down reader per loaded relation, so a frame
+filtered by two types in one plan, or read whole after a filtered query,
+would reuse one type's blob list for every scan of it.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime, timedelta, timezone
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from ..schemas import ENTITY_ROW_SCHEMA
-from .pbf import decode_block, read_blob, scan_blobs
+from .pbf import BlobRef, decode_block, read_blob, scan_blobs
 
 _TYPE_ORDER = {"node": 0, "way": 1, "relation": 2}
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 @dataclass
@@ -92,18 +93,6 @@ class OsmPbfReader(DataSourceReader):
             raise ValueError("osmpbf: .load(path) is required")
         self.wanted_type: str | None = options.get("entity_type")
 
-    def pushFilters(self, filters: list[Filter]):
-        for f in filters:
-            if (
-                isinstance(f, EqualTo)
-                and f.attribute == ("osm_type",)
-                and f.value in _TYPE_ORDER
-            ):
-                self.wanted_type = f.value
-        # everything (including the type filter) stays Spark-applied:
-        # pruning keeps whole-blob skipping an optimization only
-        return filters
-
     def partitions(self):
         refs = [r for r in scan_blobs(self.path) if r.header_type == "OSMData"]
         if self.wanted_type:
@@ -112,11 +101,9 @@ class OsmPbfReader(DataSourceReader):
             BlobPartition(self.path, r.index, r.offset, r.size) for r in refs
         ]
 
-    def read(self, partition: BlobPartition):
-        from datetime import datetime, timezone
-
-        from .pbf import BlobRef
-
+    def read(self, partition: BlobPartition | None):
+        if partition is None:  # Spark's one partition for a file without data blobs
+            return
         data = read_blob(
             partition.path,
             BlobRef(partition.idx, "OSMData", partition.offset, partition.size),
@@ -126,9 +113,8 @@ class OsmPbfReader(DataSourceReader):
                 e["osm_type"],
                 e.get("osm_id"),
                 e.get("version", 1),
-                datetime.fromtimestamp(
-                    e.get("ts_ms", 0) / 1000.0, tz=timezone.utc
-                ).replace(tzinfo=None),
+                # UTC-aware: a naive datetime would be read as local time
+                _EPOCH + timedelta(milliseconds=e.get("ts_ms", 0)),
                 e.get("changeset", 0),
                 e.get("uid", 0),
                 e.get("user", ""),
@@ -156,11 +142,7 @@ class OsmPbfDataSource(DataSource):
 
 
 def register_pbf_source(spark) -> None:
-    """Register ``format("osmpbf")`` on this session (workers import this
-    module, so the package is shipped first)."""
-    from ..session import ship_package
+    """Register ``format("osmpbf")`` on this session, once."""
+    from ..session import register_source
 
-    ship_package(spark)
-    # pushFilters() requires the (default-off) Python filter-pushdown flag
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(OsmPbfDataSource)
+    register_source(spark, OsmPbfDataSource)

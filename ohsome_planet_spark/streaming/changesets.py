@@ -163,9 +163,6 @@ class ChangesetStateManager:
     local_state: ReplicationState | None = None
     batch_size: int = 500
     api_batch_size: int = 100
-    # optional S16 drop-in: every upserted batch is mirrored into
-    # PostgreSQL (sources.jdbc.ChangesetJdbcSink or compatible)
-    jdbc_sink: object | None = None
     # the committed store (set by load and _commit)
     store: DataFrame | None = None
 
@@ -273,8 +270,6 @@ class ChangesetStateManager:
             rows.extend(parse_changesets_bytes(self.server.get_replication_file(seq)))
         batch_df = changeset_frame(self.spark, rows, with_pos=True)
         state = upsert_changesets(state, batch_df)
-        if self.jdbc_sink is not None:
-            self.jdbc_sink.upsert(batch_winner(batch_df))
         self.local_state = self.server.get_remote_state(batch[-1])
         return state
 
@@ -306,8 +301,6 @@ class ChangesetStateManager:
         if rows:
             batch_df = changeset_frame(self.spark, rows, with_pos=True)
             state = upsert_changesets(state, batch_df)
-            if self.jdbc_sink is not None:
-                self.jdbc_sink.upsert(batch_winner(batch_df))
         return state
 
     def _osm_api_fetch(self, ids: Iterable[int]) -> bytes:

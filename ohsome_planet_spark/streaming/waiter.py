@@ -4,13 +4,11 @@ behavior pinned by its ``WaiterTest.java``):
 
 - interruptible sleep at 1-second granularity so a shutdown request is
   honored mid-wait (graceful stop, not a killed JVM);
-- the changeset-wait decision: contributions wait for the changeset
-  stream ONLY while changesets are at most ``CHANGESET_WAIT_ESCAPE_S``
-  (120 s) behind — older than that, proceed without them (the holdback
-  escape valve; the quantitative holdback itself is
-  ``replication.process_until``);
 - exponential retry backoff 5 → 60 s (doubling, capped) when a pass
   found nothing new, reset to 5 s as soon as progress happens.
+
+The waiter only paces the loop. Holding contributions back for the
+changeset stream is one rule, ``replication.process_until``.
 """
 
 from __future__ import annotations
@@ -19,16 +17,6 @@ import threading
 
 BASE_RETRY_S = 5
 MAX_RETRY_S = 60
-CHANGESET_WAIT_ESCAPE_S = 120
-
-
-def not_waiting_for_changesets(contribution_ts, changeset_ts) -> bool:
-    """True when the contribution loop need NOT wait on the changeset
-    stream: changesets are already newer, or they lag by more than the
-    120 s escape window (``Waiter.notWaitingForChangesets``)."""
-    if contribution_ts < changeset_ts:
-        return True
-    return (contribution_ts - changeset_ts).total_seconds() > CHANGESET_WAIT_ESCAPE_S
 
 
 class Waiter:

@@ -385,26 +385,6 @@ def test_jdbc_sink_upsert_stages_then_merges(spark):
     ]
 
 
-def test_manager_mirrors_batches_into_jdbc_sink(spark):
-    """With a jdbc_sink attached, every replication batch and every
-    reconciliation reply is winner-resolved and mirrored."""
-    from ohsome_planet_spark.sources.jdbc import ChangesetJdbcSink
-
-    upserts = []
-
-    class _Spy(ChangesetJdbcSink):
-        def upsert(self, batch):
-            upserts.append({r.id: r.open for r in batch.collect()})
-
-    mgr, _ = _manager_fixture(spark, n_seqs=3, batch_size=2)
-    mgr.jdbc_sink = _Spy(url="jdbc:postgresql://h/db", execute=lambda s: None)
-    state = _df(spark, [])
-    state = mgr.update_to_remote_state(state, mgr.server.get_remote_state(3))
-    assert len(upserts) == 2  # two catch-up batches (2 seqs + 1 seq)
-    # seq 2's file closes changeset 101 -> winner for 101 in batch 1 is closed
-    assert upserts[0][101] is False and upserts[0][102] is True
-
-
 def test_upsert_differential_500_random_scenarios(spark):
     """Differential check of the one-shuffle merge against a literal
     sequential replay of ``INSERT … ON CONFLICT (id) DO UPDATE … WHERE

@@ -7,10 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from ohsome_planet_spark.sources.osmxml import (
+    bz2_stream_offsets,
     parse_changesets_bytes,
     parse_osc_bytes,
-    read_osc,
-    split_bz2_streams,
 )
 from ohsome_planet_spark.streaming.replication import (
     ReplicationState,
@@ -55,17 +54,6 @@ def test_parse_osc():
     assert ents[2]["visible"] is False and ents[2]["osm_type"] == "node"
 
 
-def test_read_osc_spark(spark, tmp_path):
-    import gzip
-
-    p = tmp_path / "001.osc.gz"
-    p.write_bytes(gzip.compress(OSC))
-    df = read_osc(spark, str(p))
-    rows = {(r.osm_type, r.osm_id): r for r in df.collect()}
-    assert rows[("node", 3)].visible is False
-    assert rows[("way", 10)].refs == [1, 2]
-
-
 def test_parse_changesets():
     xml = b"""<osm><changeset id="42" created_at="2024-01-01T00:00:00Z"
         closed_at="2024-01-01T01:00:00Z" open="false" uid="7" user="u"
@@ -85,15 +73,19 @@ def test_parse_changesets():
     assert bare[0]["num_changes"] == 0 and bare[0]["comments_count"] == 0
 
 
-def test_split_bz2_streams_roundtrip():
+def test_split_bz2_streams_roundtrip(tmp_path):
+    """The offset scan finds every stream header, at any compression
+    level, and each offset range decompresses to its stream."""
     import bz2
 
-    s1 = bz2.compress(b"<osm>part one</osm>")
-    s2 = bz2.compress(b"<osm>part two</osm>")
-    streams = split_bz2_streams(s1 + s2)
-    assert len(streams) == 2
-    assert bz2.decompress(streams[0]) == b"<osm>part one</osm>"
-    assert bz2.decompress(streams[1]) == b"<osm>part two</osm>"
+    parts = [b"<osm>part one</osm>", b"<osm>part two</osm>", b"<osm>part three</osm>"]
+    data = b"".join(bz2.compress(p, level) for p, level in zip(parts, (9, 1, 5)))
+    path = tmp_path / "dump.osm.bz2"
+    path.write_bytes(data)
+    offsets = list(bz2_stream_offsets(str(path)))
+    assert len(offsets) == 3 and offsets[0] == 0
+    bounds = [*offsets, len(data)]
+    assert [bz2.decompress(data[a:b]) for a, b in zip(bounds, bounds[1:])] == parts
 
 
 def _node(nid, version, sec, visible=True, lon=8.0, lat=49.0, tags=None):
@@ -278,36 +270,6 @@ def test_changeset_lag_holdback(tmp_path):
 
 
 # --- Waiter (reference utils/Waiter.java, pinned by WaiterTest.java) --------
-
-
-def test_not_waiting_for_changesets_contributions_older():
-    from datetime import datetime
-    from ohsome_planet_spark.streaming.waiter import not_waiting_for_changesets
-
-    # contributions behind changesets -> nothing to wait for
-    assert not_waiting_for_changesets(
-        datetime(2025, 12, 1, 9, 54), datetime(2025, 12, 1, 9, 56)
-    )
-
-
-def test_waiting_for_changesets_within_two_minutes():
-    from datetime import datetime
-    from ohsome_planet_spark.streaming.waiter import not_waiting_for_changesets
-
-    # contributions ahead by <= 120s -> hold back for the changeset stream
-    assert not not_waiting_for_changesets(
-        datetime(2025, 12, 1, 9, 59), datetime(2025, 12, 1, 9, 58)
-    )
-
-
-def test_not_waiting_for_changesets_beyond_escape_window():
-    from datetime import datetime
-    from ohsome_planet_spark.streaming.waiter import not_waiting_for_changesets
-
-    # changesets lag > 120s -> escape valve, proceed without them
-    assert not_waiting_for_changesets(
-        datetime(2025, 12, 1, 10, 57), datetime(2025, 12, 1, 9, 59, 30)
-    )
 
 
 def test_waiter_backoff_doubles_and_caps():
